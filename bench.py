@@ -3,7 +3,7 @@
 
 Usage:  python bench.py
   SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[] parallelism (default: os.cpu_count())
   BENCH_QUERIES        comma-separated subset override
 
 Each query is executed to completion with the ``noop`` write sink so the

@@ -27,7 +27,8 @@ Here the same contract is expressed Spark-first:
   Arrow-batched, no per-group DataFrame construction;
 - unlike the reference (which has NO combiner — every (k,v) pair
   crosses the shuffle, ``src/worker.cc:173-182``), an optional
-  associative ``combine_fn`` runs map-side per Arrow batch, collapsing
+  associative ``combine_fn`` runs map-side per Arrow batch, inside the
+  map pass's own ``mapInPandas`` (one Python runner, not two), collapsing
   duplicate keys before the exchange.  At 100 TB this is the difference
   between shuffling ~token-count rows and ~distinct-key rows per batch.
 
@@ -72,7 +73,15 @@ def flat_map(
     (path, contents) pair.  Arrow-batched via ``mapInPandas``; the
     generator is consumed lazily per batch, never fully materialized.
     """
-    col_names = _ddl_field_names(schema)
+    run = _map_batches(gen_fn, _ddl_field_names(schema))
+    return df.mapInPandas(run, schema=schema)
+
+
+def _map_batches(
+    gen_fn: MapFn, col_names: list[str]
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` body of :func:`flat_map`: one output batch
+    per input Arrow batch."""
     n_cols = len(col_names)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -84,7 +93,7 @@ def flat_map(
                         out[i].append(tup[i])
             yield pd.DataFrame(dict(zip(col_names, out)))
 
-    return df.mapInPandas(run, schema=schema)
+    return run
 
 
 #: "no pending run" marker for the sort-based fold (a plain object so
@@ -192,12 +201,14 @@ def map_reduce(
     per Arrow batch — the combiner the reference lacks.
     """
     key_col, value_col = _ddl_field_names(kv_schema)
-    mapped = flat_map(df, map_fn, schema=kv_schema)
+    map_run = _map_batches(map_fn, [key_col, value_col])
 
-    if combine_fn is not None:
+    if combine_fn is None:
+        run = map_run
+    else:
 
-        def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in map_run(batches):
                 if len(pdf):
                     pdf = (
                         pdf.groupby(key_col, sort=False)[value_col]
@@ -206,10 +217,8 @@ def map_reduce(
                     )
                 yield pdf
 
-        mapped = mapped.mapInPandas(combine, schema=kv_schema)
-
     return fold_by_key(
-        mapped,
+        df.mapInPandas(run, schema=kv_schema),
         key_col,
         value_col,
         reduce_fn,

@@ -236,12 +236,15 @@ _PRIORITY_ORDER = [
     # VERDICT r15 Missing #2 — so it takes the fourth slot ahead of
     # agg_count_min_sketch).
     #
-    # Rotation plan for r18:
-    #   r18: agg_count_min_sketch, then the r15/r16 additions and
-    #        conversions: dedup_boilerplate_lines,
-    #        sim_search_triplet_mining_lsh, sim_search_recall_curve
-    # Remaining never-checked oracle-bearing candidates after that
-    # (r19+): the late-r16 additions stream_dedup_near (the streaming
+    # r17 rotated dedup_incremental_ingest_near, agg_hll_sketch_merge,
+    # agg_approx_quantile, stream_session_window_dynamic_gap — all
+    # hash-green in CORRECTNESS_r17.  r18 rotates in the four rows the
+    # r17 plan named: the count-min sketch, then the r15/r16 additions
+    # and conversions — the boilerplate-line dedup, the LSH triplet
+    # miner and the ANN recall curve.
+    #
+    # Remaining never-checked oracle-bearing candidates (r19+): the
+    # late-r16 additions stream_dedup_near (the streaming
     # family's only near-dup row), dq_skew_report, and
     # sim_search_sq8_rerank (the int8 ANN tier),
     # sim_search_matryoshka_funnel (the MRL prefix-funnel tier),
@@ -260,10 +263,10 @@ _PRIORITY_ORDER = [
     # sql_passthrough_q1, pack_concat_chunks, scd2_build_validity,
     # window_gaps_islands, text_char_entropy,
     # agg_listagg_within_group.
-    "dedup_incremental_ingest_near",
-    "agg_hll_sketch_merge",
-    "agg_approx_quantile",
-    "stream_session_window_dynamic_gap",
+    "agg_count_min_sketch",
+    "dedup_boilerplate_lines",
+    "sim_search_triplet_mining_lsh",
+    "sim_search_recall_curve",
 ]
 
 _loaded = False

@@ -10,15 +10,23 @@ engine paths (the declarative ``word_count`` plan and the Python
 ``map_reduce`` UDF contract), plus the reference's M = #files property
 (``src/master.cc:299``): the result must be invariant to how the input
 is split into map tasks.
+
+The books are not part of this repo: without them the golden tests skip,
+and a small in-repo fixture (``tests/data/wordcount``) drives the same
+two paths against counts computed here with ``re.findall``.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark import registry
 from mapreduceplusplus_spark.mr import map_reduce
 from mapreduceplusplus_spark.operators.scans import word_count
 from mapreduceplusplus_spark.sources.tables import load_table, load_whole_text_files
@@ -29,6 +37,7 @@ GOLDEN_FILES = 8
 GOLDEN_TOTAL_TOKENS = 623_948
 GOLDEN_DISTINCT_WORDS = 22_107
 GOLDEN_THE_COUNT = 29_748
+LOCAL_GLOB = os.path.join(os.path.dirname(__file__), "data", "wordcount", "*.txt")
 
 def _make_fns():
     """The reference tokenizer (``mr/word_count.h:22-31``) in Python for
@@ -49,6 +58,8 @@ def _make_fns():
 
 @pytest.fixture(scope="module")
 def demo_books(spark):
+    if not glob.glob(DEMO_GLOB):
+        pytest.skip(f"reference demo corpus absent: {DEMO_GLOB} matches no file")
     df = load_whole_text_files(spark, DEMO_GLOB).cache()
     assert df.count() == GOLDEN_FILES
     return df
@@ -84,6 +95,36 @@ def test_wordcount_golden_mr_pipeline(spark, demo_books):
     )
     assert out.rdd.getNumPartitions() == 3
     _assert_golden([(r.key, r.value) for r in out.collect()])
+
+
+@pytest.fixture(scope="module")
+def local_books(spark):
+    """The in-repo fixture and its expected counts, computed without
+    Spark: the reference tokenizer as ``re.findall`` plus ``Counter``."""
+    paths = sorted(glob.glob(LOCAL_GLOB))
+    assert len(paths) == 3
+    expected: Counter[str] = Counter()
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            expected.update(re.findall(r"[A-Za-z]+", f.read()))
+    return load_whole_text_files(spark, LOCAL_GLOB), dict(expected)
+
+
+def test_wordcount_local_declarative(spark, local_books):
+    books, expected = local_books
+    wc = word_count(books, "content")
+    assert {r.word: r.cnt for r in wc.collect()} == expected
+
+
+def test_wordcount_local_mr_pipeline(spark, local_books):
+    """``map_reduce`` with R=3 and the combiner, as in the golden test."""
+    books, expected = local_books
+    wc_map, sum_reduce = _make_fns()
+    out = map_reduce(
+        books, wc_map, sum_reduce, num_partitions=3, combine_fn=sum_reduce
+    )
+    assert out.rdd.getNumPartitions() == 3
+    assert {r.key: r.value for r in out.collect()} == expected
 
 
 def test_wordcount_split_invariance(spark, demo_books):
@@ -123,3 +164,11 @@ def test_mr_split_and_r_invariance(spark):
         results.append(sorted((row.key, row.value) for row in out.collect()))
     assert results[0] == results[1] == results[2]
     docs.unpersist()
+
+
+def test_mr_combiner_runs_in_the_map_pass(spark):
+    """The combiner runs inside the map pass's ``mapInPandas``: one
+    Python runner for map + combine, one for the reduce fold."""
+    df = registry.queries()["mr_pipeline_api"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 2, plan
