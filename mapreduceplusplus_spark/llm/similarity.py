@@ -62,7 +62,11 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
-from mapreduceplusplus_spark.sources.tables import load_table
+from mapreduceplusplus_spark.sources.tables import (
+    dataset_fingerprint,
+    load_table,
+    read_parquet,
+)
 
 #: probe = the embedding of this vec_id (deterministic, present at
 #: every scale factor)
@@ -566,7 +570,7 @@ def _probe_vector(
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
         "probe_v",
     )
     pv = _IVF_SEED_MEMO.get(key)
@@ -602,7 +606,7 @@ def _ivf_seed_lists(
     memo_key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
     memo = _IVF_SEED_MEMO.get(memo_key)
     if memo is not None:
@@ -764,16 +768,6 @@ def _ivf_score_topk(
 _IVF_INDEX_CACHE: dict[tuple[str, str, tuple], str] = {}
 
 
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    """(relpath, mtime_ns, size) of every file under the embeddings
-    parquet path — a cheap content-version stamp for the index cache
-    (shared helper in ``sources/tables.py`` since r11; the MinHash
-    ingest index in ``llm/dedup.py`` uses the same stamp)."""
-    from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
-
-    return dataset_fingerprint(sf_dir, "embeddings")
-
-
 def _sweep_ivf_indexes() -> None:
     import shutil
 
@@ -836,14 +830,14 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
     index_dir = _IVF_INDEX_CACHE.get(key)
     if index_dir is None:
         index_dir = tempfile.mkdtemp(prefix="ivf_index_")
         assigned.write.mode("overwrite").partitionBy("cid").parquet(index_dir)
         _IVF_INDEX_CACHE[key] = index_dir
-    lists = spark.read.parquet(index_dir)
+    lists = read_parquet(spark, index_dir)
     cand = lists.where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
@@ -1740,7 +1734,7 @@ def _ivfpq_search(
     pq_key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
         "pq_seeds",
     )
     seeds = _IVF_SEED_MEMO.get(pq_key)
@@ -1826,7 +1820,7 @@ def _ivfpq_search(
     pq_index_key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
     index_dir = _IVF_PQ_INDEX_CACHE.get(pq_index_key)
     if index_dir is None:
@@ -1848,7 +1842,7 @@ def _ivfpq_search(
         )
         staged.unpersist()
         _IVF_PQ_INDEX_CACHE[pq_index_key] = index_dir
-    coded = spark.read.parquet(index_dir).where(
+    coded = read_parquet(spark, index_dir).where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
     # LUT sums as single parsed strings too (same py4j-call argument);
@@ -2532,7 +2526,7 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
 
     def _build(d: str) -> None:
@@ -2993,7 +2987,7 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
 
     def _build(d: str) -> None:
@@ -3349,7 +3343,7 @@ def sim_search_ivf_sq8_partitioned(
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _embeddings_fingerprint(sf_dir),
+        dataset_fingerprint(sf_dir, "embeddings"),
     )
     index_dir = _IVF_SQ8_INDEX_CACHE.get(key)
     if index_dir is None:
@@ -3371,7 +3365,7 @@ def sim_search_ivf_sq8_partitioned(
         ]
     )
     pv_lit = F.array(*[F.lit(x) for x in probe_v])
-    lists = spark.read.parquet(index_dir)
+    lists = read_parquet(spark, index_dir)
     s = F.aggregate(
         F.zip_with(
             F.col("codes"), pq_lit, lambda c, p: c.cast("bigint") * p

@@ -114,8 +114,10 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="sink_roundtrip_")
     try:
         li.write.mode("overwrite").parquet(out)
+        # known schema: the temp dir is fresh per call, so inferring it
+        # would be one more Spark job on every build
         result = (
-            spark.read.parquet(out)
+            spark.read.schema(li.schema).parquet(out)
             .groupBy("l_returnflag")
             .agg(
                 F.count("*").alias("n"),

@@ -10,13 +10,21 @@ line-oriented text source preserved for reference parity.
 Scale note: `spark.read.parquet` split-plans by
 ``spark.sql.files.maxPartitionBytes`` (default 128 MB) — at 100 TB that
 is ~800k input splits, scheduled by locality; nothing here assumes
-single-node inputs.
+single-node inputs.  Schema inference (Spark's footer-merge job) runs
+once per file version per process: ``read_parquet`` remembers each
+path's inferred schema under its ``path_fingerprint`` stamp, and later
+builds read with that schema and launch no job.  Every query-path read
+of a Parquet path whose schema is not known in code goes through
+``read_parquet``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: every driver-provided table (TESTDATA.md); one parquet file per table.
 TABLES = [
@@ -59,7 +67,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.errors import AnalysisException
 
         try:
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
         except AnalysisException as exc:
             # Only the TIMESTAMP(NANOS) schema refusal is retryable;
             # anything else (missing file, corrupt footer, permissions)
@@ -69,7 +77,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if "Illegal Parquet type" not in msg and "NANOS" not in msg:
                 raise
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
         from pyspark.sql.types import LongType, TimestampNTZType
 
         ts_type = df.schema["ts"].dataType
@@ -89,22 +97,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def dataset_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(relpath, mtime_ns, size) of every file under ``<sf_dir>/
-    <table>.parquet`` — a cheap content-version stamp for on-disk index
-    caches (the memoized IVF / MinHash-band index dirs): an in-process
-    rewrite of the dataset changes the fingerprint, so the next probe
-    REBUILDS instead of silently reading a stale index (ADVICE r9)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
+def path_fingerprint(path: str) -> tuple:
+    """(relpath, mtime_ns, size) of every file at ``path`` (one file, or
+    every file under a directory) — a cheap content-version stamp: an
+    in-process rewrite changes it, so a memo keyed on it (the schema
+    memo below, the IVF / MinHash-band index dirs) is rebuilt instead of
+    silently read stale.  Empty when nothing is there."""
     if os.path.isfile(path):
         st = os.stat(path)
         return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
@@ -118,6 +123,49 @@ def dataset_fingerprint(sf_dir: str, table: str) -> tuple:
                     (os.path.relpath(p, path), st.st_mtime_ns, st.st_size)
                 )
     return tuple(sorted(entries))
+
+
+def dataset_fingerprint(sf_dir: str, table: str) -> tuple:
+    """``path_fingerprint`` of ``<sf_dir>/<table>.parquet``."""
+    return path_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+
+
+#: session confs that change what Parquet schema inference returns
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: abspath -> ((fingerprint, inference confs), inferred schema).  One
+#: entry per path: a new file version or conf set replaces the entry,
+#: so the memo stays bounded and needs no release hook.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version.  Inference is a Spark job (the footer merge runs even with
+    ``mergeSchema`` off); a repeat read of an unchanged path with the
+    same inference confs passes the remembered schema instead and
+    launches none.  Same DataFrame schema and plan as a cold read.
+    Failed reads (a TIMESTAMP(NANOS) refusal, a zero-file directory)
+    are not remembered, and an empty stamp (nothing local to stamp)
+    never hits."""
+    where = os.path.abspath(path)
+    fp = path_fingerprint(path)
+    key = (fp, tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
+    memo = _SCHEMA_MEMO.get(where)
+    if memo is not None and memo[0] == key:
+        return spark.read.schema(memo[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp:
+        _SCHEMA_MEMO[where] = (key, df.schema)
+    return df
 
 
 def load_text_lines(spark: SparkSession, path: str) -> DataFrame:
