@@ -285,8 +285,10 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = vecs[:, -1]
     if v[int(np.argmax(np.abs(v)))] < 0:           # deterministic sign
         v = -v
-    mu_lit = F.array(*[F.lit(int(round(m))) for m in mu])
-    v_lit = F.array(*[F.lit(float(c)) for c in v])
+    from mapreduceplusplus_spark.llm.similarity import _sql_array
+
+    mu_lit = F.expr(_sql_array([round(m) for m in mu], "PCA mean", ""))
+    v_lit = F.expr(_sql_array(v, "PCA eigenvector"))
     xm = F.transform(
         F.col("embedding"),
         # rint (half-to-even), NOT round (half-away-from-zero): pass 1

@@ -57,6 +57,9 @@ state, bit-for-bit reproducible across runs and cluster sizes.
 
 from __future__ import annotations
 
+import math
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -90,6 +93,28 @@ def _norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _sql_array(vec, what: str, suffix: str = "D") -> str:
+    """``vec`` as ONE SQL array literal, for ``F.expr`` or a larger
+    parsed SQL string: a 64-d probe costs 3 py4j commands this way
+    against 263 for ``F.array(*[F.lit(x) ...])``, and the optimized
+    literal is the same.  ``suffix="D"`` renders doubles as
+    ``repr(float)`` + ``D``, which round-trips every double bit-exactly
+    (-0.0, denormals, 1e300); ``"L"`` renders BIGINTs (the
+    ``F.lit(i).cast("bigint")`` form); ``""`` leaves plain integers
+    that the parser types INT or BIGINT by size, as ``F.lit(i)`` does.
+    Loud contract: a NaN or infinite double would render as
+    ``nanD``/``infD`` and fail SQL parsing with an opaque error (the
+    ``F.lit`` form built valid NaN/Infinity literals), so it raises a
+    ``ValueError`` naming ``what`` instead."""
+    if suffix != "D":
+        return "array(" + ", ".join(f"{int(x)}{suffix}" for x in vec) + ")"
+    xs = [float(x) for x in vec]
+    if not all(math.isfinite(x) for x in xs):
+        raise ValueError(
+            f"{what} has a non-finite component — refusing to render a "
+            "non-finite literal into SQL"
+        )
+    return "array(" + ", ".join(f"{x!r}D" for x in xs) + ")"
 
 
 #: sim_search_topk's oracle, shared verbatim with the hybrid-RRF
@@ -241,7 +266,7 @@ def lsh_signature(v: Column | str, bits: int = LSH_BITS) -> Column:
         vm = f"transform({v}, x -> CAST(round(1000000 * x) AS BIGINT))"
         parts = []
         for i in range(bits):
-            signs = "array(" + ", ".join(f"{s}L" for s in _LSH_SIGNS[i]) + ")"
+            signs = _sql_array(_LSH_SIGNS[i], "LSH signs", "L")
             proj = (
                 f"aggregate(zip_with({vm}, {signs}, (x, s) -> x * s),"
                 " 0L, (acc, x) -> acc + x)"
@@ -417,8 +442,6 @@ def _dedupe_seed_rows(rows) -> list[tuple[int, list[float]]]:
 
 
 def _py_cos(a: list[float], b: list[float]) -> float:
-    import math
-
     d = sum(x * y for x, y in zip(a, b))
     na = math.sqrt(sum(x * x for x in a))
     nb = math.sqrt(sum(x * x for x in b))
@@ -430,8 +453,6 @@ def _py_mc(c: float) -> int:
     ``F.round`` / DuckDB ``round`` semantics (Python's builtin round is
     banker's and would disagree at .5 boundaries); driver-side twin of
     the micro-cosine quantization device."""
-    import math
-
     x = 1000000 * c
     return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
 
@@ -514,14 +535,14 @@ def sim_search_ivf(
     Recall is partial by design (ANN contract) and measured against
     ``sim_search_topk``; raising ``IVF_NPROBE`` is the recall knob.
 
-    ``_seed`` (private): a precomputed ``_ivf_seed_lists`` triple —
-    the recall curve passes its ONE checkpointed assignment so the
+    ``_seed`` (private): a precomputed ``_ivf_seed_lists`` tuple —
+    the recall curve passes its ONE persisted assignment so the
     composed plan evaluates the argmax once instead of per tier
-    (r16); semantics are identical because the triple is exactly what
+    (r16); semantics are identical because the tuple is exactly what
     ``_ivf_seed_lists`` returns."""
     ensure_utc(spark)
-    assigned, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
-    cand = assigned.where(
+    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
+    cand = with_cid(emb).where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
     return _ivf_score_topk(cand, probe_v)
@@ -591,15 +612,20 @@ def _probe_vector(
 
 def _ivf_seed_lists(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[float], list[int]]:
+) -> tuple[DataFrame, Callable[[DataFrame], DataFrame], list[float], list[int]]:
     """Shared IVF index builder (seed-centroid quantizer): returns the
-    corpus with its nearest-centroid assignment as a map-side ``cid``
-    column (zero shuffle), the probe vector, and the probe's
-    ``IVF_NPROBE`` nearest centroid ids.  Callers choose the list
-    REPRESENTATION: ``sim_search_ivf`` filters the in-plan column,
-    ``sim_search_ivf_partitioned`` materializes the lists as a
-    cid-partitioned parquet index and lets partition pruning do the
-    filtering at the I/O layer."""
+    corpus as ``(vec_id, label, v)``, ``with_cid`` — a function that
+    attaches each row's nearest-centroid assignment as a map-side
+    ``cid`` column (zero shuffle; a frame that already carries ``cid``
+    is returned as is) — the probe vector, and the probe's
+    ``IVF_NPROBE`` nearest centroid ids.  Callers attach ``cid`` only
+    where they filter on it or partition by it: Catalyst analyses the
+    16-way assignment argmax on every build that attaches it, and a
+    probe that reads a built index or re-ranks a pool never runs it.
+    Callers choose the list REPRESENTATION: ``sim_search_ivf`` filters
+    the in-plan column, ``sim_search_ivf_partitioned`` materializes
+    the lists as a cid-partitioned parquet index and lets partition
+    pruning do the filtering at the I/O layer."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
@@ -647,8 +673,6 @@ def _ivf_seed_lists(
         ]
         _IVF_SEED_MEMO[memo_key] = (cents, probe_v, probe_cids)
 
-    import math
-
     # the row's L2 norm is centroid-independent: hoist it into ONE
     # projected column instead of re-folding it inside each of the
     # |cents| cosines (r16 — the r14 pair-cosine norm hoist applied to
@@ -667,33 +691,25 @@ def _ivf_seed_lists(
     # r14: raw-double argmax left the assignment exposed to
     # cross-engine ULP flips now that the IVF oracle replays it), ties
     # break to the LOWEST centroid id — deterministic assignment
-    def _arr_d(vec: list[float]) -> str:
-        # loud contract (ADVICE r16): a non-finite centroid component
-        # would render as 'nanD'/'infD' and fail SQL parsing with an
-        # opaque error (the replaced F.lit path built valid
-        # NaN/Infinity literals) — name the corrupt input instead
-        if not all(math.isfinite(float(x)) for x in vec):
-            raise ValueError(
-                "IVF centroid has a non-finite component — refusing to "
-                "render a non-finite literal into the assignment SQL"
-            )
-        return "array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")"
+    def with_cid(df: DataFrame) -> DataFrame:
+        if "cid" in df.columns:
+            return df
+        structs = ", ".join(
+            "named_struct('s', CAST(round(1000000 * ("
+            f"aggregate(zip_with(v, {_sql_array(cv, 'IVF centroid')},"
+            " (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+            f" / (_nv * {math.sqrt(sum(x * x for x in cv))!r}D))) AS BIGINT),"
+            f" 'negid', {-cid})"
+            for cid, cv in cents
+        )
+        best = F.array_max(F.expr(f"array({structs})"))
+        return (
+            df.withColumn("_nv", _norm(F.col("v")))
+            .withColumn("cid", (-best["negid"]).cast("int"))
+            .drop("_nv")
+        )
 
-    structs = ", ".join(
-        "named_struct('s', CAST(round(1000000 * ("
-        f"aggregate(zip_with(v, {_arr_d(cv)}, (x, y) -> x * y), 0.0D,"
-        " (acc, x) -> acc + x)"
-        f" / (_nv * {math.sqrt(sum(x * x for x in cv))!r}D))) AS BIGINT),"
-        f" 'negid', {-cid})"
-        for cid, cv in cents
-    )
-    best = F.array_max(F.expr(f"array({structs})"))
-    assigned = (
-        emb.withColumn("_nv", _norm(F.col("v")))
-        .withColumn("cid", (-best["negid"]).cast("int"))
-        .drop("_nv")
-    )
-    return assigned, probe_v, probe_cids
+    return emb, with_cid, probe_v, probe_cids
 
 
 def _ivf_score_topk(
@@ -706,9 +722,7 @@ def _ivf_score_topk(
     distance) and emits ``l2_dist``; returned scores are always
     full-precision exact (the repo-wide ANN contract: recall is the
     only degrading axis, never score fidelity)."""
-    import math
-
-    pv_lit = F.array(*[F.lit(x) for x in probe_v])
+    pv_lit = F.expr(_sql_array(probe_v, "IVF probe"))
     pn = math.sqrt(sum(x * x for x in probe_v))
     dotc = _dot(F.col("v"), pv_lit)
     if metric == "cosine":
@@ -809,7 +823,7 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     ensure_utc(spark)
-    assigned, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     # The index is MEMOIZED per (session, dataset) and built exactly
     # once — the literal "write-once batch job, probes re-read"
     # semantics of a real on-disk ANN index, and the only layout that
@@ -835,7 +849,7 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = _IVF_INDEX_CACHE.get(key)
     if index_dir is None:
         index_dir = tempfile.mkdtemp(prefix="ivf_index_")
-        assigned.write.mode("overwrite").partitionBy("cid").parquet(index_dir)
+        with_cid(emb).write.mode("overwrite").partitionBy("cid").parquet(index_dir)
         _IVF_INDEX_CACHE[key] = index_dir
     lists = read_parquet(spark, index_dir)
     cand = lists.where(
@@ -1018,8 +1032,6 @@ def _ivf_assign_join(
     norm is constant within its group), ties to the LOWEST cid via the
     (s, -cid) struct max — the same tie discipline as
     ``sim_search_ivf``.  Returns DataFrame[vec_id, cid]."""
-    import math
-
     rows = []
     for cid, cv in cents:
         # half-away-from-zero micro quantization (_py_mc) — the same
@@ -1253,8 +1265,6 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the probe's nprobe pick and the exact-cosine re-rank tail
     shared with ``_IVF_ORACLE``.  Reference heritage: none (SURVEY §2
     charter extension, similarity family)."""
-    import math
-
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
@@ -1725,12 +1735,9 @@ def _ivfpq_search(
     (``_ivfpq_oracle``); returned scores stay exact full-precision
     (the repo-wide ANN contract: recall is the only degrading axis)."""
     ensure_utc(spark)
-    assigned, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
+    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
     d = len(probe_v)
     sub = d // PQ_M
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
     pq_key = (
         spark.sparkContext.applicationId,
         sf_dir,
@@ -1740,15 +1747,20 @@ def _ivfpq_search(
     seeds = _IVF_SEED_MEMO.get(pq_key)
     if seeds is None:
         _evict_stale_seeds(pq_key)
-        seed_rows = emb.where(
-            (F.col("vec_id") >= IVF_CENTROIDS)
-            & (F.col("vec_id") < IVF_CENTROIDS + PQ_K)
-        ).collect()
+        seed_rows = (
+            load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", _as_double("embedding").alias("v"))
+            .where(
+                (F.col("vec_id") >= IVF_CENTROIDS)
+                & (F.col("vec_id") < IVF_CENTROIDS + PQ_K)
+            )
+            .collect()
+        )
         seeds = [v for _, v in _dedupe_seed_rows(seed_rows)]
         _IVF_SEED_MEMO[pq_key] = seeds
     if len(seeds) < PQ_K:  # tiny/empty corpus: degrade to exact scan
         return _ivf_score_topk(
-            assigned.where(F.col("vec_id") != PROBE_ID), probe_v, metric
+            emb.where(F.col("vec_id") != PROBE_ID), probe_v, metric
         )
     # integer micro-unit codebooks / probe (oracle-replayable)
     sq = [[_py_mc(x) for x in v] for v in seeds]
@@ -1782,14 +1794,12 @@ def _ivfpq_search(
     # time per invocation (executor time: ~0.1 s); the parsed
     # expression tree is identical (same zip_with/aggregate/slice
     # nodes, same BIGINT literals)
-    def _arr_l(vec: list[int]) -> str:
-        return "array(" + ", ".join(f"{int(x)}L" for x in vec) + ")"
-
     def _code(m: int) -> Column:
         subv = f"slice(vq, {m * sub + 1}, {sub})"
         structs = ", ".join(
             "named_struct('d', aggregate(zip_with("
-            f"{subv}, {_arr_l(cb[m][k])}, (x, y) -> (x - y) * (x - y)),"
+            f"{subv}, {_sql_array(cb[m][k], 'PQ codebook', 'L')},"
+            " (x, y) -> (x - y) * (x - y)),"
             f" 0L, (acc, x) -> acc + x), 'k', {k})"
             for k in range(PQ_K)
         )
@@ -1827,7 +1837,7 @@ def _ivfpq_search(
         import tempfile
 
         index_dir = tempfile.mkdtemp(prefix="ivf_pq_index_")
-        staged = assigned.withColumn("vq", vq).persist()
+        staged = with_cid(emb).withColumn("vq", vq).persist()
         (
             staged.withColumn(
                 "codes",
@@ -1850,13 +1860,13 @@ def _ivfpq_search(
     # value cannot change an integer sum
     adc_dot = F.expr(
         " + ".join(
-            f"element_at({_arr_l(lut_dot[m])}, codes[{m}] + 1)"
+            f"element_at({_sql_array(lut_dot[m], 'PQ LUT', 'L')}, codes[{m}] + 1)"
             for m in range(PQ_M)
         )
     )
     adc_nsq = F.expr(
         " + ".join(
-            f"element_at({_arr_l(cb_nsq[m])}, codes[{m}] + 1)"
+            f"element_at({_sql_array(cb_nsq[m], 'PQ LUT', 'L')}, codes[{m}] + 1)"
             for m in range(PQ_M)
         )
     )
@@ -1887,9 +1897,8 @@ def _ivfpq_search(
     )
     # exact re-rank reads the float vectors ONLY for the bounded pool:
     # broadcast-safe (LIMIT PQ_RERANK = 40 rows by construction), and
-    # projecting just (vec_id, label, v) prunes the assignment argmax
-    # column out of the scan — the probe never re-derives cid
-    cand = assigned.select("vec_id", "label", "v").join(
+    # the corpus frame carries no cid — the probe never re-derives it
+    cand = emb.select("vec_id", "label", "v").join(
         F.broadcast(pool), "vec_id"
     )
     return _ivf_score_topk(cand, probe_v, metric)
@@ -2548,7 +2557,7 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = spark.read.schema(
         "vec_id BIGINT, label INT, words ARRAY<BIGINT>"
     ).parquet(sketch_dir)
-    pw_lit = F.array(*[F.lit(w).cast("long") for w in pwords])
+    pw_lit = F.expr(_sql_array(pwords, "probe sign words", "L"))
     ham = F.aggregate(
         F.zip_with(
             F.col("words"),
@@ -2566,7 +2575,7 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact re-rank: fetch full-precision vectors for the bounded pool
     # (broadcast the ≤HAMMING_POOL-row pool into the float table)
-    pv_lit = F.array(*[F.lit(x) for x in pv])
+    pv_lit = F.expr(_sql_array(pv, "probe vector"))
     scored = (
         emb.select("vec_id", "v")
         # broadcast-safe: pool is LIMIT HAMMING_POOL (<=40 rows by
@@ -2725,14 +2734,21 @@ def _py_sq8(v: list[float]) -> tuple[float, list[int]]:
     the codes agree bit-for-bit (the Hypothesis device pin's model,
     and the documented cross-engine contract the DuckDB oracles
     replay)."""
-    import math
-
     scale = max((abs(float(x)) for x in v), default=0.0)
     if scale == 0:
         return 0.0, [0] * len(v)
     return scale, [
         int(math.floor(float(x) / scale * 127 + 0.5)) for x in v
     ]
+
+
+def _sq8_probe_lits(pv: list[float]) -> tuple[Column, Column]:
+    """The SQ8 family's probe literals: half-up micro-unit BIGINTs
+    (the ADC operand) and the full-precision doubles (the exact
+    re-rank operand)."""
+    pv_lit = F.expr(_sql_array(pv, "SQ8 probe"))  # non-finite raises here
+    pq = [math.floor(x * 1000000.0 + 0.5) for x in pv]
+    return F.expr(_sql_array(pq, "SQ8 probe", "L")), pv_lit
 
 
 @query(
@@ -2826,8 +2842,6 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is one IEEE multiply of exact operands, ties break on vec_id,
     and the re-rank uses the shared micro-quantized rank.  Reference
     heritage: none (SURVEY §2 charter extension, similarity family)."""
-    import math
-
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
@@ -2839,9 +2853,7 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if pv is None:
         return spark.createDataFrame([], out_schema)
-    pq = [int(math.floor(x * 1000000.0 + 0.5)) for x in pv]
-    pq_lit = F.array(*[F.lit(q).cast("bigint") for q in pq])
-    pv_lit = F.array(*[F.lit(x) for x in pv])
+    pq_lit, pv_lit = _sq8_probe_lits(pv)
 
     s = F.aggregate(
         F.zip_with(F.col("codes"), pq_lit, lambda c, p: c * p),
@@ -3011,7 +3023,7 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = spark.read.schema(
         "vec_id BIGINT, label INT, prefix ARRAY<DOUBLE>"
     ).parquet(store_dir)
-    p16_lit = F.array(*[F.lit(x) for x in p16])
+    p16_lit = F.expr(_sql_array(p16, "probe prefix"))
     c16 = _dot(F.col("prefix"), p16_lit) / (
         _norm(F.col("prefix")) * _norm(p16_lit)
     )
@@ -3023,7 +3035,7 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(MRL_POOL)
         .select("vec_id", "c16")
     )
-    pv_lit = F.array(*[F.lit(x) for x in pv])
+    pv_lit = F.expr(_sql_array(pv, "probe vector"))
     scored = (
         emb.select("vec_id", "label", "v")
         # broadcast-safe: pool is LIMIT MRL_POOL (<=40 rows by
@@ -3223,19 +3235,10 @@ def sim_search_ivf_sq8(
     raise from ``_ivf_seed_lists`` (the EMPTY_RAISES family).
     Reference heritage: none (SURVEY §2 charter extension, similarity
     family)."""
-    import math
-
     ensure_utc(spark)
-    assigned, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
-    pq_lit = F.array(
-        *[
-            F.lit(int(math.floor(x * 1000000.0 + 0.5))).cast("bigint")
-            for x in probe_v
-        ]
-    )
-    pv_lit = F.array(*[F.lit(x) for x in probe_v])
-
-    cand = assigned.where(
+    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
+    pq_lit, pv_lit = _sq8_probe_lits(probe_v)
+    cand = with_cid(emb).where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
     s = F.aggregate(
@@ -3254,7 +3257,7 @@ def sim_search_ivf_sq8(
         .select("vec_id", "s", "scale")
     )
     scored = (
-        assigned.select("vec_id", "label", "v")
+        emb.select("vec_id", "label", "v")
         # broadcast-safe: pool is LIMIT SQ8_POOL (<=40 rows by
         # construction) — constant-bounded regardless of corpus size
         .join(F.broadcast(pool), "vec_id")
@@ -3335,11 +3338,10 @@ def sim_search_ivf_sq8_partitioned(
     the bytes + one bounded float join.  Empty-corpus contract: LOUD
     raise from ``_ivf_seed_lists`` (EMPTY_RAISES family).  Reference
     heritage: none (SURVEY §2 charter extension, similarity family)."""
-    import math
     import tempfile
 
     ensure_utc(spark)
-    assigned, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
@@ -3349,7 +3351,8 @@ def sim_search_ivf_sq8_partitioned(
     if index_dir is None:
         index_dir = tempfile.mkdtemp(prefix="ivf_sq8_index_")
         (
-            assigned.withColumn("scale", _sq8_scale().cast("double"))
+            with_cid(emb)
+            .withColumn("scale", _sq8_scale().cast("double"))
             .withColumn("codes", _sq8_codes("tinyint"))
             .select("vec_id", "scale", "codes", "cid")
             .write.mode("overwrite")
@@ -3358,13 +3361,7 @@ def sim_search_ivf_sq8_partitioned(
         )
         _IVF_SQ8_INDEX_CACHE[key] = index_dir
 
-    pq_lit = F.array(
-        *[
-            F.lit(int(math.floor(x * 1000000.0 + 0.5))).cast("bigint")
-            for x in probe_v
-        ]
-    )
-    pv_lit = F.array(*[F.lit(x) for x in probe_v])
+    pq_lit, pv_lit = _sq8_probe_lits(probe_v)
     lists = read_parquet(spark, index_dir)
     s = F.aggregate(
         F.zip_with(
@@ -3385,7 +3382,7 @@ def sim_search_ivf_sq8_partitioned(
         .select("vec_id", "s", "scale")
     )
     scored = (
-        assigned.select("vec_id", "label", "v")
+        emb.select("vec_id", "label", "v")
         # broadcast-safe: pool is LIMIT SQ8_POOL (<=40 rows by
         # construction) — constant-bounded regardless of corpus size
         .join(F.broadcast(pool), "vec_id")
@@ -3584,11 +3581,11 @@ def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     # the IVF gate raises loudly on an empty/probe-less corpus — do it
     # FIRST so the whole curve has one deterministic empty contract
-    assigned, _probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    emb, with_cid, _probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     # ONE corpus materialization for the WHOLE curve (r17, tightening
     # the r16 one-checkpoint-per-shared-sub-plan form): cid (the IVF
     # assignment argmax) and bucket (the LSH signature) are computed
-    # in the SAME pass — the r16 form checkpointed ``assigned`` and
+    # in the SAME pass — the r16 form checkpointed the assignment and
     # then the signature frame separately — and as a lineage-keeping
     # ``persist()`` instead of an eager localCheckpoint (VERDICT r16
     # #3: an executor loss now recomputes instead of failing the
@@ -3598,8 +3595,9 @@ def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet inputs inside the timed region; it is the in-plan
     # equivalent of the persisted index stores the tier queries
     # already share.
-    base = assigned.withColumn("bucket", lsh_signature("v")).persist()
-    seed = (base, _probe_v, probe_cids)
+    base = with_cid(emb).withColumn("bucket", lsh_signature("v")).persist()
+    # base carries cid, so the tiers' with_cid(base) returns it as is
+    seed = (base, with_cid, _probe_v, probe_cids)
 
     # --- gate censuses as BOUNDED DRIVER-SIDE LITERALS (r17) ---
     # the r16 form materialized FIVE 1-row frames (n, exact ids, two

@@ -276,10 +276,10 @@ def test_ivf_sq8_composite_gate_subset_scores_and_recall_bound(spark):
         range(1, len(got) + 1)
     )
 
-    assigned, _, probe_cids = S._ivf_seed_lists(spark, SF_DIR_ORACLE)
+    emb, with_cid, _, probe_cids = S._ivf_seed_lists(spark, SF_DIR_ORACLE)
     gate = {
         r.vec_id
-        for r in assigned.where(
+        for r in with_cid(emb).where(
             F.col("cid").isin(*probe_cids)
             & (F.col("vec_id") != S.PROBE_ID)
         )

@@ -39,12 +39,12 @@ def test_lsh_signature_sql_form_equals_column_form(spark):
 def test_ivf_seed_passthrough_row_identical(spark):
     """r16: the private ``_seed`` kwarg (recall-curve sharing) must be
     a pure pass-through — calling the IVF tiers with a precomputed
-    (and localCheckpointed) ``_ivf_seed_lists`` triple returns rows
+    (and localCheckpointed) ``_ivf_seed_lists`` tuple returns rows
     identical to the self-build path."""
     from mapreduceplusplus_spark.llm import similarity as S
 
-    assigned, probe_v, probe_cids = S._ivf_seed_lists(spark, SF_DIR_ORACLE)
-    seed = (assigned.localCheckpoint(eager=True), probe_v, probe_cids)
+    emb, with_cid, probe_v, probe_cids = S._ivf_seed_lists(spark, SF_DIR_ORACLE)
+    seed = (with_cid(emb).localCheckpoint(eager=True), with_cid, probe_v, probe_cids)
     for fn in (S.sim_search_ivf, S.sim_search_ivf_sq8, S.sim_search_ivfpq):
         base = sorted(map(tuple, fn(spark, SF_DIR_ORACLE).collect()))
         shared = sorted(
