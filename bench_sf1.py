@@ -97,7 +97,7 @@ def ensure_sf1(src: str, out: str) -> None:
     """Build the fixture once; ``make_sf1.py`` is deterministic, so an
     existing COMPLETE build from the SAME source file versions is
     reused.  Completeness is a ``_COMPLETE`` stamp written AFTER the
-    build (the ``_recoverable_index_dir`` protocol) — a bare
+    build (the rule ``sources/index_store.py`` follows) — a bare
     files-exist check would permanently adopt a crash-truncated last
     table and poison every future bench run."""
     import json

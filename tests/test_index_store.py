@@ -1,0 +1,119 @@
+"""The on-disk index-store protocol (``sources/index_store.py``), pinned
+without Spark: each test gets its own store root under ``tmp_path``.
+The Spark-side pins (every store adopted across a restart, a crashed
+builder, partial and vanished stores, TTL GC) are in
+``tests/test_llm_ops.py``."""
+
+from __future__ import annotations
+
+import os
+import tempfile
+import time
+
+import pytest
+
+from mapreduceplusplus_spark.sources import index_store
+from mapreduceplusplus_spark.sources.index_store import ensure_store
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "mapreduceplusplus_spark",
+)
+
+
+@pytest.fixture
+def root(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return index_store._root()
+
+
+def _builder(calls):
+    def build(d):
+        calls.append(d)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write(str(len(calls)))
+
+    return build
+
+
+def test_adoption_refreshes_a_backdated_store_mtime(root):
+    """A process that keeps serving a store must keep it young, or
+    another process's TTL GC removes it from under the reader."""
+    d = ensure_store("mrl_prefix", "/data/sf", ("fp",), _builder([]))
+    old = time.time() - index_store._STORE_TTL_S - 60
+    os.utime(d, (old, old))
+    assert ensure_store("mrl_prefix", "/data/sf", ("fp",), _builder([])) == d
+    assert time.time() - os.stat(d).st_mtime < 60
+
+
+def test_a_layout_constant_in_fp_names_a_new_store(root):
+    calls = []
+    a = ensure_store("ivf_pq_index", "/data/sf", (("fp",), 16, 8), _builder(calls))
+    b = ensure_store("ivf_pq_index", "/data/sf", (("fp",), 16, 4), _builder(calls))
+    assert a != b
+    assert len(calls) == 2
+    assert os.path.isdir(a) and os.path.isdir(b)
+
+
+def test_a_concurrent_winner_is_adopted_untouched(root):
+    """The build's rename loses to a store another builder installed
+    meanwhile: the winner is returned as it is, and the loser's
+    staging dir is gone."""
+    stamp = index_store._stamp("/data/sf", ("fp",))
+    seen = {}
+
+    def build(d):
+        final = d.rsplit(".tmp", 1)[0]
+        os.makedirs(final)
+        with open(os.path.join(final, "part-0.parquet"), "w") as fh:
+            fh.write("winner")
+        with open(os.path.join(final, "_COMPLETE"), "w") as fh:
+            fh.write(stamp)
+        seen.update(
+            (n, os.stat(os.path.join(final, n)).st_mtime_ns)
+            for n in os.listdir(final)
+        )
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write("loser")
+
+    d = ensure_store("hamming_sketch", "/data/sf", ("fp",), build)
+    assert {
+        n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)
+    } == seen
+    with open(os.path.join(d, "part-0.parquet")) as fh:
+        assert fh.read() == "winner"
+    assert os.listdir(root) == [os.path.basename(d)]
+
+
+@pytest.mark.skipif(
+    not hasattr(os, "getuid") or os.getuid() != 0,
+    reason="handing the root to another uid needs root",
+)
+def test_a_root_owned_by_another_uid_is_refused(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    foreign = tmp_path / f"mrpp_index_u{os.getuid()}"
+    foreign.mkdir()
+    os.chown(foreign, 12345, 12345)
+    with pytest.raises(RuntimeError, match="owned by uid 12345"):
+        ensure_store("ivf_index", "/data/sf", ("fp",), _builder([]))
+
+
+def _sources(sub=""):
+    for d, _dirs, files in os.walk(os.path.join(PKG, sub)):
+        for fn in files:
+            if fn.endswith(".py"):
+                p = os.path.join(d, fn)
+                with open(p) as fh:
+                    yield os.path.relpath(p, PKG), fh.read()
+
+
+def test_one_store_protocol():
+    """Index stores are made only through ``ensure_store``: nothing
+    under ``llm/`` makes a temp dir, and the store module's staging
+    sweep is the package's only exit hook."""
+    for rel, text in _sources("llm"):
+        assert "tempfile.mkdtemp(" not in text, rel
+    hooks = sorted(rel for rel, text in _sources() if "atexit.register(" in text)
+    assert hooks == [os.path.join("sources", "index_store.py")]

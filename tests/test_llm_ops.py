@@ -1893,125 +1893,169 @@ def test_substring_spans_guarantee_floor_and_exact_extents(spark, tmp_path):
     assert not any(r.doc_a == r.doc_b for r in rows)
 
 
-def test_incremental_indexes_cold_start_recovery(spark):
-    """VERDICT r12 #8 (stretch): the production RESTART path — a new
-    process has empty in-memory memos but the on-disk band/shingle and
-    member-embedding stores survive.  Simulate it (clear every memo,
-    keep disk) and pin that dedup_incremental_ingest_near AND
-    dedup_semdedup_incremental ADOPT the existing stores: identical
-    verdicts, and not one store file rewritten (same file set, same
-    mtime_ns — a rebuild cannot fake that)."""
-    import os
-
+def _store_layouts():
+    """Each index store's query -> (store name prefix, the layout
+    constants its ``fp`` carries after the dataset fingerprint)."""
     import mapreduceplusplus_spark.llm.dedup as D
-    from mapreduceplusplus_spark import registry
-    from tests.conftest import SF_DIR_ORACLE
+    import mapreduceplusplus_spark.llm.similarity as S
 
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for fn in files:
-                p = os.path.join(root, fn)
-                out[p] = os.stat(p).st_mtime_ns
-        return out
+    return {
+        "dedup_incremental_ingest_near": (
+            "neardup_index",
+            (D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_R, D._INGEST_NB, D._INGEST_NS),
+        ),
+        "dedup_semdedup_incremental": ("semingest_index", ()),
+        "sim_search_ivf_partitioned": ("ivf_index", (S.IVF_CENTROIDS,)),
+        "sim_search_ivfpq": (
+            "ivf_pq_index",
+            (S.IVF_CENTROIDS, S.PQ_M, S.PQ_K),
+        ),
+        "sim_search_ivf_sq8_partitioned": ("ivf_sq8_index", (S.IVF_CENTROIDS,)),
+        "sim_search_hamming_rerank": ("hamming_sketch", ()),
+        "sim_search_matryoshka_funnel": ("mrl_prefix", (S.MRL_DIMS,)),
+    }
 
-    def run(name):
-        return sorted(
-            map(tuple, registry.queries()[name](spark, SF_DIR_ORACLE).collect())
-        )
+
+_STORE_QUERIES = sorted(_store_layouts())
+
+
+def _store_snapshot(d):
+    """file -> mtime_ns for every file of a store (a rebuild rewrites
+    at least ``_COMPLETE``)."""
+    out = {}
+    for root, _dirs, files in os.walk(d):
+        for fn in files:
+            p = os.path.join(root, fn)
+            out[p] = os.stat(p).st_mtime_ns
+    return out
+
+
+def _used_store(prefix):
+    """The complete store named ``prefix_*`` that the last call built or
+    adopted: a build and an adoption both leave it the youngest dir
+    mtime among the stores with that prefix."""
+    from mapreduceplusplus_spark.sources import index_store
+
+    root = index_store._root()
+    stores = [
+        os.path.join(root, n)
+        for n in os.listdir(root)
+        if n.startswith(prefix + "_")
+        and ".tmp" not in n
+        and os.path.isfile(os.path.join(root, n, "_COMPLETE"))
+    ]
+    assert stores, prefix
+    return max(stores, key=lambda d: os.stat(d).st_mtime_ns)
+
+
+@pytest.mark.parametrize("name", _STORE_QUERIES)
+def test_incremental_indexes_cold_start_recovery(spark, name, monkeypatch):
+    """The restart path: a new process has no in-memory state, but the
+    on-disk store survives.  With every memo cleared, the second call
+    must ADOPT the store the first call built or adopted: the same
+    rows, and not one store file rewritten (same file set, same
+    mtime_ns — a rebuild cannot fake that).  The first call also
+    shows the store's stamp carries its layout constants."""
+    import mapreduceplusplus_spark.llm.dedup as D
+    import mapreduceplusplus_spark.llm.similarity as S
+    from mapreduceplusplus_spark.sources.index_store import ensure_store
+
+    prefix, layout = _store_layouts()[name]
+    fps = []
+
+    def spy(p, sf_dir, fp, build):
+        fps.append((p, fp))
+        return ensure_store(p, sf_dir, fp, build)
+
+    monkeypatch.setattr(D, "ensure_store", spy)
+    monkeypatch.setattr(S, "ensure_store", spy)
+    q = registry.queries()[name]
+
+    def run():
+        return sorted(map(tuple, q(spark, SF_DIR_ORACLE).collect()))
 
     D.release_shingles()
-    D._NEARDUP_INDEX_CACHE.clear()
-    D._SEMINGEST_INDEX_CACHE.clear()
     try:
-        warm_near = run("dedup_incremental_ingest_near")
-        warm_sem = run("dedup_semdedup_incremental")
-        assert len(D._NEARDUP_INDEX_CACHE) == 1
-        assert len(D._SEMINGEST_INDEX_CACHE) == 1
-        near_dir = next(iter(D._NEARDUP_INDEX_CACHE.values()))
-        sem_dir = next(iter(D._SEMINGEST_INDEX_CACHE.values()))
-        snap_near, snap_sem = snapshot(near_dir), snapshot(sem_dir)
-        assert snap_near and snap_sem
+        first = run()
+        assert [fp[1:] for p, fp in fps if p == prefix] == [layout]
+        store = _used_store(prefix)
+        snap = _store_snapshot(store)
+        assert snap
 
         # ---- "process restart": every in-memory memo gone, disk kept
         D.release_shingles()
-        D._NEARDUP_INDEX_CACHE.clear()
-        D._SEMINGEST_INDEX_CACHE.clear()
-
-        cold_near = run("dedup_incremental_ingest_near")
-        cold_sem = run("dedup_semdedup_incremental")
-        assert cold_near == warm_near
-        assert cold_sem == warm_sem
-        # adopted, not rebuilt: same dirs, same files, same mtimes
-        assert next(iter(D._NEARDUP_INDEX_CACHE.values())) == near_dir
-        assert next(iter(D._SEMINGEST_INDEX_CACHE.values())) == sem_dir
-        assert snapshot(near_dir) == snap_near
-        assert snapshot(sem_dir) == snap_sem
+        assert run() == first
+        assert _used_store(prefix) == store
+        assert _store_snapshot(store) == snap
     finally:
         D.release_shingles()
 
 
 def test_index_store_concurrency_protocol(spark):
-    """VERDICT r15 #1: the shared /tmp index stores must survive (a) a
-    CONCURRENT process exiting — the old exit sweep rmtree'd the live
-    store from under this process's lazily-consumed plan, the judged
-    ``FileNotFoundError: .../bands`` — and (b) a partially-deleted /
-    vanished store dir, which must trigger a memo-invalidating REBUILD
-    rather than handing Spark a dead path.  Three pins:
+    """The shared index stores must survive (a) a concurrent process
+    that dies in the middle of a build — its exit may remove only its
+    own staging dir, never a complete store — and (b) a partially
+    deleted or vanished store, which must be REBUILT rather than handed
+    to Spark as a dead path.  Three pins:
 
-    1. a subprocess that holds the store in its own memo cache and
-       exits (atexit fires) leaves the on-disk store byte-identical;
+    1. a subprocess whose build raises ``SystemExit`` leaves neither
+       its ``.tmp<pid>`` staging dir nor a final dir, and the store
+       this process built stays byte-identical;
     2. a simulated partial dir (marker + one partition dir gone, the
        crash/raced-GC shape) rebuilds transparently: same verdicts;
     3. a fully vanished dir rebuilds transparently: same verdicts."""
-    import os
     import shutil
     import subprocess
     import sys
+    import tempfile
 
     import mapreduceplusplus_spark.llm.dedup as D
-    from mapreduceplusplus_spark import registry
-    from tests.conftest import SF_DIR_ORACLE
-
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for fn in files:
-                p = os.path.join(root, fn)
-                out[p] = os.stat(p).st_mtime_ns
-        return out
 
     def run(name):
         return sorted(
             map(tuple, registry.queries()[name](spark, SF_DIR_ORACLE).collect())
         )
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     D.release_shingles()
     try:
         warm = run("dedup_incremental_ingest_near")
-        key = next(iter(D._NEARDUP_INDEX_CACHE))
-        near_dir = D._NEARDUP_INDEX_CACHE[key]
-        snap = snapshot(near_dir)
+        near_dir = _used_store("neardup_index")
+        snap = _store_snapshot(near_dir)
         assert snap
 
-        # ---- 1. concurrent process with the store in ITS memo exits:
-        # under the pre-r16 exit sweep this rmtree'd the shared store;
-        # now exit only clears that process's .tmp<pid> staging debris
+        # ---- 1. a concurrent process dies mid-build: its exit hook
+        # removes its staging dir and nothing else
         code = (
-            "import mapreduceplusplus_spark.llm.dedup as D\n"
-            f"D._NEARDUP_INDEX_CACHE[('app', 'sf', ())] = {near_dir!r}\n"
-            f"D._SEMINGEST_INDEX_CACHE[('app', 'sf', ())] = {near_dir!r}\n"
+            "import os\n"
+            "from mapreduceplusplus_spark.sources.index_store import ensure_store\n"
+            "def build(d):\n"
+            "    os.makedirs(d)\n"
+            "    open(os.path.join(d, 'part-0.parquet'), 'w').close()\n"
+            "    print(d, flush=True)\n"
+            "    raise SystemExit(3)\n"
+            f"ensure_store('neardup_index', {SF_DIR_ORACLE!r}, ('crashed',), build)\n"
         )
-        subprocess.run(
-            [sys.executable, "-c", code], check=True, cwd="/root/repo"
+        proc = subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=repo,
+            env={**os.environ, "TMPDIR": tempfile.gettempdir()},
+            capture_output=True,
+            text=True,
         )
-        assert os.path.isdir(os.path.join(near_dir, "bands"))
-        assert snapshot(near_dir) == snap  # byte-identical, not rebuilt
+        assert proc.returncode == 3, proc.stderr
+        staging = proc.stdout.strip()
+        final, subpid = staging.rsplit(".tmp", 1)
+        assert os.path.dirname(final) == os.path.dirname(near_dir)
+        assert subpid.isdigit() and int(subpid) != os.getpid()
+        assert not os.path.exists(staging)
+        assert not os.path.exists(final)
+        assert _store_snapshot(near_dir) == snap  # byte-identical
         assert run("dedup_incremental_ingest_near") == warm
 
         # ---- 2. partial dir: marker and one partition dir gone (a
-        # crashed builder / raced deletion) — memo revalidation must
-        # force a rebuild, not serve the dead path
+        # crashed builder / raced deletion) — must rebuild, not serve
+        # the dead path
         os.remove(os.path.join(near_dir, "_COMPLETE"))
         shutil.rmtree(os.path.join(near_dir, "bands"))
         D.release_shingles()  # memoized probe frames reference the store
@@ -2032,14 +2076,13 @@ def test_index_store_ttl_gc(tmp_path):
     stores and stale staging dirs are reaped, fresh ones (what an
     overlapping live process is serving — adoption refreshes mtime)
     are kept."""
-    import os
     import time
 
-    import mapreduceplusplus_spark.llm.dedup as D
+    from mapreduceplusplus_spark.sources import index_store
 
     root = str(tmp_path)
-    old = time.time() - D._INDEX_STORE_TTL_S - 60
-    stale_tmp = time.time() - D._INDEX_STAGING_TTL_S - 60
+    old = time.time() - index_store._STORE_TTL_S - 60
+    stale_tmp = time.time() - index_store._STAGING_TTL_S - 60
     for name, when in [
         ("neardup_index_dead00", old),
         ("neardup_index_live00", None),
@@ -2050,11 +2093,11 @@ def test_index_store_ttl_gc(tmp_path):
         os.makedirs(d)
         if when is not None:
             os.utime(d, (when, when))
-    D._index_root_gc_done = False
+    index_store._gc_done = False
     try:
-        D._gc_index_store_root(root)
+        index_store._gc_root(root)
     finally:
-        D._index_root_gc_done = False
+        index_store._gc_done = False
     left = sorted(os.listdir(root))
     assert left == ["neardup_index_live00", "semingest_index_y.tmp88888"]
 
