@@ -147,7 +147,7 @@ def main() -> None:
         min(run_one(spark, qs["scan_parquet"], sf_dir) for _ in range(3)), 4
     )
 
-    from mapreduceplusplus_spark.llm.dedup import release_shingles
+    from mapreduceplusplus_spark.sources.memo import release
 
     # best-of-N: single-run wall times on a shared box swing ±30%
     # (GC, compilation, page cache; measured up to 2× between whole-
@@ -161,10 +161,12 @@ def main() -> None:
 
     def timed_cold(name: str) -> float:
         t = run_one(spark, qs[name], sf_dir)
-        # dedup queries memoize a persisted shingle table; drop it so
-        # every timed run (including each rep) is self-contained —
-        # no cross-query OR cross-rep cache help
-        release_shingles()
+        # queries memoize what they derive from a dataset (persisted
+        # shingle/band frames, BPE state, IVF seed centroids and probe);
+        # drop every memo so each timed run (including each rep) is
+        # self-contained — no cross-query OR cross-rep cache help.  IVF
+        # rows therefore pay their bounded seed collects on every rep.
+        release()
         return t
 
     import statistics

@@ -55,6 +55,7 @@ from pyspark.sql import types as T
 
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: number of merge rounds — small enough that the oracle unrolls the
@@ -216,61 +217,57 @@ def _bpe_state(
 ) -> tuple[DataFrame, DataFrame]:
     """Train ``n`` merges; returns ``(merges, seg)`` — the learned
     merge table (merge_rank, lhs, rhs, merged, pair_count) and the
-    final per-word segmentation (w, freq, pos, sym).  Memoized into the
-    dedup module's fingerprint-keyed aux cache (same eviction/release
-    lifecycle as every other derived-from-documents table); the whole
-    EAGER training loop runs inside the cache-miss path only."""
-    from mapreduceplusplus_spark.llm.dedup import _AUX_CACHE, _docs_key
+    final per-word segmentation (w, freq, pos, sym), both persisted.
+    Memoized per session and ``documents`` version
+    (``sources/memo.py``: same eviction and release as every other
+    derived-from-documents table); the whole EAGER training loop runs
+    on a memo miss only."""
 
-    key_m = _docs_key(spark, sf_dir) + ("bpe_merges", n)
-    key_s = _docs_key(spark, sf_dir) + ("bpe_seg", n)
-    if key_m in _AUX_CACHE and key_s in _AUX_CACHE:
-        return _AUX_CACHE[key_m], _AUX_CACHE[key_s]
+    def _train() -> tuple[DataFrame, DataFrame]:
+        from mapreduceplusplus_spark.llm.dedup import tokens
 
-    from mapreduceplusplus_spark.llm.dedup import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    wf = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-    )
-    seg = wf.select(
-        "w",
-        "freq",
-        F.posexplode(F.split("w", "")).alias("pos", "sym"),
-    ).localCheckpoint(eager=True)
-
-    bests: list[DataFrame] = []
-    for i in range(1, n + 1):
-        best = (
-            _pair_counts(seg)
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .localCheckpoint(eager=True)  # 1 row; referenced twice below
+        docs = load_table(spark, sf_dir, "documents")
+        wf = (
+            docs.select(F.explode(tokens(F.col("text"))).alias("w"))
+            .groupBy("w")
+            .agg(F.count("*").alias("freq"))
         )
-        bests.append(
-            best.select(
-                F.lit(i).cast("bigint").alias("merge_rank"),
-                F.col("l").alias("lhs"),
-                F.col("r").alias("rhs"),
-                F.concat("l", "r").alias("merged"),
-                F.col("cnt").alias("pair_count"),
+        seg = wf.select(
+            "w",
+            "freq",
+            F.posexplode(F.split("w", "")).alias("pos", "sym"),
+        ).localCheckpoint(eager=True)
+
+        bests: list[DataFrame] = []
+        for i in range(1, n + 1):
+            best = (
+                _pair_counts(seg)
+                .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
+                .limit(1)
+                .localCheckpoint(eager=True)  # 1 row; referenced twice below
             )
-        )
-        # checkpoint per round: without it the window/join lineage
-        # stacks n deep and Catalyst analysis dominates (oracle-gotchas)
-        seg = _merge_round(seg, best).localCheckpoint(eager=True)
+            bests.append(
+                best.select(
+                    F.lit(i).cast("bigint").alias("merge_rank"),
+                    F.col("l").alias("lhs"),
+                    F.col("r").alias("rhs"),
+                    F.concat("l", "r").alias("merged"),
+                    F.col("cnt").alias("pair_count"),
+                )
+            )
+            # checkpoint per round: without it the window/join lineage
+            # stacks n deep and Catalyst analysis dominates (oracle-gotchas)
+            seg = _merge_round(seg, best).localCheckpoint(eager=True)
 
-    merges = bests[0]
-    for b in bests[1:]:
-        merges = merges.unionAll(b)
-    empty = spark.createDataFrame([], _MERGES_SCHEMA)
-    merges = empty.unionAll(merges)  # pins nullable schema incl. 0-merge case
+        merges = bests[0]
+        for b in bests[1:]:
+            merges = merges.unionAll(b)
+        empty = spark.createDataFrame([], _MERGES_SCHEMA)
+        # pins the nullable schema, incl. the 0-merge case
+        merges = empty.unionAll(merges)
+        return merges.persist(), seg.persist()
 
-    _AUX_CACHE[key_m] = merges.persist()
-    _AUX_CACHE[key_s] = seg.persist()
-    return _AUX_CACHE[key_m], _AUX_CACHE[key_s]
+    return memo(spark, sf_dir, "documents", ("bpe_state", n), _train)
 
 
 @query("text_bpe_train", oracle=_bpe_merges_sql())

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.index_store import ensure_store
+from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: near-dup decision threshold on word-trigram Jaccard (the synthetic
@@ -111,65 +112,12 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     return shingles_of_tokens(tokens(text_col), n)
 
 
-#: memoized persisted shingle tables, keyed by (SparkSession, sf_dir) —
-#: the SESSION object, not the applicationId: sibling sessions from
-#: ``spark.newSession()`` share one application but carry their OWN conf
-#: (the hostile-config sweep relies on this), and a DataFrame resolved
-#: against one session silently executes under THAT session's conf, so
-#: cross-session cache hits would leak the builder's config into the
-#: reuser's plans.
-#: A bare ``.persist()`` per call would leak one cached DataFrame into
-#: the session per query invocation (dedup_ngram_jaccard AND
-#: dedup_minhash_near both build it, and bench runs each repeatedly);
-#: memoizing gives every caller THE SAME persisted plan, and
-#: ``release_shingles`` lets bench/tests drop the executor memory
-#: deterministically between timed queries.
 #: diagnostics from the last dedup_cluster_canonical run — round count
 #: and (doubled) edge count of the label-propagation loop, recorded for
 #: the SURVEY §6 scale-evidence decomposition (true-work growth vs
 #: serial section)
 _last_cluster_rounds: int | None = None
 _last_cluster_edges: int | None = None
-
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _docs_key(spark: SparkSession, sf_dir: str, table: str = "documents") -> tuple:
-    """Cache-key prefix for every memoized table derived from
-    ``<sf_dir>/<table>.parquet``: (session, dir, table, content
-    fingerprint).  Including the fingerprint makes the in-memory caches
-    stale-read-proof the same way the on-disk index caches are (ADVICE
-    r11: an in-process rewrite of documents.parquet previously rebuilt
-    the 'fresh' band index FROM the stale persisted shingle/band frames,
-    because those were keyed only on (spark, sf_dir)).  Superseded
-    entries are evicted EAGERLY here (ADVICE r12): a fingerprint change
-    for the same (session, dir, table) unpersists and drops every entry
-    built against the old version, so a long-lived session that rewrites
-    datasets repeatedly never accumulates dead persisted frames."""
-    from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
-
-    key = (spark, sf_dir, table, dataset_fingerprint(sf_dir, table))
-    _evict_stale(key)
-    return key
-
-
-def _evict_stale(key: tuple) -> None:
-    """Unpersist and evict every cache entry whose (session, dir, table)
-    prefix matches ``key`` but whose content fingerprint differs — the
-    dataset was rewritten in-process and those frames can never be read
-    again (their key is unreachable)."""
-    prefix, fp = key[:3], key[3]
-    for cache in (_SHINGLE_CACHE, _AUX_CACHE):
-        stale = [k for k in cache if len(k) >= 4 and k[:3] == prefix and k[3] != fp]
-        for k in stale:
-            try:
-                cache[k].unpersist()
-            except Exception:
-                pass  # session already stopped
-            del cache[k]
-    stale = [k for k in _SCALAR_MEMO if len(k) >= 4 and k[:3] == prefix and k[3] != fp]
-    for k in stale:
-        del _SCALAR_MEMO[k]
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,17 +127,19 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from several branches (posting lists, both join sides,
     verification).  Without the cache each branch re-runs the
     regex+transform from the parquet scan; with it the computation
-    happens once per session+sf_dir.  At 100 TB the same role is played
-    by persisting the shingle table to disk (or a checkpoint) before
-    the self-join."""
-    key = _docs_key(spark, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _spread(spark, load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = _shingle_frame(docs).persist()
-    _SHINGLE_CACHE[key] = sh
-    return sh
+    happens once per session and dataset version.  Memoized
+    (``sources/memo.py``) rather than persisted per call: a bare
+    ``.persist()`` would leak one cached frame per query invocation,
+    while the memo hands every caller THE SAME persisted plan and
+    ``release()`` drops it.  At 100 TB the same role is played by
+    persisting the shingle table to disk (or a checkpoint) before the
+    self-join."""
+
+    def _build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return _shingle_frame(_spread(spark, docs)).persist()
+
+    return memo(spark, sf_dir, "documents", "shingles", _build)
 
 
 def _shingle_frame(docs: DataFrame) -> DataFrame:
@@ -202,51 +152,6 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
     return toks.select(
         "doc_id", shingles_of_tokens(F.col("ws")).alias("sh")
     ).where(F.size("sh") > 0)
-
-
-#: memoized persisted INTERMEDIATE tables (rare posting lists, MinHash
-#: band tables) — each feeds 2-3 plan branches of its query, and
-#: whether Spark's exchange reuse deduplicates those branches at
-#: runtime is scheduler-dependent (measured: ngram candidate stage
-#: swings 2.3-4.2 s warm without the persist, 1.4-2.2 s with it;
-#: MinHash 0.9-2.4 s → 0.5-1.0 s).  Persisting pins the fast path
-#: deterministically.  Released together with the shingle tables.
-_AUX_CACHE: dict[tuple, DataFrame] = {}
-
-#: memoized DRIVER-SIDE scalars (bounded census results — e.g. the
-#: probe-partition id lists of the incremental-ingest paths).  Each is
-#: deterministic for its dataset version (same ``_docs_key``-based key
-#: as the persisted frame it was collected from), so warm invocations
-#: skip the census Spark job entirely (ADVICE r12).
-_SCALAR_MEMO: dict[tuple, object] = {}
-
-
-def _persisted_aux(key: tuple, build) -> DataFrame:
-    df = _AUX_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _AUX_CACHE[key] = df
-    return df
-
-
-def _memo_scalar(key: tuple, build):
-    if key not in _SCALAR_MEMO:
-        _SCALAR_MEMO[key] = build()
-    return _SCALAR_MEMO[key]
-
-
-def release_shingles() -> None:
-    """Unpersist every memoized dedup table — the shingle tables and
-    the derived posting/band tables (bench calls this between timed
-    queries; long-lived sessions call it when done with dedup)."""
-    for cache in (_SHINGLE_CACHE, _AUX_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
-        cache.clear()
-    _SCALAR_MEMO.clear()
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -380,14 +285,14 @@ def dedup_ngram_jaccard(
     return _ngram_pairs(
         docs,
         prefix,
-        aux_key=_docs_key(spark, sf_dir) + ("prefix_posting", prefix),
+        aux=(spark, sf_dir, ("prefix_posting", prefix)),
     )
 
 
 def _ngram_pairs(
     docs: DataFrame,
     prefix: bool = True,
-    aux_key: tuple | None = None,
+    aux: tuple | None = None,
     *,
     t_num: int = JACCARD_T_NUM,
     t_den: int = JACCARD_T_DEN,
@@ -445,10 +350,16 @@ def _ngram_pairs(
             .select("doc_id", "s", (F.col("rn0") + 1).alias("rn"), "n")
         )
 
-    # persisted: the prefix posting table feeds both self-join sides —
-    # see _AUX_CACHE (test callers pass aux_key=None: no persist, no
-    # cache entry to leak)
-    pre = _persisted_aux(aux_key, _build_prefix) if aux_key else _build_prefix()
+    # persisted: the prefix posting table feeds both self-join sides.
+    # ``aux`` is (spark, sf_dir, memo tag); test callers pass None: no
+    # persist, no memo entry to leak
+    if aux:
+        spark, sf_dir, tag = aux
+        pre = memo(
+            spark, sf_dir, "documents", tag, lambda: _build_prefix().persist()
+        )
+    else:
+        pre = _build_prefix()
     a = pre.alias("a")
     b = pre.alias("b")
     cand = (
@@ -696,9 +607,9 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage shuffle-FREE (~40% faster cold at sf0.1, r7 measurement)."""
     ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
-    # persisted: the band table feeds both self-join sides — see _AUX_CACHE
-    bands = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("mh_bands",), lambda: _minhash_bands(docs)
+    # persisted: the band table feeds both self-join sides
+    bands = memo(
+        spark, sf_dir, "documents", "mh_bands", lambda: _minhash_bands(docs).persist()
     )
 
     a = bands.alias("a")
@@ -1727,11 +1638,16 @@ def dedup_containment_quotes(
     # census, the per-doc rank join, and the full host-side postings)
     # — without the persist each branch re-runs the HOF explode over
     # the shingle arrays (measured 2.78 s → 2.0 s at sf0.1)
-    p = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("contain_postings",),
+    p = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "contain_postings",
         lambda: docs.select(
             "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("s")
-        ).select("doc_id", "n", F.xxhash64("s").alias("s")),
+        )
+        .select("doc_id", "n", F.xxhash64("s").alias("s"))
+        .persist(),
     )
     dfreq = p.groupBy("s").agg(F.count("*").alias("df"))
     ordered = (
@@ -2128,9 +2044,12 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def _build_stores(d: str) -> None:
         docs = _doc_shingles(spark, sf_dir)
-        bands = _persisted_aux(
-            _docs_key(spark, sf_dir) + ("mh_bands",),
-            lambda: _minhash_bands(docs),
+        bands = memo(
+            spark,
+            sf_dir,
+            "documents",
+            "mh_bands",
+            lambda: _minhash_bands(docs).persist(),
         )
         (
             bands.where(~is_batch)
@@ -2181,8 +2100,11 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # ---- 2. probe — batch-only text pass: shingle + band ONLY
     # today's crawl (the 1/INGEST_NEAR_MOD slice), never the corpus
-    batch_sh = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("ingest_batch_shingles",),
+    batch_sh = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "ingest_batch_shingles",
         lambda: _shingle_frame(
             _spread(
                 spark,
@@ -2190,17 +2112,23 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
                 .where(is_batch)
                 .select("doc_id", "text"),
             )
-        ),
+        ).persist(),
     )
-    batch_bands = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("ingest_batch_bands",),
-        lambda: _minhash_bands(batch_sh).withColumn("pk", pk),
+    batch_bands = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "ingest_batch_bands",
+        lambda: _minhash_bands(batch_sh).withColumn("pk", pk).persist(),
     )
     # bounded census collect: ≤ MINHASH_BANDS·NB = 512 ints — memoized
     # per dataset version alongside the persisted frame it reads, so a
     # warm invocation runs zero census jobs (ADVICE r12)
-    probe_pks = _memo_scalar(
-        _docs_key(spark, sf_dir) + ("ingest_probe_pks",),
+    probe_pks = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "ingest_probe_pks",
         lambda: sorted(
             r[0] for r in batch_bands.select("pk").distinct().collect()
         ),
@@ -2243,8 +2171,11 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
     # persisted (memoized like batch_bands): the candidate frame feeds
     # the bounded sk census below AND the verify join — without the
     # persist the band probe join would run twice
-    cand_corpus = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("ingest_cand_corpus",),
+    cand_corpus = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "ingest_cand_corpus",
         lambda: (
             batch_bands.select(F.col("doc_id").alias("db"), "band", "bkey")
             .join(
@@ -2253,6 +2184,7 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .select("db", "dc")
             .dropDuplicates(["db", "dc"])
+            .persist()
         ),
     )
     cand_batch = (
@@ -2274,8 +2206,11 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
     # corpus text (the store build is the only text pass).  The BATCH
     # side shingles today's crawl, which is by definition the text
     # being scanned.
-    probe_sks = _memo_scalar(
-        _docs_key(spark, sf_dir) + ("ingest_probe_sks",),
+    probe_sks = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "ingest_probe_sks",
         lambda: sorted(
             r[0]
             for r in cand_corpus.select(
@@ -2407,7 +2342,7 @@ def _semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``dedup_semdedup_incremental``.  The WHOLE build — including
     ``kmeans_assignments``, whose exploded cell relation runs an eager
     localCheckpoint job over the full embeddings table — lives inside
-    the ``_persisted_aux`` lambda, so a warm invocation pays a dict
+    the memoized ``_build``, so a warm invocation pays a dict
     lookup, not a corpus-sized Spark job (round-12 review: calling
     kmeans_assignments unconditionally before the gate lookup re-ran
     the checkpoint job on every bench rep)."""
@@ -2419,16 +2354,14 @@ def _semdedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         )
-        return assign.join(emb, "vec_id")
+        return assign.join(emb, "vec_id").persist()
 
     # memoized persist (not a local persist/unpersist pair: the
     # RETURNED plans still reference this frame, so an unpersist on
     # exit would silently re-run the Lloyd assignment at collect
-    # time) — released by release_shingles() like every other dedup
-    # intermediate
-    return _persisted_aux(
-        _docs_key(spark, sf_dir, "embeddings") + ("semdedup_gate",), _build
-    )
+    # time) — released by ``memo.release()`` like every other
+    # memoized intermediate
+    return memo(spark, sf_dir, "embeddings", "semdedup_gate", _build)
 
 
 @query("dedup_semdedup", oracle=_semdedup_oracle())
@@ -2675,9 +2608,12 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _build_store,
     )
 
-    batch = _persisted_aux(
-        _docs_key(spark, sf_dir, "embeddings") + ("semingest_batch",),
-        lambda: x.where(is_batch),
+    batch = memo(
+        spark,
+        sf_dir,
+        "embeddings",
+        "semingest_batch",
+        lambda: x.where(is_batch).persist(),
     )
     # bounded census collect: ≤ k cluster ids
     probe_cids = sorted(
@@ -2932,15 +2868,18 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_full")
         )
 
-    grams = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("substr_grams",), _build_grams
+    grams = memo(
+        spark, sf_dir, "documents", "substr_grams", lambda: _build_grams().persist()
     )
     # winnowed fingerprint index — feeds BOTH sides of the candidate
     # self-join; the W-window minimum is a rows-frame min over the
     # SAME per-doc sort (persisted like the text_winnowing_matches
     # index)
-    fps = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("substr_winnow_fp",),
+    fps = memo(
+        spark,
+        sf_dir,
+        "documents",
+        "substr_winnow_fp",
         lambda: grams.select(
             "doc_id",
             F.min("h")
@@ -2951,7 +2890,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where("_full")
         .select("doc_id", "fp")
-        .distinct(),
+        .distinct()
+        .persist(),
     )
     cand = (
         fps.alias("a")
@@ -3191,7 +3131,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _ngram_pairs(
         docs,
         True,
-        aux_key=_docs_key(spark, sf_dir) + ("prefix_posting_t", 1, 2),
+        aux=(spark, sf_dir, ("prefix_posting_t", 1, 2)),
         t_num=1,
         t_den=2,
         raw_counts=True,

@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.index_store import ensure_store
+from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import (
     dataset_fingerprint,
     load_table,
@@ -549,65 +550,28 @@ def sim_search_ivf(
     return _ivf_score_topk(cand, probe_v)
 
 
-#: memoized DRIVER-SIDE IVF seed state — (cents, probe_v, probe_cids)
-#: per (applicationId, sf_dir, dataset fingerprint).  The seed
-#: centroids and the probe ARE the IVF index's quantizer: bounded
-#: (≤ IVF_CENTROIDS + 1 rows), deterministic for a dataset version,
-#: and re-collected identically by every IVF-family query — the same
-#: standing amortization policy as dedup's ``_SCALAR_MEMO`` (bounded
-#: census results).  Saves 2 driver jobs per warm IVF-family
-#: invocation (r16 measurement: the curve alone paid 8).
-_IVF_SEED_MEMO: dict[tuple, tuple] = {}
-
-
-def _evict_stale_seeds(memo_key: tuple) -> None:
-    """Drop seed-memo entries for SUPERSEDED dataset fingerprints of
-    the same (applicationId, sf_dir) (ADVICE r16): a long-lived session
-    that rewrites the embeddings under one directory changes the
-    fingerprint component of the key, and without eviction the stale
-    quantizer inputs would accumulate for the life of the context.
-    Called on every memo MISS — the keys share their first two
-    components and differ in the third (the ``pq_seeds``-tagged keys
-    carry a fourth marker component and the same layout)."""
-    for k in [
-        k
-        for k in _IVF_SEED_MEMO
-        if k[:2] == memo_key[:2] and k[2] != memo_key[2]
-    ]:
-        del _IVF_SEED_MEMO[k]
-
-
 def _probe_vector(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> list[float] | None:
     """Bounded 1-row probe fetch shared by the ladder tiers, memoized
-    per (context, dataset version) in ``_IVF_SEED_MEMO`` (r17): the
+    per session and dataset version (``sources/memo.py``, r17): the
     probe vector is a quantizer INPUT under the same standing
     amortization policy as the seed centroids — every tier collected
     the identical row with its own job (~0.25 s each warm; the curve
     paid three).  Returns ``None`` for a probe-less corpus (tiers
-    degrade per their own contracts; the miss is NOT memoized so a
-    later-appended probe is seen)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-        "probe_v",
-    )
-    pv = _IVF_SEED_MEMO.get(key)
-    if pv is None:
-        _evict_stale_seeds(key)
+    degrade per their own contracts); the ``None`` is memoized too, as
+    appending a probe rewrites the file and so changes the memo key."""
+
+    def _fetch() -> list[float] | None:
         rows = (
             emb.where(F.col("vec_id") == PROBE_ID)
             .select("v")
             .limit(1)
             .collect()
         )
-        if not rows:
-            return None
-        pv = [float(x) for x in rows[0][0]]
-        _IVF_SEED_MEMO[key] = pv
-    return pv
+        return [float(x) for x in rows[0][0]] if rows else None
+
+    return memo(spark, sf_dir, "embeddings", "probe_v", _fetch)
 
 
 def _ivf_seed_lists(
@@ -629,16 +593,8 @@ def _ivf_seed_lists(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-    )
-    memo = _IVF_SEED_MEMO.get(memo_key)
-    if memo is not None:
-        cents, probe_v, probe_cids = memo
-    else:
-        _evict_stale_seeds(memo_key)
+
+    def _seeds() -> tuple[list, list[float], list[int]]:
         cent_rows = (
             emb.where(F.col("vec_id") < IVF_CENTROIDS)
             .select("vec_id", "v")
@@ -671,7 +627,16 @@ def _ivf_seed_lists(
                 cents, key=lambda t: (-_py_mc(_py_cos(t[1], probe_v)), t[0])
             )[:IVF_NPROBE]
         ]
-        _IVF_SEED_MEMO[memo_key] = (cents, probe_v, probe_cids)
+        return cents, probe_v, probe_cids
+
+    # the seed centroids and the probe ARE the IVF index's quantizer:
+    # bounded (≤ IVF_CENTROIDS + 1 rows) and deterministic for a
+    # dataset version, so every IVF-family query of a session shares
+    # one collect (saves 2 driver jobs per warm invocation; r16: the
+    # curve alone paid 8)
+    cents, probe_v, probe_cids = memo(
+        spark, sf_dir, "embeddings", "ivf_seeds", _seeds
+    )
 
     # the row's L2 norm is centroid-independent: hoist it into ONE
     # projected column instead of re-folding it inside each of the
@@ -1665,15 +1630,8 @@ def _ivfpq_search(
     emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
     d = len(probe_v)
     sub = d // PQ_M
-    pq_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
-        "pq_seeds",
-    )
-    seeds = _IVF_SEED_MEMO.get(pq_key)
-    if seeds is None:
-        _evict_stale_seeds(pq_key)
+
+    def _pq_seeds() -> list[list[float]]:
         seed_rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", _as_double("embedding").alias("v"))
@@ -1683,8 +1641,9 @@ def _ivfpq_search(
             )
             .collect()
         )
-        seeds = [v for _, v in _dedupe_seed_rows(seed_rows)]
-        _IVF_SEED_MEMO[pq_key] = seeds
+        return [v for _, v in _dedupe_seed_rows(seed_rows)]
+
+    seeds = memo(spark, sf_dir, "embeddings", "pq_seeds", _pq_seeds)
     if len(seeds) < PQ_K:  # tiny/empty corpus: degrade to exact scan
         return _ivf_score_topk(
             emb.where(F.col("vec_id") != PROBE_ID), probe_v, metric

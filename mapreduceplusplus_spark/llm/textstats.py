@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: tiny per-language stopword lists for the n-gram/stopword lang-ID
@@ -1009,15 +1010,15 @@ def text_winnowing_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-split backstops, and raising w thins the index).  The ≥ 2
     shared-fingerprint floor suppresses single-collision noise.  The
     fingerprint table feeds BOTH self-join sides, so it is persisted
-    via the shared dedup memo (same pattern/cache as the containment
-    postings — ``release_shingles`` drops it); the md5+winnow stage
+    via the shared dataset memo (``sources/memo.py``, like the
+    containment postings — ``release()`` drops it); the md5+winnow stage
     runs once, not twice.  The scan is ``_spread`` first: a no-op on
     many-file inputs, one tiny shuffle on single-split fixtures so
     hashing parallelizes across the cluster."""
     # lazy import: keeps llm.dedup's registration position in the
     # module list unchanged (registry order invariant — see ADVICE r6
     # on advanced.py/tpch.py)
-    from mapreduceplusplus_spark.llm.dedup import _persisted_aux, _spread
+    from mapreduceplusplus_spark.llm.dedup import _spread
 
     ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
@@ -1041,9 +1042,9 @@ def text_winnowing_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda i: F.array_min(F.slice("hs", i, _WIN_W)),
             )
         )
-        return hs.select("doc_id", F.explode(fps).alias("fp"))
+        return hs.select("doc_id", F.explode(fps).alias("fp")).persist()
 
-    fp = _persisted_aux((spark, sf_dir, "winnow_fp"), _build_fp)
+    fp = memo(spark, sf_dir, "documents", "winnow_fp", _build_fp)
     return (
         fp.alias("a")
         .join(
@@ -1248,7 +1249,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     # lazy import — keeps llm.dedup's registration position unchanged
-    from mapreduceplusplus_spark.llm.dedup import _persisted_aux, _spread
+    from mapreduceplusplus_spark.llm.dedup import _spread
 
     ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
@@ -1284,9 +1285,10 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             toks.mapInPandas(_mg_partials, "term string, cnt long")
             .groupBy("term")
             .agg(F.sum("cnt").alias("cnt"))
+            .persist()
         )
 
-    partials = _persisted_aux((spark, sf_dir, "mg_partials"), _build_partials)
+    partials = memo(spark, sf_dir, "documents", "mg_partials", _build_partials)
     totals = (
         partials.where(F.col("term").isin(_HH_NKEY, _HH_DKEY))
         .groupBy()

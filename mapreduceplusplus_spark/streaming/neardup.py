@@ -64,14 +64,13 @@ from mapreduceplusplus_spark.llm.dedup import (
     _INGEST_NB,
     _INGEST_NS,
     _doc_shingles,
-    _docs_key,
     _minhash_bands,
-    _persisted_aux,
     shingles_of_tokens,
     tokens,
 )
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: micro-batch width in doc_id units: arrival order is doc_id order,
@@ -141,8 +140,8 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-exact in both engines."""
     ensure_utc(spark)
     sh = _doc_shingles(spark, sf_dir)
-    bands = _persisted_aux(
-        _docs_key(spark, sf_dir) + ("mh_bands",), lambda: _minhash_bands(sh)
+    bands = memo(
+        spark, sf_dir, "documents", "mh_bands", lambda: _minhash_bands(sh).persist()
     )
     is_stream = F.col("doc_id") % INGEST_NEAR_MOD == 0
     sb = bands.where(is_stream).select(

@@ -117,3 +117,53 @@ def test_one_store_protocol():
         assert "tempfile.mkdtemp(" not in text, rel
     hooks = sorted(rel for rel, text in _sources() if "atexit.register(" in text)
     assert hooks == [os.path.join("sources", "index_store.py")]
+
+
+def test_one_memo():
+    """In-process memos live in ``sources/memo.py``: the only other
+    module-level dicts are the path-keyed Parquet schema memo and the
+    query registry, and no module reaches into dedup's private memo
+    names."""
+    import ast
+
+    allowed = {
+        (os.path.join("sources", "tables.py"), "_SCHEMA_MEMO"),
+        ("registry.py", "QUERIES"),
+        ("registry.py", "ORACLES"),
+    }
+    dicts, leaks = [], []
+    for rel, text in _sources():
+        tree = ast.parse(text, rel)
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            is_dict = (isinstance(value, ast.Dict) and not value.keys) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id == "dict"
+            )
+            if is_dict and rel != os.path.join("sources", "memo.py"):
+                for t in targets:
+                    name = t.id if isinstance(t, ast.Name) else ast.dump(t)
+                    if (rel, name) not in allowed:
+                        dicts.append((rel, name))
+        if rel == os.path.join("llm", "dedup.py"):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).endswith("llm.dedup"):
+                leaks += [
+                    (rel, a.name)
+                    for a in node.names
+                    if a.name.startswith("_")
+                    and any(
+                        s in a.name for s in ("CACHE", "MEMO", "docs_key", "aux")
+                    )
+                ]
+    assert dicts == [], dicts
+    assert leaks == [], leaks

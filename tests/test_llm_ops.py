@@ -840,15 +840,15 @@ def test_winnowing_registered_query_end_to_end(spark, tmp_path):
         "doc_id long, lang string, text string",
     ).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
 
-    from mapreduceplusplus_spark.llm.dedup import release_shingles
+    from mapreduceplusplus_spark.sources.memo import release
 
-    release_shingles()  # the query now memoizes its fingerprint table
+    release()  # the query now memoizes its fingerprint table
     try:
         rows = (
             registry.queries()["text_winnowing_matches"](spark, sf_dir).collect()
         )
     finally:
-        release_shingles()  # don't leak a tmp_path-keyed persist
+        release()  # don't leak a tmp_path-keyed persist
     got = {(r.doc_a, r.doc_b): r.n_shared_fp for r in rows}
     assert (0, 1) in got and got[(0, 1)] >= 2, got
     assert all(2 not in pair for pair in got), got
@@ -896,7 +896,7 @@ def test_heavy_hitters_lossless_under_eviction(spark, tmp_path):
     candidate filter and verifies exactly; the below-threshold term
     (and every filler) is absent."""
     from mapreduceplusplus_spark import registry
-    from mapreduceplusplus_spark.llm.dedup import release_shingles
+    from mapreduceplusplus_spark.sources.memo import release
     from mapreduceplusplus_spark.llm.textstats import _HH_DEN, _HH_K
 
     # ~6400 distinct filler terms >> _HH_K=256 counters
@@ -928,9 +928,9 @@ def test_heavy_hitters_lossless_under_eviction(spark, tmp_path):
         docs, "doc_id long, lang string, text string"
     ).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
 
-    release_shingles()                        # no stale mg_partials
+    release()                        # no stale mg_partials
     rows = registry.queries()["text_heavy_hitters"](spark, sf_dir).collect()
-    release_shingles()
+    release()
     got = {r.term: r.n_occurrences for r in rows}
     assert got == {"heavyterm": h}, got
 
@@ -1748,7 +1748,7 @@ def test_bpe_train_matches_imperative_reference_on_overlap_runs(spark, tmp_path)
     segmentation against an independent imperative implementation."""
     from mapreduceplusplus_spark import registry
     from mapreduceplusplus_spark.llm.bpe import BPE_N_MERGES, _bpe_state
-    from mapreduceplusplus_spark.llm.dedup import release_shingles
+    from mapreduceplusplus_spark.sources.memo import release
 
     corpus = [
         (0, "en", "aaa aaaa aaaaa abab ababa bb bbb aab baa"),
@@ -1792,7 +1792,7 @@ def test_bpe_train_matches_imperative_reference_on_overlap_runs(spark, tmp_path)
                     i += 1
             segs[w] = out
 
-    release_shingles()  # tmp_path fixture must not hit a stale memo
+    release()  # tmp_path fixture must not hit a stale memo
     try:
         got_merges = [
             (r.lhs, r.rhs, r.pair_count)
@@ -1823,7 +1823,7 @@ def test_bpe_train_matches_imperative_reference_on_overlap_runs(spark, tmp_path)
             exp = (len(ws), sum(len(segs[w]) for w in ws))
             assert got_counts[doc_id] == exp, (doc_id, got_counts[doc_id], exp)
     finally:
-        release_shingles()  # don't leak tmp_path-keyed persists
+        release()  # don't leak tmp_path-keyed persists
 
 
 def test_substring_spans_guarantee_floor_and_exact_extents(spark, tmp_path):
@@ -1834,11 +1834,8 @@ def test_substring_spans_guarantee_floor_and_exact_extents(spark, tmp_path):
     NOT reported, and a doc containing the run twice yields one span
     per alignment diagonal."""
     from mapreduceplusplus_spark import registry
-    from mapreduceplusplus_spark.llm.dedup import (
-        SUBSTR_K,
-        SUBSTR_W,
-        release_shingles,
-    )
+    from mapreduceplusplus_spark.llm.dedup import SUBSTR_K, SUBSTR_W
+    from mapreduceplusplus_spark.sources.memo import release
 
     floor = SUBSTR_W + SUBSTR_K - 1  # 28
     run_a = [f"ra{chr(97 + i % 26)}{chr(97 + i // 26)}" for i in range(floor)]
@@ -1861,11 +1858,11 @@ def test_substring_spans_guarantee_floor_and_exact_extents(spark, tmp_path):
         "doc_id long, lang string, text string",
     ).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
 
-    release_shingles()
+    release()
     try:
         rows = registry.queries()["dedup_substring_spans"](spark, sf_dir).collect()
     finally:
-        release_shingles()
+        release()
     got = {
         (r.doc_a, r.doc_b, r.a_start): (r.a_end, r.b_start, r.b_end, r.n_words)
         for r in rows
@@ -1959,6 +1956,7 @@ def test_incremental_indexes_cold_start_recovery(spark, name, monkeypatch):
     import mapreduceplusplus_spark.llm.dedup as D
     import mapreduceplusplus_spark.llm.similarity as S
     from mapreduceplusplus_spark.sources.index_store import ensure_store
+    from mapreduceplusplus_spark.sources.memo import release
 
     prefix, layout = _store_layouts()[name]
     fps = []
@@ -1974,7 +1972,7 @@ def test_incremental_indexes_cold_start_recovery(spark, name, monkeypatch):
     def run():
         return sorted(map(tuple, q(spark, SF_DIR_ORACLE).collect()))
 
-    D.release_shingles()
+    release()
     try:
         first = run()
         assert [fp[1:] for p, fp in fps if p == prefix] == [layout]
@@ -1983,12 +1981,12 @@ def test_incremental_indexes_cold_start_recovery(spark, name, monkeypatch):
         assert snap
 
         # ---- "process restart": every in-memory memo gone, disk kept
-        D.release_shingles()
+        release()
         assert run() == first
         assert _used_store(prefix) == store
         assert _store_snapshot(store) == snap
     finally:
-        D.release_shingles()
+        release()
 
 
 def test_index_store_concurrency_protocol(spark):
@@ -2009,7 +2007,7 @@ def test_index_store_concurrency_protocol(spark):
     import sys
     import tempfile
 
-    import mapreduceplusplus_spark.llm.dedup as D
+    from mapreduceplusplus_spark.sources.memo import release
 
     def run(name):
         return sorted(
@@ -2017,7 +2015,7 @@ def test_index_store_concurrency_protocol(spark):
         )
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    D.release_shingles()
+    release()
     try:
         warm = run("dedup_incremental_ingest_near")
         near_dir = _used_store("neardup_index")
@@ -2058,17 +2056,17 @@ def test_index_store_concurrency_protocol(spark):
         # the dead path
         os.remove(os.path.join(near_dir, "_COMPLETE"))
         shutil.rmtree(os.path.join(near_dir, "bands"))
-        D.release_shingles()  # memoized probe frames reference the store
+        release()  # memoized probe frames reference the store
         assert run("dedup_incremental_ingest_near") == warm
         assert os.path.isfile(os.path.join(near_dir, "_COMPLETE"))
 
         # ---- 3. vanished dir (the TTL GC of an idle store, raced)
         shutil.rmtree(near_dir)
-        D.release_shingles()
+        release()
         assert run("dedup_incremental_ingest_near") == warm
         assert os.path.isdir(os.path.join(near_dir, "bands"))
     finally:
-        D.release_shingles()
+        release()
 
 
 def test_index_store_ttl_gc(tmp_path):

@@ -5,6 +5,8 @@ directly (the oracle differentials pin it end-to-end).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark import registry
@@ -14,21 +16,27 @@ from tests.conftest import SF_DIR_ORACLE
 registry.load_all()
 
 
+#: memo tags of the IVF quantizer inputs (``llm/similarity.py``)
+_IVF_SEED_TAGS = ("ivf_seeds", "probe_v", "pq_seeds")
+
+
 def test_ivf_seed_memo_holds_only_bounded_quantizer_inputs(spark):
-    """VERDICT r16 "What's wrong" #2: ``_IVF_SEED_MEMO`` is the one
-    cross-rep cache without a bench release hook — its standing
-    amortization policy is legitimate ONLY while it stores bounded
-    quantizer INPUTS (seed centroids, probe vector, probe cids), never
-    DataFrames or query results.  Pin that invariant so a future edit
-    cannot silently turn the memo into result caching."""
-    from pyspark.sql import DataFrame
+    """VERDICT r16 "What's wrong" #2: the IVF seed entries outlive a
+    query — their standing amortization policy is legitimate ONLY
+    while they store bounded quantizer INPUTS (seed centroids, probe
+    vector, probe cids), never DataFrames or query results.  Pin that
+    invariant so a future edit cannot silently turn the memo into
+    result caching."""
+    from pyspark.sql import DataFrame, SparkSession
 
     import mapreduceplusplus_spark.llm.similarity as S
+    from mapreduceplusplus_spark.sources import memo as M
 
     S._ivf_seed_lists(spark, SF_DIR_ORACLE)
     qs = registry.queries()
     qs["sim_search_ivfpq"](spark, SF_DIR_ORACLE)  # populates pq_seeds
-    assert S._IVF_SEED_MEMO, "memo unexpectedly empty"
+    seeds = {k: v for k, v in M._MEMO.items() if k[4] in _IVF_SEED_TAGS}
+    assert {k[4] for k in seeds} >= {"ivf_seeds", "pq_seeds"}, seeds
 
     def flat(x):
         if isinstance(x, (list, tuple)):
@@ -37,10 +45,11 @@ def test_ivf_seed_memo_holds_only_bounded_quantizer_inputs(spark):
         else:
             yield x
 
-    for key, val in S._IVF_SEED_MEMO.items():
-        # keys: (applicationId, sf_dir, fingerprint[, marker]) — all
-        # bounded plain values
-        for leaf in flat(key):
+    for key, val in seeds.items():
+        # keys: (session, sf_dir, table, fingerprint, tag) — the
+        # session object, then bounded plain values
+        assert isinstance(key[0], SparkSession), key
+        for leaf in flat(key[1:]):
             assert isinstance(leaf, (str, int, float, tuple)), key
         leaves = list(flat(val))
         assert len(leaves) < 50_000, "memo entry is not bounded"
@@ -51,35 +60,40 @@ def test_ivf_seed_memo_holds_only_bounded_quantizer_inputs(spark):
             assert isinstance(leaf, (int, float)), (key, type(leaf))
 
 
-def test_ivf_seed_memo_evicts_superseded_fingerprints(spark):
-    """ADVICE r16: a rewritten dataset under the same (appId, sf_dir)
-    changes the fingerprint key component; the old entry must be
-    EVICTED on the next miss, not accumulate for the context's life."""
-    import mapreduceplusplus_spark.llm.similarity as S
+def test_ivf_seed_memo_evicts_superseded_fingerprints(spark, tmp_path):
+    """ADVICE r16: a rewritten dataset under the same (session, sf_dir,
+    table) changes the fingerprint key component; the old entries —
+    persisted frames and scalars alike — must be EVICTED (and the
+    frames unpersisted) on the next miss, not accumulate for the
+    session's life.  Entries for another directory are left alone."""
+    import shutil
 
-    S._ivf_seed_lists(spark, SF_DIR_ORACLE)
-    live = [
-        k
-        for k in S._IVF_SEED_MEMO
-        if k[1] == SF_DIR_ORACLE and len(k) == 3
-    ]
-    assert live, "expected a live seed entry"
-    app_id, sf_dir, _fp = live[0]
-    stale_key = (app_id, sf_dir, ("stale", "fingerprint"))
-    S._IVF_SEED_MEMO[stale_key] = ([], [], [])
-    # a miss on a NEW fingerprint for the same (appId, sf_dir) evicts
-    # every other fingerprint's entries for that pair
-    S._evict_stale_seeds((app_id, sf_dir, ("fresh", "fingerprint")))
-    assert stale_key not in S._IVF_SEED_MEMO
-    assert live[0] not in S._IVF_SEED_MEMO
-    # unrelated directories are untouched
-    other = (app_id, "/elsewhere", ("x",))
-    S._IVF_SEED_MEMO[other] = ([], [], [])
-    S._evict_stale_seeds((app_id, sf_dir, ("fresh2", "fingerprint")))
-    assert other in S._IVF_SEED_MEMO
-    del S._IVF_SEED_MEMO[other]
-    # restore the real entry for subsequent tests
-    S._ivf_seed_lists(spark, SF_DIR_ORACLE)
+    from mapreduceplusplus_spark.sources import memo as M
+
+    sf_dir, other = str(tmp_path / "a"), str(tmp_path / "b")
+    for d in (sf_dir, other):
+        os.makedirs(d)
+        shutil.copy(os.path.join(SF_DIR_ORACLE, "embeddings.parquet"), d)
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    M.release()
+    try:
+        frame = M.memo(
+            spark, sf_dir, "embeddings", "frame",
+            lambda: spark.range(3).persist(),
+        )
+        frame.count()
+        M.memo(spark, sf_dir, "embeddings", "scalar", lambda: [1, 2])
+        kept = M.memo(spark, other, "embeddings", "scalar", lambda: [3])
+        assert frame.is_cached and len(M._MEMO) == 3
+
+        st = os.stat(path)  # a rewrite: same bytes, new mtime
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        assert M.memo(spark, sf_dir, "embeddings", "scalar", lambda: [4]) == [4]
+        assert not frame.is_cached
+        assert [k[4] for k in M._MEMO if k[1] == sf_dir] == ["scalar"]
+        assert M.memo(spark, other, "embeddings", "scalar", lambda: [5]) is kept
+    finally:
+        M.release()
 
 
 def test_bfs_two_level_antijoin_handles_same_level_and_back_edges(spark):
@@ -160,6 +174,7 @@ def test_minhash_bands_sql_form_equals_column_form(spark):
     pre-r17 Column-API form on every fixture document (integer/md5
     arithmetic — bit-exact by construction, pinned against drift)."""
     import mapreduceplusplus_spark.llm.dedup as D
+    from mapreduceplusplus_spark.sources.memo import release
 
     docs = D._doc_shingles(spark, SF_DIR_ORACLE)
     got = sorted(map(tuple, D._minhash_bands(docs).collect()))
@@ -234,7 +249,7 @@ def test_minhash_bands_sql_form_equals_column_form(spark):
         )
     )
     assert got == want and got
-    D.release_shingles()
+    release()
 
 
 def test_bench_line_diet_synthetic_80_query_line_is_bounded():
