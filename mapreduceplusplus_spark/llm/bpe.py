@@ -43,8 +43,8 @@ thousands of tiny partitions, embarrassingly parallel), one
 vocabulary-bounded hash agg, and a 1-row top-1.  The winning pair is
 never collected: it joins back into the re-segmentation as a broadcast
 1-row frame, so the whole training is DataFrame algebra end-to-end
-(merge rounds materialize via ``localCheckpoint`` like every iterative
-operator here — ``ml_kmeans_lloyd``'s unrolled-iteration device).
+(each merge round is cut with ``iterate.truncate``, like every
+iterative operator here).
 """
 
 from __future__ import annotations
@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.memo import memo
@@ -232,19 +233,18 @@ def _bpe_state(
             .groupBy("w")
             .agg(F.count("*").alias("freq"))
         )
-        seg = wf.select(
+        seg = truncate(wf.select(
             "w",
             "freq",
             F.posexplode(F.split("w", "")).alias("pos", "sym"),
-        ).localCheckpoint(eager=True)
+        ))
 
         bests: list[DataFrame] = []
         for i in range(1, n + 1):
-            best = (
+            best = truncate(  # 1 row; referenced twice below
                 _pair_counts(seg)
                 .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
                 .limit(1)
-                .localCheckpoint(eager=True)  # 1 row; referenced twice below
             )
             bests.append(
                 best.select(
@@ -255,9 +255,9 @@ def _bpe_state(
                     F.col("cnt").alias("pair_count"),
                 )
             )
-            # checkpoint per round: without it the window/join lineage
-            # stacks n deep and Catalyst analysis dominates (oracle-gotchas)
-            seg = _merge_round(seg, best).localCheckpoint(eager=True)
+            # truncate per round: without it the window/join lineage
+            # stacks n deep and Catalyst analysis dominates
+            seg = truncate(_merge_round(seg, best))
 
         merges = bests[0]
         for b in bests[1:]:

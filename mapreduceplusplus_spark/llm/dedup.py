@@ -32,6 +32,7 @@ from functools import reduce as _reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import fixpoint, truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.index_store import ensure_store
@@ -112,12 +113,9 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     return shingles_of_tokens(tokens(text_col), n)
 
 
-#: diagnostics from the last dedup_cluster_canonical run — round count
-#: and (doubled) edge count of the label-propagation loop, recorded for
-#: the SURVEY §6 scale-evidence decomposition (true-work growth vs
-#: serial section)
+#: round count of the last dedup_cluster_canonical run's CC loop, read by
+#: ``scale_point.py`` for the SURVEY §6 scale-evidence decomposition
 _last_cluster_rounds: int | None = None
-_last_cluster_edges: int | None = None
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,32 +850,10 @@ def _cc_min_label_propagation(
     rounds — O(d) rounds, so a long path costs one shuffle pair per
     hop.  Returns ``(labels(u, label), rounds)``.
 
-    Raises ``RuntimeError`` if the loop hits ``max_rounds`` with
-    changes still pending: an un-converged exit would silently emit
-    SPLIT clusters (two docs in one near-dup chain landing in
-    different "components"), which at scale means duplicate documents
-    surviving dedup with no error anywhere.  A loud failure is the
-    only safe behavior; the scale path is ``_cc_two_phase``.
-
-    Every round ends in an eager ``localCheckpoint``: each round's
-    frame references the previous one MULTIPLE times, so persist alone
-    (which caches data but keeps the full logical plan) lets the
-    analyzed plan grow EXPONENTIALLY with round count — Catalyst
-    analysis, not the data, becomes the bottleneck after ~6 rounds
-    (the PageRank iterate-and-checkpoint pattern, ``operators/
-    graph.py``).  Superseded checkpoint blocks are released by the
-    ContextCleaner when their Python references drop.
+    The loop is ``iterate.fixpoint`` capped at ``max_rounds``; a long
+    chain overruns it, and the scale path is ``_cc_two_phase``.
     """
-    labels = (
-        edges.select("u")
-        .distinct()
-        .withColumn("label", F.col("u"))
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    changed = 0
-    for _ in range(max_rounds):
-        rounds += 1
+    def spread(labels):
         neigh = (
             edges.join(
                 labels.select(
@@ -888,7 +864,7 @@ def _cc_min_label_propagation(
             .groupBy("u")
             .agg(F.min("vlabel").alias("nmin"))
         )
-        new_labels = (
+        new_labels = truncate(
             labels.join(neigh, "u", "left")
             .select(
                 "u",
@@ -896,7 +872,6 @@ def _cc_min_label_propagation(
                     F.col("label"), F.coalesce("nmin", F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -904,17 +879,14 @@ def _cc_min_label_propagation(
             .where(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected-components min-label propagation did not "
-            f"converge in {max_rounds} rounds ({changed} labels still "
-            f"changing): component diameter exceeds the round cap; "
-            f"use the large-star/small-star path (_cc_two_phase)"
-        )
-    return labels, rounds
+        return new_labels, changed == 0
+
+    labels = truncate(
+        edges.select("u").distinct().withColumn("label", F.col("u"))
+    )
+    return fixpoint(
+        labels, spread, max_rounds, "connected-components min-label propagation"
+    )
 
 
 def _cc_two_phase(
@@ -945,40 +917,20 @@ def _cc_two_phase(
     is detected by edge-set equality (distinct canonical form, so
     ``subtract``-count + cardinality check is exact).  Returns
     ``(labels(u, label), rounds)`` over ALL input nodes (roots label
-    themselves).  Raises ``RuntimeError`` on non-convergence — a
-    silent cap-exit would emit split clusters.
+    themselves).  The loop is ``iterate.fixpoint`` capped at
+    ``max_rounds``.
 
-    Each ROUND ends in one eager ``localCheckpoint`` — see
-    ``_cc_min_label_propagation``: the round frame references the
-    previous one several times, so persist alone lets the LOGICAL plan
-    grow exponentially with round count and Catalyst analysis becomes
-    the bottleneck long before the data does.  r17 round-action diet
-    (VERDICT r16 #8 applied to the shared CC core): a round is now TWO
-    driver actions (the ``nxt`` checkpoint + ONE set-equality
-    convergence probe) instead of four — the large-star intermediate
+    A round is TWO driver actions (the ``nxt`` truncation + ONE
+    set-equality convergence probe) — the large-star intermediate
     stays a PLAN (its ``distinct`` Exchange appears identically in
     both small-star consumers, so ReuseExchange materializes it once
     inside the ``nxt`` job; lineage depth stays O(1) because the plan
-    hangs off the checkpointed ``cur``), and the old ``count()`` +
-    ``subtract().count()`` pair collapses into one
-    tag-union/group/mismatch count, which is the same predicate:
+    hangs off the truncated ``cur``), and the convergence probe is one
+    tag-union/group/mismatch count, which is exact:
     both frames are distinct canonical edge sets, so (diff = 0 ∧
     |nxt| = |cur|) ⟺ no (u, v) row sits in exactly one side.
     """
-    # consumed once, by the final labels job — no standalone action
-    nodes = edges.select("u").distinct()
-    cur = (
-        edges.where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        rounds += 1
+    def alternate(cur):
         und = cur.select("u", "v").unionAll(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
@@ -997,13 +949,12 @@ def _cc_two_phase(
         # small-star over the (u > v)-directed ls edges: attach u
         # and all its smaller neighbors to the minimum neighbor
         mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        nxt = (
+        nxt = truncate(
             ls.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .unionAll(mins2.select("u", F.col("mn").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # ONE convergence probe over the two cached canonical sets:
         # rows present in exactly one side (1 = only nxt, 2 = only cur)
@@ -1015,22 +966,25 @@ def _cc_two_phase(
             .where(F.col("w") != 3)
             .count()
         )
-        cur = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"large-star/small-star connected components did not "
-            f"converge in {max_rounds} rounds (edge set still "
-            f"changing) — should be impossible below ~2^{max_rounds} "
-            f"nodes; refusing to emit potentially split clusters"
+        return nxt, changed == 0
+
+    # consumed once, by the final labels job — no standalone action
+    nodes = edges.select("u").distinct()
+    cur = truncate(
+        edges.where(F.col("u") != F.col("v"))
+        .select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
+        .distinct()
+    )
+    cur, rounds = fixpoint(
+        cur, alternate, max_rounds, "large-star/small-star connected components"
+    )
     # at fixpoint cur is (child, root) star edges; roots have no row
     labels = nodes.join(
         cur.select("u", F.col("v").alias("root")), "u", "left"
     ).select("u", F.coalesce("root", F.col("u")).alias("label"))
-    return labels.localCheckpoint(eager=True), rounds
+    return truncate(labels), rounds
 
 
 @query(
@@ -1067,11 +1021,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternating the large/small orientation so path lengths roughly
     HALVE per round — O(log n) rounds instead of label propagation's
     O(diameter), so an adversarial near-dup chain of any realistic
-    length converges well inside the cap, and a cap overrun raises
-    ``RuntimeError`` instead of silently emitting split clusters
-    (each round is persisted + counted to keep lineage flat).  The
+    length converges well inside ``iterate.fixpoint``'s cap.  The
     O(diameter) min-label baseline survives as
-    ``_cc_min_label_propagation`` (same loud-failure contract) and is
+    ``_cc_min_label_propagation`` and is
     pinned against this path in tests on a diameter-25 chain fixture.
     This is the iterative-algorithm pattern the brief names as
     legitimately non-SQL — yet it STILL gets a hard oracle: DuckDB
@@ -1080,7 +1032,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Labels converge to the component minimum regardless of join
     schedule, so the result is deterministic."""
-    global _last_cluster_rounds, _last_cluster_edges
+    global _last_cluster_rounds
     ensure_utc(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.unionByName(
@@ -1094,13 +1046,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 6.0→3.4 s at sf0.1, 12.1→4.6 s at the 5× fixture)
     edges = edges.persist()
     try:
-        _last_cluster_edges = edges.count()  # materialize the persist
+        edges.count()  # materialize the persist
         labels, rounds = _cc_two_phase(edges)
         _last_cluster_rounds = rounds
-        # labels is already lineage-truncated (localCheckpoint) by the
-        # helper — no driver materialization anywhere; on a real
-        # cluster a reliable checkpoint()/table write is the
-        # fault-tolerant equivalent
+        # labels is already truncated by the helper (iterate.truncate)
         return labels.select(
             F.col("u").alias("doc_id"),
             F.col("label").cast("bigint").alias("cluster_id"),

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -712,7 +713,7 @@ def multimodal_image_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = docs.mapInPandas(
         _encode_batch, schema="doc_id bigint, payload binary"
     )
-    hashes = image_phash(encoded).localCheckpoint(eager=True)
+    hashes = truncate(image_phash(encoded))
     bands = hashes.select(
         "doc_id",
         "phash",

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -914,10 +915,9 @@ def corpus_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row moment aggregate and the banding pass inside
     # curriculum_stage_of — without it the doc_nll scoring join
     # (corpus-sized) re-executes per consumer (plan audit r13)
-    x = (
+    x = truncate(
         doc_nll(spark, sf_dir)
         .select("doc_id", "n_bigrams", F.col("nll_micro_nats").alias("x"))
-        .localCheckpoint(eager=True)
     )
     return (
         curriculum_stage_of(x)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -589,7 +590,7 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    nll = doc_nll(spark, sf_dir).localCheckpoint(eager=True)
+    nll = truncate(doc_nll(spark, sf_dir))
     bkt = range_bucket_expr(
         spark,
         nll.select(F.col("nll_micro_nats").cast("double").alias("nd")),
@@ -803,11 +804,10 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("w")
     )
     # materialized once: feeds the raw model, the target model AND the
-    # final scoring join (the doc_nll localCheckpoint convention)
-    dgl = (
+    # final scoring join (the doc_nll truncate convention)
+    dgl = truncate(
         tok.groupBy("doc_id", "lang", "w")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     cr = dgl.groupBy("w").agg(F.sum("cnt").alias("c_r"))
     ct = (

@@ -63,6 +63,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.index_store import ensure_store
@@ -1183,7 +1184,7 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # truncate lineage once; every Lloyd job + the final assignment
     # reuses this bounded-width cell relation (|rows|·d cells)
-    eq = _explode_micro(emb).localCheckpoint(eager=True)
+    eq = truncate(_explode_micro(emb))
     seed_rows = (
         emb.where(F.col("vec_id") < IVF_CENTROIDS)
         .select("vec_id", "v")
@@ -2156,7 +2157,7 @@ def sim_search_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.lit(1000000) * F.col("s")).cast("bigint").desc(),
         F.col("vec_id"),
     )
-    ranked = (
+    ranked = truncate(
         scored.withColumn("rnk", F.row_number().over(w))
         # UNIFORM rnk <= K filter (not `is_pos ? ==1 : <=K`): the
         # simple form is what Spark rewrites into WindowGroupLimit
@@ -2167,7 +2168,6 @@ def sim_search_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frame below.
         .where(F.col("rnk") <= TRIPLET_NEG_K)
         .select("probe_id", "vec_id", "label", "s", "is_pos", "rnk")
-        .localCheckpoint(eager=True)
     )
     pos = ranked.where(F.col("is_pos") & (F.col("rnk") == 1)).select(
         "probe_id",
@@ -2290,11 +2290,10 @@ def sim_search_triplet_mining_lsh(
         F.round(F.lit(1000000) * F.col("s")).cast("bigint").desc(),
         F.col("vec_id"),
     )
-    ranked = (
+    ranked = truncate(
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= TRIPLET_NEG_K)
         .select("probe_id", "vec_id", "label", "s", "is_pos", "rnk")
-        .localCheckpoint(eager=True)
     )
     pos = ranked.where(F.col("is_pos") & (F.col("rnk") == 1)).select(
         "probe_id",

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.memo import memo
@@ -1544,14 +1545,13 @@ def doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.w1").alias("w1"),
         F.concat_ws(" ", "p.w1", "p.w2").alias("bg"),
     )
-    # materialized ONCE (the graph/dedup localCheckpoint convention):
+    # materialized ONCE (``iterate.truncate``):
     # grp feeds the c2→c1 model chain AND the final per-doc scoring
     # join — without it Catalyst re-executes the scan+explode subplan
     # per consumer (4 documents scans in the executed plan; 2 after)
-    grp = (
+    grp = truncate(
         occ.groupBy("doc_id", "bg", "w1")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     c2 = grp.groupBy("bg", "w1").agg(F.sum("cnt").alias("c2"))
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
@@ -1777,19 +1777,17 @@ def text_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once: grp feeds the model chain AND the final
     # scoring join (the doc_nll convention — without it Catalyst
     # re-executes the scan+explode subplan per consumer)
-    grp = (
+    grp = truncate(
         occ.groupBy("doc_id", "bg", "w1", "w2")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     # c2 is ALSO materialized: unlike doc_nll (2 consumers), the KN
     # model chain reads it four times (c1, cont, ntypes, the scoring
     # join) — without this the corpus-sized grp is re-aggregated per
     # consumer (plan audit r13: 4 redundant hash aggs of grp)
-    c2 = (
+    c2 = truncate(
         grp.groupBy("bg", "w1", "w2")
         .agg(F.sum("cnt").alias("c2"))
-        .localCheckpoint(eager=True)
     )
     c1 = c2.groupBy("w1").agg(
         F.sum("c2").alias("c1"), F.count("*").alias("n1fwd")
@@ -1961,12 +1959,12 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    ranked = tf.select(
+    ranked = truncate(tf.select(
         "c",
         F.row_number()
         .over(Window.orderBy(F.col("c").desc(), "w"))
         .alias("rn"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = ranked.agg(
         F.sum("c").cast("bigint").alias("t"), F.count("*").alias("n_types")
     )

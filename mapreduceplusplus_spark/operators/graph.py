@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import fixpoint, truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -178,19 +179,16 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (u, w).  All joins hash-partitionable; AQE broadcasts the reduced
     sides at test scale.  ``edges`` / ``deg`` / ``oriented`` are each
     consumed by 2–3 downstream branches, so they are materialized once
-    via eager ``localCheckpoint`` (the ``dedup_cluster_canonical``
-    convention) — without it Catalyst re-executes the lineitem
+    via ``iterate.truncate`` — without it Catalyst re-executes the lineitem
     self-join+distinct subplan for every branch (measured 38 parquet
     scans in the executed plan before the change, 2 logical scans
     after)."""
     ensure_utc(spark)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate(_copurchase_edges(spark, sf_dir))
     verts = edges.select(F.col("a").alias("v")).unionAll(
         edges.select(F.col("b").alias("v"))
     )
-    deg = verts.groupBy("v").agg(F.count("*").alias("d")).localCheckpoint(
-        eager=True
-    )
+    deg = truncate(verts.groupBy("v").agg(F.count("*").alias("d")))
     # orient each edge from the (degree, id)-smaller endpoint
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
@@ -198,11 +196,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    oriented = ed.select(
+    oriented = truncate(ed.select(
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).localCheckpoint(eager=True)
+    ))
     o1 = oriented.select(
         F.col("src"), F.col("dst").alias("u"), F.col("ddst").alias("du")
     )
@@ -286,26 +284,21 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex) — ranking-equivalent to the 1/N form on a fixed graph.
 
     Spark side: the undirected edge list is doubled into directed
-    form ONCE and localCheckpointed; each iteration is one join to the
-    current rank vector + one hash aggregate on the destination —
-    checkpointed so iteration k+1's lineage starts at k's result
-    (the ``dedup_cluster_canonical`` iterate-and-truncate pattern;
-    without it the plan re-executes all prior iterations).  At 100 TB
+    form ONCE; each iteration is one join to the current rank vector +
+    one hash aggregate on the destination, truncated per round
+    (``iterate.truncate``).  At 100 TB
     scale the edge relation is hash-partitioned on src and the rank
     vector co-shuffles — the canonical Pregel-on-relational shape.
     Top-25 by final rank, full (pr, id) tiebreak."""
     ensure_utc(spark)
-    e2 = (
+    e2 = truncate(
         _symmetrize(_copurchase_edges(spark, sf_dir))
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .localCheckpoint(eager=True)
     )
-    d = e2.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(
-        eager=True
-    )
+    d = truncate(e2.groupBy("src").agg(F.count("*").alias("outdeg")))
     pr = d.select(F.col("src").alias("v"), F.lit(_PR_UNIT).cast("bigint").alias("pr"))
     for _ in range(_PR_ITERS):
-        pr = (
+        pr = truncate(
             e2.join(pr, e2["src"] == pr["v"])
             .join(d, "src")
             .groupBy(F.col("dst").alias("v2"))
@@ -318,7 +311,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("pr")
             )
             .select(F.col("v2").alias("v"), "pr")
-            .localCheckpoint(eager=True)
         )
     return (
         pr.select(F.col("v").alias("vertex"), F.col("pr").alias("pr_micro"))
@@ -397,18 +389,15 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the edge distinct is the only data-sized shuffle; the CC
     loop then works on the (much smaller) vertex-pair relation,
-    halving star depth each alternation, with every round
-    localCheckpointed so lineage stays O(1) (the iterate-and-truncate
-    convention shared by ``graph_pagerank`` / ``ml_kmeans_lloyd``).
-    Non-convergence inside the round cap raises instead of emitting
-    split components (VERDICT r8 item 1 contract)."""
+    halving star depth each alternation; rounds and cap are
+    ``iterate``'s (see ``_cc_two_phase``)."""
     from mapreduceplusplus_spark.llm.dedup import _cc_two_phase
 
     ensure_utc(spark)
     sym = _symmetrize(
         _copurchase_edges(spark, sf_dir, min_cooc=_CC_MIN_COOC)
     )
-    labels, _rounds = _cc_two_phase(sym.localCheckpoint(eager=True))
+    labels, _rounds = _cc_two_phase(truncate(sym))
     return labels.groupBy(F.col("label").alias("component")).agg(
         F.count("*").alias("n_vertices")
     ).select(F.col("component").cast("bigint"), "n_vertices")
@@ -436,38 +425,28 @@ def kcore_subgraph(edges: DataFrame, k: int = _KCORE_K) -> tuple[DataFrame, int]
     ``edges`` is the SYMMETRIC edge list (u, v).  Each round:
     degree = one map-side-combined hash aggregate; survivors = a
     degree filter; the next edge set = two hash semi-joins (u
-    surviving, v surviving).  Rounds are localCheckpointed
-    (iterate-and-truncate, the ``_cc_two_phase`` convention) and the
-    loop exits when the edge count stops changing — by construction
-    that is the k-core.  Worst case (a path peeling one vertex per
-    round) needs O(n) rounds; real graphs peel in a handful, and the
-    cap RAISES instead of returning a not-yet-converged subgraph.
+    surviving, v surviving).  The loop (``iterate.fixpoint``, capped
+    at ``_KCORE_MAX_ROUNDS``) exits when the edge count stops changing
+    — by construction that is the k-core.  Worst case (a path peeling
+    one vertex per round) needs O(n) rounds; real graphs peel in a
+    handful.
 
     Returns ``(vertices(v, degree) of the k-core, rounds)``."""
-    cur = edges.localCheckpoint(eager=True)
-    n_cur = cur.count()
-    rounds = 0
-    for _ in range(_KCORE_MAX_ROUNDS):
-        rounds += 1
+    def peel(state):
+        cur, n_cur = state
         deg = cur.groupBy("u").agg(F.count("*").alias("d"))
-        keep = deg.where(F.col("d") >= k).select("u").localCheckpoint(
-            eager=True
-        )
-        nxt = (
+        keep = truncate(deg.where(F.col("d") >= k).select("u"))
+        nxt = truncate(
             cur.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
         n_nxt = nxt.count()
-        cur = nxt
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge in {_KCORE_MAX_ROUNDS} "
-            f"rounds — refusing to return a partially-peeled subgraph"
-        )
+        return (nxt, n_nxt), n_nxt == n_cur
+
+    cur = truncate(edges)
+    (cur, _), rounds = fixpoint(
+        (cur, cur.count()), peel, _KCORE_MAX_ROUNDS, "k-core peeling"
+    )
     return cur.groupBy(F.col("u").alias("v")).agg(
         F.count("*").alias("degree")
     ), rounds
@@ -588,53 +567,48 @@ def sssp_frontier(edges_sym: DataFrame, source: int) -> tuple[DataFrame, int]:
     (narrower shuffle rows, guide §2.3).  The frontier only ever
     holds the NEWLY reached vertices, so total work over the whole
     run is O(Σ degree of reached vertices) — each edge relaxes at
-    most twice.  Only each
-    round's NEW frontier is localCheckpointed; the settled set stays a
-    LAZY union over those materialized leaves (r10 review: eagerly
-    re-checkpointing the whole settled set copied O(|V|·depth) rows
-    over a run — the lazy union reads the same leaves without the
-    per-round rewrite, and its lineage depth is bounded by the round
-    cap).  Round count = source eccentricity + 1 (the final round
-    that discovers the empty frontier is counted); overrunning
-    ``_SSSP_MAX_ROUNDS`` RAISES rather than emitting partial distances
-    (the loud-failure contract of VERDICT r8 item 1).
+    most twice.  Only each round's NEW frontier is truncated; the
+    settled set stays a LAZY union over those materialized leaves
+    (re-truncating the whole settled set would copy O(|V|·depth) rows
+    over a run), so its lineage depth is bounded by the round cap.
+    Round count = source eccentricity + 1 (the final round that
+    discovers the empty frontier is counted); the loop is
+    ``iterate.fixpoint`` capped at ``_SSSP_MAX_ROUNDS``.
 
     Returns ``(frame(v, dist), rounds)``; unreachable vertices are
     absent (the BFS semantics — callers wanting ∞ rows can left-join
     the vertex set)."""
-    spark = edges_sym.sparkSession
-    level0 = spark.createDataFrame(
-        [(source, 0)], "v BIGINT, dist BIGINT"
-    ).localCheckpoint(eager=True)
-    levels = [level0]  # per-depth checkpointed leaves
-    frontier = level0.select("v")
-    prev = None  # F_{d-1}, v column only
-    rounds = 0
-    for depth in range(1, _SSSP_MAX_ROUNDS + 1):
-        rounds += 1
+    def expand(state):
+        # this round's depth is len(levels); prev is F_{d-1}, v column only
+        levels, frontier, prev = state
         cand = (
             frontier.join(edges_sym, frontier["v"] == edges_sym["u"])
             .select(edges_sym["v"].cast("bigint").alias("v"))
             .distinct()
         )
         seen = frontier if prev is None else frontier.unionByName(prev)
-        new = (
+        new = truncate(
             cand.join(seen, "v", "left_anti")
-            .select("v", F.lit(depth).cast("bigint").alias("dist"))
-            .localCheckpoint(eager=True)
+            .select("v", F.lit(len(levels)).cast("bigint").alias("dist"))
         )
         if new.isEmpty():
-            settled = levels[0]
-            for lv in levels[1:]:  # lazy over checkpointed leaves
-                settled = settled.unionByName(lv)
-            return settled, rounds
-        levels.append(new)
-        prev = frontier
-        frontier = new.select("v")
-    raise RuntimeError(
-        f"BFS did not exhaust its frontier in {_SSSP_MAX_ROUNDS} rounds — "
-        f"refusing to return partial shortest-path distances"
+            return state, True
+        return (levels + [new], new.select("v"), frontier), False
+
+    spark = edges_sym.sparkSession
+    level0 = truncate(
+        spark.createDataFrame([(source, 0)], "v BIGINT, dist BIGINT")
     )
+    (levels, _, _), rounds = fixpoint(
+        ([level0], level0.select("v"), None),
+        expand,
+        _SSSP_MAX_ROUNDS,
+        "BFS frontier",
+    )
+    settled = levels[0]
+    for lv in levels[1:]:  # lazy over truncated leaves
+        settled = settled.unionByName(lv)
+    return settled, rounds
 
 
 def bellman_ford(
@@ -653,37 +627,29 @@ def bellman_ford(
     relaxations, then one hash aggregate takes the min per (source,
     v); convergence = an empty anti-join of the new relation against
     the old (no row improved, none added).  Rounds ≤ the longest
-    shortest-path EDGE COUNT + 1; localCheckpoint per round
-    (iterate-and-truncate), RuntimeError on cap overrun — never a
-    partially-relaxed answer.  At scale the distance relation
+    shortest-path EDGE COUNT + 1, on ``iterate.fixpoint`` capped at
+    ``_SSSP_MAX_ROUNDS``.  At scale the distance relation
     co-partitions with the edge list on the vertex key, so every
     round is one co-located shuffle join + one combine-enabled agg."""
-    dist = sources.select(
-        F.col("source").cast("bigint").alias("source"),
-        F.col("source").cast("bigint").alias("v"),
-        F.lit(0).cast("bigint").alias("dist"),
-    ).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(_SSSP_MAX_ROUNDS):
-        rounds += 1
-        relax = dist.join(edges_w, dist["v"] == edges_w["u"]).select(
+    def relax(dist):
+        cand = dist.join(edges_w, dist["v"] == edges_w["u"]).select(
             dist["source"],
             edges_w["v"].cast("bigint").alias("v"),
             (dist["dist"] + edges_w["w"]).alias("dist"),
         )
-        nxt = (
-            dist.unionByName(relax)
+        nxt = truncate(
+            dist.unionByName(cand)
             .groupBy("source", "v")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        if nxt.join(dist, ["source", "v", "dist"], "left_anti").isEmpty():
-            return nxt, rounds
-        dist = nxt
-    raise RuntimeError(
-        f"Bellman-Ford did not reach a fixpoint in {_SSSP_MAX_ROUNDS} "
-        f"rounds — refusing to return partially-relaxed distances"
-    )
+        return nxt, nxt.join(dist, ["source", "v", "dist"], "left_anti").isEmpty()
+
+    dist0 = truncate(sources.select(
+        F.col("source").cast("bigint").alias("source"),
+        F.col("source").cast("bigint").alias("v"),
+        F.lit(0).cast("bigint").alias("dist"),
+    ))
+    return fixpoint(dist0, relax, _SSSP_MAX_ROUNDS, "Bellman-Ford fixpoint")
 
 
 #: oracle-side walk-weight bound for the WEIGHTED oracle: the
@@ -881,7 +847,7 @@ def lpa_rounds(e2: DataFrame, iters: int) -> DataFrame:
             .groupBy(F.col("dst"), F.col("lbl"))
             .agg(F.count("*").alias("cnt"))
         )
-        lbl = (
+        lbl = truncate(
             cnt.groupBy("dst")
             .agg(
                 F.min(
@@ -891,7 +857,6 @@ def lpa_rounds(e2: DataFrame, iters: int) -> DataFrame:
                 ).alias("s")
             )
             .select(F.col("dst").alias("v"), F.col("s.l").alias("lbl"))
-            .localCheckpoint(eager=True)
         )
     return lbl
 
@@ -932,7 +897,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential-checkable.  Output: the 25 largest communities with
     their canonical (minimum) member vertex.
 
-    Spark side: directed-both-ways edges localCheckpointed once; each
+    Spark side: directed-both-ways edges truncated once; each
     round is one shuffle (edge ⋈ label on src, hash agg on (dst,
     label)) plus one vertex-sized argmax agg — the argmax is a single
     ``min(struct(-cnt, lbl))`` hash aggregate, NOT a window, so no
@@ -943,10 +908,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference heritage: none (SURVEY §2 charter extension, graph
     family)."""
     ensure_utc(spark)
-    e2 = (
+    e2 = truncate(
         _symmetrize(_copurchase_edges(spark, sf_dir))
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .localCheckpoint(eager=True)
     )
     lbl = lpa_rounds(e2, _LPA_ITERS)
     return (
@@ -1014,7 +978,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied at fixture scale).  Reference heritage: none (SURVEY §2
     charter extension, graph family)."""
     ensure_utc(spark)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate(_copurchase_edges(spark, sf_dir))
     e2 = _symmetrize(edges)
     deg = e2.groupBy("u").agg(F.count("*").alias("d"))
     x = e2.alias("x")
@@ -1115,7 +1079,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     0 rows on both engines (m > 0 guard).  Reference heritage: none
     (SURVEY §2 charter extension, graph family)."""
     ensure_utc(spark)
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = truncate(_copurchase_edges(spark, sf_dir))
     e2 = _symmetrize(edges).select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     )

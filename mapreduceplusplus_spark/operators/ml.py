@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -102,12 +103,12 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid rows (k·d = 256 rows) grouped by (vec, cluster); argmin =
     per-vector window (hash-partitioned on vec_id, WindowGroupLimit-
     pruned); update = one hash agg per (cluster, dim).  The exploded
-    relation is localCheckpointed once and reused by all four
+    relation is truncated once and reused by all four
     consumers.  At 100 TB: centroids stay k·d rows (broadcast side),
     vectors shuffle once per iteration on vec_id — the same shape
     MLlib's k-means uses, minus its driver-side centroid state.  A
     production run would loop until convergence via the
-    ``dedup_cluster_canonical`` iterate-and-checkpoint pattern; two
+    ``iterate.fixpoint`` driver; two
     fixed iterations keep the oracle finite.
 
     Output: per-cluster membership count and total squared distance
@@ -128,7 +129,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ml_kmeans_lloyd`` for the dataflow and the module docstring for
     the quantization contract."""
     emb = load_table(spark, sf_dir, "embeddings")
-    e = (
+    e = truncate(
         emb.select(
             "vec_id", F.posexplode("embedding").alias("dim", "u")
         )
@@ -142,7 +143,6 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + _SHIFT
             ).alias("q"),
         )
-        .localCheckpoint(eager=True)
     )
 
     def assign(centroids: DataFrame, with_dist: bool) -> DataFrame:
@@ -911,7 +911,7 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds = []
     cur = pts
     for r in (1, 2):
-        best = weighted_stump(cur).localCheckpoint(eager=True)
+        best = truncate(weighted_stump(cur))
         rounds.append(best.select(F.lit(r).cast("bigint").alias("round"), "*"))
         if r == 1:
             # broadcast-safe: best is the 1-row round result
@@ -1041,7 +1041,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan per round: ONE broadcast of the new pick's d-row quantized
     vector, one map-side squared-distance aggregate over the quantized
-    long-form (localCheckpointed once), one vector-sized ``least``
+    long-form (truncated once), one vector-sized ``least``
     merge into the running min-dist frame, one 1-row TakeOrdered
     argmax — no pairwise matrix, no driver-side loop state beyond the
     fixed {KCENTER_PICKS} rounds.  At 100 TB: k rounds × one corpus
@@ -1051,7 +1051,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     family)."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    e = (
+    e = truncate(
         emb.select("vec_id", F.posexplode("embedding").alias("dim", "u"))
         .select(
             "vec_id",
@@ -1063,7 +1063,6 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + _SHIFT
             ).alias("q"),
         )
-        .localCheckpoint(eager=True)
     )
     seed = e.agg(F.min("vec_id")).collect()[0][0]
     if seed is None:
@@ -1087,13 +1086,13 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("d")
             )
         )
-        mind = (
+        mind = truncate(
             d
             if mind is None
             else mind.select("vec_id", F.col("d").alias("pd"))
             .join(d, "vec_id")
             .select("vec_id", F.least("pd", "d").alias("d"))
-        ).localCheckpoint(eager=True)
+        )
         chosen = [p[1] for p in picks]
         top = (
             mind.where(~F.col("vec_id").isin(chosen))

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
 from mapreduceplusplus_spark.session import ensure_utc, floor_div_sql
 from mapreduceplusplus_spark.sources.tables import load_table
@@ -645,12 +646,11 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # the event-volume rollup is materialized ONCE (review r8: unpersisted
     # it was recomputed by the quantile sample, the census, the totals,
-    # AND the ranked output — 4 scans of events); localCheckpoint keeps
+    # AND the ranked output — 4 scans of events); truncate keeps
     # the single-payment claim true without a driver collect of #users rows
-    per_user = (
+    per_user = truncate(
         events.groupBy("user_id")
         .agg(F.count("*").alias("n_events"))
-        .localCheckpoint(eager=True)
     )
     totals = per_user.agg(
         F.sum("n_events").alias("total"), F.count("*").alias("n_users")
@@ -2411,7 +2411,7 @@ def dq_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``agg_median`` documents) → deviations via broadcast-sized
     |types|-row join → per-type MAD → one conditional rollup.  The
     ``dev`` frame feeds both the MAD agg and the final census —
-    localCheckpointed once.  Reference heritage: none (SURVEY §2
+    truncated once.  Reference heritage: none (SURVEY §2
     charter extension, dq family)."""
     ensure_utc(spark)
     x = load_table(spark, sf_dir, "events").select(
@@ -2422,10 +2422,9 @@ def dq_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(2 * percentile(x_c, 0.5) AS BIGINT)").alias("med2")
     )
     # broadcast-safe: med is |event types| rows (domain-bounded)
-    dev = (
+    dev = truncate(
         x.join(F.broadcast(med), "event_type")
         .withColumn("dev2", F.abs(2 * F.col("x_c") - F.col("med2")))
-        .localCheckpoint(eager=True)
     )
     mad = dev.groupBy("event_type").agg(
         F.expr("CAST(2 * percentile(dev2, 0.5) AS BIGINT)").alias("mad4")

@@ -27,7 +27,9 @@ dirs (one ``atexit`` hook): sweeping a complete store on exit would
 pull it from under an overlapping process whose lazily consumed plan
 is still reading it.  Cleanup is by age instead: a process's first
 access to the root removes complete stores idle for longer than
-``_STORE_TTL_S`` and staging dirs older than ``_STAGING_TTL_S``.
+``_STORE_TTL_S`` and staging dirs older than ``_STAGING_TTL_S``.  The
+same pass removes a complete store whose stamped dataset dir no longer
+exists, whatever its age: no later run can name it again.
 Every adoption refreshes the store's dir mtime, so a store that any
 process is serving cannot expire.  Remove the root to force cold
 builds.
@@ -40,6 +42,7 @@ its contents, so the root is refused when another uid owns it.
 
 from __future__ import annotations
 
+import ast
 import atexit
 import glob
 import hashlib
@@ -112,9 +115,10 @@ def _root() -> str:
 
 
 def _gc_root(root: str) -> None:
-    """Remove complete stores idle past ``_STORE_TTL_S`` and staging
-    dirs older than ``_STAGING_TTL_S``, once per process.  Only old
-    dirs go, so the GC is safe beside any number of live readers and
+    """Remove complete stores idle past ``_STORE_TTL_S`` or whose
+    dataset dir is gone, and staging dirs older than
+    ``_STAGING_TTL_S``, once per process.  Only old or orphaned dirs
+    go, so the GC is safe beside any number of live readers and
     builders."""
     global _gc_done
     if _gc_done:
@@ -131,8 +135,23 @@ def _gc_root(root: str) -> None:
             age = now - os.stat(d).st_mtime
         except OSError:
             continue  # removed concurrently
-        if age > (_STAGING_TTL_S if ".tmp" in name else _STORE_TTL_S):
+        if ".tmp" in name:
+            expired = age > _STAGING_TTL_S
+        else:
+            expired = age > _STORE_TTL_S or _orphaned(d)
+        if expired:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def _orphaned(d: str) -> bool:
+    """True when the dataset dir in ``d``'s ``_COMPLETE`` stamp no
+    longer exists; a missing or unparsable stamp keeps the store."""
+    try:
+        with open(os.path.join(d, "_COMPLETE")) as fh:
+            sf_dir, _fp = ast.literal_eval(fh.read())
+    except (OSError, ValueError, TypeError, SyntaxError):
+        return False
+    return isinstance(sf_dir, str) and not os.path.exists(sf_dir)
 
 
 def _complete(d: str, stamp: str) -> bool:

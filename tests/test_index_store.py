@@ -87,6 +87,27 @@ def test_a_concurrent_winner_is_adopted_untouched(root):
     assert os.listdir(root) == [os.path.basename(d)]
 
 
+def test_a_store_whose_dataset_is_gone_is_removed(root, tmp_path, monkeypatch):
+    """The once-per-process GC drops a complete store whose stamped
+    dataset dir was deleted, however young, and keeps the store of a
+    dataset that still exists and one whose stamp does not parse."""
+    gone, kept = tmp_path / "sf_gone", tmp_path / "sf_kept"
+    gone.mkdir()
+    kept.mkdir()
+    d_gone = ensure_store("neardup_index", str(gone), ("fp",), _builder([]))
+    d_kept = ensure_store("neardup_index", str(kept), ("fp",), _builder([]))
+    garbled = os.path.join(root, "neardup_index_garbled")
+    os.makedirs(garbled)
+    with open(os.path.join(garbled, "_COMPLETE"), "w") as fh:
+        fh.write("not a stamp (")
+    gone.rmdir()
+    monkeypatch.setattr(index_store, "_gc_done", False)
+    assert index_store._root() == root
+    assert not os.path.exists(d_gone)
+    assert os.path.isdir(d_kept)
+    assert os.path.isdir(garbled)
+
+
 @pytest.mark.skipif(
     not hasattr(os, "getuid") or os.getuid() != 0,
     reason="handing the root to another uid needs root",
@@ -167,3 +188,19 @@ def test_one_memo():
                 ]
     assert dicts == [], dicts
     assert leaks == [], leaks
+
+
+def test_one_truncation():
+    """Lineage is cut only through ``iterate.truncate``: no
+    ``.localCheckpoint`` attribute is read anywhere else in the
+    package."""
+    import ast
+
+    sites = [
+        (rel, node.lineno)
+        for rel, text in _sources()
+        if rel != "iterate.py"
+        for node in ast.walk(ast.parse(text, rel))
+        if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
+    ]
+    assert sites == [], sites

@@ -22,6 +22,42 @@ def _pairs(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _store_scans(df, *parts):
+    """The executed ``FileSourceScanExec`` nodes of ``df`` whose root
+    path contains every string in ``parts``, as dicts of ``paths``
+    (``relation.location.rootPaths``), ``PartitionFilters`` (the node's
+    ``partitionFilters``, comma-joined), ``PushedFilters`` and
+    ``ReadSchema``.  Read from the plan nodes rather than the explain
+    string, which abbreviates each scan field to a fixed width and so
+    hides a store name behind a long temp-dir path."""
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        elif cls == "ReusedExchangeExec":
+            todo.append(node.child())
+        elif cls == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            paths = [roots.apply(i).toString() for i in range(roots.size())]
+            if any(all(s in p for s in parts) for p in paths):
+                pfs = node.partitionFilters()
+                found.append({
+                    "paths": paths,
+                    "PartitionFilters": ", ".join(
+                        pfs.apply(i).toString() for i in range(pfs.size())
+                    ),
+                    "PushedFilters": node.metadata().apply("PushedFilters"),
+                    "ReadSchema": node.requiredSchema().catalogString(),
+                })
+        for kids in (node.children(), node.innerChildren()):  # + cached plans
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
 def test_minhash_matches_exact_jaccard(spark):
     """Fixed-seed MinHash-LSH (16 bands × 4 rows) must recover EVERY
     pair the exact trigram-Jaccard dedup finds on this corpus (planted
@@ -316,8 +352,6 @@ def test_ivf_sq8_partitioned_rows_identical_and_code_scan_pruned(spark):
     entry (file-listing pruning, not a post-scan filter) and its
     ReadSchema must be the 1 B/dim code columns — NOT the float
     vector column (the bytes axis of the composite's contract)."""
-    import re
-
     qs = registry.queries()
     part_df = qs["sim_search_ivf_sq8_partitioned"](spark, SF_DIR_ORACLE)
     part = sorted(map(tuple, part_df.collect()))
@@ -328,17 +362,14 @@ def test_ivf_sq8_partitioned_rows_identical_and_code_scan_pruned(spark):
     assert len(part) > 0
 
     plan = part_df._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.split("\n")
-        if "FileScan" in ln and "ivf_sq8_index_" in ln
-    ]
+    scans = _store_scans(part_df, "ivf_sq8_index_")
     assert scans, f"code-index scan missing from plan:\n{plan}"
-    for ln in scans:
-        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", ln)
-        assert pf and "cid" in pf.group(1), f"no cid partition pruning: {ln}"
-        rs = re.search(r"ReadSchema: (\S+)", ln)
-        assert rs and "codes:array<tinyint>" in rs.group(1), ln
-        assert "v:array" not in rs.group(1), f"float column in code scan: {ln}"
+    for sc in scans:
+        pf = sc["PartitionFilters"]
+        assert "cid" in pf, f"no cid partition pruning: {sc}"
+        rs = sc["ReadSchema"]
+        assert "codes:array<tinyint>" in rs, sc
+        assert "v:array" not in rs, f"float column in code scan: {sc}"
 
 
 def test_frame_sample_real_container_walk(spark):
@@ -1269,17 +1300,14 @@ def test_ivf_partitioned_rows_identical_and_partition_pruned(spark):
     assert 0 < len(part) <= 10
 
     plan = part_df._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [
-        ln for ln in plan.split("\n") if "FileScan" in ln and "ivf_index_" in ln
-    ]
-    assert scan_lines, f"no index FileScan in plan:\n{plan}"
-    ln = scan_lines[0]
-    pf = ln.split("PartitionFilters: [", 1)
-    assert len(pf) == 2 and "cid" in pf[1].split("]")[0], (
-        f"probe cid predicate not pushed to PartitionFilters:\n{ln}"
+    scans = _store_scans(part_df, "ivf_index_")
+    assert scans, f"no index FileScan in plan:\n{plan}"
+    sc = scans[0]
+    assert "cid" in sc["PartitionFilters"], (
+        f"probe cid predicate not pushed to PartitionFilters:\n{sc}"
     )
     # and the DATA filter side must NOT need cid (only vec_id != probe)
-    assert "cid" not in ln.split("PushedFilters: [", 1)[-1].split("]")[0]
+    assert "cid" not in sc["PushedFilters"]
 
 
 def test_ivfpq_exact_scores_recall_and_code_invariants(spark):
@@ -1553,14 +1581,10 @@ def test_incremental_ingest_near_matches_full_recompute_and_prunes(spark):
 
     # (b) PartitionFilters pin on the index probe scan
     plan = out_df._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [
-        ln for ln in plan.split("\n")
-        if "FileScan" in ln and "neardup_index_" in ln and "/bands" in ln
-    ]
-    assert scan_lines, f"no band-index FileScan in plan:\n{plan}"
-    pf = scan_lines[0].split("PartitionFilters: [", 1)
-    assert len(pf) == 2 and "pk" in pf[1].split("]")[0], (
-        f"probe pk predicate not pushed to PartitionFilters:\n{scan_lines[0]}"
+    scans = _store_scans(out_df, "neardup_index_", "/bands")
+    assert scans, f"no band-index FileScan in plan:\n{plan}"
+    assert "pk" in scans[0]["PartitionFilters"], (
+        f"probe pk predicate not pushed to PartitionFilters:\n{scans[0]}"
     )
 
     # (c) real pruning: probed buckets < total buckets (file-level)
@@ -1571,14 +1595,10 @@ def test_incremental_ingest_near_matches_full_recompute_and_prunes(spark):
     # from the persisted shingle store (sk-partition-pruned), so corpus
     # text is never re-shingled cold.  Pin: a FileScan on the store
     # with an sk PartitionFilters entry, and a real bucket prune.
-    sh_lines = [
-        ln for ln in plan.split("\n")
-        if "FileScan" in ln and "neardup_index_" in ln and "/shingles" in ln
-    ]
-    assert sh_lines, f"no shingle-store FileScan in plan:\n{plan}"
-    spf = sh_lines[0].split("PartitionFilters: [", 1)
-    assert len(spf) == 2 and "sk" in spf[1].split("]")[0], (
-        f"sk predicate not pushed to PartitionFilters:\n{sh_lines[0]}"
+    sh_scans = _store_scans(out_df, "neardup_index_", "/shingles")
+    assert sh_scans, f"no shingle-store FileScan in plan:\n{plan}"
+    assert "sk" in sh_scans[0]["PartitionFilters"], (
+        f"sk predicate not pushed to PartitionFilters:\n{sh_scans[0]}"
     )
     assert D._last_ingest_shingle_total_parts == D._INGEST_NS
     assert (
@@ -1724,13 +1744,9 @@ def test_semdedup_incremental_prunes_and_matches_recompute(spark, tmp_path):
 
     # (b) PartitionFilters pin on the index probe scan
     plan = out_df._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [
-        ln for ln in plan.split("\n")
-        if "FileScan" in ln and "semingest_index_" in ln
-    ]
-    assert scan_lines, f"no index FileScan in plan:\n{plan}"
-    pf = scan_lines[0].split("PartitionFilters: [", 1)
-    assert len(pf) == 2 and "cid" in pf[1].split("]")[0], scan_lines[0]
+    scans = _store_scans(out_df, "semingest_index_")
+    assert scans, f"no index FileScan in plan:\n{plan}"
+    assert "cid" in scans[0]["PartitionFilters"], scans[0]
 
     # (c) REAL prune: the constructed batch occupies 2 of the 4 cells
     assert D._last_semingest_total_parts == 4
@@ -2176,7 +2192,9 @@ def test_hamming_packed_plan_rowidentical_to_zipwith(spark):
     assert len(packed) == S.TOP_K
 
     plan = packed_df._jdf.queryExecution().executedPlan().toString()
-    assert "hamming_sketch" in plan, f"sketch store not scanned:\n{plan}"
+    assert _store_scans(packed_df, "hamming_sketch"), (
+        f"sketch store not scanned:\n{plan}"
+    )
     assert "bit_count" in plan, f"ranking is not bit_count(XOR):\n{plan}"
 
     # (c) packer parity: Spark words == driver words on every vector
@@ -2222,7 +2240,9 @@ def test_mrl_prefix_store_rowidentical_to_slice(spark):
     assert len(stored) == S.TOP_K
 
     plan = store_df._jdf.queryExecution().executedPlan().toString()
-    assert "mrl_prefix" in plan, f"prefix store not scanned:\n{plan}"
+    assert _store_scans(store_df, "mrl_prefix"), (
+        f"prefix store not scanned:\n{plan}"
+    )
 
     # (c) the funnel's two stages are genuinely different keys
     assert any(r[2] != r[3] for r in stored)

@@ -8,6 +8,8 @@ invariance the module promises (``llm/dedup.py``).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
@@ -1657,6 +1659,52 @@ def test_cc_chain_diameter25_baseline_fails_loud_twophase_converges(spark):
         edges.unpersist()
 
 
+@pytest.mark.parametrize(
+    "loop",
+    [
+        "k-core peeling",
+        "BFS frontier",
+        "Bellman-Ford fixpoint",
+        "connected-components min-label propagation",
+        "large-star/small-star connected components",
+    ],
+)
+def test_every_fixpoint_loop_raises_at_its_cap(spark, monkeypatch, loop):
+    """Every convergence loop on ``iterate.fixpoint``, capped at one
+    round on a 6-node chain that needs several, raises a RuntimeError
+    naming the loop instead of returning a partial answer."""
+    import mapreduceplusplus_spark.operators.graph as G
+    from mapreduceplusplus_spark.llm.dedup import (
+        _cc_min_label_propagation,
+        _cc_two_phase,
+    )
+
+    monkeypatch.setattr(G, "_KCORE_MAX_ROUNDS", 1)
+    monkeypatch.setattr(G, "_SSSP_MAX_ROUNDS", 1)
+    edges = _chain_edges(spark, 6)
+    run = {
+        "k-core peeling": lambda: G.kcore_subgraph(edges, 2),
+        "BFS frontier": lambda: G.sssp_frontier(edges, 0),
+        "Bellman-Ford fixpoint": lambda: G.bellman_ford(
+            edges.withColumn("w", F.lit(1).cast("bigint")),
+            spark.createDataFrame([(0,)], "source bigint"),
+        ),
+        "connected-components min-label propagation": lambda: (
+            _cc_min_label_propagation(edges, max_rounds=1)
+        ),
+        "large-star/small-star connected components": lambda: _cc_two_phase(
+            edges, max_rounds=1
+        ),
+    }[loop]
+    try:
+        with pytest.raises(
+            RuntimeError, match=re.escape(loop) + " did not converge in 1 rounds"
+        ):
+            run()
+    finally:
+        edges.unpersist()
+
+
 def test_sssp_chain_depth25_converges_and_cap_raises_loud(spark):
     """VERDICT r9 item 4 evidence: frontier BFS on a 26-node path must
     (a) return exact hop distances (vertex i at distance i), (b) take
@@ -1684,6 +1732,32 @@ def test_sssp_chain_depth25_converges_and_cap_raises_loud(spark):
         got2 = {(r.v, r.dist) for r in dists2.collect()}
         assert got2 == {(i, abs(i - 13)) for i in range(26)}
         assert rounds2 == 14
+    finally:
+        edges.unpersist()
+
+
+def test_bfs_two_level_antijoin_handles_same_level_and_back_edges(spark):
+    """``sssp_frontier`` anti-joins candidates against the last
+    TWO frontier levels only (valid on symmetric edges: a neighbor of
+    a depth-d vertex has depth ∈ {d−1, d, d+1}).  An odd cycle forces
+    BOTH collision classes the proof covers — a same-level edge (the
+    two wavefronts meet) and back-edges — so duplicate labels would
+    surface here if the two-level argument were wrong."""
+    import mapreduceplusplus_spark.operators.graph as G
+
+    n = 7  # C7: 0-1-2-3-4-5-6-0 — wavefronts meet at an EDGE (3,4)
+    pairs = [(i, (i + 1) % n) for i in range(n)]
+    df = spark.createDataFrame(pairs, "u bigint, v bigint")
+    edges = df.unionAll(
+        df.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).persist()
+    try:
+        dists, rounds = G.sssp_frontier(edges, 0)
+        got = sorted((r.v, r.dist) for r in dists.collect())
+        assert got == [(0, 0), (1, 1), (2, 2), (3, 3), (4, 3), (5, 2), (6, 1)]
+        # exactly one label per vertex (no duplicate-level leakage)
+        assert len({v for v, _ in got}) == n
+        assert rounds == 4  # ecc 3 + the empty probe
     finally:
         edges.unpersist()
 

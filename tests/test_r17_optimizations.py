@@ -96,32 +96,6 @@ def test_ivf_seed_memo_evicts_superseded_fingerprints(spark, tmp_path):
         M.release()
 
 
-def test_bfs_two_level_antijoin_handles_same_level_and_back_edges(spark):
-    """r17: ``sssp_frontier`` anti-joins candidates against the last
-    TWO frontier levels only (valid on symmetric edges: a neighbor of
-    a depth-d vertex has depth ∈ {d−1, d, d+1}).  An odd cycle forces
-    BOTH collision classes the proof covers — a same-level edge (the
-    two wavefronts meet) and back-edges — so duplicate labels would
-    surface here if the two-level argument were wrong."""
-    import mapreduceplusplus_spark.operators.graph as G
-
-    n = 7  # C7: 0-1-2-3-4-5-6-0 — wavefronts meet at an EDGE (3,4)
-    pairs = [(i, (i + 1) % n) for i in range(n)]
-    df = spark.createDataFrame(pairs, "u bigint, v bigint")
-    edges = df.unionAll(
-        df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    try:
-        dists, rounds = G.sssp_frontier(edges, 0)
-        got = sorted((r.v, r.dist) for r in dists.collect())
-        assert got == [(0, 0), (1, 1), (2, 2), (3, 3), (4, 3), (5, 2), (6, 1)]
-        # exactly one label per vertex (no duplicate-level leakage)
-        assert len({v for v, _ in got}) == n
-        assert rounds == 4  # ecc 3 + the empty probe
-    finally:
-        edges.unpersist()
-
-
 def test_kmeans_packed_argmin_equals_struct_argmin(spark):
     """r17: the kmeans argmin packs (dist, cid) into one BIGINT
     (min(dist·_K + cid)) — pin that the packed order equals the
