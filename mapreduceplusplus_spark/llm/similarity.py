@@ -34,8 +34,8 @@ index to richest:
   materializes and the scan shrinks by ~2^bits; multi-probe Hamming-1
   fan-out is the recall knob.
 - ``sim_search_ivf*`` — inverted-file coarse quantization (seed and
-  k-means-trained centroids; in-plan lists or a cid-partitioned
-  parquet index with PartitionFilters I/O pruning).
+  k-means-trained centroids; in-plan lists, or the one cid-partitioned
+  IVF store every IVF codec reads with PartitionFilters I/O pruning).
 - ``sim_search_ivf_sq8`` — the IVF×SQ8 COMPOSITE (r16, FAISS
   ``index_factory("IVFx,SQ8")``): the IVF gate prunes rows to
   nprobe/C cells, int8 codes prune bytes within them — the two
@@ -151,12 +151,9 @@ def sim_search_topk(
     materialized (``rnk``) so the order-insensitive hash still checks
     ordering.
 
-    ``_emb`` (private): a precomputed ``(vec_id, label, v)`` frame —
-    the recall curve passes its ONE checkpointed corpus materialization
-    so the composed plan scans the corpus once instead of per tier
-    (r17, the ``_lsh_topk`` ``_emb`` device); the expression it
-    replaces is identical, so the scored doubles — and therefore the
-    raw-double ranking — are bit-identical."""
+    ``_emb`` (private): the corpus as a ``(vec_id, label, v)`` frame to
+    rank instead of the ``embeddings`` table; the recall curve passes
+    the IVF store's columns.  Same rows for the same vectors."""
     ensure_utc(spark)
     emb = (
         _emb.select("vec_id", "label", "v")
@@ -311,10 +308,10 @@ def _lsh_topk(
     plan shape (one scan + 1-row broadcast + TakeOrderedAndProject) is
     identical in both modes, no new shuffle.
 
-    ``_emb`` (private): a precomputed (vec_id, label, v, bucket)
-    frame — the recall curve passes its ONE checkpointed signature
-    scan so the composed plan hashes the corpus once instead of per
-    tier/census (r16); the expression it replaces is identical."""
+    ``_emb`` (private): the corpus as a ``(vec_id, label, v, bucket)``
+    frame, ``bucket`` being ``lsh_signature("v")``, to rank instead of
+    the ``embeddings`` table; the recall curve passes the IVF store's
+    columns.  Same rows for the same vectors."""
     ensure_utc(spark)
     emb = (
         _emb
@@ -515,39 +512,22 @@ _IVF_ORACLE = f"""
 
 
 @query("sim_search_ivf", oracle=_IVF_ORACLE)
-def sim_search_ivf(
-    spark: SparkSession, sf_dir: str, _seed: tuple | None = None
-) -> DataFrame:
-    """ANN top-k via IVF (inverted-file) coarse quantization — the
-    third ANN tier next to brute-force and LSH, and the one real
-    vector stores default to:
+def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-k via seed-centroid IVF, with the inverted lists as an
+    in-plan filter.
 
-    1. INDEX: C centroid vectors (bounded, driver-collected — the same
-       driver-side-literal pattern as ``sort_global``'s quantile
-       boundaries) are embedded as LITERAL arrays; every vector's
-       nearest-centroid assignment is then a pure map-side expression —
-       ZERO shuffle to build the inverted lists;
-    2. PROBE: the probe vector's ``IVF_NPROBE`` nearest centroids are
-       computed driver-side (C tiny cosines in Python); the scan keeps
-       only vectors assigned to those lists — at scale the lists are a
-       table partitioned by ``cid``, so Catalyst prunes ~(1 -
-       nprobe/C) of the data before reading it;
-    3. exact cosine on the surviving ~nprobe/C of the table, then
-       TakeOrderedAndProject top-k.
-
-    Recall is partial by design (ANN contract) and measured against
-    ``sim_search_topk``; raising ``IVF_NPROBE`` is the recall knob.
-
-    ``_seed`` (private): a precomputed ``_ivf_seed_lists`` tuple —
-    the recall curve passes its ONE persisted assignment so the
-    composed plan evaluates the argmax once instead of per tier
-    (r16); semantics are identical because the tuple is exactly what
-    ``_ivf_seed_lists`` returns."""
+    Inputs: the ``embeddings`` table of ``sf_dir``.  Every vector is
+    assigned to its nearest of the ``IVF_CENTROIDS`` seed centroids
+    (``_ivf_seed_lists``); the vectors in the probe's ``IVF_NPROBE``
+    nearest lists, probe row excluded, are scored by exact cosine.
+    Output: ``vec_id, label, cosine`` (rounded to 3 places) and ``rnk``
+    (1..k), the ``TOP_K`` best by micro-quantized cosine, ties to the
+    lower ``vec_id``.  Row-identical to ``sim_search_ivf_partitioned``,
+    which reads the same lists from the IVF store.  Raises
+    ``ValueError`` on a corpus without seed centroids or probe row."""
     ensure_utc(spark)
-    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
-    cand = with_cid(emb).where(
-        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
-    )
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    cand = _probed_lists(with_cid(emb), probe_cids, "vec_id", "label", "v")
     return _ivf_score_topk(cand, probe_v)
 
 
@@ -578,19 +558,18 @@ def _probe_vector(
 def _ivf_seed_lists(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, Callable[[DataFrame], DataFrame], list[float], list[int]]:
-    """Shared IVF index builder (seed-centroid quantizer): returns the
-    corpus as ``(vec_id, label, v)``, ``with_cid`` — a function that
-    attaches each row's nearest-centroid assignment as a map-side
-    ``cid`` column (zero shuffle; a frame that already carries ``cid``
-    is returned as is) — the probe vector, and the probe's
-    ``IVF_NPROBE`` nearest centroid ids.  Callers attach ``cid`` only
-    where they filter on it or partition by it: Catalyst analyses the
-    16-way assignment argmax on every build that attaches it, and a
-    probe that reads a built index or re-ranks a pool never runs it.
-    Callers choose the list REPRESENTATION: ``sim_search_ivf`` filters
-    the in-plan column, ``sim_search_ivf_partitioned`` materializes
-    the lists as a cid-partitioned parquet index and lets partition
-    pruning do the filtering at the I/O layer."""
+    """The seed-centroid IVF quantizer shared by every IVF query.
+
+    Returns ``(emb, with_cid, probe_v, probe_cids)``: the corpus as
+    ``vec_id, label, v`` (``v`` as ``array<double>``); ``with_cid``,
+    which adds each row's nearest-centroid id as an ``int`` column
+    ``cid`` to a frame with a ``v`` column; the probe vector; and the ids of the probe's ``IVF_NPROBE`` nearest
+    centroids.  The centroids are the distinct vectors with ``vec_id <
+    IVF_CENTROIDS``; nearness is the micro-quantized cosine
+    ``round(10^6 * cos)``, ties to the lower centroid id, so the DuckDB
+    oracles replay it exactly.  The centroids, probe and probe cids are
+    memoized per session and dataset version.  Raises ``ValueError``
+    when the corpus has no centroid seed or no probe row."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
@@ -602,13 +581,6 @@ def _ivf_seed_lists(
             .collect()
         )
         cents = _dedupe_seed_rows(cent_rows)
-        # loud empty-corpus contract (ADVICE r9): on a corpus with no seed
-        # vectors or no probe row, the argmax expression below would be
-        # built over zero centroids and the probe collect would IndexError
-        # — fail with a clear message instead of an opaque crash.  Callers
-        # that degrade (sim_search_ivfpq's exact-scan fallback) handle the
-        # "non-empty but fewer seeds than expected" case; truly probe-less
-        # data is a caller error.
         if not cents:
             raise ValueError(
                 f"IVF index build: no centroid seed vectors (vec_id < "
@@ -620,8 +592,6 @@ def _ivf_seed_lists(
                 f"IVF probe: no row with vec_id == {PROBE_ID} in {sf_dir!r}"
             )
         probe_v = [float(x) for x in probe_rows[0].v]
-        # micro-quantized probe ranking (matches the oracle's integer
-        # ORDER BY and the assignment argmax above)
         probe_cids = [
             cid
             for cid, cv in sorted(
@@ -630,36 +600,15 @@ def _ivf_seed_lists(
         ]
         return cents, probe_v, probe_cids
 
-    # the seed centroids and the probe ARE the IVF index's quantizer:
-    # bounded (≤ IVF_CENTROIDS + 1 rows) and deterministic for a
-    # dataset version, so every IVF-family query of a session shares
-    # one collect (saves 2 driver jobs per warm invocation; r16: the
-    # curve alone paid 8)
     cents, probe_v, probe_cids = memo(
         spark, sf_dir, "embeddings", "ivf_seeds", _seeds
     )
 
-    # the row's L2 norm is centroid-independent: hoist it into ONE
-    # projected column instead of re-folding it inside each of the
-    # |cents| cosines (r16 — the r14 pair-cosine norm hoist applied to
-    # the assignment argmax: |cents| interpreted 64-element folds per
-    # row become 1 wherever the projection materializes; the quotient
-    # double is bit-identical because the hoisted expression tree is
-    # unchanged, only named).  The struct array is built as ONE SQL
-    # string parsed JVM-side (r16): the Column-API form issued
-    # thousands of py4j calls (|cents| structs × 64-element literal
-    # arrays), several hundred ms of pure driver time per invocation;
-    # repr(float) + the D suffix round-trips every double bit-exactly
-    # (probe-verified incl. -0.0, denormals, 1e300).
-    #
-    # argmax over (micro-score, -cid): struct max picks the highest
-    # INTEGER micro-cosine (round(10⁶·cos) — the mmr_rerank device;
-    # r14: raw-double argmax left the assignment exposed to
-    # cross-engine ULP flips now that the IVF oracle replays it), ties
-    # break to the LOWEST centroid id — deterministic assignment
+    # argmax over (micro-cosine, -cid): the highest micro-cosine wins,
+    # ties to the lowest centroid id.  The row norm is one projected
+    # column, and the whole argmax is one parsed SQL string (repr(float)
+    # with the D suffix round-trips every double).
     def with_cid(df: DataFrame) -> DataFrame:
-        if "cid" in df.columns:
-            return df
         structs = ", ".join(
             "named_struct('s', CAST(round(1000000 * ("
             f"aggregate(zip_with(v, {_sql_array(cv, 'IVF centroid')},"
@@ -727,47 +676,101 @@ def _ivf_score_topk(
     )
 
 
+def _probed_lists(
+    lists: DataFrame, probe_cids: list[int], *cols: str | Column
+) -> DataFrame:
+    """The rows of ``lists`` (a frame with ``cid``) in the probe's
+    inverted lists, probe row excluded, projected to ``cols``.  On the
+    IVF store the ``cid`` predicate is a partition filter: unprobed
+    lists are never read."""
+    return lists.where(
+        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
+    ).select(*cols)
+
+
+def _ivf_store(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    with_cid: Callable[[DataFrame], DataFrame],
+    probe_v: list[float],
+) -> DataFrame:
+    """The IVF store: every IVF codec's columns for the corpus ``emb``,
+    written once per dataset version by ``ensure_store`` and
+    partitioned by ``cid``, read back as a DataFrame.
+
+    ``emb``, ``with_cid`` and ``probe_v`` are ``_ivf_seed_lists``'s.
+    Columns, one row per corpus row:
+
+    - ``vec_id, label, v``: the corpus (IVF-flat lists);
+    - ``bucket``: the ``lsh_signature`` of ``v`` (LSH tiers);
+    - ``scale, sq8_codes``: ``_sq8_scale`` as double and the int8 codes
+      as ``array<tinyint>`` (IVF-SQ8);
+    - ``pq_codes``: ``PQ_M`` product-quantization codes in
+      ``[0, PQ_K)`` as ``array<tinyint>`` (IVF-PQ), NULL when the
+      corpus holds fewer than ``PQ_K`` PQ seeds;
+    - ``cid``: the partition column.
+
+    A probe selects only its own columns and filters on ``cid``
+    (``_probed_lists``), so Parquet column and partition pruning keep
+    its reads to its own codec's bytes in the probed lists."""
+    cb = _pq_codebook(spark, sf_dir, len(probe_v))
+
+    def _build(d: str) -> None:
+        staged = with_cid(emb)
+        pq_codes = F.lit(None).cast("array<tinyint>")
+        if cb is not None:
+            # persist() keeps the micro-quantized vq one column: without
+            # the barrier CollapseProject inlines it into every one of
+            # the PQ_M * PQ_K subspace folds
+            staged = staged.withColumn("vq", lsh_micro(F.col("v"))).persist()
+            pq_codes = F.array(
+                *[_pq_code(cb[m], m) for m in range(PQ_M)]
+            ).cast("array<tinyint>")
+        (
+            staged.withColumn("bucket", lsh_signature("v"))
+            .withColumn("scale", _sq8_scale().cast("double"))
+            .withColumn("sq8_codes", _sq8_codes("tinyint"))
+            .withColumn("pq_codes", pq_codes)
+            .select(
+                "vec_id", "label", "v", "bucket", "scale", "sq8_codes",
+                "pq_codes", "cid",
+            )
+            .write.mode("overwrite")
+            .partitionBy("cid")
+            .parquet(d)
+        )
+        staged.unpersist()
+
+    return read_parquet(
+        spark,
+        ensure_store(
+            "ivf_store",
+            sf_dir,
+            (
+                dataset_fingerprint(sf_dir, "embeddings"),
+                IVF_CENTROIDS,
+                PQ_M,
+                PQ_K,
+                LSH_BITS,
+            ),
+            _build,
+        ),
+    )
+
+
 @query("sim_search_ivf_partitioned", oracle=_IVF_ORACLE)
 def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with the inverted lists MATERIALIZED as a
-    cid-PARTITIONED parquet index — the on-disk layout a 100 TB vector
-    store actually uses, and the step ``sim_search_ivf``'s docstring
-    promises ("at scale the lists are a table partitioned by cid"):
+    """``sim_search_ivf`` served from the IVF store (``_ivf_store``).
 
-    1. INDEX BUILD (write-once per dataset version, adopted by later
-       calls and processes — ``ensure_store``): the same seed-centroid
-       map-side assignment, written ``partitionBy("cid")`` — one directory per
-       inverted list, no shuffle (the writer splits files per
-       partition value within each task);
-    2. PROBE (per query): re-read the index with ``cid IN
-       probe_cids``.  Because ``cid`` is a PARTITION column, Catalyst
-       turns the predicate into ``PartitionFilters`` — the non-probed
-       ~(1 - nprobe/C) of the index is pruned at FILE LISTING time,
-       never opened, never read: real I/O pruning, not a post-scan
-       filter (the plan pin asserts the pruned scan);
-    3. exact cosine + top-k identical to ``sim_search_ivf`` — the two
-       variants return row-identical results by construction.
-
-    At 100 TB the build is a one-time batch job and each probe touches
-    only nprobe/C of the bytes; refreshing a list is an overwrite of
-    one partition directory (``partitionOverwriteMode=dynamic``).
-    Reference heritage: none (SURVEY §2 charter extension, similarity
-    family)."""
+    Inputs, output columns and empty-corpus behavior are
+    ``sim_search_ivf``'s, and the rows are identical.  The probe reads
+    only ``vec_id, label, v`` of the probed ``cid`` partitions; the
+    first call for a dataset version builds the store."""
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    index_dir = ensure_store(
-        "ivf_index",
-        sf_dir,
-        (dataset_fingerprint(sf_dir, "embeddings"), IVF_CENTROIDS),
-        lambda d: with_cid(emb)
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(d),
-    )
-    lists = read_parquet(spark, index_dir)
-    cand = lists.where(
-        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
-    )
+    store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
+    cand = _probed_lists(store, probe_cids, "vec_id", "label", "v")
     return _ivf_score_topk(cand, probe_v)
 
 
@@ -1536,45 +1539,21 @@ def _ivfpq_oracle(metric: str) -> str:
 
 
 @query("sim_search_ivfpq", oracle=_ivfpq_oracle("cosine"))
-def sim_search_ivfpq(
-    spark: SparkSession, sf_dir: str, _seed: tuple | None = None
-) -> DataFrame:
-    """IVF-PQ ANN — the memory layout actual 100 TB vector stores run
-    (Jégou, Douze & Schmid, "Product Quantization for Nearest
-    Neighbor Search", TPAMI'11; the FAISS ``IVFxx,PQ8`` default):
+def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ ANN top-k under cosine (Jégou, Douze & Schmid, TPAMI'11;
+    the FAISS ``IVFx,PQ8`` shape).
 
-    1. COARSE index: the ``sim_search_ivf`` seed-centroid quantizer
-       gates the scan to the probe's ``IVF_NPROBE`` inverted lists;
-    2. PQ CODES (index build): each vector is split into ``PQ_M``
-       orthogonal subspaces; per subspace its nearest of ``PQ_K``
-       codebook entries (argmin L2², ties to the lowest code id) is
-       stored — the vector becomes PQ_M uint8 codes, 8 bytes instead
-       of 256.  Codebooks are PQ_K seed vectors sliced per subspace
-       (the same deterministic seed-quantizer device as the coarse
-       level; ``sim_search_ivf_kmeans`` shows the trained variant).
-       Encoding is a pure map-side expression over driver-literal
-       codebooks — ZERO shuffle, exactly like the cid assignment;
-    3. ADC scan (probe time): the probe precomputes a PQ_M×PQ_K
-       lookup table of subspace dot-products and codebook norms²
-       driver-side; each candidate's approximate cosine is then PQ_M
-       array lookups + adds — NO access to the original vector, which
-       is why a PQ index fits in RAM when the vectors don't
-       (reconstructed norm² = Σ_m ‖cb[m][code_m]‖², exact under
-       subspace orthogonality);
-    4. RE-RANK: the top ``PQ_RERANK`` by ADC score are re-scored with
-       EXACT full-precision cosine, and the final top-k comes from
-       that pool — returned scores are exact (the repo-wide ANN
-       contract: recall is the only degrading axis).  At scale this
-       step is a vec_id-keyed join fetching ``PQ_RERANK`` full
-       vectors; here the test fixture rows still carry ``v`` so the
-       plan re-reads no table.
-
-    Determinism: codebooks and LUTs are fixed by vec_id-seeded
-    construction; per-row folds run in array order (no cross-partition
-    float accumulation); all argmin/top-N ties break on explicit
-    integer ids.  Reference heritage: none (SURVEY §2 charter
-    extension, similarity family)."""
-    return _ivfpq_search(spark, sf_dir, metric="cosine", _seed=_seed)
+    Inputs: the ``embeddings`` table of ``sf_dir``.  The probe's
+    ``IVF_NPROBE`` inverted lists (the ``sim_search_ivf`` gate) are
+    ranked by the asymmetric distance of their stored PQ codes (the
+    IVF store's ``pq_codes``: per subspace, the nearest of ``PQ_K``
+    codebook slices); the ``PQ_RERANK`` best are re-scored by exact
+    cosine.  Output: ``vec_id, label, cosine`` (rounded to 3 places)
+    and ``rnk``, the ``TOP_K`` best by micro-quantized cosine, ties to
+    the lower ``vec_id``.  A corpus with fewer than ``PQ_K`` PQ seeds
+    is ranked by an exact scan instead.  Raises ``ValueError`` on a
+    corpus without seed centroids or probe row.  See ``_ivfpq_search``."""
+    return _ivfpq_search(spark, sf_dir, metric="cosine")
 
 
 @query("sim_search_ivfpq_dot", oracle=_ivfpq_oracle("dot"))
@@ -1607,32 +1586,17 @@ def sim_search_ivfpq_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_search(spark, sf_dir, metric="l2")
 
 
-def _ivfpq_search(
-    spark: SparkSession,
-    sf_dir: str,
-    metric: str,
-    _seed: tuple | None = None,
-) -> DataFrame:
-    """Shared IVF-PQ engine: coarse-gate → PQ-encode → metric-specific
-    ADC scan → exact re-rank (see ``sim_search_ivfpq`` for the full
-    algorithm notes; ``metric`` ∈ cosine | dot | l2 selects the ADC
-    functional, the pool sort direction, and the exact re-rank
-    scorer).
+def _pq_codebook(
+    spark: SparkSession, sf_dir: str, d: int
+) -> list[list[list[int]]] | None:
+    """The PQ codebook ``cb[m][k]``: subspace ``m`` (of ``PQ_M``, each
+    ``d // PQ_M`` dims wide) of seed vector ``k`` (of ``PQ_K``, the
+    distinct vectors with ``IVF_CENTROIDS <= vec_id < IVF_CENTROIDS +
+    PQ_K`` in id order), in integer micro-units (``_py_mc``).  ``None``
+    when the corpus holds fewer than ``PQ_K`` seeds.  The seeds are
+    memoized per session and dataset version."""
 
-    ORACLE (r15): codebooks, probe, and candidates are all quantized
-    to integer micro-units (``_py_mc`` — half-away, the repo-wide
-    rule), so the encode argmin (BIGINT subspace L2²), the ADC lookup
-    sums (BIGINT), and the l2/dot pool keys are exact integers and the
-    cosine pool key is a double derived from exact integers (IEEE
-    sqrt/divide) — the whole index path replays bit-for-bit in DuckDB
-    (``_ivfpq_oracle``); returned scores stay exact full-precision
-    (the repo-wide ANN contract: recall is the only degrading axis)."""
-    ensure_utc(spark)
-    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
-    d = len(probe_v)
-    sub = d // PQ_M
-
-    def _pq_seeds() -> list[list[float]]:
+    def _seeds() -> list[list[float]]:
         seed_rows = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", _as_double("embedding").alias("v"))
@@ -1644,18 +1608,59 @@ def _ivfpq_search(
         )
         return [v for _, v in _dedupe_seed_rows(seed_rows)]
 
-    seeds = memo(spark, sf_dir, "embeddings", "pq_seeds", _pq_seeds)
-    if len(seeds) < PQ_K:  # tiny/empty corpus: degrade to exact scan
-        return _ivf_score_topk(
-            emb.where(F.col("vec_id") != PROBE_ID), probe_v, metric
-        )
-    # integer micro-unit codebooks / probe (oracle-replayable)
+    seeds = memo(spark, sf_dir, "embeddings", "pq_seeds", _seeds)
+    if len(seeds) < PQ_K:
+        return None
+    sub = d // PQ_M
     sq = [[_py_mc(x) for x in v] for v in seeds]
-    pq = [_py_mc(x) for x in probe_v]
-    cb = [
+    return [
         [sq[k][m * sub : (m + 1) * sub] for k in range(PQ_K)]
         for m in range(PQ_M)
     ]
+
+
+def _pq_code(cb_m: list[list[int]], m: int) -> Column:
+    """Subspace ``m``'s PQ code of the ``vq`` column (the row's
+    micro-unit vector): the codebook entry of ``cb_m`` at the least
+    integer L2², ties to the lower code id.  One parsed SQL string, as
+    the Column-API form costs ~10^4 py4j calls per build."""
+    sub = len(cb_m[0])
+    subv = f"slice(vq, {m * sub + 1}, {sub})"
+    structs = ", ".join(
+        "named_struct('d', aggregate(zip_with("
+        f"{subv}, {_sql_array(cb_m[k], 'PQ codebook', 'L')},"
+        " (x, y) -> (x - y) * (x - y)),"
+        f" 0L, (acc, x) -> acc + x), 'k', {k})"
+        for k in range(PQ_K)
+    )
+    return F.array_min(F.expr(f"array({structs})"))["k"]
+
+
+def _ivfpq_search(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
+    """The IVF-PQ probe behind ``sim_search_ivfpq``, ``_dot`` and
+    ``_l2``.  ``metric`` is ``cosine``, ``dot`` or ``l2``.
+
+    Reads ``vec_id, pq_codes`` of the probed lists of the IVF store.
+    The asymmetric score of a row is a sum of ``PQ_M`` lookups into
+    driver-side tables of the probe's integer micro-unit subspace dots
+    and the codebook norms: ``adot / sqrt(ansq)`` for cosine (divisor 1
+    when ``ansq`` is 0), ``adot`` for dot, ``|q|^2 - 2 adot + ansq``
+    ascending for l2, ties to the lower ``vec_id``.  The ``PQ_RERANK``
+    best rows join back to the corpus and ``_ivf_score_topk`` ranks
+    them by the exact metric, so the output columns are ``vec_id,
+    label``, the metric's score (``cosine``, ``dot`` or ``l2_dist``)
+    and ``rnk``.  All index arithmetic is integer, so ``_ivfpq_oracle``
+    replays it exactly.  With fewer than ``PQ_K`` PQ seeds the store is
+    not read and every non-probe row is scored exactly."""
+    ensure_utc(spark)
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    cb = _pq_codebook(spark, sf_dir, len(probe_v))
+    if cb is None:
+        return _ivf_score_topk(
+            emb.where(F.col("vec_id") != PROBE_ID), probe_v, metric
+        )
+    sub = len(cb[0][0])
+    pq = [_py_mc(x) for x in probe_v]
     lut_dot = [
         [
             sum(pq[m * sub + i] * cb[m][k][i] for i in range(sub))
@@ -1669,95 +1674,23 @@ def _ivfpq_search(
     ]
     pnq2 = sum(x * x for x in pq)
 
-    # candidate micro vector once per row; subspace slices of it feed
-    # every (m, k) integer L2² fold
-    vq = F.transform(
-        F.col("v"), lambda x: F.round(F.lit(1000000) * x).cast("long")
-    )
-
-    # the PQ_M·PQ_K subspace-L2² folds are built as ONE SQL string per
-    # subspace and parsed JVM-side (r16): the Column-API form issued
-    # ~10⁴ py4j calls and dominated the query at ~8 s of pure DRIVER
-    # time per invocation (executor time: ~0.1 s); the parsed
-    # expression tree is identical (same zip_with/aggregate/slice
-    # nodes, same BIGINT literals)
-    def _code(m: int) -> Column:
-        subv = f"slice(vq, {m * sub + 1}, {sub})"
-        structs = ", ".join(
-            "named_struct('d', aggregate(zip_with("
-            f"{subv}, {_sql_array(cb[m][k], 'PQ codebook', 'L')},"
-            " (x, y) -> (x - y) * (x - y)),"
-            f" 0L, (acc, x) -> acc + x), 'k', {k})"
-            for k in range(PQ_K)
-        )
-        return F.array_min(F.expr(f"array({structs})"))["k"]
-
-    # cid-PARTITIONED ON-DISK PQ-CODE INDEX (r17 — VERDICT r16 #2/#3,
-    # replacing the r16 in-plan localCheckpoint barriers): the encode
-    # runs ONCE per dataset version over the FULL corpus and
-    # is written as ``(vec_id, codes array<tinyint>)`` partitioned by
-    # ``cid`` — the ``sim_search_ivf_sq8_partitioned`` physical layout
-    # applied to PQ codes.  The PROBE then (a) prunes the non-probed
-    # (1 − nprobe/C) of the index at FILE LISTING time (a
-    # partition-column predicate → ``PartitionFilters``), (b) reads
-    # 1-byte-per-subspace code bytes, never the float vectors, and (c)
-    # never evaluates the 16-centroid assignment argmax (the pre-r17
-    # probe paid one argmax pass over the whole corpus inside the scan
-    # filter).  Inside the BUILD, ``persist()`` is the
-    # projection-collapse barrier between vq and the 128 subspace-L2²
-    # folds (without it CollapseProject re-inlines the 64-element
-    # micro-quantize into every fold — the r16 finding): unlike the
-    # replaced eager localCheckpoints it KEEPS LINEAGE (an executor
-    # loss recomputes instead of failing the query) and spills
-    # MEMORY_AND_DISK; it is unpersisted as soon as the one-time write
-    # completes.  At 100 TB this is the real PQ index lifecycle: build
-    # once per corpus version, refresh one inverted list = overwrite
-    # one partition directory, probes pay nprobe/C of the rows ×
-    # PQ_M bytes each.  The index is METRIC-FREE: one build serves the
-    # cosine, dot and l2 variants.
-    def _build(d: str) -> None:
-        staged = with_cid(emb).withColumn("vq", vq).persist()
-        (
-            staged.withColumn(
-                "codes",
-                F.array(*[_code(m) for m in range(PQ_M)]).cast(
-                    "array<tinyint>"
-                ),
-            )
-            .select("vec_id", "codes", "cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(d)
-        )
-        staged.unpersist()
-
-    index_dir = ensure_store(
-        "ivf_pq_index",
-        sf_dir,
-        (dataset_fingerprint(sf_dir, "embeddings"), IVF_CENTROIDS, PQ_M, PQ_K),
-        _build,
-    )
-    coded = read_parquet(spark, index_dir).where(
-        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
-    )
-    # LUT sums as single parsed strings too (same py4j-call argument);
-    # exact BIGINT adds — dropping the redundant leading 0L start
-    # value cannot change an integer sum
+    store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
+    coded = _probed_lists(store, probe_cids, "vec_id", "pq_codes")
+    # exact BIGINT sums, one parsed string each
     adc_dot = F.expr(
         " + ".join(
-            f"element_at({_sql_array(lut_dot[m], 'PQ LUT', 'L')}, codes[{m}] + 1)"
+            f"element_at({_sql_array(lut_dot[m], 'PQ LUT', 'L')}, pq_codes[{m}] + 1)"
             for m in range(PQ_M)
         )
     )
     adc_nsq = F.expr(
         " + ".join(
-            f"element_at({_sql_array(cb_nsq[m], 'PQ LUT', 'L')}, codes[{m}] + 1)"
+            f"element_at({_sql_array(cb_nsq[m], 'PQ LUT', 'L')}, pq_codes[{m}] + 1)"
             for m in range(PQ_M)
         )
     )
     if metric == "cosine":
-        # probe norm is rank-constant and omitted; zero-norm guard
-        # matches the oracle's CASE
+        # the probe norm is rank-constant and omitted
         adc, asc = (
             adc_dot.cast("double")
             / F.when(adc_nsq == 0, F.lit(1.0)).otherwise(
@@ -1780,9 +1713,7 @@ def _ivfpq_search(
         .limit(PQ_RERANK)
         .select("vec_id")
     )
-    # exact re-rank reads the float vectors ONLY for the bounded pool:
-    # broadcast-safe (LIMIT PQ_RERANK = 40 rows by construction), and
-    # the corpus frame carries no cid — the probe never re-derives it
+    # broadcast-safe: the pool is at most PQ_RERANK rows
     cand = emb.select("vec_id", "label", "v").join(
         F.broadcast(pool), "vec_id"
     )
@@ -2685,59 +2616,53 @@ def _sq8_probe_lits(pv: list[float]) -> tuple[Column, Column]:
     """,
 )
 def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 ANN — the int8 SCALAR-QUANTIZATION tier of the ladder
-    (exact → 1-bit Hamming → **SQ8** → LSH buckets → IVF lists →
-    IVF-PQ codes), FAISS's ``IndexScalarQuantizer(QT_8bit)`` shape:
-    every corpus vector stores ``scale = max|x_d|`` plus one int8 code
-    per dimension (the ``embedding_quantize_int8`` device verbatim —
-    same half-up ``floor(x/scale·127 + 0.5)``, same zero-scale guard),
-    candidates rank by the ASYMMETRIC reconstructed dot (the float
-    probe against quantized candidates: ``Σ pq_d·code_d · scale/127``
-    with the probe in exact 1e-6 micro-units, so the ranking key is a
-    single BIGINT·double product — bit-identical in both engines), and
-    the top-{SQ8_POOL} pool is re-scored with EXACT full-precision
-    cosine (the repo-wide ANN contract: recall is the only degrading
-    axis, never score fidelity).
+    """SQ8 ANN top-k over the whole corpus (FAISS
+    ``IndexScalarQuantizer(QT_8bit)``).
 
-    Where it sits: 1 B/dim vs the floats' 4-8 B (4-8× less I/O per
-    scanned candidate) with FAR higher fidelity than the 1-bit sketch
-    (SQ8 keeps magnitudes; Hamming keeps only signs), and no codebook
-    training or nprobe tuning like IVF-PQ — the standard middle rung
-    when PQ's training pass isn't warranted.  At 100 TB the codes are
-    a persisted column (written once by ``embedding_quantize_int8``'s
-    projection, appended like any column) and the integer dot runs in
-    SIMD on 1/4 the bytes; the registered plan computes codes in-scan
-    — a projection — so its SEMANTICS are the stored-column plan's,
-    same argument as ``_hamming_rerank_zipwith`` vs the packed store.
-
-    Determinism is structural: probe micro-units and codes are exact
-    integers from the shared ``+0.5``-then-``floor`` device, the ADC
-    key is one IEEE multiply of exact operands, ties break on vec_id,
-    and the re-rank uses the shared micro-quantized rank.  Reference
-    heritage: none (SURVEY §2 charter extension, similarity family)."""
+    Inputs: the ``embeddings`` table of ``sf_dir``.  Every non-probe
+    vector is coded in-plan as ``scale = max|x|`` plus one int8 code per
+    dimension (``_sq8_scale``, ``_sq8_codes``) and ranked by
+    ``_sq8_topk``.  Output: ``vec_id, label, adc, cosine, rnk`` (see
+    ``_sq8_topk``).  A corpus without a probe row gives zero rows."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    # bounded 1-row probe fetch (memoized — ``_probe_vector``)
     pv = _probe_vector(spark, sf_dir, emb)
-    out_schema = (
-        "vec_id BIGINT, label INT, adc DOUBLE, cosine DOUBLE, rnk BIGINT"
-    )
     if pv is None:
-        return spark.createDataFrame([], out_schema)
-    pq_lit, pv_lit = _sq8_probe_lits(pv)
+        return spark.createDataFrame(
+            [], "vec_id BIGINT, label INT, adc DOUBLE, cosine DOUBLE, rnk BIGINT"
+        )
+    cand = (
+        emb.where(F.col("vec_id") != PROBE_ID)
+        .withColumn("scale", _sq8_scale().cast("double"))
+        .select("vec_id", "scale", _sq8_codes().alias("codes"))
+    )
+    return _sq8_topk(emb, cand, pv)
 
+
+def _sq8_topk(emb: DataFrame, cand: DataFrame, pv: list[float]) -> DataFrame:
+    """The SQ8 ranking shared by every SQ8 query.
+
+    ``cand`` holds the candidates as ``vec_id, scale, codes`` (integer
+    codes of any width); ``emb`` is the corpus as ``vec_id, label, v``;
+    ``pv`` the probe vector.  Candidates rank by the asymmetric dot
+    ``s = sum(pq_d * code_d)``, with ``pq`` the probe in half-up integer
+    micro-units, as ``s * scale`` descending, ties to the lower
+    ``vec_id``.  The ``SQ8_POOL`` best join back to ``emb`` and are
+    ranked by exact cosine.  Output: ``vec_id, label``, ``adc`` (``s *
+    scale / 127 / 10^6``, rounded to 3 places), ``cosine`` (exact,
+    rounded to 3 places) and ``rnk``, the ``TOP_K`` best by
+    micro-quantized cosine, ties to the lower ``vec_id``; zero rows for
+    an empty ``cand``."""
+    pq_lit, pv_lit = _sq8_probe_lits(pv)
     s = F.aggregate(
-        F.zip_with(F.col("codes"), pq_lit, lambda c, p: c * p),
+        F.zip_with(F.col("codes"), pq_lit, lambda c, p: c.cast("bigint") * p),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
     pool = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        .withColumn("scale", _sq8_scale().cast("double"))
-        .withColumn("codes", _sq8_codes())
-        .withColumn("s", s)
+        cand.withColumn("s", s)
         .orderBy(
             (F.col("s").cast("double") * F.col("scale")).desc(), "vec_id"
         )
@@ -2746,8 +2671,7 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         emb.select("vec_id", "label", "v")
-        # broadcast-safe: pool is LIMIT SQ8_POOL (<=40 rows by
-        # construction) — constant-bounded regardless of corpus size
+        # broadcast-safe: the pool is at most SQ8_POOL rows
         .join(F.broadcast(pool), "vec_id")
         .withColumn(
             "c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit))
@@ -2756,19 +2680,13 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
     topk = scored.orderBy(mc.desc(), "vec_id").limit(TOP_K)
     w = Window.orderBy(mc.desc(), F.col("vec_id"))
+    adc = F.col("s").cast("double") * F.col("scale") / F.lit(127.0) / F.lit(
+        1000000.0
+    )
     return topk.select(
         "vec_id",
         "label",
-        (
-            F.round(
-                F.col("s").cast("double")
-                * F.col("scale")
-                / F.lit(127.0)
-                / F.lit(1000000.0),
-                3,
-            )
-            + F.lit(0.0)
-        ).alias("adc"),
+        (F.round(adc, 3) + F.lit(0.0)).alias("adc"),
         (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
         F.row_number().over(w).cast("bigint").alias("rnk"),
     )
@@ -3063,192 +2981,50 @@ _IVF_SQ8_ORACLE = f"""
 
 
 @query("sim_search_ivf_sq8", oracle=_IVF_SQ8_ORACLE)
-def sim_search_ivf_sq8(
-    spark: SparkSession, sf_dir: str, _seed: tuple | None = None
-) -> DataFrame:
-    """IVF,SQ8 COMPOSITE ANN — the two pruning axes of the ladder
-    multiplied, FAISS's ``index_factory("IVFx,SQ8")`` shape and the
-    workhorse mid-tier of production vector stores: the seed-centroid
-    IVF gate prunes ROWS (only the probe's ``IVF_NPROBE``/
-    ``IVF_CENTROIDS`` cells are scanned — at 100 TB the lists are
-    cid-partitioned parquet and Catalyst skips the rest at the I/O
-    layer, the ``sim_search_ivf_partitioned`` device), and within the
-    surviving cells the SQ8 codes prune BYTES (1 B/dim asymmetric
-    reconstructed-dot ranking instead of 4-8 B floats — the
-    ``sim_search_sq8_rerank`` device verbatim, exact-integer probe ×
-    int8 codes, one BIGINT·double ranking key).  The bounded
-    top-{SQ8_POOL} pool is re-scored with EXACT full-precision cosine
-    (repo-wide ANN contract: recall is the only degrading axis).
+def sim_search_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-SQ8 ANN top-k with the inverted lists and codes in-plan (the
+    FAISS ``IVFx,SQ8`` shape): the ``sim_search_ivf`` gate keeps the
+    probe's ``IVF_NPROBE`` lists, and ``_sq8_topk`` ranks them by their
+    int8 codes and re-ranks the pool by exact cosine.
 
-    Why the composite matters at 100 TB: IVF alone still reads full
-    floats inside the probed cells (~nprobe/C of the table × 4-8 B/dim);
-    SQ8 alone still scans every row (× 1 B/dim).  Composed, the probe
-    reads ~nprobe/C of the rows × 1 B/dim of the bytes — with the float
-    table touched only for the ≤{SQ8_POOL}-row pool join-back, the
-    recurring probe I/O drops ~16-32× vs the exact scan at the standing
-    knobs.  Recall is bounded above by the IVF gate's (the SQ8 stage
-    ranks within the gate); both knobs (nprobe, pool) stay independent.
-
-    Determinism is structural, inherited from the two parents: the cell
-    assignment and nprobe pick are the micro-integer argmaxes the IVF
-    oracle replays; the ADC key is one IEEE multiply of a BIGINT dot by
-    an exact double scale; ties break on vec_id everywhere; the re-rank
-    uses the shared micro-quantized rank.  Empty-corpus contract: LOUD
-    raise from ``_ivf_seed_lists`` (the EMPTY_RAISES family).
-    Reference heritage: none (SURVEY §2 charter extension, similarity
-    family)."""
+    Inputs: the ``embeddings`` table of ``sf_dir``.  Output: ``vec_id,
+    label, adc, cosine, rnk`` (see ``_sq8_topk``).  Row-identical to
+    ``sim_search_ivf_sq8_partitioned``.  Raises ``ValueError`` on a
+    corpus without seed centroids or probe row."""
     ensure_utc(spark)
-    emb, with_cid, probe_v, probe_cids = _seed or _ivf_seed_lists(spark, sf_dir)
-    pq_lit, pv_lit = _sq8_probe_lits(probe_v)
-    cand = with_cid(emb).where(
-        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    cand = (
+        _probed_lists(with_cid(emb), probe_cids, "vec_id", "v")
+        .withColumn("scale", _sq8_scale().cast("double"))
+        .select("vec_id", "scale", _sq8_codes().alias("codes"))
     )
-    s = F.aggregate(
-        F.zip_with(F.col("codes"), pq_lit, lambda c, p: c * p),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pool = (
-        cand.withColumn("scale", _sq8_scale().cast("double"))
-        .withColumn("codes", _sq8_codes())
-        .withColumn("s", s)
-        .orderBy(
-            (F.col("s").cast("double") * F.col("scale")).desc(), "vec_id"
-        )
-        .limit(SQ8_POOL)
-        .select("vec_id", "s", "scale")
-    )
-    scored = (
-        emb.select("vec_id", "label", "v")
-        # broadcast-safe: pool is LIMIT SQ8_POOL (<=40 rows by
-        # construction) — constant-bounded regardless of corpus size
-        .join(F.broadcast(pool), "vec_id")
-        .withColumn(
-            "c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit))
-        )
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), "vec_id").limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (
-            F.round(
-                F.col("s").cast("double")
-                * F.col("scale")
-                / F.lit(127.0)
-                / F.lit(1000000.0),
-                3,
-            )
-            + F.lit(0.0)
-        ).alias("adc"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
-    )
+    return _sq8_topk(emb, cand, probe_v)
 
 
 @query("sim_search_ivf_sq8_partitioned", oracle=_IVF_SQ8_ORACLE)
 def sim_search_ivf_sq8_partitioned(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The IVF,SQ8 composite with its index MATERIALIZED as a
-    cid-PARTITIONED parquet table of int8 CODES — the on-disk layout
-    ``sim_search_ivf_sq8``'s docstring promises for 100 TB, realizing
-    BOTH pruning axes at the I/O layer in one physical design:
+    """``sim_search_ivf_sq8`` served from the IVF store
+    (``_ivf_store``).
 
-    1. INDEX BUILD (write-once per dataset version — ``ensure_store``):
-       the seed-centroid assignment plus the SQ8 quantization —
-       ``(vec_id, scale, codes array<tinyint>)`` written
-       ``partitionBy("cid")``.  The floats are NOT in the index: one
-       directory per inverted list holding 1-B-wide codes (parquet
-       stores tinyint as bit-packed/RLE INT(8) — the 1 B/dim contract;
-       a production store would pack to raw binary, same semantics);
-    2. PROBE: re-read with ``cid IN probe_cids`` — a PARTITION-column
-       predicate, so Catalyst prunes the non-probed ~(1 - nprobe/C) of
-       the index at FILE LISTING time (``PartitionFilters``, pinned),
-       and the scanned bytes are code bytes, not float bytes
-       (``ReadSchema`` excludes the vector column, pinned);
-    3. the ADC ranking runs on the STORED codes (same BIGINT·double
-       key), and only the bounded top-{SQ8_POOL} pool joins back to
-       the full-precision float table for the exact re-rank.
-
-    Row-identical to ``sim_search_ivf_sq8`` by construction (same
-    assignment, same codes, same ranking keys — pinned), so the two
-    share one oracle: this variant is the physical strategy, the
-    in-plan form is the semantics.  At 100 TB: build once per corpus
-    version, refresh one list = overwrite one partition directory, and
-    each probe's recurring I/O is nprobe/C of the rows × 1 B/dim of
-    the bytes + one bounded float join.  Empty-corpus contract: LOUD
-    raise from ``_ivf_seed_lists`` (EMPTY_RAISES family).  Reference
-    heritage: none (SURVEY §2 charter extension, similarity family)."""
+    Inputs, output columns and empty-corpus behavior are
+    ``sim_search_ivf_sq8``'s, and the rows are identical.  The probe
+    reads only ``vec_id, scale, sq8_codes`` of the probed ``cid``
+    partitions, never the float vectors; only the ``SQ8_POOL`` pool
+    joins back to the corpus.  The first call for a dataset version
+    builds the store."""
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    index_dir = ensure_store(
-        "ivf_sq8_index",
-        sf_dir,
-        (dataset_fingerprint(sf_dir, "embeddings"), IVF_CENTROIDS),
-        lambda d: with_cid(emb)
-        .withColumn("scale", _sq8_scale().cast("double"))
-        .withColumn("codes", _sq8_codes("tinyint"))
-        .select("vec_id", "scale", "codes", "cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(d),
+    store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
+    cand = _probed_lists(
+        store, probe_cids, "vec_id", "scale", F.col("sq8_codes").alias("codes")
     )
-
-    pq_lit, pv_lit = _sq8_probe_lits(probe_v)
-    lists = read_parquet(spark, index_dir)
-    s = F.aggregate(
-        F.zip_with(
-            F.col("codes"), pq_lit, lambda c, p: c.cast("bigint") * p
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    pool = (
-        lists.where(
-            F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
-        )
-        .withColumn("s", s)
-        .orderBy(
-            (F.col("s").cast("double") * F.col("scale")).desc(), "vec_id"
-        )
-        .limit(SQ8_POOL)
-        .select("vec_id", "s", "scale")
-    )
-    scored = (
-        emb.select("vec_id", "label", "v")
-        # broadcast-safe: pool is LIMIT SQ8_POOL (<=40 rows by
-        # construction) — constant-bounded regardless of corpus size
-        .join(F.broadcast(pool), "vec_id")
-        .withColumn(
-            "c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit))
-        )
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), "vec_id").limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (
-            F.round(
-                F.col("s").cast("double")
-                * F.col("scale")
-                / F.lit(127.0)
-                / F.lit(1000000.0),
-                3,
-            )
-            + F.lit(0.0)
-        ).alias("adc"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
-    )
+    return _sq8_topk(emb, cand, probe_v)
 
 
 # ---------------------------------------------------------------------------
-# cross-ladder recall / scan-cost characterization (r16 — VERDICT r15 #6)
+# cross-ladder recall / scan-cost characterization
 # ---------------------------------------------------------------------------
 
 from mapreduceplusplus_spark.registry import ORACLES as _ORACLES_SO_FAR
@@ -3378,74 +3154,34 @@ _RECALL_CURVE_ORACLE = f"""
 
 @query("sim_search_recall_curve", oracle=_RECALL_CURVE_ORACLE)
 def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-ladder ANN recall/cost curve (VERDICT r15 #6) — ONE query
-    emitting, per ANN tier at its standing knobs, recall@{TOP_K}
-    against the exact top-k plus the tier's scanned-candidate census:
-    the in-engine readout BASELINE.md's hand-maintained
-    characterization table previously approximated.
+    """Recall and scan cost of every ANN tier at its standing knobs,
+    one row per tier, ordered by ``tier``.
 
-    One row per tier — exact, hamming (1-bit sketch), mrl16
-    (Matryoshka {MRL_DIMS}-dim prefix funnel, {MRL_POOL}-pool
-    re-rank), sq8 (int8 scalar quantization, {SQ8_POOL}-pool re-rank),
-    lsh (single-probe),
-    lsh_multiprobe (Hamming-1), ivf (seed-centroid, nprobe
-    {IVF_NPROBE}/{IVF_CENTROIDS}), ivf_sq8 (the IVF×int8 composite,
-    {SQ8_POOL}-pool re-rank), ivfpq (8×16 codes, re-rank
-    {PQ_RERANK}) — with:
+    Inputs: the ``embeddings`` table of ``sf_dir``.  Tiers: ``exact``,
+    ``hamming``, ``mrl16``, ``sq8``, ``lsh``, ``lsh_multiprobe``,
+    ``ivf``, ``ivf_sq8`` and ``ivfpq``.  Each tier's top-k is its
+    registered query composed as a sub-plan: the exact and LSH tiers
+    over the IVF store's ``vec_id, label, v, bucket`` (``_emb``), the
+    IVF tiers as their store-backed queries.  Output columns:
 
-    - ``hits`` / ``recall_at_k``: |tier top-k ∩ exact top-k| / k,
-      the standard recall@k over the SAME probe and corpus;
-    - ``cand_ranked`` / ``frac_ranked``: rows the tier's CHEAP ranking
-      stage touches (hamming scans every sketch; LSH scans its
-      bucket(s); IVF/PQ scan the probed lists — the ADC pass);
-    - ``cand_exact`` / ``frac_exact``: rows scored at FULL precision
-      (LSH/IVF exact-score every candidate; hamming and PQ re-rank a
-      bounded pool).
+    - ``tier``;
+    - ``hits``: |tier top-k ∩ exact top-k|; ``recall_at_k`` = hits /
+      ``TOP_K``, rounded to 3 places;
+    - ``cand_ranked``: rows the tier's cheap ranking stage touches
+      (the whole corpus, the probe's LSH bucket(s) or its IVF lists);
+      ``frac_ranked`` = cand_ranked / ``corpus_n``, rounded to 4;
+    - ``cand_exact``: rows scored at full precision (the census, or
+      its re-rank pool size when smaller); ``frac_exact`` likewise;
+    - ``corpus_n``: the non-probe rows.
 
-    The tier top-ks are the REGISTERED tier plans composed as
-    sub-plans (not re-derivations), so the curve can never drift from
-    what the tiers actually return; censuses reuse each tier's own
-    gate device (bucket equality, multiprobe bucket set, IVF
-    assignment argmax + nprobe pick).  At 100 TB every component is
-    the tier's own bounded scan + a {TOP_K}-row join — the curve costs
-    one extra pass over the gates, no new shuffle.  This is the
-    recall-vs-cost governance readout an ANN deployment tunes its
-    knobs from (nprobe, bits, re-rank depth).  Reference heritage:
-    none (SURVEY §2 charter extension, similarity family)."""
+    The censuses are two bounded aggregates over the IVF store.  Raises
+    ``ValueError`` on a corpus without seed centroids or probe row."""
     from functools import reduce as _red
 
     ensure_utc(spark)
-    # the IVF gate raises loudly on an empty/probe-less corpus — do it
-    # FIRST so the whole curve has one deterministic empty contract
-    emb, with_cid, _probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    # ONE corpus materialization for the WHOLE curve (r17, tightening
-    # the r16 one-checkpoint-per-shared-sub-plan form): cid (the IVF
-    # assignment argmax) and bucket (the LSH signature) are computed
-    # in the SAME pass — the r16 form checkpointed the assignment and
-    # then the signature frame separately — and as a lineage-keeping
-    # ``persist()`` instead of an eager localCheckpoint (VERDICT r16
-    # #3: an executor loss now recomputes instead of failing the
-    # query, the relation spills MEMORY_AND_DISK instead of pinning
-    # storage memory, and the measured warm time is parity).  The
-    # cache is PER-INVOCATION — every run still computes it from the
-    # parquet inputs inside the timed region; it is the in-plan
-    # equivalent of the persisted index stores the tier queries
-    # already share.
-    base = with_cid(emb).withColumn("bucket", lsh_signature("v")).persist()
-    # base carries cid, so the tiers' with_cid(base) returns it as is
-    seed = (base, with_cid, _probe_v, probe_cids)
+    emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
+    base = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
 
-    # --- gate censuses as BOUNDED DRIVER-SIDE LITERALS (r17) ---
-    # the r16 form materialized FIVE 1-row frames (n, exact ids, two
-    # bucket censuses, the IVF census) as separate checkpoint jobs and
-    # cross-joined them into all 9 branches; every census is a bounded
-    # scalar (a count) or a ≤TOP_K id list, i.e. exactly the
-    # driver-side-literal pattern of sort_global's boundaries and the
-    # MMR greedy — TWO bounded collects over the cached base replace
-    # all five jobs, and the branch grid becomes pure literals (the
-    # censuses are still computed per invocation from the same data,
-    # by the same predicates: values unchanged, the oracle replays
-    # them independently).
     not_probe = F.col("vec_id") != PROBE_ID
     row1 = base.agg(
         F.sum(F.when(not_probe, 1).otherwise(0)).alias("n"),
@@ -3454,82 +3190,48 @@ def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ivfc"),
         F.max(F.when(~not_probe, F.col("bucket"))).alias("pb"),
     ).collect()[0]
-    n, ivfc = int(row1.n or 0), int(row1.ivfc or 0)
-    pb = int(row1.pb)  # probe row exists — _ivf_seed_lists raised if not
+    n, ivf_census = int(row1.n or 0), int(row1.ivfc or 0)
+    pb = int(row1.pb)  # the probe row exists: _ivf_seed_lists raised if not
     pbs = [pb, *[pb ^ (1 << i) for i in range(LSH_BITS)]]
     row2 = base.where(not_probe).agg(
         F.sum(F.when(F.col("bucket") == pb, 1).otherwise(0)).alias("lshc"),
         F.sum(F.when(F.col("bucket").isin(pbs), 1).otherwise(0)).alias("mpc"),
     ).collect()[0]
     lsh_census, mp_census = int(row2.lshc or 0), int(row2.mpc or 0)
-    ivf_census, n_as_census = ivfc, n
 
-    # exact top-k ids: the registered exact tier composed over the SAME
-    # materialized corpus (``_emb`` pass-through — identical expression,
-    # identical doubles, identical raw-double ranking); the ≤TOP_K ids
-    # become an isin literal instead of a 9-branch broadcast join
-    exact_id_rows = (
-        sim_search_topk(spark, sf_dir, _emb=base).select("vec_id").collect()
+    corpus = base.select("vec_id", "label", "v", "bucket")
+    exact_id_list = sorted(
+        int(r.vec_id)
+        for r in sim_search_topk(spark, sf_dir, _emb=corpus)
+        .select("vec_id")
+        .collect()
     )
-    exact_id_list = sorted(int(r.vec_id) for r in exact_id_rows)
 
-    def _least(census: int, cap: int) -> int:
-        return min(census, cap)
-
+    # (tier, top-k frame, cand_ranked, cand_exact)
     tiers = [
-        (
-            "exact",
-            sim_search_topk(spark, sf_dir, _emb=base).select("vec_id"),
-            n_as_census,
-            n_as_census,
-        ),
-        (
-            "hamming",
-            sim_search_hamming_rerank(spark, sf_dir).select("vec_id"),
-            n_as_census,
-            _least(n_as_census, HAMMING_POOL),
-        ),
-        (
-            "mrl16",
-            sim_search_matryoshka_funnel(spark, sf_dir).select("vec_id"),
-            n_as_census,
-            _least(n_as_census, MRL_POOL),
-        ),
-        (
-            "sq8",
-            sim_search_sq8_rerank(spark, sf_dir).select("vec_id"),
-            n_as_census,
-            _least(n_as_census, SQ8_POOL),
-        ),
-        (
-            "lsh",
-            sim_search_lsh(spark, sf_dir, _emb=base).select("vec_id"),
-            lsh_census,
-            lsh_census,
-        ),
+        ("exact", sim_search_topk(spark, sf_dir, _emb=corpus), n, n),
+        ("hamming", sim_search_hamming_rerank(spark, sf_dir), n, min(n, HAMMING_POOL)),
+        ("mrl16", sim_search_matryoshka_funnel(spark, sf_dir), n, min(n, MRL_POOL)),
+        ("sq8", sim_search_sq8_rerank(spark, sf_dir), n, min(n, SQ8_POOL)),
+        ("lsh", sim_search_lsh(spark, sf_dir, _emb=corpus), lsh_census, lsh_census),
         (
             "lsh_multiprobe",
-            sim_search_lsh_multiprobe(spark, sf_dir, _emb=base).select("vec_id"),
+            sim_search_lsh_multiprobe(spark, sf_dir, _emb=corpus),
             mp_census,
             mp_census,
         ),
-        (
-            "ivf",
-            sim_search_ivf(spark, sf_dir, _seed=seed).select("vec_id"),
-            ivf_census,
-            ivf_census,
-        ),
+        ("ivf", sim_search_ivf_partitioned(spark, sf_dir), ivf_census, ivf_census),
         (
             "ivf_sq8",
-            sim_search_ivf_sq8(spark, sf_dir, _seed=seed).select("vec_id"),
+            sim_search_ivf_sq8_partitioned(spark, sf_dir),
             ivf_census,
-            _least(ivf_census, SQ8_POOL),
+            min(ivf_census, SQ8_POOL),
         ),
         (
             "ivfpq",
-            sim_search_ivfpq(spark, sf_dir, _seed=seed).select("vec_id"),
+            sim_search_ivfpq(spark, sf_dir),
             ivf_census,
-            _least(ivf_census, PQ_RERANK),
+            min(ivf_census, PQ_RERANK),
         ),
     ]
     rows = []
@@ -3539,10 +3241,8 @@ def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         else F.lit(False)
     )
     for name, ids, cr, ce in tiers:
-        # hits = |tier ids ∩ exact ids| via the ≤TOP_K isin literal;
-        # cr/ce/n are literal ints, but every derived ratio stays a
-        # SPARK expression (F.round half-up) so the rounding semantics
-        # match the oracle exactly as before
+        # the ratios stay Spark expressions: F.round is half-up, like
+        # the oracle's round
         hits = ids.where(in_exact).agg(F.count("*").alias("hits"))
         rows.append(
             hits.select(

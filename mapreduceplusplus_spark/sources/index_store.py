@@ -2,7 +2,7 @@
 
 Every persisted index the engine reads back (the MinHash band and
 shingle stores, the semantic-ingest member store, the Hamming sketch,
-the Matryoshka prefix store and the IVF / IVF-PQ / IVF-SQ8 lists) is
+the Matryoshka prefix store and the IVF store of every IVF codec) is
 one directory made by ``ensure_store``, the MapReduce++ output-commit
 rule applied to a shared filesystem: a store counts as written only
 once it is complete.

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark import registry
+from mapreduceplusplus_spark.sources.tables import load_table
 from tests.conftest import SF_DIR_ORACLE
 
 registry.load_all()
@@ -362,14 +363,30 @@ def test_ivf_sq8_partitioned_rows_identical_and_code_scan_pruned(spark):
     assert len(part) > 0
 
     plan = part_df._jdf.queryExecution().executedPlan().toString()
-    scans = _store_scans(part_df, "ivf_sq8_index_")
+    scans = _store_scans(part_df, "ivf_store_")
     assert scans, f"code-index scan missing from plan:\n{plan}"
     for sc in scans:
         pf = sc["PartitionFilters"]
         assert "cid" in pf, f"no cid partition pruning: {sc}"
         rs = sc["ReadSchema"]
-        assert "codes:array<tinyint>" in rs, sc
+        assert "sq8_codes:array<tinyint>" in rs, sc
         assert "v:array" not in rs, f"float column in code scan: {sc}"
+        assert "pq_codes" not in rs, f"PQ codes in the SQ8 scan: {sc}"
+
+
+def test_warm_ivfpq_probe_reads_only_its_codes_from_the_ivf_store(spark):
+    """The warm IVF-PQ probe scans the IVF store for ``vec_id`` and
+    ``pq_codes`` only, pruned to the probed lists by a ``cid``
+    partition filter."""
+    q = registry.queries()["sim_search_ivfpq"]
+    q(spark, SF_DIR_ORACLE).collect()
+    df = q(spark, SF_DIR_ORACLE)
+    df.collect()
+    scans = _store_scans(df, "ivf_store_")
+    assert len(scans) == 1, scans
+    sc = scans[0]
+    assert "cid" in sc["PartitionFilters"], sc
+    assert sc["ReadSchema"] == "struct<vec_id:bigint,pq_codes:array<tinyint>>", sc
 
 
 def test_frame_sample_real_container_walk(spark):
@@ -1300,7 +1317,7 @@ def test_ivf_partitioned_rows_identical_and_partition_pruned(spark):
     assert 0 < len(part) <= 10
 
     plan = part_df._jdf.queryExecution().executedPlan().toString()
-    scans = _store_scans(part_df, "ivf_index_")
+    scans = _store_scans(part_df, "ivf_store_")
     assert scans, f"no index FileScan in plan:\n{plan}"
     sc = scans[0]
     assert "cid" in sc["PartitionFilters"], (
@@ -1912,18 +1929,16 @@ def _store_layouts():
     import mapreduceplusplus_spark.llm.dedup as D
     import mapreduceplusplus_spark.llm.similarity as S
 
+    ivf = (S.IVF_CENTROIDS, S.PQ_M, S.PQ_K, S.LSH_BITS)
     return {
         "dedup_incremental_ingest_near": (
             "neardup_index",
             (D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_R, D._INGEST_NB, D._INGEST_NS),
         ),
         "dedup_semdedup_incremental": ("semingest_index", ()),
-        "sim_search_ivf_partitioned": ("ivf_index", (S.IVF_CENTROIDS,)),
-        "sim_search_ivfpq": (
-            "ivf_pq_index",
-            (S.IVF_CENTROIDS, S.PQ_M, S.PQ_K),
-        ),
-        "sim_search_ivf_sq8_partitioned": ("ivf_sq8_index", (S.IVF_CENTROIDS,)),
+        "sim_search_ivf_partitioned": ("ivf_store", ivf),
+        "sim_search_ivfpq": ("ivf_store", ivf),
+        "sim_search_ivf_sq8_partitioned": ("ivf_store", ivf),
         "sim_search_hamming_rerank": ("hamming_sketch", ()),
         "sim_search_matryoshka_funnel": ("mrl_prefix", (S.MRL_DIMS,)),
     }
@@ -2003,6 +2018,27 @@ def test_incremental_indexes_cold_start_recovery(spark, name, monkeypatch):
         assert _store_snapshot(store) == snap
     finally:
         release()
+
+
+def test_every_ivf_row_shares_one_ivf_store(spark, tmp_path, monkeypatch):
+    """On an empty store root, the store-backed IVF, IVF-SQ8 and IVF-PQ
+    rows and the recall curve leave exactly one ``ivf_*`` store."""
+    import tempfile
+
+    from mapreduceplusplus_spark.sources import index_store
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "sim_search_ivf_partitioned",
+        "sim_search_ivf_sq8_partitioned",
+        "sim_search_ivfpq",
+        "sim_search_ivfpq_dot",
+        "sim_search_ivfpq_l2",
+        "sim_search_recall_curve",
+    ):
+        registry.queries()[name](spark, SF_DIR_ORACLE).collect()
+    ivf = [n for n in os.listdir(index_store._root()) if n.startswith("ivf")]
+    assert len(ivf) == 1 and ivf[0].startswith("ivf_store_"), ivf
 
 
 def test_index_store_concurrency_protocol(spark):
@@ -2427,3 +2463,157 @@ def test_boilerplate_pair_plan_shape_and_consistency(spark):
         else:
             assert c.retained_fp == full_fp, doc_id
     assert n_scrubbed > 0, "fixture produced no boilerplate — gate untested"
+
+
+def test_lsh_signature_sql_form_equals_column_form(spark):
+    """``lsh_signature`` renders one parsed SQL string when given a
+    column NAME; it must give the same bucket id as the Column-API form
+    on every corpus vector, and more than one bucket."""
+    from mapreduceplusplus_spark.llm.similarity import _as_double, lsh_signature
+
+    emb = load_table(spark, SF_DIR_ORACLE, "embeddings").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    both = emb.select(
+        "vec_id",
+        lsh_signature("v").alias("b_sql"),
+        lsh_signature(F.col("v")).alias("b_col"),
+    )
+    bad = both.where(F.col("b_sql") != F.col("b_col")).count()
+    assert bad == 0
+    # and the signature space is actually populated (not all-zero)
+    assert both.select("b_sql").distinct().count() > 1
+
+
+def test_lsh_emb_passthrough_row_identical(spark):
+    """The private ``_emb`` corpus of both LSH tiers (the recall
+    curve's) gives the same rows as their own corpus read."""
+    from mapreduceplusplus_spark.llm import similarity as S
+
+    embb = (
+        load_table(spark, SF_DIR_ORACLE, "embeddings")
+        .select(
+            "vec_id", "label", S._as_double("embedding").alias("v")
+        )
+        .withColumn("bucket", S.lsh_signature("v"))
+        .localCheckpoint(eager=True)
+    )
+    for fn in (S.sim_search_lsh, S.sim_search_lsh_multiprobe):
+        base = sorted(map(tuple, fn(spark, SF_DIR_ORACLE).collect()))
+        shared = sorted(
+            map(tuple, fn(spark, SF_DIR_ORACLE, _emb=embb).collect())
+        )
+        assert base == shared, fn.__name__
+
+
+def test_minhash_bands_sql_form_equals_column_form(spark):
+    """``_minhash_bands`` renders its signature fold and banding explode
+    as parsed SQL strings; they must give the same (doc_id, band, bkey)
+    rows as the Column-API form on every fixture document."""
+    import mapreduceplusplus_spark.llm.dedup as D
+    from mapreduceplusplus_spark.sources.memo import release
+
+    docs = D._doc_shingles(spark, SF_DIR_ORACLE)
+    got = sorted(map(tuple, D._minhash_bands(docs).collect()))
+
+    # the Column-API form
+    init = F.array_repeat(
+        F.lit(9223372036854775807).cast("long"), D.MINHASH_K
+    )
+    a_arr = F.array(*[F.lit(a) for a in D._MINHASH_A])
+    b_arr = F.array(*[F.lit(b) for b in D._MINHASH_B])
+    hs = F.transform(
+        "sh",
+        lambda s: F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("long"),
+    )
+    sig = docs.select(
+        "doc_id",
+        F.aggregate(
+            hs,
+            init,
+            lambda acc, h: F.zip_with(
+                acc,
+                F.sequence(F.lit(0), F.lit(D.MINHASH_K - 1)),
+                lambda m, i: F.least(
+                    m,
+                    (
+                        F.element_at(a_arr, i + 1) * h
+                        + F.element_at(b_arr, i + 1)
+                    )
+                    % F.lit(D._MINHASH_P),
+                ),
+            ),
+        ).alias("mhs"),
+    )
+    want = sorted(
+        map(
+            tuple,
+            sig.select(
+                "doc_id",
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(0), F.lit(D.MINHASH_BANDS - 1)),
+                        lambda b: F.struct(
+                            b.alias("band"),
+                            F.conv(
+                                F.substring(
+                                    F.md5(
+                                        F.concat_ws(
+                                            ":",
+                                            *[
+                                                F.element_at(
+                                                    F.col("mhs"),
+                                                    b * D.MINHASH_R + j + 1,
+                                                ).cast("string")
+                                                for j in range(D.MINHASH_R)
+                                            ],
+                                        )
+                                    ),
+                                    1,
+                                    15,
+                                ),
+                                16,
+                                10,
+                            )
+                            .cast("long")
+                            .alias("bkey"),
+                        ),
+                    )
+                ).alias("bb"),
+            )
+            .select("doc_id", "bb.band", "bb.bkey")
+            .collect(),
+        )
+    )
+    assert got == want and got
+    release()
+
+
+def test_ingest_near_batch_restricted_frames_match_full_filter(spark):
+    """The incremental near-dup probe shingles and bands only the batch
+    slice: shingling and banding are per document, so the batch-only
+    frames equal the full-corpus frames filtered to the batch."""
+    from mapreduceplusplus_spark.llm import dedup as D
+
+    docs_full = D._doc_shingles(spark, SF_DIR_ORACLE)
+    is_batch = F.col("doc_id") % D.INGEST_NEAR_MOD == 0
+    full_restricted = sorted(
+        (r.doc_id, tuple(r.sh))
+        for r in docs_full.where(is_batch).collect()
+    )
+    batch_only = sorted(
+        (r.doc_id, tuple(r.sh))
+        for r in D._shingle_frame(
+            load_table(spark, SF_DIR_ORACLE, "documents")
+            .where(is_batch)
+            .select("doc_id", "text")
+        ).collect()
+    )
+    assert full_restricted == batch_only
+    bands_of_restricted = sorted(
+        map(tuple, D._minhash_bands(docs_full.where(is_batch)).collect())
+    )
+    bands_filtered = sorted(
+        map(tuple, D._minhash_bands(docs_full).where(is_batch).collect())
+    )
+    assert bands_of_restricted == bands_filtered

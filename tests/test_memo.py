@@ -1,7 +1,6 @@
 """The in-process dataset memo (``sources/memo.py``): a rewritten table
 is never served from it, and ``release()`` drops every entry and
-unpersists every frame it held.  The eviction pin is in
-``tests/test_r17_optimizations.py``; the one-memo lint in
+unpersists every frame it held.  The one-memo lint is in
 ``tests/test_index_store.py``."""
 
 from __future__ import annotations
@@ -82,3 +81,93 @@ def test_release_empties_the_memo_and_unpersists_every_frame(spark):
     for df in frames:
         assert not df.is_cached
         assert df.storageLevel == StorageLevel(False, False, False, False)
+
+
+
+def test_recall_curve_leaves_nothing_cached_after_release(spark):
+    """The recall curve reads the IVF store instead of a cached corpus
+    pass: after it runs and ``release()`` drops the memo, Spark's cache
+    holds no relation and no RDD stays persisted."""
+    sc = spark.sparkContext
+    M.release()
+    spark.catalog.clearCache()  # start from an empty cache
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    registry.queries()["sim_search_recall_curve"](spark, SF_DIR_ORACLE).collect()
+    M.release()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= before
+
+#: memo tags of the IVF quantizer inputs (``llm/similarity.py``)
+_IVF_SEED_TAGS = ("ivf_seeds", "probe_v", "pq_seeds")
+
+
+def test_ivf_seed_memo_holds_only_bounded_quantizer_inputs(spark):
+    """The IVF seed entries outlive a query, so they may hold only
+    bounded quantizer inputs (seed centroids, probe vector, probe cids,
+    PQ seeds), never DataFrames or query results."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    import mapreduceplusplus_spark.llm.similarity as S
+    from mapreduceplusplus_spark.sources import memo as M
+
+    S._ivf_seed_lists(spark, SF_DIR_ORACLE)
+    qs = registry.queries()
+    qs["sim_search_ivfpq"](spark, SF_DIR_ORACLE)  # populates pq_seeds
+    seeds = {k: v for k, v in M._MEMO.items() if k[4] in _IVF_SEED_TAGS}
+    assert {k[4] for k in seeds} >= {"ivf_seeds", "pq_seeds"}, seeds
+
+    def flat(x):
+        if isinstance(x, (list, tuple)):
+            for y in x:
+                yield from flat(y)
+        else:
+            yield x
+
+    for key, val in seeds.items():
+        # keys: (session, sf_dir, table, fingerprint, tag) — the
+        # session object, then bounded plain values
+        assert isinstance(key[0], SparkSession), key
+        for leaf in flat(key[1:]):
+            assert isinstance(leaf, (str, int, float, tuple)), key
+        leaves = list(flat(val))
+        assert len(leaves) < 50_000, "memo entry is not bounded"
+        for leaf in leaves:
+            assert not isinstance(leaf, DataFrame), (
+                "seed memo must never hold DataFrames"
+            )
+            assert isinstance(leaf, (int, float)), (key, type(leaf))
+
+
+def test_ivf_seed_memo_evicts_superseded_fingerprints(spark, tmp_path):
+    """A rewritten dataset under the same (session, sf_dir, table)
+    changes the fingerprint key: the old entries, frames and scalars
+    alike, are evicted (frames unpersisted) on the next miss.  Entries
+    for another directory are left alone."""
+    import shutil
+
+    from mapreduceplusplus_spark.sources import memo as M
+
+    sf_dir, other = str(tmp_path / "a"), str(tmp_path / "b")
+    for d in (sf_dir, other):
+        os.makedirs(d)
+        shutil.copy(os.path.join(SF_DIR_ORACLE, "embeddings.parquet"), d)
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    M.release()
+    try:
+        frame = M.memo(
+            spark, sf_dir, "embeddings", "frame",
+            lambda: spark.range(3).persist(),
+        )
+        frame.count()
+        M.memo(spark, sf_dir, "embeddings", "scalar", lambda: [1, 2])
+        kept = M.memo(spark, other, "embeddings", "scalar", lambda: [3])
+        assert frame.is_cached and len(M._MEMO) == 3
+
+        st = os.stat(path)  # a rewrite: same bytes, new mtime
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        assert M.memo(spark, sf_dir, "embeddings", "scalar", lambda: [4]) == [4]
+        assert not frame.is_cached
+        assert [k[4] for k in M._MEMO if k[1] == sf_dir] == ["scalar"]
+        assert M.memo(spark, other, "embeddings", "scalar", lambda: [5]) is kept
+    finally:
+        M.release()

@@ -711,6 +711,51 @@ def test_iterative_ops_plan_shapes(spark):
     assert "TakeOrderedAndProject" in p, p
 
 
+def test_kmeans_packed_argmin_equals_struct_argmin(spark):
+    """The k-means argmin packs (dist, cid) into one BIGINT
+    (min(dist·_K + cid)); the packed order must equal the lexicographic
+    (dist ASC, cid ASC) order on the real corpus distances, exact ties
+    included."""
+    from mapreduceplusplus_spark.operators import ml as M
+
+    emb = load_table(spark, SF_DIR_ORACLE, "embeddings")
+    e = emb.select(
+        "vec_id", F.posexplode("embedding").alias("dim", "u")
+    ).select(
+        "vec_id",
+        "dim",
+        (
+            F.round(F.lit(1000000) * F.col("u").cast("double")).cast("bigint")
+            + M._SHIFT
+        ).alias("q"),
+    )
+    c0 = e.where(F.col("vec_id") < M._K).select(
+        F.col("vec_id").alias("cid"), "dim", F.col("q").alias("c")
+    )
+    d = (
+        e.join(F.broadcast(c0), "dim")
+        .groupBy("vec_id", "cid")
+        .agg(
+            F.sum((F.col("q") - F.col("c")) * (F.col("q") - F.col("c")))
+            .cast("bigint")
+            .alias("dist")
+        )
+    )
+    packed = d.groupBy("vec_id").agg(
+        F.min(F.col("dist") * M._K + F.col("cid")).alias("m")
+    ).select(
+        "vec_id",
+        (F.col("m") % M._K).alias("cid"),
+        F.expr(f"m div {M._K}").alias("dist"),
+    )
+    struct = d.groupBy("vec_id").agg(
+        F.min(F.struct(F.col("dist"), F.col("cid").alias("cid"))).alias("b")
+    ).select("vec_id", F.col("b.cid").alias("cid"), F.col("b.dist").alias("dist"))
+    a = sorted(map(tuple, packed.collect()))
+    b = sorted(map(tuple, struct.collect()))
+    assert a == b and a, "packed argmin diverged from lexicographic min"
+
+
 def _final_plan(df):
     """Execute and return ONLY the AQE final-plan section (the plain
     ``executedPlan`` string of an executed AQE query contains both the
