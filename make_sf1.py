@@ -1,14 +1,12 @@
 #!/usr/bin/env python
 """sf1 fixture generator — GENUINE 10× cardinality, not replication.
 
-The N×-replication harness (``scale_point.py``) hard-links the same
-parquet file N times, which is the right lever for scan/shuffle cost but
-SHARES key values: doc_ids collide, the MMR pool fills with copies of
-one document, near-dup pair counts grow quadratically in N instead of
-tracking the corpus.  This generator derives an sf1 directory from the
-driver's sf0.1 with 10× rows and REAL key cardinality (VERDICT r10 item
-8 / r11 item 4), deterministically (no RNG state outside seeded
-``numpy.default_rng``):
+Replicating a parquet file N times is the right lever for scan/shuffle
+cost but SHARES key values: doc_ids collide, the MMR pool fills with
+copies of one document, near-dup pair counts grow quadratically in N
+instead of tracking the corpus.  This generator derives an sf1 directory
+from the sf0.1 dataset with 10× rows and REAL key cardinality,
+deterministically (no RNG state outside seeded ``numpy.default_rng``):
 
 - ``documents``: 10 copies; copy k shifts ``doc_id`` by k·10⁴ and
   RENAMES the whole token vocabulary (suffix ``q``+letter(k), alphabetic
@@ -30,6 +28,9 @@ driver's sf0.1 with 10× rows and REAL key cardinality (VERDICT r10 item
 - dims (``region nation customer supplier part``): copied 1×.
 
 Usage:  python make_sf1.py [--src /root/testdata/sf0.1] [--out /tmp/sf1]
+
+``python bench.py sf1`` builds the same fixture under the index-store
+root (``bench.sf1_fixture``) and adopts it on later runs.
 """
 
 from __future__ import annotations
@@ -190,31 +191,28 @@ def main() -> None:
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default="/tmp/sf1")
     args = ap.parse_args()
-    os.makedirs(args.out, exist_ok=True)
+    for table, rows in build(args.src, args.out).items():
+        print(f"{table}:", rows)
 
+
+def build(src: str, out: str) -> dict[str, int]:
+    """Write every sf1 table derived from ``src`` into ``out`` (created
+    if missing); rows written per non-dimension table."""
+    os.makedirs(out, exist_ok=True)
     for d in DIMS:
         shutil.copyfile(
-            os.path.join(args.src, f"{d}.parquet"),
-            os.path.join(args.out, f"{d}.parquet"),
+            os.path.join(src, f"{d}.parquet"), os.path.join(out, f"{d}.parquet")
         )
-    print("documents:", gen_documents(args.src, args.out))
-    print("embeddings:", gen_embeddings(args.src, args.out))
     # key shifts: > the max key in the sf0.1 table, round numbers
-    print(
-        "events:",
-        gen_shifted(
-            args.src, args.out, "events",
-            {"event_id": 1_000_000, "user_id": 1_000_000},
+    return {
+        "documents": gen_documents(src, out),
+        "embeddings": gen_embeddings(src, out),
+        "events": gen_shifted(
+            src, out, "events", {"event_id": 1_000_000, "user_id": 1_000_000}
         ),
-    )
-    print(
-        "lineitem:",
-        gen_shifted(args.src, args.out, "lineitem", {"l_orderkey": 1_000_000}),
-    )
-    print(
-        "orders:",
-        gen_shifted(args.src, args.out, "orders", {"o_orderkey": 1_000_000}),
-    )
+        "lineitem": gen_shifted(src, out, "lineitem", {"l_orderkey": 1_000_000}),
+        "orders": gen_shifted(src, out, "orders", {"o_orderkey": 1_000_000}),
+    }
 
 
 if __name__ == "__main__":

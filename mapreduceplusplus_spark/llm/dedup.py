@@ -113,11 +113,6 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     return shingles_of_tokens(tokens(text_col), n)
 
 
-#: round count of the last dedup_cluster_canonical run's CC loop, read by
-#: ``scale_point.py`` for the SURVEY §6 scale-evidence decomposition
-_last_cluster_rounds: int | None = None
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) with the distinct-shingle array per document,
     CACHED: the shingle expression is a higher-order-function chain
@@ -1032,7 +1027,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Labels converge to the component minimum regardless of join
     schedule, so the result is deterministic."""
-    global _last_cluster_rounds
     ensure_utc(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.unionByName(
@@ -1047,8 +1041,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = edges.persist()
     try:
         edges.count()  # materialize the persist
-        labels, rounds = _cc_two_phase(edges)
-        _last_cluster_rounds = rounds
+        labels, _rounds = _cc_two_phase(edges)
         # labels is already truncated by the helper (iterate.truncate)
         return labels.select(
             F.col("u").alias("doc_id"),
@@ -1854,17 +1847,6 @@ _INGEST_NB = 32
 #: at 100 TB size NS so one bucket ≈ one healthy parquet partition.
 _INGEST_NS = 64
 
-#: diagnostics from the last dedup_incremental_ingest_near run — the
-#: probed / total partition-directory counts, recorded so the prune
-#: pin (tests) and the SURVEY §6 scale evidence can quote REAL
-#: file-listing-time pruning rather than inferring it from the plan
-_last_ingest_probe_parts: int | None = None
-_last_ingest_total_parts: int | None = None
-#: same, for the shingle-store fetch in the verify step (candidate
-#: doc_id buckets probed / total sk directories)
-_last_ingest_shingle_probe_parts: int | None = None
-_last_ingest_shingle_total_parts: int | None = None
-
 
 @query(
     "dedup_incremental_ingest_near",
@@ -1972,8 +1954,6 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
     none (SURVEY §2 charter extension, dedup family)."""
     import os as _os
 
-    global _last_ingest_probe_parts, _last_ingest_total_parts
-    global _last_ingest_shingle_probe_parts, _last_ingest_shingle_total_parts
     ensure_utc(spark)
     pk = (F.col("band") * _INGEST_NB + F.pmod(F.col("bkey"), F.lit(_INGEST_NB))).cast(
         "int"
@@ -2087,21 +2067,7 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(is_batch)
         .select("doc_id")
     )
-    _last_ingest_total_parts = sum(
-        1
-        for d in _os.listdir(_os.path.join(index_dir, "bands"))
-        if d.startswith("pk=")
-    )
-    _last_ingest_probe_parts = len(probe_pks)
-    # shingle-store diagnostics default to 0-probed HERE so an early
-    # return below can never leave a PREVIOUS invocation's counts
-    # behind (round-12 review); the probe count is updated once the
-    # candidate census runs
     shingle_dir = _os.path.join(index_dir, "shingles")
-    _last_ingest_shingle_total_parts = sum(
-        1 for d in _os.listdir(shingle_dir) if d.startswith("sk=")
-    )
-    _last_ingest_shingle_probe_parts = 0
     if not probe_pks:
         # no shingled batch docs → nothing can collide; all keep
         return base.select(
@@ -2169,7 +2135,6 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
             .collect()
         ),
     )
-    _last_ingest_shingle_probe_parts = len(probe_sks)
     corpus_sh = (
         spark.read.schema("doc_id BIGINT, sh ARRAY<STRING>, sk INT")
         .parquet(shingle_dir)
@@ -2406,10 +2371,6 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: incremental queries exercise different split shapes)
 SEMINGEST_MOD = 5
 
-#: probe diagnostics (cluster dirs probed / total) — the prune pin
-_last_semingest_probe_parts: int | None = None
-_last_semingest_total_parts: int | None = None
-
 
 def _semingest_flags(pdf):
     """Per-cluster verify kernel behind ``dedup_semdedup_incremental``:
@@ -2530,9 +2491,6 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the same clean-margin float-threshold contract as
     ``dedup_semdedup``.  Reference heritage: none (SURVEY §2 charter
     extension, dedup family)."""
-    import os as _os
-
-    global _last_semingest_probe_parts, _last_semingest_total_parts
     ensure_utc(spark)
     from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
 
@@ -2568,10 +2526,6 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_cids = sorted(
         r[0] for r in batch.select("cid").distinct().collect()
     )
-    _last_semingest_total_parts = sum(
-        1 for d in _os.listdir(index_dir) if d.startswith("cid=")
-    )
-    _last_semingest_probe_parts = len(probe_cids)
     if not probe_cids:
         return batch.select(
             "vec_id",

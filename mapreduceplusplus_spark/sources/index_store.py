@@ -5,7 +5,9 @@ shingle stores, the semantic-ingest member store, the Hamming sketch,
 the Matryoshka prefix store and the IVF store of every IVF codec) is
 one directory made by ``ensure_store``, the MapReduce++ output-commit
 rule applied to a shared filesystem: a store counts as written only
-once it is complete.
+once it is complete.  Derived fixtures use the same protocol: the sf1
+dataset that ``bench.py sf1`` times is a store built from its source
+dataset.
 
 Protocol.  A store's name derives from what it indexes, never from the
 process: ``<prefix>_<md5 of the stamp>``, where the stamp is

@@ -27,10 +27,13 @@ def _store_scans(df, *parts):
     """The executed ``FileSourceScanExec`` nodes of ``df`` whose root
     path contains every string in ``parts``, as dicts of ``paths``
     (``relation.location.rootPaths``), ``PartitionFilters`` (the node's
-    ``partitionFilters``, comma-joined), ``PushedFilters`` and
-    ``ReadSchema``.  Read from the plan nodes rather than the explain
-    string, which abbreviates each scan field to a fixed width and so
-    hides a store name behind a long temp-dir path."""
+    ``partitionFilters``, comma-joined), ``PushedFilters``,
+    ``ReadSchema``, ``numPartitions`` (the node's partitions-read
+    metric, set once ``df`` itself has executed) and
+    ``totalPartitions`` (``relation.location.partitionSpec``: the
+    partitions in the store).  Read from the plan nodes rather than the
+    explain string, which abbreviates each scan field to a fixed width
+    and so hides a store name behind a long temp-dir path."""
     found, todo = [], [df._jdf.queryExecution().executedPlan()]
     while todo:
         node = todo.pop()
@@ -45,7 +48,7 @@ def _store_scans(df, *parts):
             roots = node.relation().location().rootPaths()
             paths = [roots.apply(i).toString() for i in range(roots.size())]
             if any(all(s in p for s in parts) for p in paths):
-                pfs = node.partitionFilters()
+                pfs, metrics = node.partitionFilters(), node.metrics()
                 found.append({
                     "paths": paths,
                     "PartitionFilters": ", ".join(
@@ -53,6 +56,14 @@ def _store_scans(df, *parts):
                     ),
                     "PushedFilters": node.metadata().apply("PushedFilters"),
                     "ReadSchema": node.requiredSchema().catalogString(),
+                    "numPartitions": metrics.apply("numPartitions").value()
+                    if metrics.contains("numPartitions")  # partitioned only
+                    else None,
+                    "totalPartitions": node.relation()
+                    .location()
+                    .partitionSpec()
+                    .partitions()
+                    .size(),
                 })
         for kids in (node.children(), node.innerChildren()):  # + cached plans
             todo.extend(kids.apply(i) for i in range(kids.size()))
@@ -1605,8 +1616,8 @@ def test_incremental_ingest_near_matches_full_recompute_and_prunes(spark):
     )
 
     # (c) real pruning: probed buckets < total buckets (file-level)
-    assert D._last_ingest_total_parts == D.MINHASH_BANDS * D._INGEST_NB
-    assert 0 < D._last_ingest_probe_parts < D._last_ingest_total_parts
+    assert scans[0]["totalPartitions"] == D.MINHASH_BANDS * D._INGEST_NB
+    assert 0 < scans[0]["numPartitions"] < scans[0]["totalPartitions"]
 
     # (d) VERDICT r11: the verify step's corpus-shingle fetch is served
     # from the persisted shingle store (sk-partition-pruned), so corpus
@@ -1617,11 +1628,11 @@ def test_incremental_ingest_near_matches_full_recompute_and_prunes(spark):
     assert "sk" in sh_scans[0]["PartitionFilters"], (
         f"sk predicate not pushed to PartitionFilters:\n{sh_scans[0]}"
     )
-    assert D._last_ingest_shingle_total_parts == D._INGEST_NS
+    assert sh_scans[0]["totalPartitions"] == D._INGEST_NS
     assert (
         0
-        < D._last_ingest_shingle_probe_parts
-        <= D._last_ingest_shingle_total_parts
+        < sh_scans[0]["numPartitions"]
+        <= sh_scans[0]["totalPartitions"]
     )
     # NOTE a count pin on documents.parquet FileScan LINES is not
     # well-defined here (round-12 review): the persisted shingle
@@ -1766,8 +1777,8 @@ def test_semdedup_incremental_prunes_and_matches_recompute(spark, tmp_path):
     assert "cid" in scans[0]["PartitionFilters"], scans[0]
 
     # (c) REAL prune: the constructed batch occupies 2 of the 4 cells
-    assert D._last_semingest_total_parts == 4
-    assert D._last_semingest_probe_parts == 2
+    assert scans[0]["totalPartitions"] == 4
+    assert scans[0]["numPartitions"] == 2
 
 
 def test_bpe_train_matches_imperative_reference_on_overlap_runs(spark, tmp_path):

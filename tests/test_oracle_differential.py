@@ -5,6 +5,8 @@ the same comparison shape the driver runs.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from mapreduceplusplus_spark import registry
@@ -223,63 +225,97 @@ def test_oracle_less_queries_hostile_config(spark):
 
 
 def test_bench_lists_name_registered_queries():
-    """A typo'd or renamed query in a bench list would silently drop
-    the measurement (bench.py filters `n in qs`) — pin both standing
-    lists to the registry instead."""
+    """A typo'd or renamed query in a bench lane would silently drop
+    the measurement (bench.py filters `n in qs`) — pin every lane to
+    the registry instead; the TPC-H lane is Q1, Q5 and every
+    registered ``tpch_q*`` query."""
     import bench
-    import bench_sf1
 
     names = set(registry.queries().keys())
-    missing = [n for n in bench.HEADLINE if n not in names]
-    assert not missing, f"bench.HEADLINE names not registered: {missing}"
-    missing = [n for n in bench_sf1.SF1_QUERIES if n not in names]
-    assert not missing, f"SF1_QUERIES names not registered: {missing}"
+    for lane, lane_names in bench.LANES.items():
+        missing = [n for n in lane_names if n not in names]
+        assert not missing, f"bench lane {lane} names not registered: {missing}"
+    assert len(bench.LANES["tpch"]) == 22
+
+
+def _bench_readings(times):
+    """Three reps per query at ``times``, with a 12.34 s spread on a
+    quarter of the rows (the worst realistic noise)."""
+    return {
+        n: [t, t + 12.34, t] if i % 4 == 0 else [t, t, t]
+        for i, (n, t) in enumerate(times.items())
+    }
 
 
 def test_bench_line_diet_synthetic_80_query_line_is_bounded():
     """bench.py's printed JSON line is read from a bounded tail buffer:
-    a synthetic 80-query line (25-char names, 2-decimal seconds,
-    qspread on a quarter of the rows) stays under 3.5 KB, and the real
-    HEADLINE suite's line under 3 KB."""
-    import json
+    a synthetic 80-query line (25-char names, qspread on a quarter of
+    the rows) stays under 3.5 KB, and every lane's real line under
+    3 KB."""
+    import bench
 
     names = [f"sim_search_synthetic_{i:03d}" for i in range(80)]
     times = {n: round(1.234 + i * 0.01, 2) for i, n in enumerate(names)}
-    # worst realistic case: a quarter of the rows are noisy
-    spread = {n: 12.34 for n in names[::4]}
-    line = json.dumps(
-        {
-            "metric": "headline_total_wall",
-            "value": round(sum(times.values()), 3),
-            "unit": "sec",
-            "queries": times,
-            "qspread": spread,
-            "calibration": 1.2345,
-            "sf": 0.1,
-            "reps": 3,
-        },
-        separators=(",", ":"),
-    )
+    _, line = bench.report("headline", _bench_readings(times), [1.2345] * 3, 0.1)
     assert len(line) < 3584, f"bench line budget exceeded: {len(line)} bytes"
-    # and the REAL suite with the diet applied stays under the same cap
+    for lane, lane_names in bench.LANES.items():
+        times = dict.fromkeys(lane_names, 12.34)
+        _, line = bench.report(lane, _bench_readings(times), [1.2345] * 3, 0.1)
+        assert len(line) < 3072, f"real {lane} bench line: {len(line)} bytes"
+
+
+def test_bench_reps_run_round_robin():
+    """Reps interleave across the lane (a load window lands on one rep
+    index of every row, not on a block of rows), and each name keeps
+    its ``reps`` readings in rep order."""
     import bench
 
-    real_times = {n: 12.34 for n in bench.HEADLINE}
-    real_spread = {n: 12.34 for n in bench.HEADLINE[::4]}
-    real_line = json.dumps(
-        {
-            "metric": "headline_total_wall",
-            "value": 123.456,
-            "unit": "sec",
-            "queries": real_times,
-            "qspread": real_spread,
-            "calibration": 1.2345,
-            "sf": 0.1,
-            "reps": 3,
-        },
-        separators=(",", ":"),
+    calls = []
+
+    def run(name):
+        calls.append(name)
+        return float(len(calls))
+
+    out = bench.run_reps(["a", "b", "c"], 3, run)
+    assert calls == ["a", "b", "c"] * 3
+    assert out == {"a": [1.0, 4.0, 7.0], "b": [2.0, 5.0, 8.0], "c": [3.0, 6.0, 9.0]}
+
+
+def test_sf1_fixture_is_an_adopted_index_store(tmp_path, monkeypatch):
+    """The sf1 lane's fixture is built once per source version under
+    the index-store root: a second call adopts it untouched, and a
+    rewritten source table names a new store."""
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    import bench
+    from mapreduceplusplus_spark.sources.tables import TABLES
+
+    src = tmp_path / "sf0.01"
+    shutil.copytree(SF_DIR_ORACLE, src)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tmp_path / "tmp")
+
+    def files(d):
+        return {
+            f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)
+        }
+
+    first = bench.sf1_fixture(str(src))
+    assert first.startswith(str(tmp_path / "tmp"))
+    assert {f"{t}.parquet" for t in TABLES} <= set(os.listdir(first))
+    assert pq.read_metadata(os.path.join(first, "orders.parquet")).num_rows == (
+        10 * pq.read_metadata(src / "orders.parquet").num_rows
     )
-    assert len(real_line) < 3072, f"real bench line: {len(real_line)} bytes"
+    built = files(first)
+    assert bench.sf1_fixture(str(src)) == first
+    assert files(first) == built
+
+    region = pq.read_table(src / "region.parquet")
+    pq.write_table(region.slice(1), src / "region.parquet")
+    assert bench.sf1_fixture(str(src)) != first
 
 
 def test_every_registered_query_has_a_survey_row():
