@@ -141,10 +141,14 @@ def _shingle_frame(docs: DataFrame) -> DataFrame:
     and row-restricted consumers share one definition (r16: the
     incremental-ingest probe shingles only its batch; shingling is
     per-document, so restriction commutes with the expression)."""
+    # a document has a shingle iff it has at least 3 tokens.  Catalyst
+    # pushes this filter below ``_spread``'s exchange with ``ws``
+    # inlined: on the token count that is one tokenizer run, where a
+    # filter on ``sh`` would inline the whole shingle expression there
     toks = docs.select("doc_id", tokens(F.col("text")).alias("ws"))
-    return toks.select(
+    return toks.where(F.size("ws") >= 3).select(
         "doc_id", shingles_of_tokens(F.col("ws")).alias("sh")
-    ).where(F.size("sh") > 0)
+    )
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -508,23 +508,23 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.where(F.col("vec_id") % _MRL_PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
-        _as_double("embedding").alias("pv"),
+        F.expr(_as_double("embedding")).alias("pv"),
     ).select(
         "probe_id",
         "pv",
         F.slice("pv", 1, _MRL_DIM).alias("pvt"),
-        _norm(F.col("pv")).alias("npv"),
-        _norm(F.slice("pv", 1, _MRL_DIM)).alias("npvt"),
+        F.expr(_norm("pv")).alias("npv"),
+        F.expr(_norm(f"slice(pv, 1, {_MRL_DIM})")).alias("npvt"),
     )
     # norms (and the truncated prefix) hoisted per VECTOR — four folds
     # per row on each SIDE instead of four per PAIR (r14, bit-identical
     # — the sim_search_knn_join note)
-    corpus = emb.select("vec_id", _as_double("embedding").alias("v")).select(
+    corpus = emb.select("vec_id", F.expr(_as_double("embedding")).alias("v")).select(
         "vec_id",
         "v",
         F.slice("v", 1, _MRL_DIM).alias("vt"),
-        _norm(F.col("v")).alias("nv"),
-        _norm(F.slice("v", 1, _MRL_DIM)).alias("nvt"),
+        F.expr(_norm("v")).alias("nv"),
+        F.expr(_norm(f"slice(v, 1, {_MRL_DIM})")).alias("nvt"),
     )
     # broadcast-safe: probes is the documented bounded probe sample
     scored = (
@@ -533,9 +533,9 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "vec_id",
-            (_dot(F.col("v"), F.col("pv"))
+            (F.expr(_dot("v", "pv"))
              / (F.col("nv") * F.col("npv"))).alias("s_full"),
-            (_dot(F.col("vt"), F.col("pvt"))
+            (F.expr(_dot("vt", "pvt"))
              / (F.col("nvt") * F.col("npvt"))).alias("s_trunc"),
         )
     )

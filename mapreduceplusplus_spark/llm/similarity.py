@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.session import ensure_utc, sql
 from mapreduceplusplus_spark.sources.index_store import ensure_store
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import (
@@ -82,18 +82,38 @@ TOP_K = 10
 LSH_BITS = 4
 
 
-def _as_double(col: str | Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+# The vector kernels are SQL text, for ``F.expr`` or a larger parsed
+# statement: one parse replaces the ~50 py4j commands a Column-API
+# lambda costs per call, and the optimized expression is the same as
+# the Column-API form's (``tests/test_build_cost.py`` pins the parity;
+# the accumulator starts at the DOUBLE ``0.0D``, not the DECIMAL ``0.0``).
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+def _as_double(col: str) -> str:
+    """``col`` (an array) with every element cast to DOUBLE."""
+    return f"transform({col}, x -> CAST(x AS DOUBLE))"
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+def _dot(a: str, b: str) -> str:
+    """The dot product of two ``array<double>`` expressions."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+
+
+def _norm(v: str) -> str:
+    """The L2 norm of an ``array<double>`` expression."""
+    return f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))"
+
+
+def _cosine(v: str, p: str) -> str:
+    """Cosine of two ``array<double>`` expressions, as every exact
+    re-rank computes it: ``dot / (|v| * |p|)``."""
+    return f"{_dot(v, p)} / ({_norm(v)} * {_norm(p)})"
+
+
+def _micro(c: str) -> str:
+    """The micro-quantized rank key of a score: ``round(10^6 * c)`` as
+    BIGINT, so a top-k order cannot flip on an ULP."""
+    return f"CAST(round(1000000 * {c}) AS BIGINT)"
 
 
 def _sql_array(vec, what: str, suffix: str = "D") -> str:
@@ -111,13 +131,23 @@ def _sql_array(vec, what: str, suffix: str = "D") -> str:
     ``ValueError`` naming ``what`` instead."""
     if suffix != "D":
         return "array(" + ", ".join(f"{int(x)}{suffix}" for x in vec) + ")"
-    xs = [float(x) for x in vec]
-    if not all(math.isfinite(x) for x in xs):
+    return "array(" + ", ".join(_sql_double(x, what) for x in vec) + ")"
+
+
+def _sql_double(x: float, what: str) -> str:
+    """``x`` as one SQL DOUBLE literal, under ``_sql_array``'s contract."""
+    x = float(x)
+    if not math.isfinite(x):
         raise ValueError(
             f"{what} has a non-finite component — refusing to render a "
             "non-finite literal into SQL"
         )
-    return "array(" + ", ".join(f"{x!r}D" for x in xs) + ")"
+    return f"{x!r}D"
+
+
+#: the ``embeddings`` table passed to ``session.sql`` as ``emb``, read
+#: as ``vec_id, label, v`` with ``v`` as ``array<double>``
+_CORPUS = f"(SELECT vec_id, label, {_as_double('embedding')} AS v FROM {{emb}})"
 
 
 #: sim_search_topk's oracle, shared verbatim with the hybrid-RRF
@@ -155,31 +185,41 @@ def sim_search_topk(
     rank instead of the ``embeddings`` table; the recall curve passes
     the IVF store's columns.  Same rows for the same vectors."""
     ensure_utc(spark)
-    emb = (
-        _emb.select("vec_id", "label", "v")
-        if _emb is not None
-        else load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", _as_double("embedding").alias("v")
-        )
+    emb, corpus = _corpus(spark, sf_dir, _emb, "vec_id, label, v")
+    # broadcast-safe: p is a single query vector (1 row)
+    scored = f"""
+        WITH e AS {corpus}
+        SELECT /*+ BROADCAST(p) */ *, {_cosine("v", "pv")} AS c
+        FROM e CROSS JOIN (SELECT v AS pv FROM e WHERE vec_id = {PROBE_ID}) p
+        WHERE vec_id <> {PROBE_ID}"""
+    return sql(
+        spark,
+        _top_k(scored, "c DESC, vec_id", "vec_id, label, round(c, 3) + 0.0D AS cosine"),
+        emb=emb,
     )
-    probe = (
-        emb.where(F.col("vec_id") == PROBE_ID)
-        .select(F.col("v").alias("pv"))
-    )
-    scored = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        # broadcast-safe: probe is a single query vector (1 row)
-        .crossJoin(F.broadcast(probe))
-        .withColumn("c", _dot(F.col("v"), F.col("pv")) / (_norm(F.col("v")) * _norm(F.col("pv"))))
-    )
-    topk = scored.orderBy(F.col("c").desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(F.col("c").desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
-    )
+
+
+def _corpus(
+    spark: SparkSession, sf_dir: str, _emb: DataFrame | None, cols: str
+) -> tuple[DataFrame, str]:
+    """``(frame, relation)`` of a probe's corpus, the relation reading
+    the frame as ``{emb}``: a caller's own frame ``_emb`` projected to
+    ``cols``, else the ``embeddings`` table as ``_CORPUS``."""
+    if _emb is not None:
+        return _emb, f"(SELECT {cols} FROM {{emb}})"
+    return load_table(spark, sf_dir, "embeddings"), _CORPUS
+
+
+def _top_k(scored: str, order: str, out: str) -> str:
+    """SQL for the ``TOP_K`` rows of the query ``scored`` by ``order``
+    (TakeOrderedAndProject: a per-task k-row heap, no global sort),
+    projected to ``out`` plus ``rnk``, the achieved rank as BIGINT, so
+    an order-insensitive hash still checks the order."""
+    return f"""
+        SELECT {out},
+               CAST(row_number() OVER (ORDER BY {order}) AS BIGINT) AS rnk
+        FROM ({scored}
+              ORDER BY {order} LIMIT {TOP_K})"""
 
 
 #: LSH hyperplane sign matrix (r14 ENGINE-PORTABLE family — the
@@ -240,55 +280,37 @@ LSH_BUCKET_CTE = f"""signs AS (
     )"""
 
 
-def lsh_micro(v: Column) -> Column:
-    """Micro-quantized integer copy of a double vector —
+def lsh_micro(v: str) -> str:
+    """Micro-quantized integer copy of the double array ``v``, as SQL —
     ``round(10⁶·x)`` per element as BIGINT, the exact projection
     domain of the portable LSH signature."""
-    return F.transform(v, lambda x: F.round(F.lit(1000000) * x).cast("long"))
+    return f"transform({v}, x -> CAST(round(1000000 * x) AS BIGINT))"
 
 
-def lsh_signature(v: Column | str, bits: int = LSH_BITS) -> Column:
-    """Random-hyperplane signature as an integer bucket id in
-    [0, 2^bits).  Hyperplane ``i`` is the deterministic ±1 Rademacher
-    vector of ``_LSH_SIGNS`` (md5-derived — see ``LSH_DIM_MAX`` note);
-    the projection is the INTEGER sum Σ_d ±round(10⁶·x_d), exact under
-    any accumulation order and identical in DuckDB SQL — which is what
-    makes the whole LSH family oracle-checkable (r1–r13 used
-    xxhash64-signed FLOAT sums: Spark-only, and order-sensitive in the
-    last ulp).  |Σ| ≤ 64·10⁶·max|x| — far inside BIGINT.
-
-    When ``v`` is a column NAME the whole signature is rendered as one
-    SQL string and parsed JVM-side (r16): the Column-API form issues
-    bits × 64 literal py4j calls per invocation (~0.3 s of driver
-    time); the parsed tree is identical (integer ops — bit-exact by
-    construction) and the oracle's ``LSH_BUCKET_CTE`` replays it."""
-    if isinstance(v, str):
-        vm = f"transform({v}, x -> CAST(round(1000000 * x) AS BIGINT))"
-        parts = []
-        for i in range(bits):
-            signs = _sql_array(_LSH_SIGNS[i], "LSH signs", "L")
-            proj = (
-                f"aggregate(zip_with({vm}, {signs}, (x, s) -> x * s),"
-                " 0L, (acc, x) -> acc + x)"
-            )
-            parts.append(
-                f"shiftleft(CAST(CASE WHEN {proj} > 0"
-                f" THEN 1 ELSE 0 END AS BIGINT), {i})"
-            )
-        return F.expr("0L | " + " | ".join(parts))
+def lsh_signature(v: str, bits: int = LSH_BITS) -> str:
+    """Random-hyperplane signature of the array column ``v`` as an
+    integer bucket id in [0, 2^bits), as SQL.  Hyperplane ``i`` is the
+    deterministic ±1 Rademacher vector of ``_LSH_SIGNS`` (md5-derived —
+    see ``LSH_DIM_MAX`` note); the projection is the INTEGER sum
+    Σ_d ±round(10⁶·x_d), exact under any accumulation order and
+    identical in DuckDB SQL — which is what makes the whole LSH family
+    oracle-checkable (r1–r13 used xxhash64-signed FLOAT sums:
+    Spark-only, and order-sensitive in the last ulp).  |Σ| ≤
+    64·10⁶·max|x| — far inside BIGINT.  The oracle's
+    ``LSH_BUCKET_CTE`` replays it."""
     vm = lsh_micro(v)
-    bucket = F.lit(0).cast("long")
+    parts = []
     for i in range(bits):
-        signs = F.array(*[F.lit(s) for s in _LSH_SIGNS[i]])
-        proj = F.aggregate(
-            F.zip_with(vm, signs, lambda x, s: x * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+        signs = _sql_array(_LSH_SIGNS[i], "LSH signs", "L")
+        proj = (
+            f"aggregate(zip_with({vm}, {signs}, (x, s) -> x * s),"
+            " 0L, (acc, x) -> acc + x)"
         )
-        bucket = bucket.bitwiseOR(
-            F.shiftleft(F.when(proj > 0, 1).otherwise(0).cast("long"), i)
+        parts.append(
+            f"shiftleft(CAST(CASE WHEN {proj} > 0"
+            f" THEN 1 ELSE 0 END AS BIGINT), {i})"
         )
-    return bucket
+    return "0L | " + " | ".join(parts)
 
 
 def _lsh_topk(
@@ -313,41 +335,33 @@ def _lsh_topk(
     the ``embeddings`` table; the recall curve passes the IVF store's
     columns.  Same rows for the same vectors."""
     ensure_utc(spark)
-    emb = (
-        _emb
-        if _emb is not None
-        else load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", _as_double("embedding").alias("v"))
-        .withColumn("bucket", lsh_signature("v"))
-    )
-    pbucket = F.col("bucket")
-    probe_buckets = (
-        F.array(*_probe_bucket_set(pbucket))
+    emb, corpus = _corpus(spark, sf_dir, _emb, "*")
+    if _emb is None:
+        corpus = f"(SELECT *, {lsh_signature('v')} AS bucket FROM {corpus})"
+    pbuckets = ", ".join(
+        ["bucket"] + [f"bucket ^ {1 << i}" for i in range(LSH_BITS)]
         if multiprobe
-        else F.array(pbucket)
-    )
-    probe = (
-        emb.where(F.col("vec_id") == PROBE_ID)
-        .select(F.col("v").alias("pv"), probe_buckets.alias("pbuckets"))
+        else ["bucket"]
     )
     # rank by the integer micro-cosine (the mmr_rerank device) with a
     # vec_id tiebreak — raw-double ranking would leave the r14 oracles
     # exposed to cross-engine ULP rank flips (ADVICE r13)
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    cand = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        # broadcast-safe: probe is a single query vector (1 row)
-        .crossJoin(F.broadcast(probe))
-        .where(F.array_contains(F.col("pbuckets"), F.col("bucket")))
-        .withColumn("c", _dot(F.col("v"), F.col("pv")) / (_norm(F.col("v")) * _norm(F.col("pv"))))
-    )
-    topk = cand.orderBy(mc.desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    # broadcast-safe: p is a single query vector (1 row)
+    cand = f"""
+        WITH e AS {corpus}
+        SELECT /*+ BROADCAST(p) */ *, {_cosine("v", "pv")} AS c
+        FROM e CROSS JOIN (
+          SELECT v AS pv, array({pbuckets}) AS pbuckets
+          FROM e WHERE vec_id = {PROBE_ID}) p
+        WHERE vec_id <> {PROBE_ID} AND array_contains(pbuckets, bucket)"""
+    return sql(
+        spark,
+        _top_k(
+            cand,
+            f"{_micro('c')} DESC, vec_id",
+            "vec_id, label, round(c, 3) + 0.0D AS cosine",
+        ),
+        emb=emb,
     )
 
 
@@ -527,13 +541,11 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ValueError`` on a corpus without seed centroids or probe row."""
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    cand = _probed_lists(with_cid(emb), probe_cids, "vec_id", "label", "v")
-    return _ivf_score_topk(cand, probe_v)
+    cand = _probed_lists(f"({with_cid(_CORPUS)})", probe_cids, "vec_id, label, v")
+    return sql(spark, _ivf_score_topk(cand, probe_v), emb=emb)
 
 
-def _probe_vector(
-    spark: SparkSession, sf_dir: str, emb: DataFrame
-) -> list[float] | None:
+def _probe_vector(spark: SparkSession, sf_dir: str) -> list[float] | None:
     """Bounded 1-row probe fetch shared by the ladder tiers, memoized
     per session and dataset version (``sources/memo.py``, r17): the
     probe vector is a quantizer INPUT under the same standing
@@ -545,8 +557,9 @@ def _probe_vector(
 
     def _fetch() -> list[float] | None:
         rows = (
-            emb.where(F.col("vec_id") == PROBE_ID)
-            .select("v")
+            load_table(spark, sf_dir, "embeddings")
+            .where(F.col("vec_id") == PROBE_ID)
+            .select(F.expr(_as_double("embedding")))
             .limit(1)
             .collect()
         )
@@ -557,27 +570,28 @@ def _probe_vector(
 
 def _ivf_seed_lists(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, Callable[[DataFrame], DataFrame], list[float], list[int]]:
+) -> tuple[DataFrame, Callable[[str], str], list[float], list[int]]:
     """The seed-centroid IVF quantizer shared by every IVF query.
 
-    Returns ``(emb, with_cid, probe_v, probe_cids)``: the corpus as
-    ``vec_id, label, v`` (``v`` as ``array<double>``); ``with_cid``,
-    which adds each row's nearest-centroid id as an ``int`` column
-    ``cid`` to a frame with a ``v`` column; the probe vector; and the ids of the probe's ``IVF_NPROBE`` nearest
-    centroids.  The centroids are the distinct vectors with ``vec_id <
-    IVF_CENTROIDS``; nearness is the micro-quantized cosine
-    ``round(10^6 * cos)``, ties to the lower centroid id, so the DuckDB
-    oracles replay it exactly.  The centroids, probe and probe cids are
-    memoized per session and dataset version.  Raises ``ValueError``
-    when the corpus has no centroid seed or no probe row."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
+    Returns ``(emb, with_cid, probe_v, probe_cids)``: the ``embeddings``
+    table, which ``_CORPUS`` reads as ``vec_id, label, v`` (``v`` as
+    ``array<double>``); ``with_cid``, which renders a SQL query adding
+    each row's nearest-centroid id as an ``int`` column ``cid`` to a
+    ``vec_id, label, v`` relation; the probe vector; and the ids of the
+    probe's ``IVF_NPROBE`` nearest centroids.  The centroids are the
+    distinct vectors with ``vec_id < IVF_CENTROIDS``; nearness is the
+    micro-quantized cosine ``round(10^6 * cos)``, ties to the lower
+    centroid id, so the DuckDB oracles replay it exactly.  The
+    centroids, probe and probe cids are memoized per session and
+    dataset version.  Raises ``ValueError`` when the corpus has no
+    centroid seed or no probe row."""
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def _seeds() -> tuple[list, list[float], list[int]]:
+        v = F.expr(_as_double("embedding")).alias("v")
         cent_rows = (
             emb.where(F.col("vec_id") < IVF_CENTROIDS)
-            .select("vec_id", "v")
+            .select("vec_id", v)
             .collect()
         )
         cents = _dedupe_seed_rows(cent_rows)
@@ -586,7 +600,7 @@ def _ivf_seed_lists(
                 f"IVF index build: no centroid seed vectors (vec_id < "
                 f"{IVF_CENTROIDS}) in {sf_dir!r} — cannot quantize an empty corpus"
             )
-        probe_rows = emb.where(F.col("vec_id") == PROBE_ID).collect()
+        probe_rows = emb.where(F.col("vec_id") == PROBE_ID).select(v).collect()
         if not probe_rows:
             raise ValueError(
                 f"IVF probe: no row with vec_id == {PROBE_ID} in {sf_dir!r}"
@@ -608,42 +622,43 @@ def _ivf_seed_lists(
     # ties to the lowest centroid id.  The row norm is one projected
     # column, and the whole argmax is one parsed SQL string (repr(float)
     # with the D suffix round-trips every double).
-    def with_cid(df: DataFrame) -> DataFrame:
+    def with_cid(rel: str) -> str:
+        def cos(cv: list[float]) -> str:
+            norm = math.sqrt(sum(x * x for x in cv))
+            return (
+                f"{_dot('v', _sql_array(cv, 'IVF centroid'))}"
+                f" / (_nv * {_sql_double(norm, 'IVF centroid norm')})"
+            )
+
         structs = ", ".join(
-            "named_struct('s', CAST(round(1000000 * ("
-            f"aggregate(zip_with(v, {_sql_array(cv, 'IVF centroid')},"
-            " (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-            f" / (_nv * {math.sqrt(sum(x * x for x in cv))!r}D))) AS BIGINT),"
-            f" 'negid', {-cid})"
+            f"named_struct('s', {_micro(f'({cos(cv)})')}, 'negid', {-cid})"
             for cid, cv in cents
         )
-        best = F.array_max(F.expr(f"array({structs})"))
-        return (
-            df.withColumn("_nv", _norm(F.col("v")))
-            .withColumn("cid", (-best["negid"]).cast("int"))
-            .drop("_nv")
-        )
+        return f"""
+            SELECT vec_id, label, v,
+                   CAST(-array_max(array({structs})).negid AS INT) AS cid
+            FROM (SELECT *, {_norm("v")} AS _nv FROM {rel})"""
 
     return emb, with_cid, probe_v, probe_cids
 
 
-def _ivf_score_topk(
-    cand: DataFrame, probe_v: list[float], metric: str = "cosine"
-) -> DataFrame:
+def _ivf_score_topk(cand: str, probe_v: list[float], metric: str = "cosine") -> str:
     """EXACT scoring + deterministic top-k over surviving IVF
-    candidates — the tail shared by every IVF variant.  ``metric``
-    selects the exact scorer and sort direction: ``cosine`` / ``dot``
-    rank descending (similarities), ``l2`` ranks ASCENDING (a
-    distance) and emits ``l2_dist``; returned scores are always
-    full-precision exact (the repo-wide ANN contract: recall is the
-    only degrading axis, never score fidelity)."""
-    pv_lit = F.expr(_sql_array(probe_v, "IVF probe"))
+    candidates — the tail shared by every IVF variant, as SQL over the
+    relation ``cand`` (``vec_id, label, v``).  ``metric`` selects the
+    exact scorer and sort direction: ``cosine`` / ``dot`` rank
+    descending (similarities), ``l2`` ranks ASCENDING (a distance) and
+    emits ``l2_dist``; returned scores are always full-precision exact
+    (the repo-wide ANN contract: recall is the only degrading axis,
+    never score fidelity)."""
+    pv = _sql_array(probe_v, "IVF probe")
     pn = math.sqrt(sum(x * x for x in probe_v))
-    dotc = _dot(F.col("v"), pv_lit)
+    dotc = _dot("v", pv)
     if metric == "cosine":
-        score, col, asc = dotc / (_norm(F.col("v")) * F.lit(pn)), "cosine", False
+        score = f"{dotc} / ({_norm('v')} * {_sql_double(pn, 'IVF probe norm')})"
+        col, order = "cosine", "DESC"
     elif metric == "dot":
-        score, col, asc = dotc, "dot", False
+        score, col, order = dotc, "dot", "DESC"
     elif metric == "l2":
         # ‖q−x‖² = ‖q‖² − 2·q·x + ‖x‖², sqrt'd once for the emitted
         # distance (sort on the squared form would be equivalent).
@@ -652,47 +667,38 @@ def _ivf_score_topk(
         # fl(fl(√S)²) rounds below S about half the time, the argument
         # lands at ~-4e-16, sqrt returns NaN, and Spark sorts NaN
         # LARGEST — the true nearest neighbor would rank last.
-        nsq = F.aggregate(
-            F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x
+        nsq = "aggregate(v, 0.0D, (acc, x) -> acc + x * x)"
+        score = (
+            f"sqrt(greatest(0.0D, {_sql_double(pn * pn, 'IVF probe norm')}"
+            f" - {dotc} * 2.0D + {nsq}))"
         )
-        score = F.sqrt(
-            F.greatest(F.lit(0.0), F.lit(pn * pn) - 2.0 * dotc + nsq)
-        )
-        col, asc = "l2_dist", True
+        col, order = "l2_dist", "ASC"
     else:  # pragma: no cover - caller bug
         raise ValueError(f"unknown IVF metric: {metric!r}")
-    scored = cand.withColumn("c", score)
     # micro-quantized rank (the mmr_rerank device — r14): ULP-stable
     # ordering for the oracle-replayed variants; ASC for distances
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    order = [mc.asc() if asc else mc.desc(), F.col("vec_id")]
-    topk = scored.orderBy(*order).limit(TOP_K)
-    w = Window.orderBy(*order)
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round("c", 3) + F.lit(0.0)).alias(col),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    return _top_k(
+        f"SELECT *, {score} AS c FROM {cand}",
+        f"{_micro('c')} {order}, vec_id",
+        f"vec_id, label, round(c, 3) + 0.0D AS {col}",
     )
 
 
-def _probed_lists(
-    lists: DataFrame, probe_cids: list[int], *cols: str | Column
-) -> DataFrame:
-    """The rows of ``lists`` (a frame with ``cid``) in the probe's
-    inverted lists, probe row excluded, projected to ``cols``.  On the
-    IVF store the ``cid`` predicate is a partition filter: unprobed
-    lists are never read."""
-    return lists.where(
-        F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
-    ).select(*cols)
+def _probed_lists(lists: str, probe_cids: list[int], cols: str) -> str:
+    """SQL for the rows of the relation ``lists`` (with ``cid``) in the
+    probe's inverted lists, probe row excluded, projected to ``cols``.
+    On the IVF store the ``cid`` predicate is a partition filter:
+    unprobed lists are never read."""
+    cids = ", ".join(str(int(c)) for c in probe_cids)
+    return f"""(SELECT {cols} FROM {lists}
+        WHERE cid IN ({cids}) AND vec_id <> {PROBE_ID})"""
 
 
 def _ivf_store(
     spark: SparkSession,
     sf_dir: str,
     emb: DataFrame,
-    with_cid: Callable[[DataFrame], DataFrame],
+    with_cid: Callable[[str], str],
     probe_v: list[float],
 ) -> DataFrame:
     """The IVF store: every IVF codec's columns for the corpus ``emb``,
@@ -717,20 +723,20 @@ def _ivf_store(
     cb = _pq_codebook(spark, sf_dir, len(probe_v))
 
     def _build(d: str) -> None:
-        staged = with_cid(emb)
+        staged = sql(spark, with_cid(_CORPUS), emb=emb)
         pq_codes = F.lit(None).cast("array<tinyint>")
         if cb is not None:
             # persist() keeps the micro-quantized vq one column: without
             # the barrier CollapseProject inlines it into every one of
             # the PQ_M * PQ_K subspace folds
-            staged = staged.withColumn("vq", lsh_micro(F.col("v"))).persist()
+            staged = staged.withColumn("vq", F.expr(lsh_micro("v"))).persist()
             pq_codes = F.array(
                 *[_pq_code(cb[m], m) for m in range(PQ_M)]
             ).cast("array<tinyint>")
         (
-            staged.withColumn("bucket", lsh_signature("v"))
-            .withColumn("scale", _sq8_scale().cast("double"))
-            .withColumn("sq8_codes", _sq8_codes("tinyint"))
+            staged.withColumn("bucket", F.expr(lsh_signature("v")))
+            .withColumn("scale", F.expr(f"CAST({_sq8_scale()} AS DOUBLE)"))
+            .withColumn("sq8_codes", F.expr(_sq8_codes("tinyint")))
             .withColumn("pq_codes", pq_codes)
             .select(
                 "vec_id", "label", "v", "bucket", "scale", "sq8_codes",
@@ -770,8 +776,8 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
-    cand = _probed_lists(store, probe_cids, "vec_id", "label", "v")
-    return _ivf_score_topk(cand, probe_v)
+    cand = _probed_lists("{store}", probe_cids, "vec_id, label, v")
+    return sql(spark, _ivf_score_topk(cand, probe_v), store=store)
 
 
 #: k-NN join: every vec_id divisible by this is a probe (5 probes per
@@ -829,9 +835,9 @@ def sim_search_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") % KNN_PROBE_MOD == 0)
         .select(
             F.col("vec_id").alias("probe_id"),
-            _as_double("embedding").alias("pv"),
+            F.expr(_as_double("embedding")).alias("pv"),
         )
-        .withColumn("npv", _norm(F.col("pv")))
+        .withColumn("npv", F.expr(_norm("pv")))
     )
     # norms hoisted to the per-VECTOR projections (r14): the norm is a
     # pure function of its vector, so precomputing it on each side and
@@ -840,13 +846,13 @@ def sim_search_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of 2·|pairs| (the interpreted HOF fold is the whole cost
     # of the brute-force family; sf1 measured ~3× on triplet mining)
     corpus = emb.where(F.col("vec_id") % KNN_PROBE_MOD != 0).select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("nv", _norm(F.col("v")))
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
+    ).withColumn("nv", F.expr(_norm("v")))
     # broadcast-safe: probes is the documented bounded probe set (<=
     # ~10k vectors per the operator contract; LSH-bucket fallback
     # documented beyond)
     scored = corpus.join(F.broadcast(probes)).withColumn(
-        "s", _dot(F.col("v"), F.col("pv")) / (F.col("nv") * F.col("npv"))
+        "s", F.expr(_dot("v", "pv")) / (F.col("nv") * F.col("npv"))
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("s").desc(), F.col("vec_id"))
     return (
@@ -890,18 +896,14 @@ def sim_search_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the same expression shape); only the REPORTED value is rounded."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     )
     probe = emb.where(F.col("vec_id") == PROBE_ID).select(F.col("v").alias("pv"))
     scored = (
         emb.where(F.col("vec_id") != PROBE_ID)
         # broadcast-safe: probe is a single query vector (1 row)
         .crossJoin(F.broadcast(probe))
-        .withColumn(
-            "c",
-            _dot(F.col("v"), F.col("pv"))
-            / (_norm(F.col("v")) * _norm(F.col("pv"))),
-        )
+        .withColumn("c", F.expr(_cosine("v", "pv")))
     )
     return scored.where(F.col("c") >= 0.25).select(
         "vec_id",
@@ -1183,7 +1185,7 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     charter extension, similarity family)."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     )
     # truncate lineage once; every Lloyd job + the final assignment
     # reuses this bounded-width cell relation (|rows|·d cells)
@@ -1229,7 +1231,7 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = emb.join(assigned, "vec_id").where(
         F.col("cid").isin(*probe_cids) & (F.col("vec_id") != PROBE_ID)
     )
-    return _ivf_score_topk(cand, probe_v)
+    return sql(spark, _ivf_score_topk("{cand}", probe_v), cand=cand)
 
 
 def _probe_bucket_set(pbucket: Column) -> list[Column]:
@@ -1249,8 +1251,8 @@ def _lsh_batch_topk(
     set (bits+1 probe rows — probe-side fan-out only, same join)."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("bucket", lsh_signature("v"))
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
+    ).withColumn("bucket", F.expr(lsh_signature("v")))
     pbucket = F.col("bucket")
     probe_bucket = (
         F.explode(F.array(*_probe_bucket_set(pbucket)))
@@ -1261,17 +1263,17 @@ def _lsh_batch_topk(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
         probe_bucket.alias("pbucket"),
-        _norm(F.col("v")).alias("npv"),
+        F.expr(_norm("v")).alias("npv"),
     )
     # corpus-side norm hoisted per vector (bit-identical — see
     # sim_search_knn_join's r14 note)
     corpus = emb.where(F.col("vec_id") % KNN_PROBE_MOD != 0).withColumn(
-        "nv", _norm(F.col("v"))
+        "nv", F.expr(_norm("v"))
     )
     cand = (
         corpus.join(probes, F.col("bucket") == F.col("pbucket"))
         .withColumn(
-            "c", _dot(F.col("v"), F.col("pv")) / (F.col("nv") * F.col("npv"))
+            "c", F.expr(_dot("v", "pv")) / (F.col("nv") * F.col("npv"))
         )
     )
     # micro-quantized rank (see _lsh_topk's r14 note)
@@ -1599,7 +1601,7 @@ def _pq_codebook(
     def _seeds() -> list[list[float]]:
         seed_rows = (
             load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", _as_double("embedding").alias("v"))
+            .select("vec_id", F.expr(_as_double("embedding")).alias("v"))
             .where(
                 (F.col("vec_id") >= IVF_CENTROIDS)
                 & (F.col("vec_id") < IVF_CENTROIDS + PQ_K)
@@ -1656,9 +1658,8 @@ def _ivfpq_search(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     cb = _pq_codebook(spark, sf_dir, len(probe_v))
     if cb is None:
-        return _ivf_score_topk(
-            emb.where(F.col("vec_id") != PROBE_ID), probe_v, metric
-        )
+        cand = f"(SELECT * FROM {_CORPUS} WHERE vec_id <> {PROBE_ID})"
+        return sql(spark, _ivf_score_topk(cand, probe_v, metric), emb=emb)
     sub = len(cb[0][0])
     pq = [_py_mc(x) for x in probe_v]
     lut_dot = [
@@ -1675,49 +1676,40 @@ def _ivfpq_search(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
     pnq2 = sum(x * x for x in pq)
 
     store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
-    coded = _probed_lists(store, probe_cids, "vec_id", "pq_codes")
-    # exact BIGINT sums, one parsed string each
-    adc_dot = F.expr(
-        " + ".join(
-            f"element_at({_sql_array(lut_dot[m], 'PQ LUT', 'L')}, pq_codes[{m}] + 1)"
+    coded = _probed_lists("{store}", probe_cids, "vec_id, pq_codes")
+
+    # exact BIGINT sums of PQ_M table lookups
+    def adc_sum(lut: list[list[int]]) -> str:
+        return "(" + " + ".join(
+            f"element_at({_sql_array(lut[m], 'PQ LUT', 'L')}, pq_codes[{m}] + 1)"
             for m in range(PQ_M)
-        )
-    )
-    adc_nsq = F.expr(
-        " + ".join(
-            f"element_at({_sql_array(cb_nsq[m], 'PQ LUT', 'L')}, pq_codes[{m}] + 1)"
-            for m in range(PQ_M)
-        )
-    )
+        ) + ")"
+
+    adc_dot, adc_nsq = adc_sum(lut_dot), adc_sum(cb_nsq)
     if metric == "cosine":
         # the probe norm is rank-constant and omitted
-        adc, asc = (
-            adc_dot.cast("double")
-            / F.when(adc_nsq == 0, F.lit(1.0)).otherwise(
-                F.sqrt(adc_nsq.cast("double"))
-            ),
-            False,
+        adc, order = (
+            f"CAST({adc_dot} AS DOUBLE) / CASE WHEN {adc_nsq} = 0 THEN 1.0D"
+            f" ELSE sqrt(CAST({adc_nsq} AS DOUBLE)) END",
+            "DESC",
         )
     elif metric == "dot":
-        adc, asc = adc_dot, False
+        adc, order = adc_dot, "DESC"
     elif metric == "l2":
-        adc, asc = F.lit(pnq2) - 2 * adc_dot + adc_nsq, True
+        adc, order = f"{int(pnq2)} - {adc_dot} * 2 + {adc_nsq}", "ASC"
     else:  # pragma: no cover - caller bug
         raise ValueError(f"unknown IVF-PQ metric: {metric!r}")
-    pool = (
-        coded.withColumn("adc", adc)
-        .orderBy(
-            F.col("adc").asc() if asc else F.col("adc").desc(),
-            F.col("vec_id"),
-        )
-        .limit(PQ_RERANK)
-        .select("vec_id")
-    )
     # broadcast-safe: the pool is at most PQ_RERANK rows
-    cand = emb.select("vec_id", "label", "v").join(
-        F.broadcast(pool), "vec_id"
+    cand = f"""(
+        SELECT /*+ BROADCAST(pool) */ *
+        FROM {_CORPUS} JOIN (
+          SELECT vec_id FROM (
+            SELECT *, {adc} AS adc FROM {coded}
+            ORDER BY adc {order}, vec_id LIMIT {PQ_RERANK})) pool
+        USING (vec_id))"""
+    return sql(
+        spark, _ivf_score_topk(cand, probe_v, metric), emb=emb, store=store
     )
-    return _ivf_score_topk(cand, probe_v, metric)
 
 
 #: MMR diversified re-rank: greedy-select MMR_K results from the
@@ -1810,7 +1802,7 @@ def sim_search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     family)."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
+        "vec_id", F.expr(_as_double("embedding")).alias("v")
     )
     probe = emb.where(F.col("vec_id") == PROBE_ID).select(
         F.col("v").alias("pv")
@@ -1824,8 +1816,7 @@ def sim_search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "v",
             mc(
-                _dot(F.col("v"), F.col("pv"))
-                / (_norm(F.col("v")) * _norm(F.col("pv")))
+                F.expr(_cosine("v", "pv"))
             ).alias("rel"),
         )
     )
@@ -2061,21 +2052,21 @@ def sim_search_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = emb.where(F.col("vec_id") % KNN_PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("a_label"),
-        _as_double("embedding").alias("pv"),
-    ).withColumn("npv", _norm(F.col("pv")))
+        F.expr(_as_double("embedding")).alias("pv"),
+    ).withColumn("npv", F.expr(_norm("pv")))
     # norms hoisted per VECTOR, not per pair (r14 — bit-identical, see
     # sim_search_knn_join): at sf1's genuine cardinality (500 anchors ×
     # 50k corpus) the per-pair 3-fold form measured 80.7 s; one fold
     # per pair brings the brute-force mining back to scan+dot cost
     corpus = emb.where(F.col("vec_id") % KNN_PROBE_MOD != 0).select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("nv", _norm(F.col("v")))
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
+    ).withColumn("nv", F.expr(_norm("v")))
     # broadcast-safe: anchors is the documented bounded probe set
     scored = (
         corpus.join(F.broadcast(anchors))
         .withColumn(
             "s",
-            _dot(F.col("v"), F.col("pv")) / (F.col("nv") * F.col("npv")),
+            F.expr(_dot("v", "pv")) / (F.col("nv") * F.col("npv")),
         )
         .withColumn("is_pos", F.col("label") == F.col("a_label"))
     )
@@ -2196,8 +2187,8 @@ def sim_search_triplet_mining_lsh(
     extension, similarity family)."""
     ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("bucket", lsh_signature("v"))
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
+    ).withColumn("bucket", F.expr(lsh_signature("v")))
     anchors = emb.where(F.col("vec_id") % KNN_PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("a_label"),
@@ -2205,15 +2196,15 @@ def sim_search_triplet_mining_lsh(
         F.explode(F.array(*_probe_bucket_set(F.col("bucket")))).alias(
             "pbucket"
         ),
-        _norm(F.col("v")).alias("npv"),
+        F.expr(_norm("v")).alias("npv"),
     )
     corpus = emb.where(F.col("vec_id") % KNN_PROBE_MOD != 0).withColumn(
-        "nv", _norm(F.col("v"))
+        "nv", F.expr(_norm("v"))
     )
     scored = (
         corpus.join(anchors, F.col("bucket") == F.col("pbucket"))
         .withColumn(
-            "s", _dot(F.col("v"), F.col("pv")) / (F.col("nv") * F.col("npv"))
+            "s", F.expr(_dot("v", "pv")) / (F.col("nv") * F.col("npv"))
         )
         .withColumn("is_pos", F.col("label") == F.col("a_label"))
     )
@@ -2331,24 +2322,21 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared micro-quantized rank.  Reference heritage: none (SURVEY
     §2 charter extension, similarity family)."""
     ensure_utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
     # bounded 1-row probe fetch (memoized — ``_probe_vector``): the
     # probe's packed words become plan literals (at 100 TB this is an
     # 8 B/word key lookup, not a scan)
-    pv = _probe_vector(spark, sf_dir, emb)
+    pv = _probe_vector(spark, sf_dir)
     if pv is None:
         # no probe vector (empty corpus) — the storeless form returns
         # the correctly-shaped empty frame without building a store
         return _hamming_rerank_zipwith(spark, sf_dir)
     pwords = _pack_sign_words_py(pv)
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def _build(d: str) -> None:
         (
-            emb.select(
-                "vec_id", "label", _pack_sign_words(F.col("v")).alias("words")
-            )
+            sql(spark, f"SELECT vec_id, label, v FROM {_CORPUS}", emb=emb)
+            .select("vec_id", "label", F.expr(_pack_sign_words("v")).alias("words"))
             # the sketch is ~8 B/vector — keep the file count small so
             # the per-probe scan lists O(1) files at fixture scale (at
             # 100 TB size the task count to healthy parquet splits)
@@ -2366,42 +2354,33 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = spark.read.schema(
         "vec_id BIGINT, label INT, words ARRAY<BIGINT>"
     ).parquet(sketch_dir)
-    pw_lit = F.expr(_sql_array(pwords, "probe sign words", "L"))
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("words"),
-            pw_lit,
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    ham = (
+        f"aggregate(zip_with(words, {_sql_array(pwords, 'probe sign words', 'L')},"
+        " (a, b) -> CAST(bit_count(a ^ b) AS BIGINT)), 0L, (acc, x) -> acc + x)"
     )
-    pool = (
-        sk.where(F.col("vec_id") != PROBE_ID)
-        .select("vec_id", "label", ham.alias("hamming"))
-        .orderBy(F.col("hamming").asc(), F.col("vec_id"))
-        .limit(HAMMING_POOL)
-    )
+    pv_lit = _sql_array(pv, "probe vector")
     # exact re-rank: fetch full-precision vectors for the bounded pool
-    # (broadcast the ≤HAMMING_POOL-row pool into the float table)
-    pv_lit = F.expr(_sql_array(pv, "probe vector"))
-    scored = (
-        emb.select("vec_id", "v")
-        # broadcast-safe: pool is LIMIT HAMMING_POOL (<=40 rows by
-        # construction) — a constant-bounded candidate set regardless
-        # of corpus size
-        .join(F.broadcast(pool), "vec_id")
-        .withColumn("c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit)))
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        F.col("hamming").cast("bigint").alias("hamming"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    # (broadcast the ≤HAMMING_POOL-row pool into the float table);
+    # broadcast-safe: pool is LIMIT HAMMING_POOL (<=40 rows by
+    # construction) — a constant-bounded candidate set regardless of
+    # corpus size
+    scored = f"""
+        SELECT /*+ BROADCAST(pool) */ *, {_cosine("v", pv_lit)} AS c
+        FROM (SELECT vec_id, v FROM {_CORPUS}) JOIN (
+          SELECT vec_id, label, {ham} AS hamming FROM {{sk}}
+          WHERE vec_id <> {PROBE_ID}
+          ORDER BY hamming, vec_id LIMIT {HAMMING_POOL}) pool
+        USING (vec_id)"""
+    return sql(
+        spark,
+        _top_k(
+            scored,
+            f"{_micro('c')} DESC, vec_id",
+            "vec_id, label, CAST(hamming AS BIGINT) AS hamming,"
+            " round(c, 3) + 0.0D AS cosine",
+        ),
+        emb=emb,
+        sk=sk,
     )
 
 
@@ -2411,29 +2390,22 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _POW2_SIGNED = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
 
 
-def _pack_sign_words(v: Column) -> Column:
-    """``array<double>`` → ``array<bigint>``: one 64-bit word per 64
-    dims, bit i of word w set iff ``v[w*64 + i] > 0`` — the identical
+def _pack_sign_words(v: str) -> str:
+    """``array<double>`` → ``array<bigint>`` as SQL: one 64-bit word per
+    64 dims, bit i of word w set iff ``v[w*64 + i] > 0`` — the identical
     sign test the zip_with form and the DuckDB oracle run (no
-    arithmetic before the comparison, so packing cannot diverge)."""
-    pow2 = F.array(*[F.lit(x).cast("long") for x in _POW2_SIGNED])
-    nwords = F.ceil(F.size(v) / F.lit(64.0)).cast("int")
-    packed = F.transform(
-        F.sequence(F.lit(0), nwords - F.lit(1)),
-        lambda w: F.aggregate(
-            F.transform(
-                F.slice(v, w * F.lit(64) + F.lit(1), 64),
-                lambda x, i: F.when(
-                    x > 0, F.element_at(pow2, i + F.lit(1))
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, b: acc.bitwiseOR(b),
-        ),
-    )
-    # guard zero-length vectors: sequence(0, -1) would DESCEND
-    return F.when(F.size(v) > 0, packed).otherwise(
-        F.array().cast("array<bigint>")
+    arithmetic before the comparison, so packing cannot diverge).
+    Zero-length vectors give an empty array: ``sequence(0, -1)`` would
+    DESCEND."""
+    pow2 = _sql_array(_POW2_SIGNED, "sign-bit powers", "L")
+    return (
+        f"CASE WHEN size({v}) > 0 THEN transform("
+        f"sequence(0, CAST(ceil(size({v}) / 64.0D) AS INT) - 1),"
+        " w -> aggregate(transform("
+        f"slice({v}, w * 64 + 1, 64),"
+        f" (x, i) -> CASE WHEN x > 0 THEN element_at({pow2}, i + 1) ELSE 0L END),"
+        " 0L, (acc, b) -> acc | b))"
+        " ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
 
 
@@ -2458,41 +2430,26 @@ def _hamming_rerank_zipwith(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, as the empty-corpus fallback, and as the per-candidate cost
     baseline the bench compares the sketch scan against."""
     ensure_utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
+    ham = (
+        "aggregate(zip_with(v, pv, (x, y) -> CAST((x > 0) <> (y > 0) AS BIGINT)),"
+        " 0L, (acc, x) -> acc + x)"
     )
-    probe = emb.where(F.col("vec_id") == PROBE_ID).select(
-        F.col("v").alias("pv")
-    )
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("v"),
-            F.col("pv"),
-            lambda x, y: ((x > 0) != (y > 0)).cast("long"),
+    # broadcast-safe: p is a single query vector (1 row)
+    pool = f"""
+        WITH e AS {_CORPUS}
+        SELECT /*+ BROADCAST(p) */ *, {ham} AS hamming
+        FROM e CROSS JOIN (SELECT v AS pv FROM e WHERE vec_id = {PROBE_ID}) p
+        WHERE vec_id <> {PROBE_ID}
+        ORDER BY hamming, vec_id LIMIT {HAMMING_POOL}"""
+    return sql(
+        spark,
+        _top_k(
+            f"SELECT *, {_cosine('v', 'pv')} AS c FROM ({pool})",
+            f"{_micro('c')} DESC, vec_id",
+            "vec_id, label, CAST(hamming AS BIGINT) AS hamming,"
+            " round(c, 3) + 0.0D AS cosine",
         ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    pool = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        # broadcast-safe: probe is a single query vector (1 row)
-        .crossJoin(F.broadcast(probe))
-        .withColumn("hamming", ham)
-        .orderBy(F.col("hamming").asc(), F.col("vec_id"))
-        .limit(HAMMING_POOL)
-    )
-    scored = pool.withColumn(
-        "c", _dot(F.col("v"), F.col("pv")) / (_norm(F.col("v")) * _norm(F.col("pv")))
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        F.col("hamming").cast("bigint").alias("hamming"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+        emb=load_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -2504,32 +2461,33 @@ def _hamming_rerank_zipwith(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQ8_POOL = 4 * TOP_K
 
 
-def _sq8_scale() -> Column:
-    """Per-vector SQ8 scale = max|x_d| over the ``v`` column — ONE
-    definition for every SQ8 carrier (``sim_search_sq8_rerank``,
+def _sq8_scale() -> str:
+    """Per-vector SQ8 scale = max|x_d| over the ``v`` column, as SQL —
+    ONE definition for every SQ8 carrier (``sim_search_sq8_rerank``,
     ``sim_search_ivf_sq8``, ``sim_search_ivf_sq8_partitioned``); the
     ``embedding_quantize_int8`` device's scale rule."""
-    return F.array_max(F.transform("v", lambda x: F.abs(x)))
+    return "array_max(transform(v, x -> abs(x)))"
 
 
-def _sq8_codes(elem_type: str = "bigint") -> Column:
-    """Int8 code array over (``v``, ``scale``) columns — half-up
-    ``floor(x/scale·127 + 0.5)`` with the zero-scale guard, the shared
-    quantizer of the SQ8 family.  ``elem_type`` picks the carrier
+def _sq8_codes(elem_type: str = "bigint") -> str:
+    """Int8 code array over (``v``, ``scale``) columns, as SQL —
+    half-up ``floor(x/scale·127 + 0.5)`` with the zero-scale guard, the
+    shared quantizer of the SQ8 family.  ``elem_type`` picks the carrier
     width: ``bigint`` for in-plan arithmetic, ``tinyint`` for the
     1 B/dim persisted code index (values ∈ [-127, 127] by
     construction, so the narrow cast is lossless)."""
-    return F.when(
-        F.col("scale") == 0,
-        F.transform("v", lambda x: F.lit(0).cast(elem_type)),
-    ).otherwise(
-        F.transform(
-            "v",
-            lambda x: F.floor(x / F.col("scale") * 127 + F.lit(0.5)).cast(
-                elem_type
-            ),
-        )
+    return (
+        f"CASE WHEN scale = 0 THEN transform(v, x -> CAST(0 AS {elem_type}))"
+        f" ELSE transform(v, x -> CAST(floor(x / scale * 127 + 0.5D) AS {elem_type}))"
+        " END"
     )
+
+
+def _sq8_cand(rel: str) -> str:
+    """SQL for the SQ8 candidates ``vec_id, scale, codes`` of a relation
+    ``rel`` with ``vec_id, v``, coded in-plan."""
+    return f"""(SELECT vec_id, scale, {_sq8_codes()} AS codes
+        FROM (SELECT *, CAST({_sq8_scale()} AS DOUBLE) AS scale FROM {rel}))"""
 
 
 def _py_sq8(v: list[float]) -> tuple[float, list[int]]:
@@ -2546,13 +2504,13 @@ def _py_sq8(v: list[float]) -> tuple[float, list[int]]:
     ]
 
 
-def _sq8_probe_lits(pv: list[float]) -> tuple[Column, Column]:
-    """The SQ8 family's probe literals: half-up micro-unit BIGINTs
-    (the ADC operand) and the full-precision doubles (the exact
+def _sq8_probe_lits(pv: list[float]) -> tuple[str, str]:
+    """The SQ8 family's probe literals as SQL: half-up micro-unit
+    BIGINTs (the ADC operand) and the full-precision doubles (the exact
     re-rank operand)."""
-    pv_lit = F.expr(_sql_array(pv, "SQ8 probe"))  # non-finite raises here
+    pv_lit = _sql_array(pv, "SQ8 probe")  # non-finite raises here
     pq = [math.floor(x * 1000000.0 + 0.5) for x in pv]
-    return F.expr(_sql_array(pq, "SQ8 probe", "L")), pv_lit
+    return _sql_array(pq, "SQ8 probe", "L"), pv_lit
 
 
 @query(
@@ -2625,70 +2583,52 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_sq8_topk``.  Output: ``vec_id, label, adc, cosine, rnk`` (see
     ``_sq8_topk``).  A corpus without a probe row gives zero rows."""
     ensure_utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
-    pv = _probe_vector(spark, sf_dir, emb)
+    pv = _probe_vector(spark, sf_dir)
     if pv is None:
         return spark.createDataFrame(
             [], "vec_id BIGINT, label INT, adc DOUBLE, cosine DOUBLE, rnk BIGINT"
         )
-    cand = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        .withColumn("scale", _sq8_scale().cast("double"))
-        .select("vec_id", "scale", _sq8_codes().alias("codes"))
+    cand = _sq8_cand(f"(SELECT * FROM {_CORPUS} WHERE vec_id <> {PROBE_ID})")
+    return sql(
+        spark,
+        _sq8_topk(cand, pv), emb=load_table(spark, sf_dir, "embeddings")
     )
-    return _sq8_topk(emb, cand, pv)
 
 
-def _sq8_topk(emb: DataFrame, cand: DataFrame, pv: list[float]) -> DataFrame:
-    """The SQ8 ranking shared by every SQ8 query.
+def _sq8_topk(cand: str, pv: list[float]) -> str:
+    """The SQ8 ranking shared by every SQ8 query, as SQL reading the
+    ``embeddings`` table as ``{emb}``.
 
-    ``cand`` holds the candidates as ``vec_id, scale, codes`` (integer
-    codes of any width); ``emb`` is the corpus as ``vec_id, label, v``;
-    ``pv`` the probe vector.  Candidates rank by the asymmetric dot
-    ``s = sum(pq_d * code_d)``, with ``pq`` the probe in half-up integer
-    micro-units, as ``s * scale`` descending, ties to the lower
-    ``vec_id``.  The ``SQ8_POOL`` best join back to ``emb`` and are
-    ranked by exact cosine.  Output: ``vec_id, label``, ``adc`` (``s *
-    scale / 127 / 10^6``, rounded to 3 places), ``cosine`` (exact,
-    rounded to 3 places) and ``rnk``, the ``TOP_K`` best by
-    micro-quantized cosine, ties to the lower ``vec_id``; zero rows for
-    an empty ``cand``."""
+    ``cand`` is a relation of the candidates as ``vec_id, scale, codes``
+    (integer codes of any width); ``pv`` the probe vector.  Candidates
+    rank by the asymmetric dot ``s = sum(pq_d * code_d)``, with ``pq``
+    the probe in half-up integer micro-units, as ``s * scale``
+    descending, ties to the lower ``vec_id``.  The ``SQ8_POOL`` best
+    join back to the corpus and are ranked by exact cosine.  Output:
+    ``vec_id, label``, ``adc`` (``s * scale / 127 / 10^6``, rounded to
+    3 places), ``cosine`` (exact, rounded to 3 places) and ``rnk``, the
+    ``TOP_K`` best by micro-quantized cosine, ties to the lower
+    ``vec_id``; zero rows for an empty ``cand``."""
     pq_lit, pv_lit = _sq8_probe_lits(pv)
-    s = F.aggregate(
-        F.zip_with(F.col("codes"), pq_lit, lambda c, p: c.cast("bigint") * p),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    s = (
+        f"aggregate(zip_with(codes, {pq_lit}, (c, p) -> CAST(c AS BIGINT) * p),"
+        " 0L, (acc, x) -> acc + x)"
     )
-    pool = (
-        cand.withColumn("s", s)
-        .orderBy(
-            (F.col("s").cast("double") * F.col("scale")).desc(), "vec_id"
-        )
-        .limit(SQ8_POOL)
-        .select("vec_id", "s", "scale")
-    )
-    scored = (
-        emb.select("vec_id", "label", "v")
-        # broadcast-safe: the pool is at most SQ8_POOL rows
-        .join(F.broadcast(pool), "vec_id")
-        .withColumn(
-            "c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit))
-        )
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), "vec_id").limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    adc = F.col("s").cast("double") * F.col("scale") / F.lit(127.0) / F.lit(
-        1000000.0
-    )
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round(adc, 3) + F.lit(0.0)).alias("adc"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    # broadcast-safe: the pool is at most SQ8_POOL rows
+    scored = f"""
+        SELECT /*+ BROADCAST(pool) */ *, {_cosine("v", pv_lit)} AS c
+        FROM {_CORPUS} JOIN (
+          SELECT vec_id, s, scale FROM (
+            SELECT *, {s} AS s FROM {cand}
+            ORDER BY CAST(s AS DOUBLE) * scale DESC, vec_id
+            LIMIT {SQ8_POOL})) pool
+        USING (vec_id)"""
+    return _top_k(
+        scored,
+        f"{_micro('c')} DESC, vec_id",
+        "vec_id, label,"
+        " round(CAST(s AS DOUBLE) * scale / 127.0D / 1000000.0D, 3) + 0.0D AS adc,"
+        " round(c, 3) + 0.0D AS cosine",
     )
 
 
@@ -2774,23 +2714,21 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     device applied to a prefix.  Reference heritage: none (SURVEY §2
     charter extension, similarity family)."""
     ensure_utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
     # bounded 1-row probe fetch (memoized — ``_probe_vector``)
-    pv = _probe_vector(spark, sf_dir, emb)
+    pv = _probe_vector(spark, sf_dir)
     if pv is None:
         # no probe vector (empty corpus) — the storeless form returns
         # the correctly-shaped empty frame without building a store
         return _mrl_funnel_slice(spark, sf_dir)
-    p16 = pv[:MRL_DIMS]
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def _build(d: str) -> None:
         (
-            emb.select(
-                "vec_id",
-                "label",
-                F.slice(F.col("v"), 1, MRL_DIMS).alias("prefix"),
+            sql(
+                spark,
+                f"SELECT vec_id, label, slice(v, 1, {MRL_DIMS}) AS prefix"
+                f" FROM {_CORPUS}",
+                emb=emb,
             )
             # the prefix store is {MRL_DIMS}/64 of the float bytes —
             # keep the file count small at fixture scale (at 100 TB
@@ -2809,37 +2747,28 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = spark.read.schema(
         "vec_id BIGINT, label INT, prefix ARRAY<DOUBLE>"
     ).parquet(store_dir)
-    p16_lit = F.expr(_sql_array(p16, "probe prefix"))
-    c16 = _dot(F.col("prefix"), p16_lit) / (
-        _norm(F.col("prefix")) * _norm(p16_lit)
-    )
-    mc16 = F.round(F.lit(1000000) * F.col("c16")).cast("bigint")
-    pool = (
-        pre.where(F.col("vec_id") != PROBE_ID)
-        .withColumn("c16", c16)
-        .orderBy(mc16.desc(), F.col("vec_id"))
-        .limit(MRL_POOL)
-        .select("vec_id", "c16")
-    )
-    pv_lit = F.expr(_sql_array(pv, "probe vector"))
-    scored = (
-        emb.select("vec_id", "label", "v")
-        # broadcast-safe: pool is LIMIT MRL_POOL (<=40 rows by
-        # construction) — constant-bounded regardless of corpus size
-        .join(F.broadcast(pool), "vec_id")
-        .withColumn(
-            "c", _dot(F.col("v"), pv_lit) / (_norm(F.col("v")) * _norm(pv_lit))
-        )
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round("c16", 3) + F.lit(0.0)).alias("coarse_cosine"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    p16_lit = _sql_array(pv[:MRL_DIMS], "probe prefix")
+    pv_lit = _sql_array(pv, "probe vector")
+    # broadcast-safe: pool is LIMIT MRL_POOL (<=40 rows by
+    # construction) — constant-bounded regardless of corpus size
+    scored = f"""
+        SELECT /*+ BROADCAST(pool) */ *, {_cosine("v", pv_lit)} AS c
+        FROM {_CORPUS} JOIN (
+          SELECT vec_id, c16 FROM (
+            SELECT *, {_cosine("prefix", p16_lit)} AS c16 FROM {{pre}}
+            WHERE vec_id <> {PROBE_ID}
+            ORDER BY {_micro("c16")} DESC, vec_id LIMIT {MRL_POOL})) pool
+        USING (vec_id)"""
+    return sql(
+        spark,
+        _top_k(
+            scored,
+            f"{_micro('c')} DESC, vec_id",
+            "vec_id, label, round(c16, 3) + 0.0D AS coarse_cosine,"
+            " round(c, 3) + 0.0D AS cosine",
+        ),
+        emb=emb,
+        pre=pre,
     )
 
 
@@ -2851,38 +2780,23 @@ def _mrl_funnel_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-corpus fallback, and as the per-candidate cost baseline the
     bench compares the store scan against."""
     ensure_utc(spark)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
-    probe = emb.where(F.col("vec_id") == PROBE_ID).select(
-        F.col("v").alias("pv")
-    )
-    pre = F.slice(F.col("v"), 1, MRL_DIMS)
-    ppre = F.slice(F.col("pv"), 1, MRL_DIMS)
-    c16 = _dot(pre, ppre) / (_norm(pre) * _norm(ppre))
-    mc16 = F.round(F.lit(1000000) * F.col("c16")).cast("bigint")
-    pool = (
-        emb.where(F.col("vec_id") != PROBE_ID)
-        # broadcast-safe: probe is a single query vector (1 row)
-        .crossJoin(F.broadcast(probe))
-        .withColumn("c16", c16)
-        .orderBy(mc16.desc(), F.col("vec_id"))
-        .limit(MRL_POOL)
-    )
-    scored = pool.withColumn(
-        "c",
-        _dot(F.col("v"), F.col("pv"))
-        / (_norm(F.col("v")) * _norm(F.col("pv"))),
-    )
-    mc = F.round(F.lit(1000000) * F.col("c")).cast("bigint")
-    topk = scored.orderBy(mc.desc(), F.col("vec_id")).limit(TOP_K)
-    w = Window.orderBy(mc.desc(), F.col("vec_id"))
-    return topk.select(
-        "vec_id",
-        "label",
-        (F.round("c16", 3) + F.lit(0.0)).alias("coarse_cosine"),
-        (F.round("c", 3) + F.lit(0.0)).alias("cosine"),
-        F.row_number().over(w).cast("bigint").alias("rnk"),
+    c16 = _cosine(f"slice(v, 1, {MRL_DIMS})", f"slice(pv, 1, {MRL_DIMS})")
+    # broadcast-safe: p is a single query vector (1 row)
+    pool = f"""
+        WITH e AS {_CORPUS}
+        SELECT /*+ BROADCAST(p) */ *, {c16} AS c16
+        FROM e CROSS JOIN (SELECT v AS pv FROM e WHERE vec_id = {PROBE_ID}) p
+        WHERE vec_id <> {PROBE_ID}
+        ORDER BY {_micro("c16")} DESC, vec_id LIMIT {MRL_POOL}"""
+    return sql(
+        spark,
+        _top_k(
+            f"SELECT *, {_cosine('v', 'pv')} AS c FROM ({pool})",
+            f"{_micro('c')} DESC, vec_id",
+            "vec_id, label, round(c16, 3) + 0.0D AS coarse_cosine,"
+            " round(c, 3) + 0.0D AS cosine",
+        ),
+        emb=load_table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -2993,12 +2907,10 @@ def sim_search_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus without seed centroids or probe row."""
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
-    cand = (
-        _probed_lists(with_cid(emb), probe_cids, "vec_id", "v")
-        .withColumn("scale", _sq8_scale().cast("double"))
-        .select("vec_id", "scale", _sq8_codes().alias("codes"))
+    cand = _sq8_cand(
+        _probed_lists(f"({with_cid(_CORPUS)})", probe_cids, "vec_id, v")
     )
-    return _sq8_topk(emb, cand, probe_v)
+    return sql(spark, _sq8_topk(cand, probe_v), emb=emb)
 
 
 @query("sim_search_ivf_sq8_partitioned", oracle=_IVF_SQ8_ORACLE)
@@ -3017,10 +2929,8 @@ def sim_search_ivf_sq8_partitioned(
     ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
-    cand = _probed_lists(
-        store, probe_cids, "vec_id", "scale", F.col("sq8_codes").alias("codes")
-    )
-    return _sq8_topk(emb, cand, probe_v)
+    cand = _probed_lists("{store}", probe_cids, "vec_id, scale, sq8_codes AS codes")
+    return sql(spark, _sq8_topk(cand, probe_v), emb=emb, store=store)
 
 
 # ---------------------------------------------------------------------------

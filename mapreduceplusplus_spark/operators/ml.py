@@ -556,15 +556,15 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.where(F.col("vec_id") % KNN_CLS_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("true_label"),
-        _as_double("embedding").alias("pv"),
-    ).withColumn("npv", _norm(F.col("pv")))
+        F.expr(_as_double("embedding")).alias("pv"),
+    ).withColumn("npv", F.expr(_norm("pv")))
     # norms hoisted per VECTOR (r14, bit-identical — the
     # sim_search_knn_join note): the interpreted fold runs
     # |corpus| + |probes| times instead of 2·|pairs|, and mod-25
     # probes make this the family's largest pair relation
     corpus = emb.where(F.col("vec_id") % KNN_CLS_MOD != 0).select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    ).withColumn("nv", _norm(F.col("v")))
+        "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
+    ).withColumn("nv", F.expr(_norm("v")))
     # broadcast-safe: probes is the documented bounded probe set
     # micro-cosine EXACTLY as mmr_rerank's `mc` device: cosine first,
     # then ×10⁶ — `(10⁶·dot)/norms` associates differently and can
@@ -574,7 +574,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.lit(1000000)
             * (
-                _dot(F.col("v"), F.col("pv"))
+                F.expr(_dot("v", "pv"))
                 / (F.col("nv") * F.col("npv"))
             )
         ).cast("bigint"),

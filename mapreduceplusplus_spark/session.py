@@ -41,8 +41,9 @@ Scale posture (100 TB design, local[cores] test):
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: the directory holding ``pyspark_graft_worker.py``; put on the Python
 #: workers' path so they find the module from any working directory
@@ -177,3 +178,26 @@ def qln_micro(x):
     from pyspark.sql import functions as F
 
     return F.floor(F.log(x.cast("double")) * 1000000).cast("bigint")
+
+
+def sql(spark: SparkSession, query: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(query, **frames)`` that leaves persisted frames cached.
+
+    Each ``{name}`` in ``query`` is replaced by a temporary view of
+    ``frames[name]``, and the views are dropped once the statement is
+    analyzed (the returned frame keeps its plan).  PySpark's own
+    ``spark.sql(query, **frames)`` drops its views through
+    ``Catalog.dropTempView``, which also uncaches the view's plan: passing
+    it a persisted frame (a ``sources/memo.py`` entry) would silently
+    drop that frame's cache.  Here the views leave the session catalog
+    without touching the cache.  ``query`` is a ``str.format`` template,
+    so a literal brace must be doubled."""
+    names = {k: f"_q{uuid.uuid4().hex}" for k in frames}
+    for k, df in frames.items():
+        df.createOrReplaceTempView(names[k])
+    try:
+        return spark.sql(query.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)

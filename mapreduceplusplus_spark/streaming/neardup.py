@@ -69,7 +69,7 @@ from mapreduceplusplus_spark.llm.dedup import (
     tokens,
 )
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.session import ensure_utc, sql
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
@@ -143,57 +143,46 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = memo(
         spark, sf_dir, "documents", "mh_bands", lambda: _minhash_bands(sh).persist()
     )
-    is_stream = F.col("doc_id") % INGEST_NEAR_MOD == 0
-    sb = bands.where(is_stream).select(
-        F.col("doc_id").alias("ds"), "band", "bkey"
-    )
-    ob = bands.select(
-        F.col("doc_id").alias("dd"),
-        "band",
-        "bkey",
-        (F.col("doc_id") % INGEST_NEAR_MOD != 0).alias("is_corpus"),
-    )
-    cand = (
-        sb.join(ob, ["band", "bkey"])
-        .where(F.col("is_corpus") | (F.col("dd") < F.col("ds")))
-        .select("ds", "dd", "is_corpus")
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("ds"), F.col("sh").alias("sha"))
-    sb2 = sh.select(F.col("doc_id").alias("dd"), F.col("sh").alias("shb"))
-    i = F.size(F.array_intersect("sha", "shb"))
-    ver = (
-        cand.join(sa, "ds")
-        .join(sb2, "dd")
-        .where(
-            i * F.lit(JACCARD_T_DEN)
-            >= F.lit(JACCARD_T_NUM) * (F.size("sha") + F.size("shb") - i)
-        )
-        .groupBy("ds")
-        .agg(
-            F.sum(F.when(F.col("is_corpus"), 1).otherwise(0))
-            .cast("long")
-            .alias("mc"),
-            F.sum(F.when(F.col("is_corpus"), 0).otherwise(1))
-            .cast("long")
-            .alias("ms"),
-        )
-    )
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .where(is_stream)
-        .select(F.col("doc_id").alias("ds"))
-    )
-    mc = F.coalesce(F.col("mc"), F.lit(0).cast("long"))
-    ms = F.coalesce(F.col("ms"), F.lit(0).cast("long"))
-    return base.join(ver, "ds", "left").select(
-        F.col("ds").alias("doc_id"),
-        F.expr(f"CAST(ds DIV {STREAM_BATCH_WIDTH} AS INT)").alias("batch_seq"),
-        mc.alias("matches_corpus"),
-        ms.alias("matches_stream"),
-        F.when(mc + ms > 0, F.lit("drop")).otherwise(F.lit("keep")).alias(
-            "verdict"
+    # one parsed statement over the memoized frames: one Catalyst
+    # analysis where DataFrame steps pay one each
+    return sql(
+        spark,
+        f"""
+        WITH cand AS (
+          SELECT DISTINCT ds, dd, is_corpus FROM (
+            SELECT doc_id AS ds, band, bkey FROM {{bands}}
+            WHERE doc_id % {INGEST_NEAR_MOD} = 0)
+          JOIN (
+            SELECT doc_id AS dd, band, bkey,
+                   doc_id % {INGEST_NEAR_MOD} <> 0 AS is_corpus
+            FROM {{bands}})
+          USING (band, bkey)
+          WHERE is_corpus OR dd < ds
         ),
+        ver AS (
+          SELECT ds,
+                 CAST(sum(CASE WHEN is_corpus THEN 1 ELSE 0 END) AS BIGINT) AS mc,
+                 CAST(sum(CASE WHEN is_corpus THEN 0 ELSE 1 END) AS BIGINT) AS ms
+          FROM cand
+          JOIN (SELECT doc_id AS ds, sh AS sha FROM {{sh}}) USING (ds)
+          JOIN (SELECT doc_id AS dd, sh AS shb FROM {{sh}}) USING (dd)
+          WHERE size(array_intersect(sha, shb)) * {JACCARD_T_DEN}
+                >= {JACCARD_T_NUM}
+                   * (size(sha) + size(shb) - size(array_intersect(sha, shb)))
+          GROUP BY ds
+        )
+        SELECT ds AS doc_id,
+               CAST(ds DIV {STREAM_BATCH_WIDTH} AS INT) AS batch_seq,
+               coalesce(mc, 0L) AS matches_corpus,
+               coalesce(ms, 0L) AS matches_stream,
+               CASE WHEN coalesce(mc, 0L) + coalesce(ms, 0L) > 0
+                    THEN 'drop' ELSE 'keep' END AS verdict
+        FROM (SELECT doc_id AS ds FROM {{docs}}
+              WHERE doc_id % {INGEST_NEAR_MOD} = 0)
+        LEFT JOIN ver USING (ds)""",
+        bands=bands,
+        sh=sh,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,30 +55,35 @@ OUTPUT_SCHEMA = (
 )
 
 
-def _advance(
-    state: tuple[int, float, int] | None, pdf: pd.DataFrame
-) -> tuple[int, float, int]:
+def _advance(state: tuple[int, float, int] | None, cols) -> tuple[int, float, int]:
     """The state transition: fold one batch of a single user's events
-    into (count, sum, max event time in µs).  Associative and
-    order-insensitive, so micro-batch boundaries cannot change the
-    final state."""
+    into (count, sum, max event time in µs).  ``cols`` maps ``ts`` (ns
+    timestamps or int64 ns) and ``value`` to equal-length columns: a
+    pandas frame, or one user run's numpy slices in the batch fold.
+    ``np.nansum`` skips nulls and sums pairwise, exactly as pandas'
+    ``Series.sum`` does.  Associative and order-insensitive, so
+    micro-batch boundaries cannot change the final state."""
     n, total, last_us = state if state is not None else (0, 0.0, 0)
-    ts_us = (pdf["ts"].astype("int64") // 1000).max()  # pandas ns → µs
+    value = cols["value"]
+    ts_us = (cols["ts"].astype("int64") // 1000).max()  # ns → µs
     return (
-        n + len(pdf),
-        total + float(pdf["value"].sum()),
+        n + len(value),
+        total + float(np.nansum(value)),
         max(last_us, int(ts_us)),
     )
 
 
-def _emit(user_id: int, state: tuple[int, float, int]) -> pd.DataFrame:
-    n, total, last_us = state
+def _emit(
+    user_ids: list[int], states: list[tuple[int, float, int]]
+) -> pd.DataFrame:
+    """One output frame, one row per ``(user id, state)`` pair."""
+    n, total, last_us = zip(*states)
     return pd.DataFrame(
         {
-            "user_id": [user_id],
-            "n_events": [n],
-            "sum_value": [total],
-            "last_ts": [pd.Timestamp(last_us, unit="us")],
+            "user_id": np.asarray(user_ids, dtype="int64"),
+            "n_events": np.asarray(n, dtype="int64"),
+            "sum_value": np.asarray(total, dtype="float64"),
+            "last_ts": pd.to_datetime(np.asarray(last_us, dtype="int64"), unit="us"),
         }
     )
 
@@ -107,8 +113,8 @@ def stream_stateful_running_total(spark: SparkSession, sf_dir: str) -> DataFrame
     parted = ev.repartition(F.col("user_id")).sortWithinPartitions("user_id")
 
     def run(batches) -> "pd.DataFrame":
-        import numpy as np
-
+        # each user run folds over numpy slices of the batch's columns,
+        # and each batch emits one frame of the runs it closed
         cur_key: int | None = None
         cur_state: tuple[int, float, int] | None = None
         for pdf in batches:
@@ -116,22 +122,28 @@ def stream_stateful_running_total(spark: SparkSession, sf_dir: str) -> DataFrame
             if not n:
                 continue
             uid = pdf["user_id"].to_numpy()
+            cols = {
+                "ts": pdf["ts"].astype("int64").to_numpy(),
+                "value": pdf["value"].to_numpy(),
+            }
             starts = np.flatnonzero(np.r_[True, uid[1:] != uid[:-1]])
             ends = np.r_[starts[1:], n]
-            done: list[pd.DataFrame] = []
+            keys: list[int] = []
+            states: list[tuple[int, float, int]] = []
             for s, e in zip(starts, ends):
                 k = int(uid[s])
-                sub = pdf.iloc[s:e]
+                sub = {c: a[s:e] for c, a in cols.items()}
                 if cur_state is not None and k == cur_key:
                     cur_state = _advance(cur_state, sub)
                     continue
                 if cur_state is not None:
-                    done.append(_emit(cur_key, cur_state))
+                    keys.append(cur_key)
+                    states.append(cur_state)
                 cur_key, cur_state = k, _advance(None, sub)
-            if done:
-                yield pd.concat(done, ignore_index=True)
+            if keys:
+                yield _emit(keys, states)
         if cur_state is not None:
-            yield _emit(cur_key, cur_state)
+            yield _emit([cur_key], [cur_state])
 
     out = parted.mapInPandas(run, schema=OUTPUT_SCHEMA)
     return out.select(
@@ -158,7 +170,7 @@ def stateful_running_total_stream(stream: DataFrame) -> DataFrame:
             cur = _advance(cur, pdf)
         if cur is not None:
             state.update(cur)
-            yield _emit(int(key[0]), cur)
+            yield _emit([int(key[0])], [cur])
 
     return stream.groupBy("user_id").applyInPandasWithState(
         update,
@@ -203,7 +215,7 @@ class RunningTotalProcessor(StatefulProcessor):
             cur = _advance(cur, pdf)
         if cur is not None:
             self._state.update(cur)
-            yield _emit(int(key[0]), cur)
+            yield _emit([int(key[0])], [cur])
 
     def close(self) -> None:
         pass

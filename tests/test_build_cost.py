@@ -2,16 +2,22 @@
 
 ``session.get_spark`` turns off PySpark's DataFrame debugging, which
 made every ``F.col``/``Column`` call record its Python call site
-through 10 extra py4j round trips.  The similarity queries render
-probe vectors as one parsed SQL literal, and the IVF probes attach the
-centroid-assignment argmax only where they filter or partition on it.
-None of this may change a plan or hide an error class.
+through 10 extra py4j round trips.  Each ``ann_serve`` probe and the
+IVF/SQ8 tails its siblings share are one parsed SQL statement over
+their input frames (``session.sql``), with the vector kernels
+``_as_double``/``_dot``/``_norm`` as SQL text: a Column-API lambda
+costs ~50 py4j commands per call, and a DataFrame step one Catalyst
+analysis.  None of this may change a plan or hide an error class: the
+SQL kernels optimize to the same expressions as their Column-API
+references (``tests/vector_ref.py``), and an AST lint keeps Column-API
+lambdas out of the probe modules.
 """
 
 from __future__ import annotations
 
+import ast
 import gc
-import re
+import pathlib
 import struct
 import threading
 
@@ -21,24 +27,33 @@ from pyspark.errors import ArithmeticException
 from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
+import mapreduceplusplus_spark
 from mapreduceplusplus_spark import registry
-from mapreduceplusplus_spark.llm.similarity import _sql_array
+from mapreduceplusplus_spark.llm import similarity as S
+from tests import vector_ref
 from tests.conftest import SF_DIR_ORACLE
+from tests.plan_norm import optimized_expr
 from tests.test_schema_memo import _jobs
 
-#: ceilings on the py4j commands the SECOND build of each ``ann_serve``
-#: query sends on the oracle dataset (the first build warms the index
-#: stores and memos), ~10% above the count measured when set.  Measured
-#: (before: debugging on, probe literals built with ``F.lit``, argmax
-#: analysed on every IVF-PQ probe → after): topk 596 → 286, hamming
-#: 1068 → 409, matryoshka 1253 → 495, ivfpq 1198 → 388, stream dedup
-#: 826 → 306.
+#: ceilings on the py4j commands the SECOND build of each query sends
+#: on the oracle dataset (the first build warms the index stores and
+#: memos), ~10% above the count measured when set.  The five
+#: ``ann_serve`` probes, measured (Column-API steps and lambdas → one
+#: SQL statement): topk 286 → 30, hamming 405 → 44, matryoshka
+#: 491 → 44, ivfpq 364 → 52, stream dedup 306 → 34.  Their siblings
+#: on the shared IVF/SQ8 tails: ivf_partitioned 297 → 50,
+#: ivf_sq8_partitioned 487 → 52, sq8_rerank 541 → 30, ivfpq_l2
+#: 369 → 52.
 BUILD_CMD_CEILING = {
-    "sim_search_topk": 315,
-    "sim_search_hamming_rerank": 450,
-    "sim_search_matryoshka_funnel": 545,
-    "sim_search_ivfpq": 427,
-    "stream_dedup_near": 337,
+    "sim_search_topk": 33,
+    "sim_search_hamming_rerank": 49,
+    "sim_search_matryoshka_funnel": 49,
+    "sim_search_ivfpq": 58,
+    "stream_dedup_near": 38,
+    "sim_search_ivf_partitioned": 56,
+    "sim_search_ivf_sq8_partitioned": 58,
+    "sim_search_sq8_rerank": 33,
+    "sim_search_ivfpq_l2": 58,
 }
 
 
@@ -65,12 +80,6 @@ def _py4j_commands(fn):
     return out, sent[0]
 
 
-def _optimized(spark, col) -> str:
-    df = spark.range(1).select(col.alias("a"))
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return re.sub(r"#\d+L?", "#", plan)
-
-
 def test_get_spark_turns_dataframe_debugging_off(spark):
     assert (
         spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
@@ -87,6 +96,59 @@ def test_warm_ann_serve_build_py4j_commands(spark, name):
     assert sent <= BUILD_CMD_CEILING[name], sent
 
 
+#: two double vectors and an int vector for the kernel parity checks,
+#: derived from ``id`` so the optimizer cannot fold the kernels away
+_VECS = (
+    "array(id + 0.5D, id - 1.25D, id + 3.0D) AS v",
+    "array(id + 2.0D, id + 0.1D, -0.0D) AS w",
+    "array(CAST(id AS INT) + 1, -2, 3) AS i",
+)
+
+
+@pytest.mark.parametrize(
+    "sql_form, column_form",
+    [
+        (S._as_double("i"), lambda: vector_ref._as_double("i")),
+        (S._dot("v", "w"), lambda: vector_ref._dot(F.col("v"), F.col("w"))),
+        (S._norm("v"), lambda: vector_ref._norm(F.col("v"))),
+    ],
+    ids=["as_double", "dot", "norm"],
+)
+def test_sql_kernel_optimizes_like_its_column_form(spark, sql_form, column_form):
+    """Each SQL kernel gives the same normalized optimized expression,
+    literal types included (a DECIMAL ``0.0`` accumulator would not),
+    and the same value as its Column-API reference."""
+    src = spark.range(1).selectExpr(*_VECS)
+    got, want = F.expr(sql_form), column_form()
+    assert optimized_expr(spark, got, src) == optimized_expr(spark, want, src)
+    (a,), (b,) = (src.select(c.alias("a")).collect()[0] for c in (got, want))
+    assert a == b
+
+
+#: Column-API higher-order functions whose Python lambdas cost ~50 py4j
+#: commands per call; the probe modules render them as SQL text
+_HOF = {"transform", "aggregate", "zip_with", "filter", "exists", "forall"}
+
+
+@pytest.mark.parametrize("module", ["llm/similarity.py", "streaming/neardup.py"])
+def test_probe_modules_build_no_column_api_lambdas(module):
+    path = pathlib.Path(mapreduceplusplus_spark.__file__).parent / module
+    bad = [
+        f"{module}:{node.lineno} F.{node.func.attr}"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in _HOF
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and any(
+            isinstance(a, ast.Lambda)
+            for a in [*node.args, *(k.value for k in node.keywords)]
+        )
+    ]
+    assert not bad, bad
+
+
 def test_warm_ivfpq_probe_builds_no_argmax_and_runs_no_job(spark):
     q = registry.queries()["sim_search_ivfpq"]
     q(spark, SF_DIR_ORACLE).collect()
@@ -101,9 +163,9 @@ LONGS = [2**63 - 1, -(2**63 - 1), 0, 7]
 
 
 def test_sql_array_matches_f_lit_doubles(spark):
-    parsed = F.expr(_sql_array(DOUBLES, "test vector"))
+    parsed = F.expr(S._sql_array(DOUBLES, "test vector"))
     lits = F.array(*[F.lit(x) for x in DOUBLES])
-    assert _optimized(spark, parsed) == _optimized(spark, lits)
+    assert optimized_expr(spark, parsed) == optimized_expr(spark, lits)
     (got,), (want,) = (
         spark.range(1).select(c.alias("a")).collect()[0] for c in (parsed, lits)
     )
@@ -116,11 +178,11 @@ def test_sql_array_matches_f_lit_doubles(spark):
     [("L", lambda x: F.lit(x).cast("bigint")), ("", F.lit)],
 )
 def test_sql_array_matches_f_lit_integers(spark, suffix, lit):
-    parsed = F.expr(_sql_array(LONGS, "test vector", suffix))
+    parsed = F.expr(S._sql_array(LONGS, "test vector", suffix))
     lits = F.array(*[lit(x) for x in LONGS])
-    assert _optimized(spark, parsed) == _optimized(spark, lits)
-    small = F.expr(_sql_array([1, -2], "test vector", suffix))
-    assert _optimized(spark, small) == _optimized(
+    assert optimized_expr(spark, parsed) == optimized_expr(spark, lits)
+    small = F.expr(S._sql_array([1, -2], "test vector", suffix))
+    assert optimized_expr(spark, small) == optimized_expr(
         spark, F.array(lit(1), lit(-2))
     )
 
@@ -128,7 +190,7 @@ def test_sql_array_matches_f_lit_integers(spark, suffix, lit):
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
 def test_sql_array_refuses_non_finite(bad):
     with pytest.raises(ValueError, match="test vector"):
-        _sql_array([0.5, bad], "test vector")
+        S._sql_array([0.5, bad], "test vector")
 
 
 def test_ansi_error_keeps_its_error_class(spark):

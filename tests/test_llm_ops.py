@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark import registry
+from mapreduceplusplus_spark.session import sql
 from mapreduceplusplus_spark.sources.tables import load_table
 from tests.conftest import SF_DIR_ORACLE
 
@@ -109,7 +110,8 @@ def test_lsh_topk_subset_of_exact_scores(spark):
     scorer computes for that vec_id, and candidates must come from the
     probe's bucket (recall < 1 is the ANN contract, correctness of
     scores is not negotiable)."""
-    from mapreduceplusplus_spark.llm.similarity import PROBE_ID, _as_double, _dot, _norm
+    from mapreduceplusplus_spark.llm.similarity import PROBE_ID
+    from tests.vector_ref import _as_double, _dot, _norm
     from mapreduceplusplus_spark.sources.tables import load_table
 
     qs = registry.queries()
@@ -163,12 +165,8 @@ def test_lsh_multiprobe_recall_at_least_single_probe(spark):
     assert all(m >= s for m, s in zip(m_cos, s_cos))
 
     # scores are REAL: cross-check against the exact scorer's cosine
-    from mapreduceplusplus_spark.llm.similarity import (
-        PROBE_ID,
-        _as_double,
-        _dot,
-        _norm,
-    )
+    from mapreduceplusplus_spark.llm.similarity import PROBE_ID
+    from tests.vector_ref import _as_double, _dot, _norm
     from mapreduceplusplus_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR_ORACLE, "embeddings").select(
@@ -278,7 +276,8 @@ def test_ivf_topk_scores_and_recall(spark):
     exact = qs["sim_search_topk"](spark, SF_DIR_ORACLE).collect()
     exact_cos = {r.vec_id: r.cosine for r in exact}
 
-    from mapreduceplusplus_spark.llm.similarity import PROBE_ID, _as_double, _dot, _norm
+    from mapreduceplusplus_spark.llm.similarity import PROBE_ID
+    from tests.vector_ref import _as_double, _dot, _norm
     from mapreduceplusplus_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR_ORACLE, "embeddings").select(
@@ -327,7 +326,7 @@ def test_ivf_sq8_composite_gate_subset_scores_and_recall_bound(spark):
     emb, with_cid, _, probe_cids = S._ivf_seed_lists(spark, SF_DIR_ORACLE)
     gate = {
         r.vec_id
-        for r in with_cid(emb).where(
+        for r in sql(spark, with_cid(S._CORPUS), emb=emb).where(
             F.col("cid").isin(*probe_cids)
             & (F.col("vec_id") != S.PROBE_ID)
         )
@@ -1136,12 +1135,10 @@ def test_ivf_kmeans_refined_scores_recall_and_movement(spark):
         IVF_CENTROIDS,
         IVF_KMEANS_ITERS,
         PROBE_ID,
-        _as_double,
-        _dot,
         _explode_micro,
         _lloyd_refine,
-        _norm,
     )
+    from tests.vector_ref import _as_double, _dot, _norm
     from mapreduceplusplus_spark.sources.tables import load_table
 
     qs = registry.queries()
@@ -1196,13 +1193,8 @@ def test_lsh_batch_equijoin_plan_scores_and_ranks(spark):
     (probe, candidate) pair shares a bucket, (c) every cosine equals
     the exact scorer's value for that pair, (d) per-probe ranks are
     contiguous from 1, and (e) the result is deterministic."""
-    from mapreduceplusplus_spark.llm.similarity import (
-        KNN_PROBE_MOD,
-        _as_double,
-        _dot,
-        _norm,
-        lsh_signature,
-    )
+    from mapreduceplusplus_spark.llm.similarity import KNN_PROBE_MOD
+    from tests.vector_ref import _as_double, _dot, _norm, lsh_signature
     from mapreduceplusplus_spark.sources.tables import load_table
 
     qs = registry.queries()
@@ -1355,12 +1347,8 @@ def test_ivfpq_exact_scores_recall_and_code_invariants(spark):
     exact = qs["sim_search_topk"](spark, SF_DIR_ORACLE).collect()
     exact_ids = {r.vec_id for r in exact}
 
-    from mapreduceplusplus_spark.llm.similarity import (
-        PROBE_ID,
-        _as_double,
-        _dot,
-        _norm,
-    )
+    from mapreduceplusplus_spark.llm.similarity import PROBE_ID
+    from tests.vector_ref import _as_double, _dot, _norm
     from mapreduceplusplus_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR_ORACLE, "embeddings").select(
@@ -1417,9 +1405,8 @@ def test_ivfpq_dot_and_l2_metrics(spark):
     from mapreduceplusplus_spark.llm.similarity import (
         PROBE_ID,
         TOP_K,
-        _as_double,
-        _dot,
     )
+    from tests.vector_ref import _as_double, _dot
     from mapreduceplusplus_spark.sources.tables import load_table
 
     qs = registry.queries()
@@ -1529,7 +1516,8 @@ def test_ivf_metric_scorers_genuinely_differ(spark):
         m: [
             r.vec_id
             for r in sorted(
-                _ivf_score_topk(cand, probe, m).collect(), key=lambda r: r.rnk
+                sql(spark, _ivf_score_topk("{cand}", probe, m), cand=cand).collect(),
+                key=lambda r: r.rnk,
             )
         ]
         for m in ("cosine", "dot", "l2")
@@ -1559,7 +1547,8 @@ def test_ivf_l2_exact_duplicate_of_probe_ranks_first(spark):
         "vec_id INT, label STRING, v ARRAY<DOUBLE>",
     )
     out = sorted(
-        _ivf_score_topk(cand, probe, "l2").collect(), key=lambda r: r.rnk
+        sql(spark, _ivf_score_topk("{cand}", probe, "l2"), cand=cand).collect(),
+        key=lambda r: r.rnk,
     )
     assert out[0].vec_id == 1, out
     assert out[0].l2_dist == 0.0 and not math.isnan(out[0].l2_dist), out
@@ -2249,10 +2238,8 @@ def test_hamming_packed_plan_rowidentical_to_zipwith(spark):
         spark.read.parquet(f"{SF_DIR_ORACLE}/embeddings.parquet")
         .select(
             "vec_id",
-            S._pack_sign_words(
-                S._as_double("embedding")
-            ).alias("words"),
-            S._as_double("embedding").alias("v"),
+            F.expr(S._pack_sign_words(S._as_double("embedding"))).alias("words"),
+            F.expr(S._as_double("embedding")).alias("v"),
         )
         .collect()
     )
@@ -2477,18 +2464,20 @@ def test_boilerplate_pair_plan_shape_and_consistency(spark):
 
 
 def test_lsh_signature_sql_form_equals_column_form(spark):
-    """``lsh_signature`` renders one parsed SQL string when given a
-    column NAME; it must give the same bucket id as the Column-API form
-    on every corpus vector, and more than one bucket."""
-    from mapreduceplusplus_spark.llm.similarity import _as_double, lsh_signature
+    """``lsh_signature`` renders one parsed SQL string; it must give
+    the same bucket id as the Column-API reference form
+    (``tests/vector_ref.py``) on every corpus vector, and more than one
+    bucket."""
+    from mapreduceplusplus_spark.llm.similarity import lsh_signature
+    from tests import vector_ref
 
     emb = load_table(spark, SF_DIR_ORACLE, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
+        "vec_id", vector_ref._as_double("embedding").alias("v")
     )
     both = emb.select(
         "vec_id",
-        lsh_signature("v").alias("b_sql"),
-        lsh_signature(F.col("v")).alias("b_col"),
+        F.expr(lsh_signature("v")).alias("b_sql"),
+        vector_ref.lsh_signature(F.col("v")).alias("b_col"),
     )
     bad = both.where(F.col("b_sql") != F.col("b_col")).count()
     assert bad == 0
@@ -2504,9 +2493,9 @@ def test_lsh_emb_passthrough_row_identical(spark):
     embb = (
         load_table(spark, SF_DIR_ORACLE, "embeddings")
         .select(
-            "vec_id", "label", S._as_double("embedding").alias("v")
+            "vec_id", "label", F.expr(S._as_double("embedding")).alias("v")
         )
-        .withColumn("bucket", S.lsh_signature("v"))
+        .withColumn("bucket", F.expr(S.lsh_signature("v")))
         .localCheckpoint(eager=True)
     )
     for fn in (S.sim_search_lsh, S.sim_search_lsh_multiprobe):
@@ -2515,6 +2504,23 @@ def test_lsh_emb_passthrough_row_identical(spark):
             map(tuple, fn(spark, SF_DIR_ORACLE, _emb=embb).collect())
         )
         assert base == shared, fn.__name__
+
+
+def test_shingle_filter_runs_the_tokenizer_once_below_the_exchange(spark):
+    """Catalyst pushes the shingle frame's non-empty filter below
+    ``_spread``'s round-robin exchange.  Filtering on the token count
+    (a document has a 3-shingle iff it has 3 tokens) keeps that filter
+    to one tokenizer run: the plan tokenizes at most twice (the
+    pushed-down filter and the projection above the exchange) and
+    builds no shingle set below the exchange."""
+    import mapreduceplusplus_spark.llm.dedup as D
+
+    docs = load_table(spark, SF_DIR_ORACLE, "documents").select("doc_id", "text")
+    frame = D._shingle_frame(D._spread(spark, docs))
+    plan = frame._jdf.queryExecution().optimizedPlan().toString()
+    _, below = plan.split("Repartition", 1)
+    assert plan.count("regexp_extract_all") <= 2, plan
+    assert "array_distinct" not in below, plan
 
 
 def test_minhash_bands_sql_form_equals_column_form(spark):

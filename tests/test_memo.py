@@ -171,3 +171,24 @@ def test_ivf_seed_memo_evicts_superseded_fingerprints(spark, tmp_path):
         assert M.memo(spark, other, "embeddings", "scalar", lambda: [5]) is kept
     finally:
         M.release()
+
+
+def test_session_sql_keeps_a_persisted_frame_cached(spark):
+    """``session.sql`` drops its temporary views without uncaching: a
+    persisted frame passed as ``{name}`` stays cached, the statement
+    reads it from the cache, and no view is left in the catalog.
+    PySpark's ``spark.sql(text, name=frame)`` uncaches the frame."""
+    from mapreduceplusplus_spark.session import sql
+
+    df = spark.range(10).selectExpr("id * 3 AS x").persist()
+    try:
+        df.count()
+        out = sql(spark, "SELECT x FROM {d} WHERE x > 1", d=df)
+        cached = "InMemoryRelation"
+        assert cached in out._jdf.queryExecution().optimizedPlan().toString()
+        again = df.select("x")._jdf.queryExecution().optimizedPlan().toString()
+        assert cached in again
+        assert sorted(r.x for r in out.collect()) == [3 * i for i in range(1, 10)]
+        assert not [t for t in spark.catalog.listTables() if t.name.startswith("_q")]
+    finally:
+        df.unpersist()

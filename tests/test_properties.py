@@ -719,9 +719,9 @@ def test_sq8_quantizer_matches_python_model(spark, vectors):
             [(i, v) for i, v in enumerate(vectors)],
             "vec_id long, v array<double>",
         )
-        .withColumn("scale", _sq8_scale().cast("double"))
-        .withColumn("codes", _sq8_codes())
-        .withColumn("codes8", _sq8_codes("tinyint"))
+        .withColumn("scale", F.expr(f"CAST({_sq8_scale()} AS DOUBLE)"))
+        .withColumn("codes", F.expr(_sq8_codes()))
+        .withColumn("codes8", F.expr(_sq8_codes("tinyint")))
     )
     got = {r.vec_id: (r.scale, list(r.codes), list(r.codes8)) for r in df.collect()}
     for i, v in enumerate(vectors):

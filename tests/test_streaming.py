@@ -298,6 +298,26 @@ def test_streaming_matches_batch_semantics(spark, stream_dirs):
     assert streamed == batched and len(batched) == 4
 
 
+def test_stateful_fold_with_runs_straddling_arrow_batches(spark):
+    """The batch fold carries a user's state across Arrow batches: with
+    7-record batches most user runs straddle a batch boundary, and the
+    result must equal the default-batch result exactly."""
+    from mapreduceplusplus_spark import registry
+    from tests.conftest import SF_DIR_ORACLE
+
+    q = registry.queries()["stream_stateful_running_total"]
+    want = sorted(map(tuple, q(spark, SF_DIR_ORACLE).collect()))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = sorted(map(tuple, q(spark, SF_DIR_ORACLE).collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert len(want) > 1
+    assert got == want
+
+
 def test_stateful_running_total_stream_matches_batch(spark, stream_dirs):
     """The applyInPandasWithState operator replayed over THREE
     micro-batches must land on exactly the state the batch-mode fold
