@@ -27,6 +27,7 @@ Scale design (the 100 TB contract):
 
 from __future__ import annotations
 
+import os
 from functools import reduce as _reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -34,10 +35,10 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import fixpoint, truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
+from mapreduceplusplus_spark.session import ensure_utc, sql
 from mapreduceplusplus_spark.sources.index_store import ensure_store
 from mapreduceplusplus_spark.sources.memo import memo
-from mapreduceplusplus_spark.sources.tables import load_table
+from mapreduceplusplus_spark.sources.tables import dataset_fingerprint, load_table
 
 #: near-dup decision threshold on word-trigram Jaccard (the synthetic
 #: corpus has a clean margin: planted pairs ≥ 0.9, background ≤ 0.3)
@@ -133,6 +134,19 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _shingle_frame(_spread(spark, docs)).persist()
 
     return memo(spark, sf_dir, "documents", "shingles", _build)
+
+
+def _doc_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band, bkey) MinHash bands of ``_doc_shingles``, persisted
+    once per session and dataset version: the one ``mh_bands`` memo
+    that every MinHash query reads."""
+    return memo(
+        spark,
+        sf_dir,
+        "documents",
+        "mh_bands",
+        lambda: _minhash_bands(_doc_shingles(spark, sf_dir)).persist(),
+    )
 
 
 def _shingle_frame(docs: DataFrame) -> DataFrame:
@@ -605,9 +619,7 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
     # persisted: the band table feeds both self-join sides
-    bands = memo(
-        spark, sf_dir, "documents", "mh_bands", lambda: _minhash_bands(docs).persist()
-    )
+    bands = _doc_bands(spark, sf_dir)
 
     a = bands.alias("a")
     b = bands.alias("b")
@@ -1837,19 +1849,143 @@ INGEST_NEAR_MOD = 25
 #: fixture prune measurable (a 20-doc batch touches ~240 of 512).
 _INGEST_NB = 32
 
-#: doc_id-hash buckets (``sk = doc_id mod NS``) in the persisted corpus
-#: SHINGLE store that sits next to the band index — the verify step's
-#: exact-Jaccard fetch joins candidate ids against THIS table, not the
-#: text-derived in-memory frame (VERDICT r11 "What's wrong #2": the
-#: verify previously re-shingled corpus text whenever the session cache
-#: was cold).  The store's LIFETIME is age-based (TTL GC; never swept
-#: while any process is actively adopting it — VERDICT r15 #1); the
-#: production shape is the same two write-once stores on cluster
-#: storage, where they outlive the job and probes are index-served
-#: across processes.  64
-#: dirs keeps the candidate-bucket prune measurable at fixture scale;
-#: at 100 TB size NS so one bucket ≈ one healthy parquet partition.
+#: doc_id buckets (sk = doc_id mod NS) of the near-dup store's shingle
+#: table, which serves the exact-Jaccard verify.  64 directories keep
+#: the candidate-bucket prune measurable at fixture scale; at 100 TB
+#: size NS so one bucket ≈ one healthy parquet partition.
 _INGEST_NS = 64
+
+#: the near-dup store: ``bands/`` partitioned by ``pk`` and ``shingles/``
+#: partitioned by ``sk`` under one directory, each row tagged with its
+#: origin ``src`` ('corpus' or 'stream').  ``dedup_incremental_ingest_near``
+#: and ``streaming/neardup.py`` write and probe it through the helpers
+#: below; the ``neardup_index`` fp carries both strings, so a layout edit
+#: names a new store.
+NEARDUP_BANDS = "doc_id BIGINT, band INT, bkey BIGINT, src STRING, pk INT"
+NEARDUP_SHINGLES = "doc_id BIGINT, sh ARRAY<STRING>, src STRING, sk INT"
+_PK = f"CAST(band * {_INGEST_NB} + pmod(bkey, {_INGEST_NB}) AS INT)"
+_SK = f"CAST(pmod(doc_id, {_INGEST_NS}) AS INT)"
+
+
+def neardup_append(d: str, src: str, sh: DataFrame, bands: DataFrame) -> None:
+    """Append ``(doc_id, sh)`` shingles and ``(doc_id, band, bkey)``
+    bands to the near-dup store at ``d`` with origin ``src``.  Each
+    table is repartitioned on its partition key first, so one append
+    writes one file per directory it touches."""
+    (
+        bands.selectExpr("doc_id", "band", "bkey", f"'{src}' AS src", f"{_PK} AS pk")
+        .repartition(32, "pk")
+        .write.mode("append")
+        .partitionBy("pk")
+        .parquet(os.path.join(d, "bands"))
+    )
+    (
+        sh.selectExpr("doc_id", "sh", f"'{src}' AS src", f"{_SK} AS sk")
+        .repartition(16, "sk")
+        .write.mode("append")
+        .partitionBy("sk")
+        .parquet(os.path.join(d, "shingles"))
+    )
+
+
+def _census(df: DataFrame, key: str) -> list[int]:
+    """The sorted distinct values of the partition key expression
+    ``key`` over ``df``: a bounded collect (at most 512 ``pk`` or 64
+    ``sk`` ints) that names the store partitions a probe reads."""
+    return sorted(r[0] for r in df.selectExpr(key).distinct().collect())
+
+
+def candidate_sks(cand: DataFrame) -> list[int]:
+    """The ``sk`` census of the store candidates ``cand``: the shingle
+    partitions ``neardup_verdicts`` reads."""
+    return _census(cand.selectExpr("dd AS doc_id"), _SK)
+
+
+def _store_part(
+    spark: SparkSession, d: str, table: str, schema: str, key: str, keys: list[int]
+) -> DataFrame:
+    """The store table ``d/table`` restricted to the ``key`` partitions
+    in ``keys``.  Spark prunes every other partition at file listing;
+    an empty ``keys`` reads none."""
+    return (
+        spark.read.schema(schema)
+        .parquet(os.path.join(d, table))
+        .where(F.col(key).isin(keys))
+    )
+
+
+def neardup_candidates(spark: SparkSession, d: str, bands: DataFrame) -> DataFrame:
+    """``(ds, dd, is_corpus)``: every store doc ``dd`` that shares a
+    (band, bkey) bucket with a doc ``ds`` of ``bands``.  Reads only the
+    store's band partitions named by the ``pk`` census of ``bands``."""
+    store = _store_part(
+        spark, d, "bands", NEARDUP_BANDS, "pk", _census(bands, _PK)
+    )
+    return sql(
+        spark,
+        """
+        SELECT DISTINCT b.doc_id AS ds, s.doc_id AS dd,
+               s.src = 'corpus' AS is_corpus
+        FROM {bands} b JOIN {store} s USING (band, bkey)""",
+        bands=bands,
+        store=store,
+    )
+
+
+def _verify_sql(partners: str) -> str:
+    """SQL rolling the candidate pairs ``cand`` (ds, dd, is_corpus) up
+    to ``(ds, mc, ms)``: per ``ds``, its corpus (``mc``) and stream
+    (``ms``) partners at Jaccard >= JACCARD_T, cross-multiplied in
+    integers.  ``ds`` shingles come from ``{sh}``, ``dd`` shingles
+    from the relation ``partners`` of ``(dd, shb)``."""
+    i = "size(array_intersect(sha, shb))"
+    return f"""
+        SELECT ds,
+               CAST(sum(CASE WHEN is_corpus THEN 1 ELSE 0 END) AS BIGINT) AS mc,
+               CAST(sum(CASE WHEN is_corpus THEN 0 ELSE 1 END) AS BIGINT) AS ms
+        FROM cand
+        JOIN (SELECT doc_id AS ds, sh AS sha FROM {{sh}}) USING (ds)
+        JOIN ({partners}) USING (dd)
+        WHERE {i} * {JACCARD_T_DEN}
+              >= {JACCARD_T_NUM} * (size(sha) + size(shb) - {i})
+        GROUP BY ds"""
+
+
+def neardup_verdicts(
+    spark: SparkSession,
+    d: str,
+    cand: DataFrame,
+    sh: DataFrame,
+    bands: DataFrame,
+    sks: list[int],
+) -> DataFrame:
+    """``(ds, mc, ms)`` for each doc of the batch ``sh``/``bands`` with a
+    verified near-dup (``_verify_sql``).  Its candidates are the store
+    candidates ``cand`` and the in-batch docs with a smaller id that
+    share a bucket (counted in ``ms``).  A store partner's shingles are
+    read from the store's ``sk`` partitions in ``sks``, the census of
+    ``cand.dd``; an in-batch partner's come from ``sh``."""
+    store = _store_part(spark, d, "shingles", NEARDUP_SHINGLES, "sk", sks)
+    partners = (
+        "SELECT doc_id AS dd, sh AS shb FROM {store}"
+        " UNION ALL SELECT doc_id AS dd, sh AS shb FROM {sh}"
+    )
+    return sql(
+        spark,
+        f"""
+        WITH cand AS (
+          SELECT ds, dd, is_corpus FROM {{cand}}
+          UNION
+          SELECT a.doc_id AS ds, b.doc_id AS dd, false AS is_corpus
+          FROM {{bands}} a JOIN {{bands}} b USING (band, bkey)
+          WHERE b.doc_id < a.doc_id
+        )
+        {_verify_sql(partners)}""",
+        cand=cand,
+        sh=sh,
+        bands=bands,
+        store=store,
+    )
 
 
 @query(
@@ -1904,120 +2040,38 @@ _INGEST_NS = 64
     """.format(cte=MINHASH_BAND_CTE),
 )
 def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental NEAR-dup ingest — the production shape of continuous
-    100 TB dedup, marrying ``dedup_incremental_ingest``'s stored-index
-    idiom (corpus text is NEVER rescanned) with ``dedup_minhash_near``'s
-    LSH banding and ``sim_search_ivf_partitioned``'s on-disk layout:
+    """Incremental near-dup ingest: today's batch (``doc_id %
+    INGEST_NEAR_MOD = 0``) judged against the corpus (every other doc)
+    without rescanning corpus text.
 
-    1. INDEX (write-once per dataset version, ``ensure_store``): TWO stores.
-       (a) the corpus docs' (doc_id, band, bkey) MinHash band table,
-       written as parquet PARTITIONED BY ``pk = band·NB + (bkey mod
-       NB)`` — one directory per band-key bucket, ``MINHASH_BANDS·NB``
-       = 512 directories; (b) the corpus SHINGLE store, PARTITIONED BY
-       ``sk = doc_id mod NS`` (64 dirs) — the verify step is served
-       from here, never from the text-derived shingle frame (VERDICT
-       r11; both stores outlive the process — ``sources/index_store.py``
-       — and sit on cluster storage in production).  Appending
-       tomorrow's accepted docs to either is a dynamic partition
-       overwrite; no rebuild.
-    2. PROBE: the incoming batch (``doc_id % INGEST_NEAR_MOD = 0``,
-       today's crawl) computes its own band table (one shuffle-free
-       Catalyst pass over batch text only), collects its ≤ 512
-       DISTINCT pk buckets (a bounded census collect, ≤ |partition
-       dirs| ints), and reads the index WHERE ``pk IN probe_pks``.
-       ``pk`` is a partition column, so Catalyst turns the predicate
-       into ``PartitionFilters`` — the unprobed buckets are pruned at
-       FILE LISTING time, never opened (the fixture batch touches
-       ~240 of 512; a single-doc probe touches ≤ 16).  Candidates =
-       batch ⋈ index on (band, bkey) — only signature-colliding docs
-       meet, candidate count ~ true near-pairs, never |batch|·|corpus|.
-    3. VERIFY: exact Jaccard on shingle sets — the corpus side fetched
-       from the persisted shingle store (sk-pruned to the candidate
-       ids' buckets via a second bounded census collect, ≤ NS ints),
-       the batch side shingled from today's crawl text: the verify
-       plan reads stored bytes for O(|candidate buckets|) and touches
-       corpus TEXT for zero docs (the CCNet verify shape; the one-time
-       store build is the only pass over corpus text).
-       In-batch near-dups come from the batch band table's self-join
-       (same keeper rule as ``dedup_exact``: lowest doc_id wins).
+    The corpus is written once per dataset version as the
+    ``neardup_index`` store (``ensure_store``; layout ``NEARDUP_BANDS``
+    and ``NEARDUP_SHINGLES``, ``src = 'corpus'``).  A call shingles and
+    bands only the batch, probes the store's band partitions named by
+    the batch's ``pk`` census and verifies the candidates by exact
+    Jaccard against the shingle partitions named by their ``sk``
+    census; Spark prunes every other partition at file listing.  The
+    batch frames, the candidates and the ``sk`` census are memoized per
+    dataset version, so a warm call reads only the shingle store.
 
-    Output mirrors ``dedup_incremental_ingest``: one row per batch doc
-    with ``dup_vs_corpus``, ``dup_in_batch`` (a verified near-dup
-    batch doc with a SMALLER doc_id exists — the greedy pairwise rule,
-    applied regardless of that doc's own verdict, so the decision is
-    local and deterministic) and the keep/drop ``verdict``.  Verdicts
-    are pinned EQUAL to the full-corpus ``dedup_minhash_near``
-    recompute restricted to the batch (banding is per-document, so the
-    split cannot change which pairs collide) — and, since the r14 md5
-    hash family made the banding engine-portable, the WHOLE verdict
-    flow (bands on both sides, corpus and in-batch candidate joins,
-    exact-Jaccard verify, keeper rule) is ALSO a DuckDB oracle: the
-    oracle replays the semantics directly over the tables; the
-    Spark side's persisted-index/partition-prune machinery is the
-    physical strategy under the same contract.  Reference heritage:
-    none (SURVEY §2 charter extension, dedup family)."""
-    import os as _os
-
+    One row per batch doc: ``dup_vs_corpus`` (a verified corpus
+    near-dup exists), ``dup_in_batch`` (a verified batch near-dup with
+    a smaller doc_id exists, whatever its own verdict) and the
+    keep/drop ``verdict``.  Equal, doc for doc, to ``dedup_minhash_near``
+    restricted to the batch and to ``stream_dedup_near``
+    (``matches_corpus > 0``, ``matches_stream > 0``)."""
     ensure_utc(spark)
-    pk = (F.col("band") * _INGEST_NB + F.pmod(F.col("bkey"), F.lit(_INGEST_NB))).cast(
-        "int"
-    )
-    is_batch = F.col("doc_id") % INGEST_NEAR_MOD == 0
+    batch = f"doc_id % {INGEST_NEAR_MOD} = 0"
 
-    # ---- 1. index build (write-once per dataset version and layout)
-    # Full-corpus shingles/bands are needed ONLY here (r16): before,
-    # the probe derived its batch frames by FILTERING the persisted
-    # full-corpus shingle/band caches, so a warm-index invocation
-    # still tokenized + 64-way-minhashed the whole corpus per batch —
-    # the exact full-text pass the stores exist to avoid (at 100 TB
-    # that is the difference between scanning the crawl increment and
-    # scanning the corpus).  Shingling and banding are per-document,
-    # so restriction commutes and the verdicts are unchanged.
-    from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
-
-    def _build_stores(d: str) -> None:
-        docs = _doc_shingles(spark, sf_dir)
-        bands = memo(
-            spark,
-            sf_dir,
-            "documents",
-            "mh_bands",
-            lambda: _minhash_bands(docs).persist(),
-        )
-        (
-            bands.where(~is_batch)
-            .withColumn("pk", pk)
-            # repartition ON pk so each task holds few buckets:
-            # total file count ≈ #directories, not #tasks ×
-            # #directories (each pk lands in exactly one of the 32
-            # writer tasks; at 100 TB raise the task count toward
-            # #directories)
-            .repartition(32, F.col("pk"))
-            .write.mode("overwrite")
-            .partitionBy("pk")
-            .parquet(_os.path.join(d, "bands"))
-        )
-        # the corpus SHINGLE store, doc_id-bucketed, written once
-        # next to the band index: the verify step's exact-Jaccard
-        # fetch is served from HERE (sk-pruned), so a cold process
-        # never re-shingles corpus text (VERDICT r11).  Appending
-        # tomorrow's accepted docs is the same dynamic partition
-        # overwrite as the band index.
-        (
-            docs.where(~is_batch)
-            .withColumn(
-                "sk",
-                F.pmod(F.col("doc_id"), F.lit(_INGEST_NS)).cast("int"),
-            )
-            .repartition(16, F.col("sk"))
-            .write.mode("overwrite")
-            .partitionBy("sk")
-            .parquet(_os.path.join(d, "shingles"))
+    def _build(d: str) -> None:
+        neardup_append(
+            d,
+            "corpus",
+            _doc_shingles(spark, sf_dir).where(f"NOT ({batch})"),
+            _doc_bands(spark, sf_dir).where(f"NOT ({batch})"),
         )
 
-    # a later call or process adopts the finished store; a partial or
-    # vanished one is rebuilt instead of failing at action time
-    index_dir = ensure_store(
+    d = ensure_store(
         "neardup_index",
         sf_dir,
         (
@@ -2027,155 +2081,39 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
             MINHASH_R,
             _INGEST_NB,
             _INGEST_NS,
+            NEARDUP_BANDS,
+            NEARDUP_SHINGLES,
         ),
-        _build_stores,
+        _build,
     )
 
-    # ---- 2. probe — batch-only text pass: shingle + band ONLY
-    # today's crawl (the 1/INGEST_NEAR_MOD slice), never the corpus
-    batch_sh = memo(
-        spark,
-        sf_dir,
-        "documents",
+    def _memo(tag: str, build):
+        return memo(spark, sf_dir, "documents", tag, build)
+
+    docs = load_table(spark, sf_dir, "documents")
+    sh = _memo(
         "ingest_batch_shingles",
         lambda: _shingle_frame(
-            _spread(
-                spark,
-                load_table(spark, sf_dir, "documents")
-                .where(is_batch)
-                .select("doc_id", "text"),
-            )
+            _spread(spark, docs.where(batch).select("doc_id", "text"))
         ).persist(),
     )
-    batch_bands = memo(
+    bands = _memo("ingest_batch_bands", lambda: _minhash_bands(sh).persist())
+    cand = _memo(
+        "ingest_cand", lambda: neardup_candidates(spark, d, bands).persist()
+    )
+    sks = _memo("ingest_sks", lambda: candidate_sks(cand))
+    return sql(
         spark,
-        sf_dir,
-        "documents",
-        "ingest_batch_bands",
-        lambda: _minhash_bands(batch_sh).withColumn("pk", pk).persist(),
-    )
-    # bounded census collect: ≤ MINHASH_BANDS·NB = 512 ints — memoized
-    # per dataset version alongside the persisted frame it reads, so a
-    # warm invocation runs zero census jobs (ADVICE r12)
-    probe_pks = memo(
-        spark,
-        sf_dir,
-        "documents",
-        "ingest_probe_pks",
-        lambda: sorted(
-            r[0] for r in batch_bands.select("pk").distinct().collect()
-        ),
-    )
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .where(is_batch)
-        .select("doc_id")
-    )
-    shingle_dir = _os.path.join(index_dir, "shingles")
-    if not probe_pks:
-        # no shingled batch docs → nothing can collide; all keep
-        return base.select(
-            "doc_id",
-            F.lit(False).alias("dup_vs_corpus"),
-            F.lit(False).alias("dup_in_batch"),
-            F.lit("keep").alias("verdict"),
-        )
-    # explicit schema: survives an EMPTY index (zero partition dirs
-    # leave nothing to infer from), and skips the footer-sampling pass
-    idx = (
-        spark.read.schema("doc_id BIGINT, band INT, bkey BIGINT, pk INT")
-        .parquet(_os.path.join(index_dir, "bands"))
-        .where(F.col("pk").isin(probe_pks))
-    )
-    # persisted (memoized like batch_bands): the candidate frame feeds
-    # the bounded sk census below AND the verify join — without the
-    # persist the band probe join would run twice
-    cand_corpus = memo(
-        spark,
-        sf_dir,
-        "documents",
-        "ingest_cand_corpus",
-        lambda: (
-            batch_bands.select(F.col("doc_id").alias("db"), "band", "bkey")
-            .join(
-                idx.select(F.col("doc_id").alias("dc"), "band", "bkey"),
-                ["band", "bkey"],
-            )
-            .select("db", "dc")
-            .dropDuplicates(["db", "dc"])
-            .persist()
-        ),
-    )
-    cand_batch = (
-        batch_bands.alias("a")
-        .join(
-            batch_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("db"), F.col("a.doc_id").alias("dc"))
-        .dropDuplicates(["db", "dc"])
-    )
-
-    # ---- 3. exact verify (shingles fetched for candidate ids only).
-    # The CORPUS side of the fetch reads the persisted shingle store,
-    # sk-pruned to the candidate ids' buckets (a second bounded census
-    # collect, ≤ _INGEST_NS ints) — the verify plan never re-shingles
-    # corpus text (the store build is the only text pass).  The BATCH
-    # side shingles today's crawl, which is by definition the text
-    # being scanned.
-    probe_sks = memo(
-        spark,
-        sf_dir,
-        "documents",
-        "ingest_probe_sks",
-        lambda: sorted(
-            r[0]
-            for r in cand_corpus.select(
-                F.pmod(F.col("dc"), F.lit(_INGEST_NS)).cast("int").alias("sk")
-            )
-            .distinct()
-            .collect()
-        ),
-    )
-    corpus_sh = (
-        spark.read.schema("doc_id BIGINT, sh ARRAY<STRING>, sk INT")
-        .parquet(shingle_dir)
-        .where(F.col("sk").isin(probe_sks))
-    )
-
-    def _verified(cand: DataFrame, dc_sh: DataFrame) -> DataFrame:
-        pairs = cand.join(
-            batch_sh.select(F.col("doc_id").alias("db"), F.col("sh").alias("sh_b")),
-            "db",
-        ).join(
-            dc_sh.select(F.col("doc_id").alias("dc"), F.col("sh").alias("sh_c")),
-            "dc",
-        )
-        inter = F.size(F.array_intersect("sh_b", "sh_c"))
-        union = F.size("sh_b") + F.size("sh_c") - inter
-        return (
-            pairs.where(inter / union >= JACCARD_T)
-            .select(F.col("db").alias("doc_id"))
-            .distinct()
-        )
-
-    dup_c = _verified(cand_corpus, corpus_sh).withColumn("dc_flag", F.lit(True))
-    dup_b = _verified(cand_batch, batch_sh).withColumn("db_flag", F.lit(True))
-    dup_corpus = F.coalesce(F.col("dc_flag"), F.lit(False))
-    dup_batch = F.coalesce(F.col("db_flag"), F.lit(False))
-    return (
-        base.join(dup_c, "doc_id", "left")
-        .join(dup_b, "doc_id", "left")
-        .select(
-            "doc_id",
-            dup_corpus.alias("dup_vs_corpus"),
-            dup_batch.alias("dup_in_batch"),
-            F.when(dup_corpus | dup_batch, "drop")
-            .otherwise("keep")
-            .alias("verdict"),
-        )
+        f"""
+        SELECT doc_id,
+               coalesce(mc, 0) > 0 AS dup_vs_corpus,
+               coalesce(ms, 0) > 0 AS dup_in_batch,
+               CASE WHEN coalesce(mc + ms, 0) > 0
+                    THEN 'drop' ELSE 'keep' END AS verdict
+        FROM (SELECT doc_id FROM {{docs}} WHERE {batch})
+        LEFT JOIN (SELECT ds AS doc_id, mc, ms FROM {{ver}}) USING (doc_id)""",
+        docs=docs,
+        ver=neardup_verdicts(spark, d, cand, sh, bands, sks),
     )
 
 

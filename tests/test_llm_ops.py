@@ -1933,7 +1933,15 @@ def _store_layouts():
     return {
         "dedup_incremental_ingest_near": (
             "neardup_index",
-            (D.MINHASH_K, D.MINHASH_BANDS, D.MINHASH_R, D._INGEST_NB, D._INGEST_NS),
+            (
+                D.MINHASH_K,
+                D.MINHASH_BANDS,
+                D.MINHASH_R,
+                D._INGEST_NB,
+                D._INGEST_NS,
+                D.NEARDUP_BANDS,
+                D.NEARDUP_SHINGLES,
+            ),
         ),
         "dedup_semdedup_incremental": ("semingest_index", ()),
         "sim_search_ivf_partitioned": ("ivf_store", ivf),

@@ -176,6 +176,17 @@ def test_second_build_of_a_benchmark_query_runs_no_job(spark, name):
     assert n == 0
 
 
+def test_second_build_of_ingest_near_lists_only_the_shingle_store(spark):
+    """``dedup_incremental_ingest_near`` memoizes its batch frames, its
+    store candidates and their ``sk`` census, and reads the band store
+    only inside the candidates' memo: a rebuild launches at most one
+    job, the listing of the shingle store's partition directories."""
+    q = registry.queries()["dedup_incremental_ingest_near"]
+    q(spark, SF_DIR_ORACLE)
+    _, n = _jobs(spark, lambda: q(spark, SF_DIR_ORACLE))
+    assert n <= 1
+
+
 def test_memo_hit_gives_the_cold_schema_and_plan(spark, tmp_path):
     """Plain file and a partitioned directory (the IVF index layout:
     the partition column comes from directory names)."""

@@ -2163,11 +2163,13 @@ def test_stream_dedup_near_streaming_matches_batch(spark, stream_dirs):
     """r16: the continuous-ingest near-dedup pipeline (foreachBatch
     probe/append against the persisted band+shingle stores) produces
     EXACTLY the registered ``stream_dedup_near`` batch replay — fed the
-    same documents in the same 3 micro-batches, the union of per-batch
+    same documents in the same 4 micro-batches, the union of per-batch
     reports equals the batch form row-for-row, including a near-pair
-    SPLIT ACROSS a micro-batch boundary (doc 425 vs doc 25) and the
+    SPLIT ACROSS a micro-batch boundary (doc 425 vs doc 25), the
     greedy pairwise rule (doc 450 matches BOTH earlier T2 variants,
-    425's own 'drop' verdict notwithstanding)."""
+    425's own 'drop' verdict notwithstanding) and a micro-batch with no
+    candidate at all (doc 600: its empty ``sk`` census reads no
+    shingle partition)."""
     import itertools
     import os
     import shutil
@@ -2205,6 +2207,7 @@ def test_stream_dedup_near_streaming_matches_batch(spark, stream_dirs):
         200: variant(T1, spare[1]),  # batch 1, dup vs CORPUS doc 3
         425: variant(T2, spare[2]),  # batch 2, dup vs 25 (cross-boundary)
         450: variant(T2, spare[3]),  # batch 2, dup vs 25 AND 425 (greedy)
+        600: chunk(7),              # batch 3, collides with nothing
     }
     rows = [
         (i, " ".join(ws), "en", "synthetic", len(" ".join(ws)))
@@ -2233,10 +2236,11 @@ def test_stream_dedup_near_streaming_matches_batch(spark, stream_dirs):
             (200, 1, 1, 0, "drop"),
             (425, 2, 0, 1, "drop"),
             (450, 2, 0, 2, "drop"),
+            (600, 3, 0, 0, "keep"),
         }
         assert batch_rows == expected
 
-        # ---- real streaming run: corpus store, then 3 micro-batches
+        # ---- real streaming run: corpus store, then 4 micro-batches
         corpus = spark.createDataFrame(
             [(i, " ".join(texts[i])) for i in [1, 2, 3, 4]],
             "doc_id BIGINT, text STRING",
@@ -2246,7 +2250,7 @@ def test_stream_dedup_near_streaming_matches_batch(spark, stream_dirs):
         src, chk = stream_dirs
         src = os.path.join(src, "neardup")
         os.makedirs(src, exist_ok=True)
-        batches = [[0, 25, 50, 75], [200], [425, 450]]
+        batches = [[0, 25, 50, 75], [200], [425, 450], [600]]
 
         def write_file(ids, n):
             spark.createDataFrame(
@@ -2268,6 +2272,8 @@ def test_stream_dedup_near_streaming_matches_batch(spark, stream_dirs):
             write_file(batches[1], 1)
             q.processAllAvailable()
             write_file(batches[2], 2)
+            q.processAllAvailable()
+            write_file(batches[3], 3)
             q.processAllAvailable()
         finally:
             q.stop()
