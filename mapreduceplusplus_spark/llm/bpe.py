@@ -55,7 +55,6 @@ from pyspark.sql import types as T
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
@@ -279,7 +278,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the IDENTICAL rounds as SQL CTEs (island re-segmentation,
     module docstring) so every learned merge is hash-checked, not just
     counted."""
-    ensure_utc(spark)
     merges, _seg = _bpe_state(spark, sf_dir)
     return merges
 
@@ -316,7 +314,6 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences.  At 100 TB the pieces relation stays vocab-sized
     (broadcastable in practice; left as a shuffle join here so skewed
     giant vocabularies also work)."""
-    ensure_utc(spark)
     _merges, seg = _bpe_state(spark, sf_dir)
     pieces = seg.groupBy("w").agg(F.count("*").cast("bigint").alias("np"))
     from mapreduceplusplus_spark.llm.dedup import tokens
@@ -365,7 +362,6 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``text_token_count_bpe``, rolled up to |languages| rows; the ratio
     is one integer floor division (DECIMAL(38,0) Spark / HUGEINT
     oracle — the cles_ppm pairing), no float anywhere."""
-    ensure_utc(spark)
     _merges, seg = _bpe_state(spark, sf_dir)
     pieces = seg.groupBy("w").agg(F.count("*").cast("bigint").alias("np"))
     from mapreduceplusplus_spark.llm.dedup import tokens

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import fixpoint, truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, sql
+from mapreduceplusplus_spark.session import sql
 from mapreduceplusplus_spark.sources.index_store import ensure_store
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import dataset_fingerprint, load_table
@@ -198,7 +198,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     an *arbitrary* row, nondeterministic under partitioning).  Plans as a
     single hash-partitioned window; at scale this is one shuffle on the
     dedup key, no global sort."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -291,7 +290,6 @@ def dedup_ngram_jaccard(
     ``prefix=False`` disables steps 2 and 4 (index EVERYTHING — the
     brute-force inverted index); ``test_dedup_prefix_invariance`` pins
     filtered == unfiltered, the empirical check of losslessness."""
-    ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
     return _ngram_pairs(
         docs,
@@ -616,7 +614,6 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation produced identical values but paid a full shuffle of
     the exploded posting list; the per-row pass keeps the signature
     stage shuffle-FREE (~40% faster cold at sf0.1, r7 measurement)."""
-    ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
     # persisted: the band table feeds both self-join sides
     bands = _doc_bands(spark, sf_dir)
@@ -715,7 +712,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming.  Same LSH-shaped scale profile as MinHash (band join, no
     cross product); signature is 8 bytes/doc, the cheapest of the
     sketch family."""
-    ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = docs.select(
         "doc_id",
@@ -820,7 +816,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/similarity.py): bucket join instead of all-pairs.  Norms are
     precomputed BEFORE the join (narrow), so the quadratic stage does
     one zip_with per pair."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1043,7 +1038,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Labels converge to the component minimum regardless of join
     schedule, so the result is deterministic."""
-    ensure_utc(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.unionByName(
         pairs.select(
@@ -1107,7 +1101,6 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash band join (``dedup_minhash_near``) using eval docs as the
     probe side.
     """
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select(
         "doc_id",
@@ -1179,7 +1172,6 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is left to the consumer, because a rounded ratio can land on an
     exact representable tie (1/16 = .0625) where engines' tie-breaking
     diverges."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.col("text")).alias("w")
     ).where(F.size("w") > 0)
@@ -1240,7 +1232,6 @@ def join_fuzzy_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: explode → df census (map-side combined) → broadcast df
     back → per-name rank window (hash-partitioned by name) → prefix
     postings equi-join → exact verify on survivors only."""
-    ensure_utc(spark)
     names = (
         load_table(spark, sf_dir, "part")
         .select(F.col("p_name").alias("name"))
@@ -1416,7 +1407,6 @@ def text_eval_overlap_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction) → one DISTINCT micro-rollup, then a broadcast LEFT
     join against the training gram stream — the 100-TB training scan
     never shuffles; per-doc rollup partial-aggregates map-side."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.col("text")).alias("w")
     ).where(F.size("w") >= 4)
@@ -1502,7 +1492,6 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles one day's batch, and corpus text is never touched.  This
     is why incremental dedup at 100 TB costs minutes, not a full-
     corpus rescan."""
-    ensure_utc(spark)
     from pyspark.sql import Window as _W
 
     fp = load_table(spark, sf_dir, "documents").select(
@@ -1590,7 +1579,6 @@ def dedup_containment_quotes(
     hash-agg; candidate volume ≈ Σ_rare-key df_prefix·df_full stays
     near the true-pair count.  Reference heritage: none (the reference
     engine has no dedup at all, SURVEY §2 charter extension)."""
-    ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
     # persisted: the hashed posting table feeds THREE branches (the df
     # census, the per-doc rank join, and the full host-side postings)
@@ -1724,7 +1712,6 @@ def pipeline_dedup_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the composition adds a broadcast hash join plus one
     doc_id-keyed join.  Reference heritage: none (SURVEY §2 charter
     extension, composed-pipeline family)."""
-    ensure_utc(spark)
     clusters = dedup_cluster_canonical(spark, sf_dir).select(
         "doc_id", "cluster_id"
     )
@@ -1813,7 +1800,6 @@ def dedup_decontaminate_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast side of the anti-join, so the training scan never
     shuffles for the final filter.  Reference heritage: none (SURVEY
     §2 charter extension, dedup family)."""
-    ensure_utc(spark)
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     a_eval = pairs.where(
         (F.col("doc_a") % EVAL_MOD == 0) & (F.col("doc_b") % EVAL_MOD != 0)
@@ -2060,7 +2046,6 @@ def dedup_incremental_ingest_near(spark: SparkSession, sf_dir: str) -> DataFrame
     keep/drop ``verdict``.  Equal, doc for doc, to ``dedup_minhash_near``
     restricted to the batch and to ``stream_dedup_near``
     (``matches_corpus > 0``, ``matches_stream > 0``)."""
-    ensure_utc(spark)
     batch = f"doc_id % {INGEST_NEAR_MOD} = 0"
 
     def _build(d: str) -> None:
@@ -2260,7 +2245,6 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same clean-margin contract as ``dedup_embedding_cosine``'s
     0.4.  Reference heritage: none (SURVEY §2 charter extension,
     dedup family)."""
-    ensure_utc(spark)
     x = _semdedup_gate(spark, sf_dir)
     # within-cluster pairs via ONE Arrow applyInPandas per cluster: a
     # BLAS matmul of the row-normalized member matrix, row-blocked at
@@ -2433,7 +2417,6 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the same clean-margin float-threshold contract as
     ``dedup_semdedup``.  Reference heritage: none (SURVEY §2 charter
     extension, dedup family)."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.sources.tables import dataset_fingerprint
 
     x = _semdedup_gate(spark, sf_dir)
@@ -2465,8 +2448,12 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: x.where(is_batch).persist(),
     )
     # bounded census collect: ≤ k cluster ids
-    probe_cids = sorted(
-        r[0] for r in batch.select("cid").distinct().collect()
+    probe_cids = memo(
+        spark,
+        sf_dir,
+        "embeddings",
+        "semingest_cids",
+        lambda: sorted(r[0] for r in batch.select("cid").distinct().collect()),
     )
     if not probe_cids:
         return batch.select(
@@ -2543,7 +2530,6 @@ def dq_duplication_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled.  The ppm rate is a BIGINT floor division (engine-exact);
     at 100 TB the report is ~#sources rows.  Reference heritage: none
     (SURVEY §2 charter extension, dq family)."""
-    ensure_utc(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source", tokens(F.col("text")).alias("w"))
@@ -2679,7 +2665,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verify join shuffles only candidate-pair grams.  Hot
     boilerplate fingerprints are the skew risk — AQE skew-split
     backstops, and the W knob thins exactly them."""
-    ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     k, w = SUBSTR_K, SUBSTR_W
     wnd = Window.partitionBy("doc_id").orderBy("pos")
@@ -2868,7 +2853,6 @@ def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, merged intervals) — deliberately out of scope here since the
     fixture pipeline consumes counts, not rewritten text; the
     accounting is the verifiable part)."""
-    ensure_utc(spark)
     k = SUBSTR_K
     spans = (
         dedup_substring_spans(spark, sf_dir)
@@ -2971,7 +2955,6 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     {len(_CURVE_PCTS)}-row literal grid and one hash aggregate over
     the (tiny) surviving pair relation.  Reference heritage: none
     (SURVEY §2 charter extension, dedup family)."""
-    ensure_utc(spark)
     docs = _doc_shingles(spark, sf_dir)
     raw = _ngram_pairs(
         docs,
@@ -3042,7 +3025,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-bounded, hash-partitioned on the gram key; no sort, no
     window, no driver state.  Reference heritage: none (SURVEY §2
     charter extension, text-analysis family)."""
-    ensure_utc(spark)
     sh = _doc_shingles(spark, sf_dir).select(
         "doc_id", F.explode("sh").alias("s")
     )
@@ -3177,7 +3159,6 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is scan-bound with two sub-linear exchanges.
     Reference heritage: none (SURVEY §2 charter extension, dedup
     family)."""
-    ensure_utc(spark)
     e = _url_canon_sql("spark")
     pages = (
         load_table(spark, sf_dir, "documents")
@@ -3263,7 +3244,6 @@ def dedup_mirror_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     small by the min-types gate, so the agg is the word-count shape.
     Reference heritage: none (SURVEY §2 charter extension, dedup
     family)."""
-    ensure_utc(spark)
     toks = F.array_distinct(
         F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), 0)
     )
@@ -3385,7 +3365,6 @@ def dedup_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; everything shuffles at most twice, both on bounded keys.
     Reference heritage: none (SURVEY §2 charter extension, dedup
     family)."""
-    ensure_utc(spark)
     W, MINDF = BOILER_SEG_TOKENS, BOILER_MIN_DF
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -3540,7 +3519,6 @@ def dedup_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     by document length, the same per-doc fold every fingerprint op in
     the family runs.  Reference heritage: none (SURVEY §2 charter
     extension, dedup family)."""
-    ensure_utc(spark)
     W, MINDF = BOILER_SEG_TOKENS, BOILER_MIN_DF
     docs = (
         load_table(spark, sf_dir, "documents")

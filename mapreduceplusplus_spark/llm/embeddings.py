@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, floor_div_sql
+from mapreduceplusplus_spark.session import floor_div_sql
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: DuckDB floor-division fragment rendered by the SHARED helper, so an
@@ -81,7 +81,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order ``transform``/``aggregate`` stay in codegen.  At
     100 TB this runs as a projection inside whatever scan already
     touches the vectors."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dbl = F.transform("embedding", lambda x: x.cast("double"))
     scale = F.array_max(F.transform("embedding", lambda x: F.abs(x.cast("double"))))
@@ -150,7 +149,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels|·|dims| rows total.  Dimension order is restored by
     sorting the collected (pos, sum) structs — never by assuming
     arrival order."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
     ex = emb.select(
         "label", F.posexplode("embedding").alias("pos", "val")
@@ -235,7 +233,6 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     micro = _PCA_MICRO
 
@@ -373,7 +370,6 @@ def embedding_outlier_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-vector fold — vectors shuffle once, as (vec, dim) cells.
     Reference heritage: none (SURVEY §2 charter extension, embedding
     family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
@@ -500,7 +496,6 @@ def embedding_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded broadcast set), not the full corpus as queries.
     Reference heritage: none (SURVEY §2 charter extension,
     embedding family)."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     from mapreduceplusplus_spark.llm.similarity import _as_double, _dot, _norm

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -71,7 +70,6 @@ def multimodal_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join lets Catalyst/AQE pick shuffled-hash or sort-merge — and
     still auto-broadcasts if runtime stats show one side is genuinely
     small."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     enriched = (
@@ -229,7 +227,6 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes are rendered to real P6 images by ``encode_ppm``, then the
     REAL decoder parses headers and computes per-channel pixel means.
     One metadata row per document."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -320,7 +317,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document: frame count, total frame bytes, first/last frame
     timestamps.  Exercises the full 1→N Arrow path plus a downstream
     shuffle over the fanned-out rows."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -438,7 +434,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bytes rendered to P6 by ``encode_ppm``): real nearest-neighbor
     resample to 224×224, surfaced as (doc_id, dims, payload size + md5)
     so the result is hashable and deterministic."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -460,7 +455,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``array<float>`` of real pixel statistics, surfaced as (doc_id,
     dim, norm, first value) — the column shape the similarity/dedup
     operators consume."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -530,7 +524,6 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-frame container walk, audio = PCM framing) with the same
     production Spark shape: opaque binary column + narrow Arrow
     decode."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -610,7 +603,6 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAD (mean as an exact integer floor to stay hash-stable).  One
     Arrow stage + one hash agg — same scale shape as the other
     multimodal rows."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -706,7 +698,6 @@ def multimodal_image_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per image: its hash, candidate-partner count, and verified
     near-dup count (0 for most of this text-derived corpus — the
     constructed-pair test is where recall is pinned)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: context window (tokens) for concat-then-chunk packing
@@ -93,7 +92,6 @@ def pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket census.
 
     Oracle: the definitionally-equivalent single global cumsum."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _ntok().alias("n_tokens")
     )
@@ -172,7 +170,6 @@ def corpus_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned by shard — no unpartitioned window, no driver
     state.  Growth-stable ordering: adding docs never swaps the
     relative order of existing pairs (their hash keys don't change)."""
-    ensure_utc(spark)
     # the Knuth multiply rides in DECIMAL(38,0) (HUGEINT on the DuckDB
     # side): doc_id * 2654435761 passes 2^63 at doc_id ~3.47e9, well
     # inside a 100 TB corpus — same overflow class bp_ratio_halfup
@@ -249,7 +246,6 @@ def pack_bins_nextfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     step — exponentially slower than the fold but definitionally the
     same recurrence (all shards advance in lock-step, depth =
     max rows/shard)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"doc_id % {_BIN_SHARDS}").cast("bigint").alias("shard"),
@@ -346,7 +342,6 @@ def mixture_lang_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cross join for the totals — nothing else touches the
     corpus.  Under-represented languages get weight_ppm > 1e6
     (upsample), over-represented < 1e6 (downsample)."""
-    ensure_utc(spark)
     return _lang_weights(load_table(spark, sf_dir, "documents")).select(
         "lang",
         "n_docs",
@@ -403,7 +398,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast total — nothing else touches the corpus.
     Reference heritage: none (SURVEY §2 charter extension, mixture
     family)."""
-    ensure_utc(spark)
     w = _lang_weights(load_table(spark, sf_dir, "documents"))
     s = w.select(
         "lang",
@@ -484,7 +478,6 @@ def pack_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum.  DuckDB ``range`` is upper-exclusive (hence the +1)
     vs Spark's inclusive ``sequence`` — the same trap
     ``text_eval_overlap_rate`` documents."""
-    ensure_utc(spark)
     spans = pack_concat_chunks(spark, sf_dir).select(
         "doc_id", "first_chunk", "last_chunk"
     )
@@ -558,7 +551,6 @@ def mixture_sample_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals cross join, then a ZERO-SHUFFLE broadcast join of the
     weights back onto the corpus scan — the decision itself never
     shuffles a document."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     weights = _lang_weights(docs).select("lang", "weight_ppm")
     bucket_ppm = (
@@ -631,7 +623,6 @@ def corpus_mixture_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang, both tiny keyspaces) + a 1-row total broadcast back —
     single scan, no wide shuffle.  Reference heritage: none (SURVEY
     §2 charter extension, corpus-diagnostics family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("lang", "source").agg(F.count("*").alias("n"))
     lnq = F.floor(F.log(F.col("n").cast("double")) * 1000000).cast("bigint")
@@ -725,7 +716,6 @@ def pack_chunks_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation for an index build is the same expression followed by
     ``explode``.  Reference heritage: none (SURVEY §2 charter
     extension, packing family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     w = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
     n_tok = F.size(w)
@@ -813,7 +803,6 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-count rollup to #languages rows, two 1-row broadcasts;
     nothing else touches the corpus.  Reference heritage: none
     (SURVEY §2 charter extension, mixture/packing family)."""
-    ensure_utc(spark)
     t = (
         load_table(spark, sf_dir, "documents")
         .groupBy("lang")
@@ -908,7 +897,6 @@ def corpus_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer comparisons identically on both engines.
     Reference heritage: none (SURVEY §2 charter extension, corpus
     family)."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.llm.textstats import doc_nll
 
     # materialized once: the doc-sized score frame feeds BOTH the
@@ -1027,7 +1015,6 @@ def corpus_token_budget_plan_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-key join + a #languages rollup; the merges relation is the
     one-time training artifact.  Reference heritage: none (SURVEY §2
     charter extension, mixture/packing family)."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.llm.dedup import tokens
 
     _merges, seg = _bpe_state(spark, sf_dir)

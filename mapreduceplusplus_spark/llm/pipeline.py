@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: minimum blended quality score to survive (same formula as
@@ -86,7 +85,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, so only surviving documents are ever exchanged — at 100 TB
     the quality gate typically drops 30-60% of bytes before any network
     cost is paid."""
-    ensure_utc(spark)
     scored = _scored_docs(spark, sf_dir)
     gated = scored.where(
         (F.col("quality") >= QUALITY_MIN) & F.col("lang").isin(*KEEP_LANGS)
@@ -196,7 +194,6 @@ def pipeline_corpus_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     any scale; a 100 TB run is scan-bound.  The DuckDB oracle composes
     the same stages in SQL, so the whole pipeline is value-hash
     checked end-to-end."""
-    ensure_utc(spark)
     scored = _scored_docs(spark, sf_dir)
     eval_fp = (
         scored.where(F.col("doc_id") % _EVAL_MOD == 0).select("bag_fp").distinct()
@@ -259,7 +256,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``xxhash64(doc_id) % k`` instead (exact-rate guarantees need the
     hash form).  At 100 TB this is a narrow map — sampling never
     justifies an exchange."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     return docs.sampleBy("lang", SAMPLE_FRACTIONS, seed=SAMPLE_SEED)
 
@@ -293,7 +289,6 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3) a narrow zero-shuffle projection.  Unlike ``sample_stratified``
     (Bernoulli sampler, rows-only checked), this is exactly
     reproducible in any engine, so it gets a full value-hash oracle."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     # DECIMAL(38,0) multiply (HUGEINT oracle-side): the bare BIGINT
     # product overflows at doc_id ~3.47e9 — inside 100 TB corpus range
@@ -341,7 +336,6 @@ def sample_per_group_topk_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window shuffle on the group key; WindowGroupLimit prunes each
     partition to k rows before the exchange, so the shuffle carries
     ~k·|groups| rows, not the corpus."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -406,7 +400,6 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded (u/0 is the ANSI trap, and weight 0 means "never
     sample").  Reference heritage: none (SURVEY §2 charter extension,
     sampling family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
     u = (
         F.expr(
@@ -489,7 +482,6 @@ def pipeline_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest costs no more than the cleaning it explains.  Reference
     heritage: none (SURVEY §2 charter extension, pipeline-governance
     family)."""
-    ensure_utc(spark)
     scored = _scored_docs(spark, sf_dir)
     # coalesce(…, False): NULL lang/quality must take a DROP verdict —
     # bare 3VL lets a NULL gate fall through every WHEN into 'kept'/
@@ -589,7 +581,6 @@ def pipeline_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         range_bucket_expr,
     )
 
-    ensure_utc(spark)
     nll = truncate(doc_nll(spark, sf_dir))
     bkt = range_bucket_expr(
         spark,
@@ -690,7 +681,6 @@ def sample_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     each partition to quota rows before the exchange) + the k-row
     census aggregate joined back broadcast — at 100 TB the shuffle
     carries ~k·quota rows, not the corpus."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.llm.dedup import _semdedup_gate
 
     gate = _semdedup_gate(spark, sf_dir).select("vec_id", "cid")
@@ -794,7 +784,6 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     property); the selection cutoff is ONE boundary row — found with
     TakeOrdered(k), never a global rank — broadcast back.  At 100 TB
     nothing here exceeds vocabulary-bounded state."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.session import qln_micro as _qln
 
     from mapreduceplusplus_spark.llm.dedup import tokens

@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, sql
+from mapreduceplusplus_spark.session import sql
 from mapreduceplusplus_spark.sources.index_store import ensure_store
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import (
@@ -184,7 +184,6 @@ def sim_search_topk(
     ``_emb`` (private): the corpus as a ``(vec_id, label, v)`` frame to
     rank instead of the ``embeddings`` table; the recall curve passes
     the IVF store's columns.  Same rows for the same vectors."""
-    ensure_utc(spark)
     emb, corpus = _corpus(spark, sf_dir, _emb, "vec_id, label, v")
     # broadcast-safe: p is a single query vector (1 row)
     scored = f"""
@@ -334,7 +333,6 @@ def _lsh_topk(
     frame, ``bucket`` being ``lsh_signature("v")``, to rank instead of
     the ``embeddings`` table; the recall curve passes the IVF store's
     columns.  Same rows for the same vectors."""
-    ensure_utc(spark)
     emb, corpus = _corpus(spark, sf_dir, _emb, "*")
     if _emb is None:
         corpus = f"(SELECT *, {lsh_signature('v')} AS bucket FROM {corpus})"
@@ -539,7 +537,6 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower ``vec_id``.  Row-identical to ``sim_search_ivf_partitioned``,
     which reads the same lists from the IVF store.  Raises
     ``ValueError`` on a corpus without seed centroids or probe row."""
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     cand = _probed_lists(f"({with_cid(_CORPUS)})", probe_cids, "vec_id, label, v")
     return sql(spark, _ivf_score_topk(cand, probe_v), emb=emb)
@@ -773,7 +770,6 @@ def sim_search_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sim_search_ivf``'s, and the rows are identical.  The probe reads
     only ``vec_id, label, v`` of the probed ``cid`` partitions; the
     first call for a dataset version builds the store."""
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
     cand = _probed_lists("{store}", probe_cids, "vec_id, label, v")
@@ -829,7 +825,6 @@ def sim_search_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket both sides with ``lsh_signature`` and equi-join on the
     bucket id (the ``sim_search_lsh`` layout) before scoring.
     """
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     probes = (
         emb.where(F.col("vec_id") % KNN_PROBE_MOD == 0)
@@ -894,7 +889,6 @@ def sim_search_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     The τ = 0.25 threshold (chosen inside the fixture's score range at every SF) is compared on the RAW cosine (both engines'
     double arithmetic on identical inputs yields bit-identical values
     for the same expression shape); only the REPORTED value is rounded."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     )
@@ -1183,7 +1177,6 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the probe's nprobe pick and the exact-cosine re-rank tail
     shared with ``_IVF_ORACLE``.  Reference heritage: none (SURVEY §2
     charter extension, similarity family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     )
@@ -1249,7 +1242,6 @@ def _lsh_batch_topk(
     expression).  Candidates come from a pure EQUI-JOIN on the bucket
     id; ``multiprobe`` explodes each probe into its Hamming-1 bucket
     set (bits+1 probe rows — probe-side fan-out only, same join)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     ).withColumn("bucket", F.expr(lsh_signature("v")))
@@ -1654,7 +1646,6 @@ def _ivfpq_search(spark: SparkSession, sf_dir: str, metric: str) -> DataFrame:
     and ``rnk``.  All index arithmetic is integer, so ``_ivfpq_oracle``
     replays it exactly.  With fewer than ``PQ_K`` PQ seeds the store is
     not read and every non-probe row is scored exactly."""
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     cb = _pq_codebook(spark, sf_dir, len(probe_v))
     if cb is None:
@@ -1800,7 +1791,6 @@ def sim_search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative-loop lineage rule), independent of corpus size.
     Reference heritage: none (SURVEY §2 charter extension, similarity
     family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.expr(_as_double("embedding")).alias("v")
     )
@@ -1937,7 +1927,6 @@ def sim_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §2 charter extension, similarity family)."""
     from mapreduceplusplus_spark.llm.textstats import text_bm25_search
 
-    ensure_utc(spark)
     bm = text_bm25_search(spark, sf_dir).select(
         "doc_id", F.col("rnk").alias("bm_rnk")
     )
@@ -2047,7 +2036,6 @@ def sim_search_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     that, LSH-bucket both sides, ``sim_search_lsh``'s layout); the
     corpus side stays a single scan.  Reference heritage: none
     (SURVEY §2 charter extension, similarity family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.where(F.col("vec_id") % KNN_PROBE_MOD == 0).select(
         F.col("vec_id").alias("probe_id"),
@@ -2185,7 +2173,6 @@ def sim_search_triplet_mining_lsh(
     and the mining cost tracks the engine's own ANN layout instead of
     |anchors|·|corpus|.  Reference heritage: none (SURVEY §2 charter
     extension, similarity family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.expr(_as_double("embedding")).alias("v")
     ).withColumn("bucket", F.expr(lsh_signature("v")))
@@ -2321,7 +2308,6 @@ def sim_search_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is an integer; ties break on vec_id; and the re-rank uses
     the shared micro-quantized rank.  Reference heritage: none (SURVEY
     §2 charter extension, similarity family)."""
-    ensure_utc(spark)
     # bounded 1-row probe fetch (memoized — ``_probe_vector``): the
     # probe's packed words become plan literals (at 100 TB this is an
     # 8 B/word key lookup, not a scan)
@@ -2429,7 +2415,6 @@ def _hamming_rerank_zipwith(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the row-identity pin target for the packed-BIGINT executed
     plan, as the empty-corpus fallback, and as the per-candidate cost
     baseline the bench compares the sketch scan against."""
-    ensure_utc(spark)
     ham = (
         "aggregate(zip_with(v, pv, (x, y) -> CAST((x > 0) <> (y > 0) AS BIGINT)),"
         " 0L, (acc, x) -> acc + x)"
@@ -2582,7 +2567,6 @@ def sim_search_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (``_sq8_scale``, ``_sq8_codes``) and ranked by
     ``_sq8_topk``.  Output: ``vec_id, label, adc, cosine, rnk`` (see
     ``_sq8_topk``).  A corpus without a probe row gives zero rows."""
-    ensure_utc(spark)
     pv = _probe_vector(spark, sf_dir)
     if pv is None:
         return spark.createDataFrame(
@@ -2713,7 +2697,6 @@ def sim_search_matryoshka_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantized rank — the proven ``sim_search_topk`` cosine
     device applied to a prefix.  Reference heritage: none (SURVEY §2
     charter extension, similarity family)."""
-    ensure_utc(spark)
     # bounded 1-row probe fetch (memoized — ``_probe_vector``)
     pv = _probe_vector(spark, sf_dir)
     if pv is None:
@@ -2779,7 +2762,6 @@ def _mrl_funnel_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identity pin target for the prefix-store executed plan, as the
     empty-corpus fallback, and as the per-candidate cost baseline the
     bench compares the store scan against."""
-    ensure_utc(spark)
     c16 = _cosine(f"slice(v, 1, {MRL_DIMS})", f"slice(pv, 1, {MRL_DIMS})")
     # broadcast-safe: p is a single query vector (1 row)
     pool = f"""
@@ -2905,7 +2887,6 @@ def sim_search_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     label, adc, cosine, rnk`` (see ``_sq8_topk``).  Row-identical to
     ``sim_search_ivf_sq8_partitioned``.  Raises ``ValueError`` on a
     corpus without seed centroids or probe row."""
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     cand = _sq8_cand(
         _probed_lists(f"({with_cid(_CORPUS)})", probe_cids, "vec_id, v")
@@ -2926,7 +2907,6 @@ def sim_search_ivf_sq8_partitioned(
     partitions, never the float vectors; only the ``SQ8_POOL`` pool
     joins back to the corpus.  The first call for a dataset version
     builds the store."""
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     store = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
     cand = _probed_lists("{store}", probe_cids, "vec_id, scale, sq8_codes AS codes")
@@ -3088,7 +3068,6 @@ def sim_search_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ValueError`` on a corpus without seed centroids or probe row."""
     from functools import reduce as _red
 
-    ensure_utc(spark)
     emb, with_cid, probe_v, probe_cids = _ivf_seed_lists(spark, sf_dir)
     base = _ivf_store(spark, sf_dir, emb, with_cid, probe_v)
 

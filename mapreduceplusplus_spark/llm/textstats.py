@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.memo import memo
 from mapreduceplusplus_spark.sources.tables import load_table
 
@@ -75,7 +74,6 @@ def text_analysis_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token statistics: token count, distinct tokens,
     mean token length — all higher-order array expressions over the
     tokenized text; a single narrow projection, no shuffle."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     ws = _toks(F.col("text"))
     d = docs.select("doc_id", "lang", "n_chars", ws.alias("ws"))
@@ -123,7 +121,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture's text is language-agnostic vocab, so the label is
     unlearnable by construction and carried through as
     ``labeled_lang`` for comparison."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", "lang", _toks(F.col("text")).alias("ws"))
     scored = d.select(
@@ -176,7 +173,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     length prior (the C4/Gopher-style rule family).  Pure per-row
     expressions; the weights are the operator contract, not a claim
     about optimality."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     ws = _toks(F.col("text"))
     d = docs.select("doc_id", "text", "n_chars", ws.alias("ws"))
@@ -256,7 +252,6 @@ def text_extras(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries remain registered (and locally oracle-checked) for direct
     use.  Same 100 TB shape as the rest of the module: scan → project,
     zero shuffle, whole-stage codegen throughout."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "text", "n_chars", _toks(F.col("text")).alias("ws")
@@ -320,7 +315,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (letter runs | digit runs | single punctuation — the GPT-2
     pre-split shape), whitespace tokens, and the chars/4 BPE estimate.
     All regexp counts, map-side only."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -352,7 +346,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     order/whitespace-insensitive dup key).  Fingerprints are THE exact
     dedup key at scale: group on 16 bytes instead of comparing
     documents."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     bag = F.concat_ws(
         " ", F.array_sort(F.array_distinct(_toks(F.col("text"))))
@@ -408,7 +401,6 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative explode → groupBy plan shuffles |corpus tokens| rows at
     100 TB.
     """
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     run_state = "struct(cast(null as string) as prev, 0 as run, 0 as best)"
     top_cnt = F.expr(
@@ -495,7 +487,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     textstats operator.  Real-world extension: swap the regex set for a
     vectorized NER model behind ``mapInPandas`` (same plumbing as
     ``multimodal_decode``)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     aug = F.concat(
         F.col("text"),
@@ -580,7 +571,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning and in any engine (a plain SUM() shuffles-order the
     addends).  The remaining cross-engine risk is a last-ulp ``ln``
     difference, absorbed by the 2-decimal rounding."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id",
@@ -645,7 +635,6 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keeps the FIRST occurrence — semantics DuckDB's list_distinct
     matches), fingerprint the deduped text.  Zero shuffle, zero Python;
     at 100 TB this is a narrow map stage pipelined into the scan."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     lines = F.split(F.col("text"), "\n")
     dedup = F.array_distinct(lines)
@@ -699,7 +688,6 @@ def text_idf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined); N broadcasts as a 1-row table; the top-3 window
     runs per-doc on the tf table, WindowGroupLimit-pruned before its
     exchange."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -774,7 +762,6 @@ def text_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined, the top-K is a TakeOrdered of a reduced table,
     and the coverage join is broadcast — the document stream shuffles
     once, on doc_id."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -825,7 +812,6 @@ def text_token_count_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to every decode stage: narrow, no shuffle,
     one Python worker per split — but with pyarrow.compute the regex
     loop itself runs in C++, so the GIL never sees per-row work."""
-    ensure_utc(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -873,7 +859,6 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch) and the whole datasheet computes in one map-side-combined
     pass with O(1) driver state; everything else is already exact and
     mergeable."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     ws = F.size(F.regexp_extract_all("text", F.lit(r"\S+"), 0))
     return docs.agg(
@@ -926,7 +911,6 @@ def text_length_outliers_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the quartile pass is one aggregate (percentile_approx at
     100 TB); the fence broadcast back is 1 row; the filter is a
     narrow scan predicate."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("_docs_iqr")
     q = docs.sparkSession.sql(
@@ -1021,7 +1005,6 @@ def text_winnowing_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on advanced.py/tpch.py)
     from mapreduceplusplus_spark.llm.dedup import _spread
 
-    ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
 
     def _build_fp() -> DataFrame:
@@ -1133,7 +1116,6 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY §2 charter extension)."""
     from pyspark.sql import Window
 
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     ws = _toks(F.col("text"))
     def _is(t: str):
@@ -1252,7 +1234,6 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy import — keeps llm.dedup's registration position unchanged
     from mapreduceplusplus_spark.llm.dedup import _spread
 
-    ensure_utc(spark)
     docs = _spread(spark, load_table(spark, sf_dir, "documents"))
     toks = docs.select(_toks(F.col("text")).alias("ws"))
 
@@ -1366,7 +1347,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit is (doc_id, char) counts — bounded by 100·#docs, not corpus
     text.  Reference heritage: none (SURVEY §2 charter extension,
     text family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").where(F.length("text") > 0)
     ch = docs.select(
         "doc_id",
@@ -1414,8 +1394,6 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference heritage: none (SURVEY §2 charter extension, text
     family)."""
     from pyspark.sql.functions import pandas_udf
-
-    ensure_utc(spark)
 
     @pandas_udf("bigint")
     def deflated_len(s: pd.Series) -> pd.Series:
@@ -1522,7 +1500,6 @@ def text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reason perplexity filtering is expressible as pure relational
     algebra at all.  Reference heritage: none (SURVEY §2 charter
     extension, text-quality family)."""
-    ensure_utc(spark)
     return doc_nll(spark, sf_dir)
 
 
@@ -1634,7 +1611,6 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     heritage: generalization of the reference's corpus-global word
     count (``mr/word_count.h:22-31``) to per-document scoring.
     """
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     toks = load_table(spark, sf_dir, "documents").select(
@@ -1760,7 +1736,6 @@ def text_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     w2) are vocabulary-sized; the model never collects to the driver.
     Reference heritage: none (SURVEY §2 charter extension,
     text-quality family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _toks(F.col("text")).alias("ws")
     )
@@ -1872,7 +1847,6 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot shuffle, no per-bucket pass).  Columnar output (b0..b{_FHASH_DIM - 1})
     keeps the frame joinable as a feature table.  Reference heritage:
     none (SURVEY §2 charter extension, text/ML-features family)."""
-    ensure_utc(spark)
     occ = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(_toks(F.col("text"))).alias("w")
     )
@@ -1950,7 +1924,6 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference heritage: the ranked word-count readout is the closest
     cousin of the reference demo's sorted word counts
     (``mr/word_count.h``), upgraded to a coverage integral."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     tf = (
@@ -2076,7 +2049,6 @@ def text_quality_classifier_hashed(
     tokens have no features and emit no row, the
     ``text_feature_hashing`` convention.  Reference heritage: none
     (SURVEY §2 charter extension, text/LLM-pipeline family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     t = _toks(F.col("text"))
     bigrams = F.when(
@@ -2233,7 +2205,6 @@ def text_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``re`` model (a third regex dialect, so the pattern SEMANTICS are
     pinned, not just cross-engine agreement).  Reference heritage:
     none (SURVEY §2 charter extension, text-analysis family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text").cast("bigint")
     n_repl = (

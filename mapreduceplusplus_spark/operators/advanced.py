@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.operators._money import bp_ratio_halfup
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: Shared dialect-intersection body of the recursive month calendar —
@@ -91,7 +90,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     date renderer and the bounds splice differ (DuckDB evaluates its
     inline bounds CTE once, so it keeps the self-contained form).
     """
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders")
     b = orders.agg(
@@ -180,7 +178,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     for double accumulation order to flip the 2nd decimal — is exact
     on both engines, divided and rounded once.
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders").where(
@@ -286,7 +283,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     (−0.00005, 0), so both sides carry the registry's ``+ 0`` signed-
     zero normalization.
     """
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         docs.select(
@@ -420,7 +416,6 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     never near a rounding half-point, so the last-ulp difference
     between Spark's and DuckDB's interpolation formula cannot flip
     the rounded value or an integer-vs-boundary comparison."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     g = orders.agg(F.max("o_orderdate").alias("maxd"))
     cust = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
@@ -508,7 +503,6 @@ def etl_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a stored ~priority-cardinality-row table, not a scan: the
     daily cost is one partition's aggregation plus a merge over
     kilobytes of state."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     cutoff = F.lit("2000-01-01").cast("timestamp")
@@ -563,7 +557,6 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: half-year scan pruning on orders; semi join short-circuits
     per matched order (no fan-out by line count); one shuffle each
     side, priority rollup is a 5-row aggregate."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
@@ -616,7 +609,6 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast at test SF where it genuinely fits.  Single
     partial-aggregated reduction to one row.  The raw integer
     numerator/denominator ride along for auditability."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
@@ -666,7 +658,6 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks exactly (priority, status) and nothing else.  Physically
     identical to the explicit GROUP BY — one map-side-combined hash
     aggregate."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_GROUP_BY_ALL_SQL)
 
@@ -701,7 +692,6 @@ def sql_join_hint_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     encodes operational knowledge — e.g. forcing SHUFFLE_HASH when the
     build side fits executor memory but exceeds the driver's broadcast
     limit."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     return spark.sql(_JOIN_HINT_SQL)
@@ -737,7 +727,6 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     one projection — a single map-side stage, nothing new at 100 TB.
     Reference heritage: none (SURVEY §2 charter extension, SQL-surface
     family)."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_LATERAL_ALIAS_SQL)
 
@@ -766,7 +755,6 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     both identically: scan with the shipdate filter pushed down, one
     map-side-combined hash aggregate.  Reference heritage: none
     (SURVEY §2 charter extension, SQL-surface family)."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -805,7 +793,6 @@ def agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch per partition, merged at the driver-size of k counters —
     shuffle volume independent of row count.  Reference heritage: none
     (SURVEY §2 charter extension, sketch family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     sk = ev.agg(F.expr("approx_top_k(event_type, 10)").alias("tk"))
     return sk.select(F.explode("tk").alias("e")).select(
@@ -839,7 +826,6 @@ def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     heritage: none (SURVEY §2 charter extension, SQL-surface family)."""
     import datetime
 
-    ensure_utc(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
@@ -877,7 +863,6 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan).  ``DECLARE OR REPLACE`` keeps the query re-runnable in one
     session.  Reference heritage: none (SURVEY §2 charter extension,
     SQL-surface family)."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql("DECLARE OR REPLACE VARIABLE qty_floor INT DEFAULT 0")
     spark.sql("SET VAR qty_floor = 40")
@@ -909,7 +894,6 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     name resolves during analysis, so the plan equals the direct
     reference the oracle uses.  Reference heritage: none (SURVEY §2
     charter extension, SQL-surface family)."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """

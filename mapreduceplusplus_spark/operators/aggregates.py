@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -77,7 +76,6 @@ TPCH_Q1_SQL = """
 
 @query("agg_groupby", oracle=TPCH_Q1_SQL)
 def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_utc(spark)
     return tpch_q1(load_table(spark, sf_dir, "lineitem"))
 
 
@@ -97,7 +95,6 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ungrouped aggregates (reference A8 fold with a single global key)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("n_rows"),
@@ -131,7 +128,6 @@ def agg_collect_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     acceptable here because group = lines-per-order (bounded ≤ 7 by the
     generator); for unbounded groups prefer scalar folds.
     """
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_orderkey").agg(
         F.array_join(
@@ -158,7 +154,6 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     each distinct column multiplies the pre-shuffle row count; at 100 TB
     prefer approx_count_distinct (see agg_approx_distinct) when exactness
     is not required."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -194,7 +189,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact countDistincts exist here only as the audit yardstick
     (they re-introduce EXPAND); the production 100 TB form is the
     HLL-only aggregate in the first two agg expressions."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     est = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", 0.01).alias("ap"),
@@ -231,7 +225,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (grouping-sets family).  Spark plans this
     as a single EXPAND + hash aggregate — one pass over the fact table."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().cast("bigint").alias("grp"),
@@ -251,7 +244,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
@@ -274,7 +266,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (HAVING).  The predicate applies after the
     hash-agg; Catalyst cannot push it into the scan, but the agg output is
     |customers|-sized, so the filter is cheap at any scale."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
@@ -298,7 +289,6 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an explicit value list (no second distinct-values pass)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     piv = (
         li.groupBy("l_returnflag")
@@ -326,7 +316,6 @@ def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark ``percentile`` == DuckDB
     ``quantile_cont``).  Exact percentile sorts per group; the 100 TB path
     is ``percentile_approx`` (KLL-sketch-like, mergeable, fixed memory)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("median_price"),
@@ -353,7 +342,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no second pass over the data), so the shuffle carries one small
     state row per (flag, metric) — the ideal distributed-statistics
     shape."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_extendedprice"), 2).alias("sd_price"),
@@ -407,7 +395,6 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes both engines emit zero rows over an empty corpus (Spark's
     global aggregate would otherwise emit its 1 NULL-estimate row
     where the oracle's join-through-months emits none)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     monthly = ev.groupBy(F.date_format("ts", "yyyy-MM").alias("month")).agg(
         F.hll_sketch_agg("user_id").alias("sk"),
@@ -460,7 +447,6 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle spells it as the classic UNION ALL over 4 scans, which
     Spark's unpivot plans instead as a single-scan Expand node — same
     relation, a quarter of the reads)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
@@ -511,7 +497,6 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer for multiples and would shift the ceiling).  The sketch
     path still runs end-to-end; a broken summary merge lands outside
     the rank window and flips a boolean."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
@@ -571,7 +556,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (priority, status) → (priority) → ().  Spark plans all rollup
     levels in ONE Expand + hash-agg pass — levels+1 output rows per
     input row before partial aggregation, never one scan per level."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.rollup("o_orderpriority", "o_orderstatus").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -603,7 +587,6 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sum(when(...))``); the plan is a single partial+final hash agg,
     so at 100 TB the fact table is read and shuffled once no matter
     how many conditions are added."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 300)
     is_p = F.col("event_type") == "purchase"
     return ev.groupBy("user_id").agg(
@@ -639,7 +622,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine: at 100 TB the shuffle carries |buckets| rows per task,
     not data.  (Equi-width is the scan-friendly choice; equi-DEPTH
     needs quantiles first — see ``agg_approx_quantile``.)"""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     bucket = F.floor(F.col("o_totalprice") / 25000.0).cast("bigint")
     return (
@@ -686,7 +668,6 @@ def agg_bitmap_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative/idempotent — the ideal combiner), so at 100 TB the
     event scan shuffles one int per user and the second agg is
     |bitmaps| ≤ 2^K rows.  All integer — engine-exact."""
-    ensure_utc(spark)
     # first-two-days slice: over the full year every user hits every
     # event type and all bitmaps collapse to one; the early window
     # keeps 15 distinct behavior combinations at sf0.01
@@ -733,7 +714,6 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what DuckDB's scalar-only ``arg_max`` needs anyway.  One
     map-side-combinable hash agg (max_by's combiner keeps a single
     (key, value) pair), one shuffle of |groups| rows."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     key = (
         F.round(F.col("c_acctbal") * 100).cast("bigint") * 10000000
@@ -776,7 +756,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (cardinality = |groups|·|domain|, tiny for categorical
     domains); the window then runs on that REDUCED table — the heavy
     input is touched once, no second full-data shuffle."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -818,7 +797,6 @@ def agg_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation; per-group state is the value list — fine for bounded
     groups like dims, the wrong aggregate for unbounded ones (cap the
     list first or use a top-k window)."""
-    ensure_utc(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return (
@@ -860,7 +838,6 @@ def agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: decimal hash aggregation is map-side combined like any
     sum; Spark keeps Decimal(≤18+10 digits) in compact unscaled-long
     form, so the exactness is ~free until precision 28."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
@@ -907,7 +884,6 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: a single map-side-combined hash aggregation (Spark's
     implementation carries 5 running moments per group)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.skewness("l_quantity"), 6).alias("skew"),
@@ -939,7 +915,6 @@ def agg_boolean_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: plain map-side-combined hash aggregate — booleans fold to
     one byte of state per group per function."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count_if(F.col("o_totalprice") > 100000).alias("n_large"),
@@ -981,7 +956,6 @@ def agg_ordered_set_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     #groups ≪ #rows with bounded group width; the mergeable 100 TB
     path is ``percentile_approx`` (KLL-style sketch), same as
     ``agg_median`` documents."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_ORDERED_SET_SQL)
 
@@ -1017,7 +991,6 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same Expand + map-side-combined hash aggregate as
     ``agg_rollup`` — grouping() is a zero-cost bit of the synthetic
     grouping-id column the Expand already carries."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_GROUPING_ID_SQL)
 
@@ -1057,7 +1030,6 @@ def agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan, one 1-row reduction — the matrix state is
     6 × (5 doubles) regardless of data size."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         *[
@@ -1137,7 +1109,6 @@ def agg_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     then cast to double ONCE (correctly-rounded on both engines)
     before the single division.  Reference heritage: none (SURVEY §2
     charter extension, agg family)."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     pts = orders.select(
         F.col("o_orderpriority").alias("priority"),
@@ -1342,7 +1313,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduceplusplus_spark.llm.dedup import _spread
 
-    ensure_utc(spark)
     raw = load_table(spark, sf_dir, "lineitem")
     cents_sample = raw.select(
         (F.round(F.col("l_extendedprice") * 100)).cast("double").alias("cents")
@@ -1437,7 +1407,6 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduceplusplus_spark.llm.dedup import _spread
 
-    ensure_utc(spark)
     raw = load_table(spark, sf_dir, "lineitem")
     cents_sample = raw.select(
         (F.round(F.col("l_extendedprice") * 100)).cast("double").alias("cents")
@@ -1525,7 +1494,6 @@ def agg_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream consumer; the scaffold makes it a fixed contract.
     Reference heritage: none (SURVEY §2 charter extension, agg
     family)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     raw = li.groupBy(F.col("l_returnflag").alias("flag")).agg(
         F.sum(F.round("l_quantity").cast("bigint")).cast("bigint").alias("sum_qty"),
@@ -1569,7 +1537,6 @@ def agg_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast dim join + one hash aggregate with per-group list
     state.  Reference heritage: the reference's sorted-group output
     model (``mr/word_count.h:24-31``) — its declarative face."""
-    ensure_utc(spark)
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     nation.createOrReplaceTempView("listagg_nation")
@@ -1645,7 +1612,6 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-computable); a broken sketch or merge flips the boolean and
     hash-mismatches.  Empty corpus: both engines emit zero rows (the
     oracle's ``t.n > 0`` guard ≡ the Spark side's early return)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_suppkey")
     row = li.agg(
         F.count_min_sketch(

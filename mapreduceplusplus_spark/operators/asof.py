@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 _TS_US_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -235,7 +234,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedes any signup).  The right side is deduped to one row per
     (user_id, ts) — keep max event_id — so the as-of pick is fully
     deterministic on both engines."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     left = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
@@ -292,7 +290,6 @@ def scd2_build_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: one shuffle on the dimension key, O(1) window state per
     row, output row-for-row with the change stream."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 100)
@@ -350,7 +347,6 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to the backward form — ONE shuffle on the key,
     no range explosion; per-row state is the single packed struct."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     left = ev.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
@@ -426,7 +422,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     each packed struct so no join-back is needed.  The oracle is the
     quadratic candidate argmin DuckDB needs without a nearest ASOF
     join — the reason the carry form is the scale path."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     left = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -499,7 +494,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp already riding in the packed struct — same single
     exchange and sort as the unbounded form; exact integer µs
     arithmetic (the same `_ts_int` contract as the nearest tie)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     left = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -578,7 +572,6 @@ def join_pit_scd2_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the probe stream.  At 100 TB: one shuffle each side on the
     entity key.  Reference heritage: none (SURVEY §2 charter
     extension, asof/temporal family)."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").where(

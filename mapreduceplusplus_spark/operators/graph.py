@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import fixpoint, truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: FIXTURE-TRACTABILITY cap on the co-purchase graph's vertex count —
@@ -129,7 +128,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     TPC-H-shaped data), so the self-join never explodes — the same
     bounded-basket argument as ``join_market_basket``.  Shared SQL
     text with the oracle."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_DEGREE_SQL)
 
@@ -183,7 +181,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join+distinct subplan for every branch (measured 38 parquet
     scans in the executed plan before the change, 2 logical scans
     after)."""
-    ensure_utc(spark)
     edges = truncate(_copurchase_edges(spark, sf_dir))
     verts = edges.select(F.col("a").alias("v")).unionAll(
         edges.select(F.col("b").alias("v"))
@@ -290,7 +287,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the edge relation is hash-partitioned on src and the rank
     vector co-shuffles — the canonical Pregel-on-relational shape.
     Top-25 by final rank, full (pr, id) tiebreak."""
-    ensure_utc(spark)
     e2 = truncate(
         _symmetrize(_copurchase_edges(spark, sf_dir))
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -393,7 +389,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``iterate``'s (see ``_cc_two_phase``)."""
     from mapreduceplusplus_spark.llm.dedup import _cc_two_phase
 
-    ensure_utc(spark)
     sym = _symmetrize(
         _copurchase_edges(spark, sf_dir, min_cooc=_CC_MIN_COOC)
     )
@@ -517,7 +512,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinking-edge-relation peel — same contract, different physical
     strategy.  This retires the r1–r13 "recursive SQL cannot express
     row removal" exemption; the cascade/self-consistency pins stay."""
-    ensure_utc(spark)
     sym = _symmetrize(_copurchase_edges(spark, sf_dir))
     core, _rounds = kcore_subgraph(sym, _KCORE_K)
     return core.select(F.col("v").cast("bigint"), "degree")
@@ -708,7 +702,6 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     relaxes to fixpoint in ≤ longest-shortest-path-hops rounds.  See
     ``bellman_ford`` for the per-round cost shape and the loud-cap
     contract."""
-    ensure_utc(spark)
     # persisted pre-partitioned on the relaxation join key (r17) — the
     # same one-edge-shuffle-per-run device as ``graph_sssp``; the
     # per-round dist⋈edges join reuses this partitioning instead of
@@ -778,7 +771,6 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot hide: it would surface as a value mismatch in the
     differential.  See ``sssp_frontier`` for the per-round cost
     argument and the loud round-cap contract."""
-    ensure_utc(spark)
     # r17 (guide §2.4): the edge relation is PERSISTED pre-partitioned
     # on the join key instead of localCheckpointed — an
     # InMemoryRelation KEEPS its outputPartitioning visible to
@@ -907,7 +899,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank/SSSP; rounds are bounded (3), not data-dependent.
     Reference heritage: none (SURVEY §2 charter extension, graph
     family)."""
-    ensure_utc(spark)
     e2 = truncate(
         _symmetrize(_copurchase_edges(spark, sf_dir))
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -977,7 +968,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     or minhash-sketched neighborhoods (documented, not silently
     applied at fixture scale).  Reference heritage: none (SURVEY §2
     charter extension, graph family)."""
-    ensure_utc(spark)
     edges = truncate(_copurchase_edges(spark, sf_dir))
     e2 = _symmetrize(edges)
     deg = e2.groupBy("u").agg(F.count("*").alias("d"))
@@ -1078,7 +1068,6 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined — nothing beyond the LPA cost itself.  Empty graph →
     0 rows on both engines (m > 0 guard).  Reference heritage: none
     (SURVEY §2 charter extension, graph family)."""
-    ensure_utc(spark)
     edges = truncate(_copurchase_edges(spark, sf_dir))
     e2 = _symmetrize(edges).select(
         F.col("u").alias("src"), F.col("v").alias("dst")

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -53,7 +52,6 @@ def join_inner_equi(spark: SparkSession, sf_dir: str) -> DataFrame:
     is tiny — both plans are correct, we assert semantics not strategy.
     o_orderkey is unique, so the output is hash-stable row-level.
     """
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     return orders.join(
@@ -88,7 +86,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups at 100 TB (a shuffled join here would move the whole fact
     table to co-locate with 25 rows).
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
@@ -132,7 +129,6 @@ def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     the orders side before the fact shuffle — the optimizer work §4.1
     says the reference lacks entirely.
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -180,7 +176,6 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-less ones with n_orders = 0 (count skips the null-extended
     rows) and total_spent coalesced to 0.
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -209,7 +204,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     on first match, and the build side carries only the join key after
     column pruning.
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
     return customer.join(
@@ -231,7 +225,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact complement of ``join_semi`` (every synthetic key is referenced
     at least once, so the filtered right side keeps the result non-empty).
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
     return customer.join(
@@ -265,7 +258,6 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-band joins with no equi key at all, the scale path is bucketing
     ts into coarse epochs and joining on adjacent buckets.
     """
-    ensure_utc(spark)
     events = load_table(spark, sf_dir, "events")
     a = events.alias("a")
     b = events.alias("b")
@@ -339,7 +331,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hinted so the salted path is actually exercised instead of AQE
     broadcasting the dim), aggregated per market segment.  The oracle is
     the PLAIN unsalted join — proving salting is result-invariant."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     j = salted_join(
@@ -413,7 +404,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    ensure_utc(spark)
     base = tempfile.mkdtemp(prefix="bucketed_join_")
     try:
         j = bucketed_join(spark, sf_dir, base)
@@ -457,7 +447,6 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation shrinks the orders side to |customers| rows before
     the join instead of null-extending raw orders.
     """
-    ensure_utc(spark)
     cust = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_acctbal") > 0)
@@ -540,7 +529,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer MICROSECONDS (``unix_micros`` difference) — float-free
     and engine-identical.
     """
-    ensure_utc(spark)
     from pyspark.sql import Window as W
 
     e = (
@@ -643,7 +631,6 @@ def join_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured at sf0.1 (0.85 s vs 2.2 s) and the build side is one
     shuffle partition of the table — bounded by partition count, not
     corpus size."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.alias("a")
     b = li.hint("shuffle_hash").alias("b")
@@ -694,7 +681,6 @@ def join_nullsafe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR-form predicate would force).  At 100 TB the NULL bucket is the
     hot key to watch: if NULL-heavy, filter-and-union or AQE skew
     splitting handles it."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 2000)
     nation = load_table(spark, sf_dir, "nation")
     l = orders.select(
@@ -743,7 +729,6 @@ def tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keys, and the top-10 is TakeOrderedAndProject — no global
     sort materializes.  ``l_orderkey`` in the ORDER BY makes the limit
     deterministic under revenue ties."""
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -798,7 +783,6 @@ def join_broadcast_range_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan at 100 TB (contrast ``join_theta_range``, which buckets two
     FACT-sized sides to avoid exactly this plan).  Integer-cents sum
     keeps the aggregate engine-exact."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     tiers = spark.createDataFrame(
         [(0.0, 50000.0, "small"), (50000.0, 200000.0, "medium"), (200000.0, 1e9, "large")],
@@ -848,7 +832,6 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature with no DataFrame-API equivalent — the dialect text is
     shared with the oracle verbatim (both engines parse the same
     query)."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
@@ -904,7 +887,6 @@ def join_prefilter_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle is the plain exact semi join — the bitmap is pure
     optimization, provably result-invariant (superset then exact)."""
-    ensure_utc(spark)
     m = 4096
     orders = load_table(spark, sf_dir, "orders")
     dim_keys = (
@@ -980,7 +962,6 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one 9× narrow expansion (generator, no shuffle), one hash
     shuffle per side on the cell key, codegen'd verify."""
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     pts = part.select(
         F.col("p_partkey").alias("id"),
@@ -1059,7 +1040,6 @@ def join_lateral_df_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits the same decorrelation rewrite the SQL path does (same oracle,
     same results).  Reference heritage: none (SURVEY §2 charter
     extension, join family)."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 200)
     orders = load_table(spark, sf_dir, "orders")
     per_cust_top2 = (
@@ -1113,7 +1093,6 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-size part census, lineitem count, integer quantity sum) keeps
     the oracle exact.  Reference heritage: none (SURVEY §2 charter
     extension, join family)."""
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part").where(
         (F.col("p_brand") == "Brand#23") & (F.col("p_size") < 10)
     )

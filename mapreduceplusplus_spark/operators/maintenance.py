@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (parity with sibling modules)
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -100,7 +99,6 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     The full SQL text (bit math via ``floor``/``CAST`` only — exact in
     the dialect intersection) is shared verbatim with the DuckDB
     oracle."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(_ZORDER_SQL)
 
@@ -142,7 +140,6 @@ def maintenance_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``repartition(source, bin_id)`` + write.  All-integer output
     (ceil of an exact integer sum over an integral target), shared
     SQL text with the oracle."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(_COMPACTION_SQL)
 
@@ -213,7 +210,6 @@ def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shared SQL text with the DuckDB oracle (dialect-intersection
     arithmetic only).  Reference heritage: none (SURVEY §2 charter
     extension, dq family)."""
-    ensure_utc(spark)
     for rel in {r for r, _, _ in _SKEW_KEYS}:
         load_table(spark, sf_dir, rel).createOrReplaceTempView(rel)
     return spark.sql(_SKEW_SQL)

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 _K = 4
@@ -113,7 +112,6 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: per-cluster membership count and total squared distance
     (the inertia decomposition), all BIGINT."""
-    ensure_utc(spark)
     a2 = kmeans_assignments(spark, sf_dir)
     return a2.groupBy(F.col("cid").cast("bigint").alias("cid")).agg(
         F.count("*").alias("n_members"),
@@ -270,7 +268,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row self-contained; a train/apply split is ``sample_split``
     composed upstream.  Reference heritage: none (SURVEY §2 charter
     extension, ML family)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -423,7 +420,6 @@ def ml_ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic "ML on the warehouse" shape (k features ⇒ a k²-cell Gram
     aggregate, driver-side k×k solve).  Reference heritage: none
     (SURVEY §2 charter extension, ML family)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("x1"),
         F.round(F.col("l_discount") * 10000).cast("bigint").alias("x2"),
@@ -549,7 +545,6 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond ~10k probes, LSH-bucket both sides first
     (``sim_search_lsh``'s layout).  Reference heritage: none (SURVEY
     §2 charter extension, ML family)."""
-    ensure_utc(spark)
     from mapreduceplusplus_spark.llm.similarity import _as_double, _dot, _norm
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -678,7 +673,6 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin.  The 1-row total aggregate enters via broadcast cross
     join.  Reference heritage: none (SURVEY §2 charter extension, ML
     family)."""
-    ensure_utc(spark)
     pts = load_table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("x"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
@@ -851,7 +845,6 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side CASE against the broadcast 1-row round result — no extra
     shuffle, no driver collect.  Reference heritage: none (SURVEY §2
     charter extension, ML family)."""
-    ensure_utc(spark)
     pts = load_table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("x"),
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
@@ -1049,7 +1042,6 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-sample first (hash reservoir) when k·scan is too dear.
     Reference heritage: none (SURVEY §2 charter extension, sampling
     family)."""
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     e = truncate(
         emb.select("vec_id", F.posexplode("embedding").alias("dim", "u"))

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -54,7 +53,6 @@ def project_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen over exactly the 6 read columns (column pruning reaches the
     parquet scan).
     """
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = revenue * (1 + F.col("l_tax"))
@@ -89,7 +87,6 @@ def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     is itself pushable, so row groups failing both branches are skipped
     at the scan.
     """
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     branch_a = (
         F.col("p_size").between(5, 15)
@@ -130,7 +127,6 @@ def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``n_nullsafe_self`` uses Spark ``eqNullSafe`` / DuckDB
     ``IS NOT DISTINCT FROM`` and counts every row (NULL <=> NULL is TRUE).
     """
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     a = F.nullif(F.col("l_returnflag"), F.lit("N"))
     a2 = F.nullif(F.col("l_returnflag"), F.lit("R"))
@@ -176,7 +172,6 @@ def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite.  At 100 TB that rewrite is the difference between a
     linear plan and |lineitem| subquery executions.
     """
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("sq_lineitem")
     load_table(spark, sf_dir, "part").createOrReplaceTempView("sq_part")
     return spark.sql(
@@ -233,7 +228,6 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles (AQE decides — the common CDC case).  The
     ``merge_action`` column is the audit trail a real pipeline writes
     to its commit log."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     src = (
         cust.where(F.col("c_custkey") % 3 == 0)
@@ -308,7 +302,6 @@ def dq_constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and engine-portable.  At 100 TB every check is a
     map-side count except the FK anti-join — one shuffle (or none,
     broadcast) — and adding more checks adds no new scans."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -398,7 +391,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed snapshots join with no shuffle at all); the change
     predicate prunes unchanged rows BEFORE anything downstream, so
     the emitted delta is |changes|, not |table|."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     old_snap = cust.select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal")
@@ -513,7 +505,6 @@ def cdc_incremental_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions it touches (with a bucketed/partitioned snapshot, only
     the touched buckets are read); the full recompute shuffles the
     whole table twice."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer")
     old_snap = cust.select(
         F.col("c_custkey").alias("k"), F.round("c_acctbal", 2).alias("old_bal")
@@ -634,7 +625,6 @@ def subquery_not_in_null_trap(spark: SparkSession, sf_dir: str) -> DataFrame:
     15000× different answer; the companion ``join_anti`` row covers
     the well-behaved no-NULL case.  All four counts reduce map-side;
     the probe set broadcasts."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     probe = (
         load_table(spark, sf_dir, "customer")
@@ -706,7 +696,6 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders/customer/nation legs broadcast (or DPP-prune); the three
     audits are independent and run concurrently as sibling stages; the
     report is 3 rows."""
-    ensure_utc(spark)
 
     def edge(fact, fk, dim, pk, label):
         j = fact.join(dim, fact[fk] == dim[pk], "left")
@@ -769,7 +758,6 @@ def maintenance_partition_skew_report(
     Scale: one map-side-combined rollup to #years rows; the mean is a
     1-row re-aggregate of that rollup broadcast back — the fact table
     is scanned once."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy(
         F.year("l_shipdate").cast("bigint").alias("ship_year")
@@ -828,7 +816,6 @@ def dq_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregate broadcast back — the fact table is scanned once; no
     shuffle wider than 9 rows.  Reference heritage: none (SURVEY §2
     charter extension, dq family)."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     cents = orders.select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")

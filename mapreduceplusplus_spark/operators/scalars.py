@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -49,7 +48,6 @@ def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     'g' flag is passed; Spark's always replaces globally — oracle pins
     'g' so both sides agree.
     """
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -82,7 +80,6 @@ def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """year/month/day/quarter/date_trunc/datediff/date arithmetic.
     Timestamps render to ISO strings on both sides (SURVEY §7 trap 3)."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
@@ -121,7 +118,6 @@ def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """round/abs/ceil/floor/ln/pow/sqrt/mod.  Spark ``ceil``/``floor``
     return BIGINT while DuckDB returns DOUBLE — oracle casts to match."""
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     return part.where(F.col("p_retailprice") > 0).select(
         "p_partkey",
@@ -151,7 +147,6 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN branching feeding a group-by."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 100000, "low")
@@ -188,7 +183,6 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     as rounded numerics, never strings (Spark renders small doubles in
     scientific notation).
     """
-    ensure_utc(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return emb.select(
@@ -229,7 +223,6 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON field extraction from the events.props string column
     (``get_json_object`` ↔ DuckDB ``json_extract_string``)."""
-    ensure_utc(spark)
     events = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k")
     return events.select(
@@ -257,7 +250,6 @@ def scalar_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per extraction) and is the open-format answer to schemaless
     ingestion.  The oracle reads the same fields with DuckDB's JSON
     extraction — two engines, two encodings, same values."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     v = ev.withColumn("pv", F.parse_json("props"))
     return v.select(
@@ -285,7 +277,6 @@ def scalar_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag fields, bloom probes, and fingerprint arithmetic are built
     from; ``dedup_simhash`` uses the same primitives in anger).  All
     codegen'd JVM integer ops; narrow projection, zero shuffle."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 2000)
     eid = F.col("event_id")
     return ev.select(
@@ -323,7 +314,6 @@ def scalar_binary_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     after ``F.md5`` is a second trap — md5 already returns hex, hex()
     would re-encode the ASCII — avoided here.)  All narrow projections:
     zero shuffle, codegen'd digest loops."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     tb = F.col("text").cast("binary")
     b64 = F.regexp_replace(F.base64(tb), "[\r\n]", "")
@@ -379,7 +369,6 @@ def scalar_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``map_concat`` merged.  Narrow projection off one scan, zero
     shuffle; the bounded ``l_orderkey < 200`` slice is pushed to the
     parquet scan."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 200)
     m = F.map_from_arrays(
         F.array(F.lit("qty"), F.lit("price_cents"), F.lit("disc_bp")),
@@ -424,7 +413,6 @@ def udtf_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely the definition being pinned.  Narrow projection, zero
     shuffle; ``n_matches`` disambiguates a true NULL match from an
     empty-array placeholder row."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     arr = F.regexp_extract_all(F.lower("text"), F.lit("qu[a-z]+"), 0)
     return docs.select(
@@ -472,7 +460,6 @@ def scalar_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     array end.  DuckDB's counterparts (CASE-guarded divide, TRY_CAST,
     bracket indexing that is NULL-on-OOB by definition) state the
     same semantics.  Narrow codegen projection, zero shuffle."""
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     mixed = F.when(
         F.col("p_partkey") % 2 == 0, F.col("p_size").cast("string")
@@ -521,7 +508,6 @@ def scalar_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the definition of the collation being correct.
 
     One scan, one aggregate; collated comparisons stay JVM-side."""
-    ensure_utc(spark)
     part = load_table(spark, sf_dir, "part")
     part.createOrReplaceTempView("part_coll")
     return spark.sql(
@@ -561,7 +547,6 @@ def scalar_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB needing any XML support.  Per-row expression work only
     (JVM-side StaxXmlParser) — scan-bound at any scale.  Reference
     heritage: none (SURVEY §2 charter extension, scalar family)."""
-    ensure_utc(spark)
     nation = load_table(spark, sf_dir, "nation")
     packed = nation.select(
         "n_nationkey",

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import TABLES, load_table
 
 #: tokenizer of the reference's flagship word-count query
@@ -62,7 +61,6 @@ def word_count(df: DataFrame, text_col: str = "text") -> DataFrame:
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan every table, count rows.  Counts come from parquet row-group
     metadata (no data pages read) — the degenerate-scan fast path."""
-    ensure_utc(spark)
     counts = [
         load_table(spark, sf_dir, t).agg(
             F.lit(t).alias("tbl"), F.count("*").alias("n")
@@ -84,7 +82,6 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference demo (8 Gutenberg books → word counts) on the
     ``documents`` fixture, as a pure Catalyst plan."""
-    ensure_utc(spark)
     return word_count(load_table(spark, sf_dir, "documents"), "text")
 
 
@@ -107,7 +104,6 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate and re-parallelizes it — the returned DataFrame is the
     3-row result, not a plan over the deleted path.
     """
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
@@ -146,7 +142,6 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-round-trip rendering).  CSV is the closest analogue of the
     reference's text sink (``src/worker.cc:231-243``), upgraded with
     schema-on-read and splittable parallel scan."""
-    ensure_utc(spark)
     proj = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -181,7 +176,6 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink + source roundtrip with explicit schema-on-read,
     aggregated and checked against the original table (lossless numeric
     roundtrip, same contract as the CSV variant)."""
-    ensure_utc(spark)
     proj = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -218,7 +212,6 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate equals the oracle computed on the ORIGINAL table, proving
     the roundtrip lossless.  Same eager-materialization shape as the
     other sinks (the temp dir is deleted before returning)."""
-    ensure_utc(spark)
     proj = load_table(spark, sf_dir, "part").select("p_brand", "p_retailprice")
     out = tempfile.mkdtemp(prefix="sink_orc_roundtrip_")
     try:
@@ -255,7 +248,6 @@ def sink_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``test_partitioned_write_prunes``, which counts the scanned files).
     The aggregate equals the oracle on the ORIGINAL table, proving the
     layout roundtrip lossless."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     out = tempfile.mkdtemp(prefix="sink_partitioned_")
     try:
@@ -306,7 +298,6 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — count/sum/min/max shapes like these.)"""
     from pyspark.sql import Observation
 
-    ensure_utc(spark)
     obs = Observation("dq")
     orders = load_table(spark, sf_dir, "orders").observe(
         obs,
@@ -373,7 +364,6 @@ def join_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the statically-pruned aggregate.  Same eager write→read→cleanup
     shape as the other sink queries (bounded collect of the 3-row
     aggregate so the temp layout can be deleted)."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -441,7 +431,6 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce this same relation, the demo keeps the self-describing
     form.  Same eager write→read→cleanup shape as the sibling sink
     queries (3-ish-row bounded collect)."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="schema_evo_")
     try:
@@ -612,7 +601,6 @@ def dq_profile_all_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly cheaper than the N separate profiling queries it
     replaces.  Complements ``dq_observe_metrics`` (pipeline
     side-channel) and ``dq_constraint_check`` (assertions)."""
-    ensure_utc(spark)
     return profile_table(load_table(spark, sf_dir, "orders"))
 
 
@@ -640,7 +628,6 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-on-read + splittable row tags make it a parallel scan like
     CSV.  Reference heritage: text sink (``src/worker.cc:231-243``),
     upgraded to a structured hierarchical format."""
-    ensure_utc(spark)
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     # broadcast-safe: nation is a bounded 25-row dimension

@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -68,7 +67,6 @@ def sort_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy import: keeps the query-module registration order intact
     from mapreduceplusplus_spark.operators.aggregates import range_bucket_expr
 
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     keys = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -122,7 +120,6 @@ def sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no full shuffle.  This IS the scale path for top-k (vs sort_global).
     o_orderkey tiebreaker keeps the result deterministic under ties.
     """
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -150,7 +147,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     column name, not position, so projection reordering can't silently
     mispair columns).  Narrow op: no shuffle, partitions concatenate.
     """
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer").select(
         F.lit("customer").alias("kind"),
         F.col("c_custkey").alias("entity_key"),
@@ -176,7 +172,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (distinct): customers that both placed an 'F' order and
     have positive balance.  Plans as an aggregate + join on all columns;
     distinct semantics mean the output is key-unique."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     left = orders.where(F.col("o_orderstatus") == "F").select(
@@ -201,7 +196,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the set-op mirror of an anti join (same rows, different plan:
     aggregate + anti-join under the hood).  The status filter keeps the
     result non-empty: every synthetic custkey has ≥1 order overall."""
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -229,7 +223,6 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB that plan is exactly right: hash-partition by row,
     map-side-combine the signed counts, re-expand — skew follows the
     value distribution and AQE splits hot values."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     left = orders.where(F.col("o_orderstatus") != "F").select(
         F.col("o_custkey").alias("custkey")
@@ -253,7 +246,6 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     value): customers counted once per matched pair of O- and F-status
     orders.  Same aggregate-and-regenerate physical shape as
     ``set_except_all`` — one value-keyed shuffle, no join."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     left = orders.where(F.col("o_orderstatus") == "O").select(
         F.col("o_custkey").alias("custkey")
@@ -287,7 +279,6 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the by-name resolution mapped every column correctly.
 
     Same zero-shuffle concatenation physics as ``set_union_all``."""
-    ensure_utc(spark)
     a = (
         load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey") < 500)
@@ -342,7 +333,6 @@ def sort_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are single-partition and the production form would use the
     two-pass ``sort_global`` bucket rank — the semantics pinned here
     carry over unchanged."""
-    ensure_utc(spark)
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").where(

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.iterate import truncate
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, floor_div_sql
+from mapreduceplusplus_spark.session import floor_div_sql
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: DuckDB floor-division fragment rendered by the SHARED helper (see
@@ -119,7 +119,6 @@ def ts_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's own active span; emit the forward-filled and the linearly
     interpolated series plus the gap flag.  See the module docstring
     for the integer-exact determinism contract."""
-    ensure_utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < _MAX_USER)
@@ -232,7 +231,6 @@ def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (same partitioning key); state per row is O(1).  This
     is the batch shape of ``stream_session_window`` — the streaming
     twin uses Spark's native ``session_window`` with a watermark."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -294,7 +292,6 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline them from the same scan), the join is co-keyed on user_id,
     and only the final small (cohort × offset) rollup reshuffles — the
     output is bounded by days², independent of corpus size."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("d")
     )
@@ -350,7 +347,6 @@ def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: window and aggregation share the (user_id, bar) hash
     partitioning — one shuffle total; bars per key are bounded by the
     time span, not the tick volume."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 10).select(
         "user_id",
         F.date_trunc("hour", "ts").alias("bar"),
@@ -406,7 +402,6 @@ def events_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain — the aggregate output is constant-size regardless of event
     volume.  At 100 TB the single shuffle is the user_id window; the
     transition rollup is map-side combined into almost nothing."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.withColumn("prev_t", F.lag("event_type").over(w))
@@ -454,7 +449,6 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ #days) rollup.  Churn (yesterday-active, today-absent) is the
     same lag on the REVERSED axis — left out so every output row is an
     observed activity row, not a generated absence."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("d")
     )
@@ -513,7 +507,6 @@ def events_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is a per-unit indicator or sum.  Significance testing on top
     is ``window_anomaly_zscore``'s cleared-denominator pattern
     (compare n·Δ² against the pooled variance in integers)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     users = ev.groupBy("user_id").agg(
         F.max(
@@ -567,9 +560,8 @@ def events_cumulative_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over ~#days rows — the documented benign
     single-partition window over a driver-scale table (same as
     ``sort_global``'s offsets).  CAST-to-DATE is tz-sensitive: both
-    engines evaluate it in UTC (``ensure_utc`` + naive DuckDB
-    timestamps), the equivalence the hostile-tz sweep guards."""
-    ensure_utc(spark)
+    engines evaluate it in UTC (the registry's UTC pin + naive
+    DuckDB timestamps), the equivalence the hostile-tz sweep guards."""
     events = load_table(spark, sf_dir, "events")
     first_seen = events.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day")
@@ -642,7 +634,6 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         census_offsets_literal,
     )
 
-    ensure_utc(spark)
     events = load_table(spark, sf_dir, "events")
     # the event-volume rollup is materialized ONCE (review r8: unpersisted
     # it was recomputed by the quantile sample, the census, the totals,
@@ -742,7 +733,6 @@ def events_inter_arrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash shuffle on user_id serves BOTH the lag window and
     the rollup (same partitioning, no second exchange); per-user state
     is one timestamp."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -798,7 +788,6 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined max/count rollup to #types rows; the
     global high-water mark is a 1-row re-aggregate of that rollup
     broadcast back.  The fact table is scanned once."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     per = ev.groupBy("event_type").agg(
         F.max("ts").alias("last_ts"), F.count("*").alias("n_events")
@@ -841,7 +830,6 @@ def events_hourweek_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure map-side-combined rollup to ≤ 7·24·|types| rows —
     the shuffle carries the grid, not events."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         (F.dayofweek("ts") - 1).cast("bigint").alias("dow"),
@@ -892,7 +880,6 @@ def events_seasonal_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two stacked map-side-combined rollups (per-slot-day, then
     per-slot) and a co-keyed join back — events shuffle once; the
     baseline table is ≤ 7·24 rows and broadcasts."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(
         F.col("event_type") == "click"
     )
@@ -967,7 +954,6 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins back on the same key (co-partitioned, no second exchange
     under AQE); the triangle rollup is (#cohorts × 12)-sized with
     map-side-combined partial distinct."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -1041,7 +1027,6 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     rows — that is the operator) but the rollup output is |channels|+1
     rows, map-side combined.  Integer cents.  Reference heritage:
     none (SURVEY §2 charter extension, events family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
@@ -1134,7 +1119,6 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     single sort+exchange; the rollup output is |channels|+1 rows,
     map-side combined.  All-integer arithmetic end to end.  Reference
     heritage: none (SURVEY §2 charter extension, events family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
@@ -1254,7 +1238,6 @@ def events_ab_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~9·10¹² rows per arm (beyond: promote the products to
     DECIMAL(38,0), the ``bp_ratio_halfup`` device).  Reference
     heritage: none (SURVEY §2 charter extension, events family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("g"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -1372,7 +1355,6 @@ def events_ab_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero members yield no row (both engines) — there is no one-sample
     U.  Reference heritage: none (SURVEY §2 charter extension, events
     family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("g"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -1496,7 +1478,6 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-epoch walks with the same prefix-sum trick
     (``pack_concat_chunks`` does exactly that two-pass composition).
     Reference heritage: none (SURVEY §2 charter extension)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id",
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
@@ -1584,7 +1565,6 @@ def ts_interval_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the two-pass bucket-census prefix sum of ``pack_concat_chunks``
     replaces the single window.)  Reference heritage: none (SURVEY §2
     charter extension, timeseries family)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_shipdate").cast("date").alias("s"),
         F.date_add(
@@ -1661,7 +1641,6 @@ def dq_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 1-row total broadcast back.  Single scan, no wide shuffle.
     Reference heritage: none (SURVEY §2 charter extension, dq/drift
     family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("value") >= 0)
     binned = ev.groupBy(
         F.floor(F.col("value") / _PSI_BIN).cast("bigint").alias("bin"),
@@ -1732,7 +1711,6 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same unit-of-analysis reduction as ``events_ab_lift``) then a
     1-row reduction.  Reference heritage: none (SURVEY §2 charter
     extension, experimentation family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     units = ev.select("user_id").distinct().select(
         F.when(F.col("user_id") % 2 == 0, "A").otherwise("B").alias("variant")
@@ -1832,7 +1810,6 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 1-row pooled-moment reduce, one 2-row arm rollup; θ broadcasts
     back as a scalar.  Reference heritage: none (SURVEY §2 charter
     extension, experimentation family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     cut = F.lit(CUPED_CUTOFF).cast("timestamp")
@@ -1987,7 +1964,6 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, so the global unpartitioned windows are safe by
     cardinality (the ``census_offsets_literal`` argument).  Reference
     heritage: none (SURVEY §2 charter extension, events family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.unix_timestamp("ts").alias("es")
     )
@@ -2115,7 +2091,6 @@ def events_ab_chi2_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined user collapse, then a 1-row fold —
     identical shape to ``events_ab_lift``.  Reference heritage: none
     (SURVEY §2 charter extension, experimentation family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.when(
@@ -2227,7 +2202,6 @@ def events_ab_winsorized_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the VALUE DOMAIN, not the row count; everything else is
     map-side.  Reference heritage: none (SURVEY §2 charter extension,
     experimentation family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("g"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -2325,7 +2299,6 @@ def events_common_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the path-count relation is tiny (|types|^{_PATH_LEN} keys
     max, Zipf-concentrated in practice).  Reference heritage: none
     (SURVEY §2 charter extension, events family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id"
     )
@@ -2413,7 +2386,6 @@ def dq_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dev`` frame feeds both the MAD agg and the final census —
     truncated once.  Reference heritage: none (SURVEY §2
     charter extension, dq family)."""
-    ensure_utc(spark)
     x = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("x_c"),
@@ -2516,7 +2488,6 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; at 100 TB this is a pure scan-bound estimator.
     Reference heritage: none (SURVEY §2 charter extension, events/
     experimentation family)."""
-    ensure_utc(spark)
     x = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("treat"),
         F.when(

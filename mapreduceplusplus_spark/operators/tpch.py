@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.operators._money import bp_ratio_halfup
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 __all__ = ["bp_ratio_halfup"]
@@ -96,7 +95,6 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters evaluate inside the codegen'd scan stage.  Revenue
     accumulates in integer 1e-4 units (cents × discount%), exact under
     any accumulation order."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
     return (
@@ -152,7 +150,6 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     2×2×years-row final rollup.  The nation-pair predicate prunes
     ~(2/25)² of the traffic but can only apply post-join — Catalyst
     still pushes the two-year ship-date window into the scan."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -236,7 +233,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver.  The fact shuffles once on orderkey.  The share is the
     repo's half-up basis-point integer division — engine-exact, no
     float ratio."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -319,7 +315,6 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at test SF; at 100 TB they shuffle instead of OOMing the driver).
     Only constant-size nation is hinted; lineitem shuffles once on
     orderkey for the orders leg."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = (
         load_table(spark, sf_dir, "part")
@@ -369,7 +364,6 @@ def tpch_q12_late_line_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one year of lineitem after pruning joins orders on the
     orderkey (the one shuffle); the cross-table lateness predicate
     evaluates post-join inside codegen; output is a 2-row rollup."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
@@ -419,7 +413,6 @@ def tpch_q13_customer_orders_hist(spark: SparkSession, sf_dir: str) -> DataFrame
     rollup shuffles on custkey, the second is a ~20-row histogram.
     ``count(o_orderkey)`` (not ``count(*)``) makes the no-match
     left-join row count as 0."""
-    ensure_utc(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
@@ -469,7 +462,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The name lookup broadcasts the ``= max`` WINNERS (ties-kept, ~1
     row at any SF) into the supplier dim — NOT the full supplier
     table, which grows linearly and must never be hint-broadcast."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -536,7 +528,6 @@ def tpch_q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts at test SF and lets them shuffle at cluster SF.  The
     distinct-count shuffles (brand,type,size,suppkey) once then folds
     — no row explosion."""
-    ensure_utc(spark)
     # NOT IN also drops NULL probe keys (NULL NOT IN (...) is NULL);
     # left_anti would KEEP them — the explicit isNotNull makes the
     # anti-join exactly NOT IN even if the key column ever gains NULLs
@@ -599,7 +590,6 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side only — the stats must cover ALL lines of each part
     (filtering before the stats join would change the average), which
     is exactly the subtlety Q17 tests."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     stats = li.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         F.sum(_qty()).cast("bigint").alias("sum_qty"),
@@ -653,7 +643,6 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
     co-partitioned shuffle join (same orderkey both sides) beyond.
     ``customer`` likewise grows linearly and joins unhinted.
     Quantities sum as BIGINT — exact."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     heavy = (
         li.groupBy("l_orderkey")
@@ -703,7 +692,6 @@ def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so part joins UNHINTED (AQE broadcast-converts at test SF,
     shuffles at 100 TB); the OR residual runs in codegen over the
     joined stream; single-row integer-exact aggregate out."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size"
@@ -777,7 +765,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is #orders-sized and joins back on the same key with no
     new exchange under AQE; the supplier dim grows linearly with SF
     so it joins unhinted (AQE broadcast-converts while it fits)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -844,7 +831,6 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NOT EXISTS decorrelates to a LEFT ANTI against the orders
     custkey projection — at 100 TB that anti join is the only shuffle,
     or zero shuffles if orders' custkey index is bucketed."""
-    ensure_utc(spark)
     pool = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_nationkey").isin(1, 3, 5, 7, 9))
@@ -924,7 +910,6 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     with SF, so none carries a broadcast hint — AQE converts them at
     test SF; at 100 TB the min-join-back becomes a co-partitioned
     shuffle join.  Only constant-size nation/region are hinted."""
-    ensure_utc(spark)
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey"
     )
@@ -1008,7 +993,6 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scalar total re-aggregates the #parts-row rollup and
     broadcasts back 1 row — with AQE exchange reuse the rollup
     computes once (same structure the Q15 pin enforces)."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey").isNotNull()
     )
@@ -1080,7 +1064,6 @@ def tpch_q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     part cut and the supplier name lookup are constant FRACTIONS of
     linear-growth tables, so neither is hint-broadcast — AQE converts
     while they fit."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))

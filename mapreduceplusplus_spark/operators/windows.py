@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, floor_div_sql
+from mapreduceplusplus_spark.session import floor_div_sql
 from mapreduceplusplus_spark.sources.tables import load_table
 
 
@@ -41,7 +41,6 @@ from mapreduceplusplus_spark.sources.tables import load_table
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / row_number per nation ordered by balance."""
-    ensure_utc(spark)
     customer = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey")
@@ -80,7 +79,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     group before exchanging, so the shuffle carries ≈ k·|groups| rows,
     not the whole fact table.
     """
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -112,7 +110,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative per-user sum over event time with an explicit ROWS
     frame (DuckDB's default frame is RANGE — peer rows would be summed
     together — so both sides pin ROWS)."""
-    ensure_utc(spark)
     events = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -143,7 +140,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead over each customer's order history (NULL at the edges —
     first order has no prev, last has no next)."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return orders.select(
@@ -178,7 +174,6 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     family OLAP dashboards run constantly.  Same single hash shuffle on
     the partition key as any window; the (price, orderkey) ordering is
     total so every value is deterministic."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return orders.select(
@@ -217,7 +212,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on the partition key, in-partition sort, streaming frame
     evaluation with O(frame) state per partition.
     """
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     day = F.datediff("o_orderdate", F.lit("1970-01-01").cast("date"))
     w = (
@@ -276,7 +270,6 @@ def window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user event counts (salt/pre-filter the hot user tail if a key
     exceeds memory).
     """
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.where(
         F.col("event_type").isin("view", "click", "purchase")
@@ -378,7 +371,6 @@ def window_decay_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     elements regardless of partition length.  The oracle's banded
     self-join shape is what engines WITHOUT higher-order functions
     must fall back to — 20× the shuffled rows."""
-    ensure_utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 200)
@@ -443,7 +435,6 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to integer cents the result is exact and
     engine-identical — no float summation, no rounding ties (the same
     determinism contract as ``window_decay_ema``)."""
-    ensure_utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 200)
@@ -489,7 +480,6 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the current row — both sides pin the full
     UNBOUNDED-PRECEDING-TO-UNBOUNDED-FOLLOWING frame explicitly, and
     the (date, key) ordering is total so every value is deterministic."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -540,7 +530,6 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     window + island GROUP BY on the same user_id partitioning —
     Catalyst reuses one exchange for all three.  Integer day
     arithmetic throughout; nothing float, nothing engine-variant."""
-    ensure_utc(spark)
     days = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 200)
@@ -600,7 +589,6 @@ def window_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounds: cents ≤ 6e4 ⇒ LHS ≤ ~1.3e12, RHS ≤ ~1.1e13 ≪ 2^63).
     A constant history (variance 0) flags ANY deviation, by
     convention.  One shuffle on user_id; frame-bounded state."""
-    ensure_utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 200)
@@ -665,7 +653,6 @@ def window_distinct_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame list (bounded by the frame, not the partition).  For wide
     frames with low-cardinality domains, a bitmask aggregate (see
     ``agg_bitmap_segments``) is the cheaper encoding."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 20)
     w = (
         Window.partitionBy("user_id")
@@ -719,7 +706,6 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     One hash exchange on the partition key serves all three frames
     (identical partitioning+ordering); integer cents, total (date,
     orderkey) ordering — deterministic under ties."""
-    ensure_utc(spark)
     orders = load_table(spark, sf_dir, "orders")
     obs = F.when(
         F.col("o_orderkey") % 3 == 0,
@@ -801,7 +787,6 @@ def window_funnel_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to ``window_funnel`` — one shuffle to gather
     per-user history, O(events-per-user) fold, 3-row scaffold output
     that survives an empty corpus."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.where(
         F.col("event_type").isin("view", "click", "purchase")
@@ -909,7 +894,6 @@ def window_decay_time_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 20-element frame.  The oracle is the banded self-join an
     HOF-less engine would run (20× the shuffled rows — the reason the
     window form is the scale path).  One user_id exchange total."""
-    ensure_utc(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("user_id") < 200)
@@ -1025,7 +1009,6 @@ def window_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle.  At 100 TB this is the sessionize shape: hash-partition
     by user, sort once per partition.  Reference heritage: none
     (SURVEY §2 charter extension, window family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",

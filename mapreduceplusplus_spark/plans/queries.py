@@ -34,7 +34,6 @@ from mapreduceplusplus_spark.mr import flat_map, fold_by_key, map_reduce
 # executed verbatim on both engines by sql_passthrough_q1 below
 from mapreduceplusplus_spark.operators.aggregates import TPCH_Q1_SQL as _Q1_SHARED_SQL
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: the reference tokenizer (``mr/word_count.h:22-31``): maximal runs of
@@ -70,7 +69,6 @@ def udtf_flatmap_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol).  Output is the raw (word, 1) stream the reference's map
     tasks write to shuffle files — hash-checked against SQL tokenization.
     """
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select("text")
     return flat_map(docs, _wc_map, schema="word string, one bigint")
 
@@ -88,7 +86,6 @@ def udaf_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     via ``applyInPandas`` — one Arrow batch per key group, many groups
     per task.  Folds l_quantity per order; rounded on both sides so
     Python float summation order cannot flip the hash."""
-    ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("key"), F.col("l_quantity").alias("value")
     )
@@ -112,7 +109,6 @@ def mr_pipeline_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     lacks) → R-way hash shuffle → user fold per key.  The word-count
     instantiation hash-matches the SQL tokenization oracle, proving the
     pipeline reproduces the reference's flagship output exactly."""
-    ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents").select("text")
     return map_reduce(
         docs,
@@ -145,8 +141,6 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow form is the throughput path a 100 TB job must use (~10-100×
     per the Pandas-UDF vs row-UDF gap)."""
     from pyspark.sql.functions import udtf
-
-    ensure_utc(spark)
 
     @udtf(returnType="word string, wlen int")
     class SplitWords:
@@ -195,8 +189,6 @@ def udtf_arrow_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     from pyspark.sql.functions import arrow_udtf
 
-    ensure_utc(spark)
-
     @arrow_udtf(returnType="doc_id bigint, word string, wlen int")
     class SplitWordsArrow:
         def eval(self, batch: "pa.RecordBatch"):
@@ -229,7 +221,6 @@ def sql_passthrough_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical plan through the DataFrame API: Catalyst compiles both
     entry points to one logical plan, so this row pins the SQL parser
     path specifically."""
-    ensure_utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(_Q1_SHARED_SQL)
 
@@ -259,8 +250,6 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch.  Reference heritage: the map-UDF contract
     (``mr/word_count.h:16-21``) — this is its scalar-column face."""
     from pyspark.sql.functions import pandas_udf
-
-    ensure_utc(spark)
 
     @pandas_udf("bigint")
     def n_letters(s: pd.Series) -> pd.Series:
@@ -304,8 +293,6 @@ def udaf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort-based fold wins instead.  Reference heritage: the reduce-UDF
     contract (``mr/word_count.h:24-31``) — its vectorized face."""
     from pyspark.sql.functions import pandas_udf
-
-    ensure_utc(spark)
 
     @pandas_udf("bigint")
     def wavg_cents(cents: pd.Series, qty: pd.Series) -> int:

@@ -33,6 +33,7 @@ Conventions that keep the Spark/DuckDB differential check exact:
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
@@ -81,15 +82,11 @@ _QUERY_MODULES = [
 #: Explicit ordering for the driver-facing dicts.  The external
 #: correctness harness records only the FIRST 50 entries of
 #: ``queries()`` (in dict order), so the 46 SURVEY §2.B contract
-#: queries MUST occupy the head of the dict regardless of module
-#: import order — round 3 lost driver coverage for 4 contract rows
-#: because newly-registered bonus queries displaced them.  Slots
-#: 47–50 are given to the highest-value bonus queries (the LLM dedup
-#: family + the combined text-extras differential).  Everything else
-#: follows in registration order and is still fully served by
-#: ``queries()`` / ``oracles()`` — it just sits past the external
-#: harness's window (each of those rows is oracle-checked locally by
-#: the pytest differential harness instead).
+#: queries occupy the head of the dict whatever the module import
+#: order.  Slots 47–50 rotate through oracle-bearing queries that have
+#: no row yet in any committed ``CORRECTNESS_r*.json``.  Everything
+#: else follows in registration order; each of those rows is
+#: oracle-checked locally by the pytest differential harness.
 _PRIORITY_ORDER = [
     # --- SURVEY §2.B contract (46 named queries) ---
     "scan_parquet",
@@ -138,110 +135,10 @@ _PRIORITY_ORDER = [
     "sim_search_topk",
     "text_analysis_stats",
     "multimodal_columns",
-    # --- bonus slots 47–50: rotate each round across the oracle-bearing
-    # tail so driver-side hash evidence accumulates.  Every slot must
-    # carry a SQL oracle (a no-oracle query here can only ever produce a
-    # rows-only row — wasted window).  Driver-green history: r4 =
-    # dedup_ngram_jaccard, dedup_embedding_cosine, text_extras; r5 =
-    # pipeline_corpus_end2end, sim_search_knn_join, dedup_decontaminate,
-    # text_pii_redact; r6 = ts_resample_gapfill, merge_upsert,
-    # window_funnel, agg_argmax.  r7 rotates in four never-driver-
-    # checked rows (checked against every CORRECTNESS_r* record):
-    # the pure-pushdown TPC-H probe, the exact-money contract, the
-    # salted skew-join machinery, and the composed LLM cleaning
-    # pipeline (all stay locally differentialed every pytest run
-    # regardless of slot position).
-    # r7 rotated tpch_q6_forecast_revenue, agg_decimal_exact,
-    # join_skew_salted, pipeline_clean_corpus — all came back
-    # hash-green in CORRECTNESS_r07.  r8 rotates in four more
-    # never-driver-checked rows (verified against every
-    # CORRECTNESS_r1..r7 record; the r7 verdict also named join_asof
-    # and pipeline_corpus_end2end but both already carry driver rows
-    # — r3 and r5 respectively — so the slots go to rows with NO
-    # prior driver evidence): the Spark-4 recursive CTE, the
-    # iterative integer-exact k-means, the freshly two-pass-ranked
-    # Pareto curve (driver-side proof of the r8 rewrite), and the
-    # heaviest bench query (asymmetric containment dedup).
-    # r8 rotated sql_recursive_cte, ml_kmeans_lloyd,
-    # events_power_users_pareto, dedup_containment_quotes — all
-    # hash-green in CORRECTNESS_r08.  r9 rotates in the four rows the
-    # r8 verdict named (all oracle-bearing, none with any prior
-    # CORRECTNESS_r1..r8 row): the composed iterative dedup pipeline
-    # (the new flagship composition), the near-duplicate eval
-    # decontamination, the pure-Python streaming DataSource path, and
-    # the Spark-4 SQL pipe-syntax parser surface.
-    # r9 rotated pipeline_dedup_end2end, dedup_decontaminate_near,
-    # source_python_stream, sql_pipe_syntax — all hash-green in
-    # CORRECTNESS_r09.  r10 rotates in the four rows the r9 verdict
-    # named (all oracle-bearing r9 additions, none with any prior
-    # CORRECTNESS_r1..r9 row): the bigram-LM perplexity flagship, the
-    # Naive Bayes classifier, the large-star/small-star connected
-    # components (the r9 algorithm upgrade), and the governed
-    # perplexity decile gate.
-    # r10 rotated text_perplexity_bigram, ml_naive_bayes,
-    # graph_connected_components, pipeline_perplexity_gate — all
-    # hash-green in CORRECTNESS_r10.  r11 rotates in the four rows the
-    # r10 verdict named (all oracle-bearing r10 additions, none with
-    # any prior CORRECTNESS_r1..r10 row): the O(|log|)-state
-    # incremental CDC collapse, the weighted Bellman-Ford (the
-    # stronger SSSP pin — weighted semantics BFS cannot express), the
-    # Spark-4.1 arrow-vectorized UDTF, and the two-window linear
-    # multi-touch attribution.
-    # r11 rotated cdc_incremental_diff, graph_sssp_weighted,
-    # udtf_arrow_vectorized, events_attribution_linear — all
-    # hash-green in CORRECTNESS_r11.  r12 rotated dedup_semdedup,
-    # sim_search_mmr_rerank, stream_stream_join_left, graph_sssp — all
-    # hash-green in CORRECTNESS_r12.  r13 rotates in the four rows the
-    # r12 verdict named (the oracle-bearing r12 additions, none with
-    # any prior CORRECTNESS_r1..r12 row): the incremental SemDeDup
-    # ingest (cid-partitioned member-embedding index probe), the
-    # BM25+cosine reciprocal-rank-fusion retriever, the point-in-time
-    # SCD2 feature join with label embargo, and the exact-ppm
-    # cosine-to-own-centroid outlier scorer.
-    # r13 rotated dedup_semdedup_incremental, sim_search_hybrid_rrf,
-    # join_pit_scd2_embargo, embedding_outlier_centroid — all
-    # hash-green in CORRECTNESS_r13.  r14 rotates in the four rows the
-    # r13 verdict named (the experimentation quartet — all
-    # oracle-bearing, none with any prior CORRECTNESS_r1..r13 row):
-    # the two-sample Kolmogorov-Smirnov test, the Mann-Whitney U rank
-    # test, the winsorized-means A/B comparison, and the chi-squared
-    # conversion test.
-    # r14 rotated events_ab_ks_test, events_ab_mannwhitney,
-    # events_ab_winsorized_means, events_ab_chi2_conversion — all
-    # hash-green in CORRECTNESS_r14 (the first 50/50 all-green driver
-    # file).  r15 rotates in the four rows the r14 verdict named
-    # (all oracle-bearing, none with any prior CORRECTNESS_r1..r14
-    # row): the TPC-H q21 waiting-suppliers multi-correlated-exists
-    # shape, the duplication governance report, the token-budget
-    # corpus planner, and the mixture temperature-weights sampler.
-    #
-    # r15 rotated tpch_q21_waiting_suppliers, dq_duplication_report,
-    # corpus_token_budget_plan, mixture_temperature_weights — all
-    # hash-green in CORRECTNESS_r15 (second consecutive 50/50
-    # all-green driver file).  r16 rotates in the four rows the
-    # committed r16 plan (and the r15 verdict #3) named — the r14
-    # rows-only→oracle conversions, most load-bearing first:
-    # the SimHash near-dup banding, the batched LSH top-k, the
-    # partition-pruned persisted-IVF probe, and the iterative k-core
-    # decomposition.
-    #
-    # r16 rotated dedup_simhash, sim_search_lsh_batch,
-    # sim_search_ivf_partitioned, graph_kcore — all hash-green in
-    # CORRECTNESS_r16 (fourth consecutive 50/50 all-green driver
-    # file).  r17 rotates in the four rows VERDICT r16 #10 named
-    # (continuing the r15 #3/#4 plan): the persisted-band-index
-    # incremental near-dedup probe, the mergeable HLL sketch, the
-    # KLL/GK approximate quantiles, and the dynamic-gap session
-    # window (the only §2.B CORE row never externally hashed —
-    # VERDICT r15 Missing #2 — so it takes the fourth slot ahead of
-    # agg_count_min_sketch).
-    #
-    # r17 rotated dedup_incremental_ingest_near, agg_hll_sketch_merge,
-    # agg_approx_quantile, stream_session_window_dynamic_gap — all
-    # hash-green in CORRECTNESS_r17.  r18 rotates in the four rows the
-    # r17 plan named: the count-min sketch, then the r15/r16 additions
-    # and conversions — the boilerplate-line dedup, the LSH triplet
-    # miner and the ANN recall curve.
+    # --- slots 47–50: oracle-bearing rows with no committed driver row
+    # (tests/test_oracle_differential.py::
+    # test_rotation_slots_are_fresh_oracle_bearing).  Which rows each
+    # round rotated is in the committed CORRECTNESS_r*.json files.
     #
     # Remaining never-checked oracle-bearing candidates (r19+): the
     # late-r16 additions stream_dedup_near (the streaming
@@ -281,44 +178,39 @@ def _ordered(d: dict) -> dict:
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a named query and (optionally) its SQL oracle."""
+    """Decorator: register a named query and (optionally) its SQL oracle.
+
+    The registered function, which is also what the decorated name
+    binds to, pins ``spark.sql.session.timeZone`` to UTC on the session
+    it is given before building: timestamp renderings then match the
+    UTC-naive DuckDB oracle whatever session the caller built."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def in_utc(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = in_utc
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return in_utc
 
     return deco
 
 
 def load_all() -> None:
-    """Import every query module exactly once (idempotent)."""
+    """Import every query module exactly once (idempotent).  A listed
+    module that fails to import raises: a query family never goes
+    missing quietly."""
     global _loaded
     if _loaded:
         return
-    skipped = []
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # modules land incrementally during the build; only swallow
-            # "that exact module file doesn't exist yet" — a typo'd
-            # transitive import inside an existing module must re-raise,
-            # otherwise its whole query family silently vanishes
-            if exc.name == mod or (exc.name and mod.startswith(exc.name + ".")):
-                skipped.append(mod)
-                continue
-            raise
-    if skipped:
-        import sys
-
-        print(
-            f"[registry] planned-but-missing query modules skipped: {skipped}",
-            file=sys.stderr,
-        )
+        importlib.import_module(mod)
     _loaded = True
 
 

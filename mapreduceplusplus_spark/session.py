@@ -12,8 +12,9 @@ Scale posture (100 TB design, local[cores] test):
   overridden upward (or left to AQE's initialPartitionNum).
 - Arrow enabled so the Pandas-UDF escape hatches (the reference's
   arbitrary-UDF model) move columnar batches, not pickled rows.
-- session timezone pinned UTC so timestamp semantics are stable across
-  engines (DuckDB oracle is UTC-naive).
+- session timezone built as UTC so timestamp semantics are stable across
+  engines (DuckDB oracle is UTC-naive).  A session built elsewhere gets
+  the same pin from ``registry.query``, which sets it on every query call.
 - Python workers run ``pyspark_graft_worker`` (repo root) as their
   worker module.  Stock PySpark calls ``importlib.invalidate_caches()``
   before every task, and CPython 3.11's ``zipimporter`` answers by
@@ -79,62 +80,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def ensure_utc(spark: SparkSession) -> SparkSession:
-    """Pin the session timezone to UTC (runtime-settable SQL conf).
-
-    Every declared query calls this so timestamp→string rendering matches
-    the UTC-naive DuckDB oracle even when the caller built the session.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
-
-
-def conf_for_scale(
-    input_bytes: int,
-    executors: int = 1,
-    cores_per_executor: int = 32,
-    executor_mem_bytes: int = 128 << 30,
-) -> dict[str, str]:
-    """Cluster-sizing recipe: the Spark confs this engine recommends for
-    a given input size — the arithmetic behind every "would this hold at
-    100 TB?" claim in the operator docstrings, stated once, executable,
-    and unit-tested.
-
-    Reasoning per knob:
-    - ``spark.sql.files.maxPartitionBytes``: scan tasks should be
-      128–256 MiB so a task neither starves the scheduler (too many)
-      nor stalls stragglers (too few).  Kept at 256 MiB for large
-      inputs — with 100 TB that is ~400k scan tasks, a fine granularity
-      for 32k cores.
-    - ``spark.sql.shuffle.partitions``: target ~200 MiB of pre-spill
-      shuffle input per partition, floored at 2× total cores (always
-      enough parallelism to occupy the cluster) and ceilinged at 200k
-      (file-handle and scheduler sanity).  AQE coalesces DOWN from this
-      at runtime, so erring high is safe; erring low cannot be fixed
-      at runtime and spills.
-    - ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: 128 MiB —
-      the post-coalesce target AQE aims for.
-    - ``spark.sql.autoBroadcastJoinThreshold``: ~1% of executor memory,
-      capped at 256 MiB: a broadcast table is materialized on the
-      driver AND per-executor, so the ceiling protects both.
-
-    Deliberately NOT set: executor/driver memory (cluster-manager
-    territory), AQE toggles (always on, see ``get_spark``)."""
-    total_cores = max(1, executors * cores_per_executor)
-    scan_part = 256 << 20
-    shuffle_parts = min(
-        200_000,
-        max(2 * total_cores, input_bytes // (200 << 20) or 1),
-    )
-    broadcast_cap = min(256 << 20, executor_mem_bytes // 100)
-    return {
-        "spark.sql.files.maxPartitionBytes": str(scan_part),
-        "spark.sql.shuffle.partitions": str(shuffle_parts),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(128 << 20),
-        "spark.sql.autoBroadcastJoinThreshold": str(broadcast_cap),
-    }
 
 
 def floor_div_sql(num: str, den: str, dialect: str) -> str:

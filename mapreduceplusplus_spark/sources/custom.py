@@ -28,7 +28,6 @@ from pyspark.sql.datasource import (
 )
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 
 #: generator extent — total rows and parallel splits
 SEQ_ROWS = 10_000
@@ -97,7 +96,6 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``range()`` — two engines, two generators, same relation.  The scan
     itself shows up in the plan as a ``BatchScan`` over 8 planner-known
     partitions (Arrow-batched executor-side Python)."""
-    ensure_utc(spark)
     register_seq_source(spark)
     seq = spark.read.format("mrpp_seq").load()
     return seq.groupBy(F.col("bucket").cast("int").alias("bucket")).agg(
@@ -196,7 +194,6 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard the directory tree and let ``pathGlobFilter``/partition
     directories prune — the same partition-pruning machinery
     ``sink_partitioned_pruned`` pins for parquet."""
-    ensure_utc(spark)
     _ensure_binsrc_fixture()
     df = spark.read.format("binaryFile").load(_BINSRC_DIR + "/*.bin")
     return df.select(
@@ -303,7 +300,6 @@ def source_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference heritage: the reference slurps whole text files and has
     no malformed-record concept (``src/worker.cc:127-133``); this is
     the SURVEY §2 charter's ingestion-robustness extension."""
-    ensure_utc(spark)
     _ensure_csvsrc_fixture()
     df = (
         spark.read.schema("id bigint, kind string, amount double, _bad string")
@@ -399,7 +395,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    ensure_utc(spark)
     register_seq_source(spark)
     sink = f"pystream_sink_{uuid.uuid4().hex[:8]}"
     chk = tempfile.mkdtemp(prefix="pystream_chk_")

@@ -168,16 +168,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text scan (reference A1, ``src/worker.cc:127-133``).
-
-    One row per line, column ``value: string``.  Unlike the reference,
-    large files are split into multiple tasks (the reference pins one map
-    task per whole file — a scalability bug at 100 TB, not replicated).
-    """
-    return spark.read.text(path)
-
-
 def load_whole_text_files(spark: SparkSession, glob: str) -> DataFrame:
     """Exact whole-file semantics of the reference's map-task input:
     one record per file, (path, content).  RDD escape hatch because the

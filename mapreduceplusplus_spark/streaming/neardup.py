@@ -46,7 +46,7 @@ from mapreduceplusplus_spark.llm.dedup import (
     neardup_verdicts,
 )
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc, sql
+from mapreduceplusplus_spark.session import sql
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: micro-batch width in doc_id units: arrival order is doc_id order,
@@ -120,7 +120,6 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs), one rollup per streamed doc, and a left join back for the
     all-clear rows.  Integer cross-multiplied threshold — the verify
     is bit-exact in both engines."""
-    ensure_utc(spark)
     # one parsed statement over the memoized frames: one Catalyst
     # analysis where DataFrame steps pay one each
     return sql(

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: attribution lookback — a click converts if a purchase by the same
@@ -56,7 +55,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-filter — same plan discipline as ``join_theta_range``, never a
     cross product.  The streaming form is ``streaming_join_pipeline``
     (same condition + watermarks ⇒ bounded state)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").alias("p")
     c = ev.where(F.col("event_type") == "click").alias("c")
@@ -176,7 +174,6 @@ def stream_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase's null row is held until the watermark proves no click
     can still arrive — pinned by the micro-batch test).  Reference
     heritage: none (SURVEY §2 charter extension, streaming family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").alias("p")
     c = ev.where(F.col("event_type") == "click").alias("c")
@@ -234,7 +231,6 @@ def stream_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_streaming.py::
     test_stream_stream_full_outer_click_null_timing``).  Reference
     heritage: none (SURVEY §2 charter extension, streaming family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").alias("p")
     c = ev.where(F.col("event_type") == "click").alias("c")
@@ -287,7 +283,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events micro-batch against a bucketed dim instead of OOMing
     the driver); the rollup output is |segments|×|event types| — tiny.
     Value sums ride as integer cents: accumulation-order-exact."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value"
     )

@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: (n_events bigint, sum_value double, last_ts_us bigint)
@@ -108,7 +107,6 @@ def stream_stateful_running_total(spark: SparkSession, sf_dir: str) -> DataFrame
     ``applyInPandas`` ~18× at 150k groups).  The oracle recomputes it
     declaratively — proving the Python state machine implements exactly
     count/sum/max."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     parted = ev.repartition(F.col("user_id")).sortWithinPartitions("user_id")
 
@@ -291,19 +289,6 @@ class ExpiringRunningTotalProcessor(RunningTotalProcessor):
         self._state = handle.getValueState(
             "running_total_ttl", STATE_SCHEMA, ttlDurationMs=TTL_IDLE_MS
         )
-
-
-def stateful_running_total_ttl_tws(stream: DataFrame) -> DataFrame:
-    """Wire ``ExpiringRunningTotalProcessor`` — identical to
-    ``stateful_running_total_tws`` except the state expires after
-    ``TTL_IDLE_MS`` of key inactivity.  ``timeMode='processingTime'``
-    because state TTL is processing-time-based in the new API."""
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        ExpiringRunningTotalProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="processingTime",
-    )
 
 
 #: session gap for the timer-closed session operator (event-time ms)

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceplusplus_spark.registry import query
-from mapreduceplusplus_spark.session import ensure_utc
 from mapreduceplusplus_spark.sources.tables import load_table
 
 #: session gap — sized so the fixture's per-user cadence (median gap
@@ -57,7 +56,6 @@ def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows × event_type.  ``F.window``
     is the streaming-native operator run in batch: identical semantics,
     one hash shuffle on (window, event_type) with map-side partials."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -92,7 +90,6 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aligned starts per event).  Spark expands rows ×4 map-side, then
     partially aggregates before the shuffle — the expansion never
     crosses the wire unaggregated."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
@@ -146,7 +143,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     [first_ts, last_ts + gap) sessions.  Microsecond-precision
     rendering: session bounds are raw event times, not aligned
     boundaries."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
@@ -213,7 +209,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     time).  Fed in event-time order the two forms agree —
     ``tests/test_streaming.py`` replays the fixture through
     micro-batches and asserts exactly that."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
@@ -339,7 +334,6 @@ def stream_session_window_dynamic_gap(
     expression.  In streaming mode the identical expression runs under
     a watermark exactly like ``stream_session_window``.  Reference
     heritage: none (SURVEY §2 charter extension, streaming family)."""
-    ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events")
     gap = (
         F.when(F.col("event_type") == "click", F.lit("2 hours"))

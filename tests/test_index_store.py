@@ -204,3 +204,39 @@ def test_one_truncation():
         if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
     ]
     assert sites == [], sites
+
+
+def test_one_utc_pin():
+    """Queries run in UTC through one pin: the ``registry.query``
+    wrapper sets ``spark.sql.session.timeZone`` on every call, and
+    ``get_spark`` builds its sessions with it.  No ``ensure_utc`` name
+    is left, and nothing else in the package names the conf or sets a
+    session time zone in SQL."""
+    import ast
+
+    names, sites = [], []
+    for rel, text in _sources():
+        tree = ast.parse(text, rel)
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            name = (
+                getattr(node, "id", None)
+                or getattr(node, "attr", None)
+                or getattr(node, "name", None)
+                or getattr(node, "asname", None)
+            )
+            if name == "ensure_utc":
+                names.append((rel, node.lineno))
+            if not (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and not isinstance(parent[node], ast.Expr)  # a docstring
+            ):
+                continue
+            if "session.timeZone" in node.value or "TIME ZONE" in node.value.upper():
+                fn = node
+                while not isinstance(fn, (ast.FunctionDef, ast.Module)):
+                    fn = parent[fn]
+                sites.append((rel, getattr(fn, "name", None)))
+    assert names == [], names
+    assert sorted(sites) == [("registry.py", "in_utc"), ("session.py", "get_spark")]

@@ -28,7 +28,8 @@ def _rows(spark, name: str, sf_dir: str) -> list[str]:
 
 
 # one query per memo family: shingle and band frames, the two textstats
-# frames, the BPE state tuple, the semdedup gate, the IVF seed scalars
+# frames, the BPE state tuple, the semdedup gate, the SemDeDup ingest
+# batch and its cid census, the IVF seed scalars
 @pytest.mark.parametrize(
     "name, table",
     [
@@ -37,6 +38,7 @@ def _rows(spark, name: str, sf_dir: str) -> list[str]:
         ("text_winnowing_matches", "documents"),
         ("text_bpe_train", "documents"),
         ("dedup_semdedup", "embeddings"),
+        ("dedup_semdedup_incremental", "embeddings"),
         ("sim_search_ivfpq", "embeddings"),
     ],
 )

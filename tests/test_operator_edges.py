@@ -876,29 +876,6 @@ def test_join_hint_merge_overrides_broadcast(spark):
     assert "BroadcastHashJoin" not in p, p
 
 
-def test_conf_for_scale_arithmetic():
-    """The sizing recipe holds at the corners: 100 TB on 1000
-    executors lands in sane ranges, tiny local inputs floor at
-    cluster-occupancy parallelism, and the caps engage."""
-    from mapreduceplusplus_spark.session import conf_for_scale
-
-    big = conf_for_scale(100 << 40, executors=1000, cores_per_executor=32)
-    # 100 TB / 200 MiB = 524288 -> capped at 200k
-    assert big["spark.sql.shuffle.partitions"] == "200000"
-    assert int(big["spark.sql.files.maxPartitionBytes"]) == 256 << 20
-    # 128 GiB executors -> 1% > 256 MiB cap -> capped
-    assert int(big["spark.sql.autoBroadcastJoinThreshold"]) == 256 << 20
-
-    small = conf_for_scale(1 << 30, executors=1, cores_per_executor=32)
-    # 1 GiB input: parallelism floor (2x cores), not bytes-derived
-    assert small["spark.sql.shuffle.partitions"] == "64"
-
-    mid = conf_for_scale(10 << 40, executors=100, cores_per_executor=16)
-    # 10 TiB / 200 MiB = 52428 partitions > 2*1600 floor
-    assert small != mid
-    assert int(mid["spark.sql.shuffle.partitions"]) == (10 << 40) // (200 << 20)
-
-
 def test_benford_deviation_planted_digits(spark, tmp_path):
     """Pin dq_benford_deviation's digit extraction and integer basis-
     point math on a planted orders fixture: leading digit comes from

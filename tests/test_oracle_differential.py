@@ -363,3 +363,16 @@ def test_readme_evidence_audit_is_fresh():
     assert got.strip() == want.strip(), (
         "README evidence-audit block is stale — run `python evidence_audit.py`"
     )
+
+
+def test_a_missing_query_module_fails_loudly(monkeypatch):
+    """``load_all`` raises when a listed module cannot be imported,
+    instead of serving the registry without that query family."""
+    monkeypatch.setattr(registry, "_loaded", False)
+    monkeypatch.setattr(
+        registry,
+        "_QUERY_MODULES",
+        registry._QUERY_MODULES + ["mapreduceplusplus_spark.operators.no_such"],
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such"):
+        registry.load_all()

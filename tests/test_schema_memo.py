@@ -187,6 +187,16 @@ def test_second_build_of_ingest_near_lists_only_the_shingle_store(spark):
     assert n <= 1
 
 
+def test_second_build_of_semdedup_ingest_runs_no_job(spark):
+    """``dedup_semdedup_incremental`` memoizes its batch frame and that
+    batch's ``cid`` census, and adopts its index store: a rebuild
+    launches no job."""
+    q = registry.queries()["dedup_semdedup_incremental"]
+    q(spark, SF_DIR_ORACLE)
+    _, n = _jobs(spark, lambda: q(spark, SF_DIR_ORACLE))
+    assert n == 0
+
+
 def test_memo_hit_gives_the_cold_schema_and_plan(spark, tmp_path):
     """Plain file and a partitioned directory (the IVF index layout:
     the partition column comes from directory names)."""
